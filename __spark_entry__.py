@@ -17,169 +17,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from boat_etl_pyspark_spark.plans import collect_registries
-from boat_etl_pyspark_spark.plans import (
-    analytics,
-    boat_plan,
-    curation,
-    curation2,
-    io_plans,
-    multimodal_plans,
-    relational,
-    relational2,
-    relational3,
-    relational4,
-    relational5,
-    relational6,
-    relational7,
-    relational8,
-    relational9,
-    relational10,
-    relational11,
-    relational12,
-    relational13,
-    relational14,
-    relational15,
-    relational16,
-    relational17,
-    relational18,
-    relational19,
-    relational20,
-    relational21,
-    relational22,
-    relational23,
-    relational24,
-    relational25,
-    relational26,
-    relational27,
-    relational28,
-    relational29,
-    relational30,
-    relational31,
-    relational32,
-    relational33,
-    relational34,
-    relational35,
-    relational36,
-    relational37,
-    relational38,
-    relational39,
-    relational40,
-    relational41,
-    relational42,
-    relational43,
-    relational44,
-    relational45,
-    relational46,
-    relational47,
-    relational48,
-    relational49,
-    relational50,
-    relational51,
-    relational52,
-    relational53,
-    relational54,
-    relational55,
-    relational56,
-    relational57,
-    relational58,
-    textstats3,
-    curation3,
-    textlm,
-    io_plans2,
-    mlprep,
-    sessionize,
-    similarity,
-    similarity2,
-    streaming_plans,
-    streaming_plans2,
-    textcuration,
-    textdedup,
-    textstats2,
-)
+from boat_etl_pyspark_spark.plans import discover_registries
 from boat_etl_pyspark_spark.session import tune
 
-_PLAN_MODULES = (
-    boat_plan,
-    analytics,
-    curation,
-    relational,
-    relational2,
-    relational3,
-    relational4,
-    relational5,
-    textdedup,
-    similarity,
-    streaming_plans,
-    multimodal_plans,
-    sessionize,
-    io_plans,
-    relational6,
-    relational7,
-    relational8,
-    relational9,
-    curation2,
-    textcuration,
-    relational10,
-    textstats2,
-    mlprep,
-    io_plans2,
-    relational11,
-    relational12,
-    relational13,
-    relational14,
-    textlm,
-    relational15,
-    relational16,
-    relational17,
-    relational18,
-    relational19,
-    relational20,
-    relational21,
-    relational22,
-    relational23,
-    relational24,
-    relational25,
-    relational26,
-    relational27,
-    relational28,
-    relational29,
-    relational30,
-    relational31,
-    curation3,
-    relational32,
-    relational33,
-    relational34,
-    relational35,
-    relational36,
-    relational37,
-    relational38,
-    relational39,
-    relational40,
-    relational41,
-    relational42,
-    textstats3,
-    relational43,
-    similarity2,
-    streaming_plans2,
-    relational44,
-    relational45,
-    relational46,
-    relational47,
-    relational48,
-    relational49,
-    relational50,
-    relational51,
-    relational52,
-    relational53,
-    relational54,
-    relational55,
-    relational56,
-    relational57,
-    relational58,
-)
-
-_RAW_QUERIES, _ORACLE = collect_registries(*_PLAN_MODULES)
+_RAW_QUERIES, _ORACLE = discover_registries()
 
 # The driver's correctness gate checks the FIRST 50 registry entries
 # in order. This list is GENERATED by ``python tools/rotation.py
@@ -299,56 +140,56 @@ _CHECK_FIRST_CHANGED_BASIS = (
     "window_ulcer_index",
 )
 _CHECK_FIRST = (
-    "string_part_catalog",
-    "window_analytic_acctbal",
-    "map_order_attributes",
     "agg_acctbal_percentiles",
+    "string_part_catalog",
+    "map_order_attributes",
     "q2_cheapest_supplier_per_part",
+    "window_analytic_acctbal",
     "agg_approx_sketches",
     "q9_product_profit",
-    "layout_zorder_orders",
-    "graph_pagerank_nations",
     "agg_hll_partition_merge",
-    "join_spatial_grid",
-    "io_corrupt_record_quarantine",
-    "text_zipf_fit",
+    "graph_pagerank_nations",
+    "layout_zorder_orders",
     "graph_bfs_reachability",
-    "stream_stream_attribution",
-    "stream_dedup_user_event_types",
-    "validate_drift_psi",
+    "io_corrupt_record_quarantine",
+    "join_spatial_grid",
+    "text_zipf_fit",
     "agg_bootstrap_ci_poisson",
     "agg_pareto_abc",
     "agg_ks_test",
     "agg_autocorrelation",
     "agg_theil_index",
-    "ml_kfold_assign",
     "agg_kruskal_wallis",
     "agg_correlation_matrix",
-    "ts_seasonal_decompose",
     "agg_levene_variance_test",
-    "io_dynamic_partition_overwrite",
+    "ml_kfold_assign",
+    "stream_stream_attribution",
+    "stream_dedup_user_event_types",
+    "ts_seasonal_decompose",
+    "validate_drift_psi",
     "agg_heavy_hitters",
     "agg_trimmed_winsorized_mean",
-    "graph_connected_components",
     "agg_tail_cvar",
-    "ml_logreg_quality",
-    "validate_referential_integrity",
-    "ml_decision_stump",
     "agg_anova_f",
     "agg_jarque_bera",
     "agg_durbin_watson",
+    "agg_geometric_harmonic_means",
+    "graph_connected_components",
     "graph_copurchase_similarity",
+    "graph_kcore_peeling",
+    "io_dynamic_partition_overwrite",
+    "ml_logreg_quality",
+    "ml_decision_stump",
     "ml_gbdt_boosted_stumps",
     "ml_learning_curve",
-    "agg_geometric_harmonic_means",
-    "graph_kcore_peeling",
+    "validate_referential_integrity",
     "agg_rollup_nation_segment",
     "agg_cube_flag_status",
     "agg_grouping_sets",
-    "stream_foreachbatch_totals",
-    "stream_kafka_roundtrip",
-    "stream_static_value_buckets",
-    "stream_tumbling_6h",
+    "curate_semdedup",
+    "events_markov_transitions",
+    "io_partitioned_scan",
+    "io_small_file_compaction",
 )
 
 def _ordered(queries: dict) -> dict:
@@ -372,7 +213,7 @@ def _tuned(fn: Callable[[SparkSession, str], DataFrame]):
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return _tuned(relational.q3_shipping_priority)(spark, "/root/testdata/sf0.001")
+    return _tuned(_RAW_QUERIES["q3_shipping_priority"])(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -11,7 +11,11 @@ JSON line::
 Execution is forced with the noop sink (full computation, no driver
 collect) except for streaming queries, whose memory-sink table is
 counted. A warm-up query absorbs JVM/codegen startup so per-query
-numbers measure the plans, not the JIT.
+numbers measure the plans, not the JIT. A query that raises is counted
+in ``n_failed`` (its traceback tail goes to bench_full.json's
+``failed``) and the sweep goes on; the line also states the ``cpus``,
+``default_parallelism`` and effective ``shuffle_partitions`` it ran
+with.
 """
 
 from __future__ import annotations
@@ -21,6 +25,7 @@ import os
 import re
 import sys
 import time
+import traceback
 
 
 # stream_stream_left_outer replays 3 files through availableNow so the
@@ -163,12 +168,19 @@ def main() -> None:
     fp_start = _cpu_fingerprint()
     fp_mc_start = _cpu_fingerprint_mc()
     runs: dict[str, list[float]] = {name: [] for name in queries}
+    # name -> tail of the first traceback; a failing query is counted
+    # and retried every rep, never dropped from the sweep
+    failed: dict[str, str] = {}
     rss_per_rep = []
     for _ in range(reps):
         for name in sorted(queries):
             t0 = time.perf_counter()
-            df = queries[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            try:
+                df = queries[name](spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+            except Exception:
+                failed.setdefault(name, traceback.format_exc()[-800:])
+                continue
             runs[name].append(time.perf_counter() - t0)
         rss_per_rep.append(_rss_mb())
     fp_end = _cpu_fingerprint()
@@ -180,8 +192,14 @@ def main() -> None:
 
     released = release_caches(spark)
 
-    timings = {name: round(min(ts), 3) for name, ts in sorted(runs.items())}
-    spread = {name: round(max(ts) - min(ts), 3) for name, ts in sorted(runs.items())}
+    timed = {name: ts for name, ts in sorted(runs.items()) if ts}
+    timings = {name: round(min(ts), 3) for name, ts in timed.items()}
+    spread = {name: round(max(ts) - min(ts), 3) for name, ts in timed.items()}
+    parallelism = {
+        "cpus": cpus,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+    }
     total = round(sum(timings.values()), 3)
 
     # Host-drift normalization + per-query comparison vs the best prior
@@ -287,6 +305,8 @@ def main() -> None:
                 "regressions_gt_2x": regressions,
                 "stream_stream_left_outer_replay_floor_sec": _SSLO_REPLAY_FLOOR_SEC,
                 "caches_released": released,
+                "failed": failed,
+                **parallelism,
                 "reps": reps,
                 "unit": "sec",
                 "sf": sf,
@@ -309,6 +329,8 @@ def main() -> None:
         "sf": sf,
         "reps": reps,
         "n_queries": len(timings),
+        "n_failed": len(failed),
+        **parallelism,
         "cpu_fp_sec": fp_measured,
         "cpu_fp_mc_sec": fp_mc_measured,
         "normalized_value": normalized_value,

@@ -1,11 +1,16 @@
 """Named query plans.
 
 Each plan module exposes ``QUERIES`` (name -> fn(spark, sf_dir) ->
-DataFrame) and ``ORACLE`` (name -> DuckDB SQL string). The driver
-contract in ``__spark_entry__.py`` aggregates them all.
+DataFrame) and ``ORACLE`` (name -> DuckDB SQL string), one module per
+query-name family. ``discover_registries`` merges every module that
+has a ``QUERIES``; the driver contract in ``__spark_entry__.py`` reads
+the merged registry.
 """
 
 from __future__ import annotations
+
+import importlib
+import pkgutil
 
 # Per-query persisted intermediates (loop edge lists, shingle sets…)
 # otherwise pin executor storage memory for the whole session: a long
@@ -42,11 +47,15 @@ def release_caches(spark=None) -> int:
     return n
 
 
-def collect_registries(*modules):
-    """Merge the QUERIES / ORACLE registries of several plan modules."""
+def discover_registries():
+    """Import every plan submodule in name order and merge the
+    ``QUERIES`` / ``ORACLE`` registries of those that define one."""
     queries: dict = {}
     oracle: dict = {}
-    for m in modules:
+    for info in sorted(pkgutil.iter_modules(__path__), key=lambda i: i.name):
+        m = importlib.import_module(f"{__name__}.{info.name}")
+        if not hasattr(m, "QUERIES"):
+            continue
         overlap = set(m.QUERIES) & set(queries)
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")

@@ -1,0 +1,1178 @@
+"""Source/sink round-trips and storage-layout queries: each writes a
+fixture table through a format or layout, reads it back and
+aggregates the copy, so a hash match proves the round-trip lossless.
+"""
+
+from __future__ import annotations
+
+import itertools
+import os
+import re
+import shutil
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from ..functions.numeric import cents, money_sum
+from ..sources.readers import load_table
+from .contract import (
+    TEXT_VALID_DUCK,
+    text_valid,
+    tpch_date_valid,
+    tpch_date_valid_sql,
+)
+
+
+_TMP_SEQ = itertools.count()
+
+
+_TMP_PREV: dict[str, str] = {}
+
+
+def _tmp(kind: str, sf_dir: str) -> str:
+    """Per-invocation unique output dir. The path embeds the pid and a
+    process-local counter so two concurrent executions of the same
+    query (e.g. a bench run racing a correctness run) can never
+    overwrite / rmtree each other's output between write and read-back.
+    The PREVIOUS dir for the same (kind, sf_dir) in this process is
+    removed lazily on the next call — it can't be removed eagerly
+    because the returned DataFrame reads the files only when the caller
+    finally executes it."""
+    key = re.sub(r"\W+", "_", sf_dir.strip("/"))
+    slot = f"{kind}_{key}"
+    prev = _TMP_PREV.pop(slot, None)
+    if prev is not None:
+        shutil.rmtree(prev, ignore_errors=True)
+    from ..streaming.events import scratch_dir
+
+    path = os.path.join(
+        scratch_dir(),
+        f"spark_graft_io_{slot}_{os.getpid()}_{next(_TMP_SEQ)}",
+    )
+    _TMP_PREV[slot] = path
+    return path
+
+
+# --- CSV ------------------------------------------------------------------
+
+# Forces quoting (comma), escaping (double quote), and multi-line
+# record reassembly (newline) through the round-trip. The newline is
+# NOT the final character: univocity's multiLine parser swallows a
+# field-trailing newline that abuts the closing quote + record
+# terminator (verified empirically), which is a writer/reader asymmetry
+# we document rather than fight — real corpora are decorated
+# mid-field here exactly so the check still proves newline handling.
+_DECORATION = '",\n|'
+
+
+_DOC_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+        T.StructField("source", T.StringType()),
+        T.StructField("n_chars", T.LongType()),
+    ]
+)
+
+
+# The write side of the engine (SURVEY.md §2.7) so far lived only in
+# pytest (tests/test_sinks.py); these queries put it under the DuckDB
+# CORRECTNESS gate. Each query writes a fixture table out through a
+# format, reads it back, and aggregates the read-back copy; the oracle
+# aggregates the ORIGINAL parquet — so a hash match proves the format
+# round-trip was lossless, not merely that the aggregate is right.
+#
+# - ``io_csv_roundtrip``: the document text is first DECORATED with a
+#   quote, a comma, and an embedded newline so the CSV writer is forced
+#   to quote/escape and the reader to reassemble multi-line records
+#   (RFC-4180 doubled quotes via ``escape='"'``; ``multiLine`` scan on
+#   read). The fixture text is CSV-benign, so without the decoration
+#   this would prove nothing.
+#
+# Temp outputs go under the system temp dir keyed by the sf dir (same
+# convention as the streaming checkpoints, streaming/events.py:61) and
+# are rewritten per run with ``mode("overwrite")``.
+def io_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # text char-class validity (contract.text_valid, symmetric with
+    # the oracle): a NUL byte desyncs univocity's multiLine record
+    # reassembly (round-8 probe: 5-char drift on the NUL document)
+    docs = load_table(spark, sf_dir, "documents").where(text_valid()).withColumn(
+        "text", F.concat(F.col("text"), F.lit(_DECORATION))
+    )
+    out = _tmp("csv", sf_dir)
+    (
+        docs.write.mode("overwrite")
+        .options(header=True, quote='"', escape='"')
+        .csv(out)
+    )
+    back = (
+        spark.read.schema(_DOC_SCHEMA)
+        .options(header=True, quote='"', escape='"', multiLine=True)
+        .csv(out)
+    )
+    return back.groupBy("lang").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.length("text")).alias("sum_chars"),
+        F.countDistinct(F.md5("text")).alias("n_distinct_texts"),
+        F.sum("n_chars").alias("sum_n_chars"),
+    )
+
+
+_CSV_SQL = f"""
+SELECT lang,
+       COUNT(*) AS n_docs,
+       CAST(SUM(LENGTH(text || '",' || chr(10) || '|')) AS BIGINT) AS sum_chars,
+       CAST(COUNT(DISTINCT md5(text || '",' || chr(10) || '|')) AS BIGINT) AS n_distinct_texts,
+       CAST(SUM(n_chars) AS BIGINT) AS sum_n_chars
+FROM documents
+WHERE {TEXT_VALID_DUCK}
+GROUP BY lang
+"""
+
+
+# --- JSON -----------------------------------------------------------------
+
+_ORDERS_SCHEMA = T.StructType(
+    [
+        T.StructField("o_orderkey", T.LongType()),
+        T.StructField("o_custkey", T.LongType()),
+        T.StructField("o_orderstatus", T.StringType()),
+        T.StructField("o_totalprice", T.DoubleType()),
+        T.StructField("o_orderdate", T.TimestampNTZType()),
+        T.StructField("o_orderpriority", T.StringType()),
+    ]
+)
+
+
+# Micros-precision format: Spark's default JSON format keeps only
+# millis, which would silently corrupt sub-milli timestamps. The
+# fixture's o_orderdate is parquet TIMESTAMP(isAdjustedToUTC=false) →
+# Spark TIMESTAMP_NTZ, which the JSON codec formats via
+# ``timestampNTZFormat`` — the plain ``timestampFormat`` option is
+# silently IGNORED for NTZ columns (verified empirically; all dates
+# came back NULL under the mismatched reader format).
+_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
+
+
+# - ``io_json_roundtrip``: JSON-lines with an explicit read schema and a
+#   pinned microsecond timestamp format (the default format truncates to
+#   millis — a silent-corruption trap at any scale).
+def io_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    out = _tmp("json", sf_dir)
+    orders.write.mode("overwrite").option("timestampNTZFormat", _TS_FMT).json(out)
+    back = (
+        spark.read.schema(_ORDERS_SCHEMA)
+        .option("timestampNTZFormat", _TS_FMT)
+        .json(out)
+    )
+    return back.groupBy("o_orderpriority").agg(
+        F.count("*").alias("n_orders"),
+        F.sum(cents(F.col("o_totalprice"))).alias("total_cents"),
+        F.date_format(F.min("o_orderdate"), "yyyy-MM-dd").alias("first_day"),
+        F.date_format(F.max("o_orderdate"), "yyyy-MM-dd").alias("last_day"),
+    )
+
+
+_JSON_SQL = """
+SELECT o_orderpriority,
+       COUNT(*) AS n_orders,
+       CAST(SUM(TRY_CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents,
+       strftime(MIN(o_orderdate), '%Y-%m-%d') AS first_day,
+       strftime(MAX(o_orderdate), '%Y-%m-%d') AS last_day
+FROM orders
+GROUP BY o_orderpriority
+"""
+
+
+# --- partitioned parquet sink + pruned scan --------------------------------
+
+# Explicit read-back schema (partition column last, matching layout):
+# schema inference would crash on a zero-row write (the partitioned dir
+# then contains no data files at all), and at 100 TB inference is a
+# full file listing you never want on the hot path anyway.
+_EVENTS_BACK_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+        T.StructField("event_type", T.StringType()),
+    ]
+)
+
+
+# - ``io_partitioned_scan``: writes events partitioned by
+#   ``event_type``, reads back ONE partition and aggregates it. The
+#   predicate lands in ``PartitionFilters`` (audited in
+#   tests/test_io_plans.py) — at 100 TB this is the difference between
+#   listing one directory and scanning the table.
+def io_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    out = _tmp("part", sf_dir)
+    ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
+    back = spark.read.schema(_EVENTS_BACK_SCHEMA).parquet(out).where(
+        F.col("event_type") == "purchase"
+    )
+    return back.groupBy(
+        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day")
+    ).agg(
+        F.count("*").alias("n_purchases"),
+        F.countDistinct("user_id").alias("n_users"),
+        money_sum(F.col("value")).alias("value_sum"),
+    )
+
+
+_PART_SQL = """
+SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+       COUNT(*) AS n_purchases,
+       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
+       CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS value_sum
+FROM events
+WHERE event_type = 'purchase'
+GROUP BY 1
+"""
+
+
+# --- XML ------------------------------------------------------------------
+
+# Forces entity escaping (< & >), attribute-quote handling, and an
+# embedded newline through the XML round-trip; ends with a non-space
+# character so whitespace-trimming readers can't silently pass.
+_XML_DECORATION = '<&>\n"x'
+
+
+def io_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark 4 built-in XML source/sink round-trip (same lossless-proof
+    shape as the CSV/JSON queries: the oracle aggregates the ORIGINAL
+    parquet, so a hash match proves the writer escaped and the reader
+    unescaped every entity)."""
+    # text char-class validity (contract.text_valid): the XML 1.0
+    # character model has no representation for C0 controls — the
+    # writer THROWS on a NUL byte (round-8 probe)
+    docs = load_table(spark, sf_dir, "documents").where(text_valid()).withColumn(
+        "text", F.concat(F.col("text"), F.lit(_XML_DECORATION))
+    )
+    out = _tmp("xml", sf_dir)
+    docs.write.mode("overwrite").format("xml").options(
+        rootTag="docs", rowTag="doc"
+    ).save(out)
+    back = (
+        spark.read.schema(_DOC_SCHEMA)
+        .format("xml")
+        .option("rowTag", "doc")
+        .load(out)
+    )
+    return back.groupBy("lang").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.length("text")).alias("sum_chars"),
+        F.countDistinct(F.md5("text")).alias("n_distinct_texts"),
+        F.sum("n_chars").alias("sum_n_chars"),
+    )
+
+
+_XML_SQL = f"""
+SELECT lang,
+       COUNT(*) AS n_docs,
+       CAST(SUM(LENGTH(text || '<&>' || chr(10) || '"x')) AS BIGINT) AS sum_chars,
+       CAST(COUNT(DISTINCT md5(text || '<&>' || chr(10) || '"x')) AS BIGINT) AS n_distinct_texts,
+       CAST(SUM(n_chars) AS BIGINT) AS sum_n_chars
+FROM documents
+WHERE {TEXT_VALID_DUCK}
+GROUP BY lang
+"""
+
+
+# --- z-order layout --------------------------------------------------------
+
+_ZBITS = 16
+
+
+def _zvalue(a, b):
+    """Interleave the low 16 bits of two columns into a 32-bit Morton
+    (z-order) value — pure codegen-able bit arithmetic, no UDF. Sorting
+    or range-partitioning files by this key clusters BOTH dimensions,
+    so min/max file statistics prune selective predicates on either
+    column — the multi-dimension data-skipping layout (Delta/Iceberg
+    OPTIMIZE ZORDER) expressed as plain Spark expressions."""
+    import functools
+
+    a = a.cast("long")
+    b = b.cast("long")
+    terms = []
+    for i in range(_ZBITS):
+        terms.append(F.shiftleft(F.shiftright(a, i).bitwiseAND(F.lit(1)), 2 * i))
+        terms.append(F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i + 1))
+    return functools.reduce(lambda x, y: x.bitwiseOR(y), terms)
+
+
+def layout_zorder_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Z-order key over (customer, order-day): the driver-checked half
+    is the exact Morton value; the file-layout half (range-partitioned
+    write → non-overlapping per-file z-ranges) is audited by
+    tests/test_io_plans.py.
+
+    Pinned NULL rule (round-10 layer 2): a row with a NULL key
+    dimension has NO z-position — NULL would otherwise propagate into
+    zvalue and sort NULLS FIRST in Spark but NULLS LAST in DuckDB,
+    shifting the whole head of the layout."""
+    orders = load_table(spark, sf_dir, "orders").where(
+        F.col("o_custkey").isNotNull() & F.col("o_orderdate").isNotNull()
+    )
+    x = F.col("o_custkey").bitwiseAND(F.lit(0xFFFF))
+    y = F.datediff(F.col("o_orderdate"), F.to_date(F.lit("1995-01-01"))).bitwiseAND(
+        F.lit(0xFFFF)
+    )
+    z = orders.select("o_orderkey", _zvalue(x, y).alias("zvalue"))
+    return z.orderBy("zvalue", "o_orderkey").limit(100)
+
+
+def _z_sql(xe: str, ye: str) -> str:
+    # Every term fully parenthesized: DuckDB gives <<, >>, &, | EQUAL
+    # precedence (left-assoc), so an unparenthesized `a << 0 | b << 1`
+    # chain compounds the shifts and overflows.
+    parts = [f"(((({xe}) >> {i}) & 1) << {2 * i})" for i in range(_ZBITS)]
+    parts += [f"(((({ye}) >> {i}) & 1) << {2 * i + 1})" for i in range(_ZBITS)]
+    return " | ".join(parts)
+
+
+_ZORDER_SQL = f"""
+SELECT o_orderkey,
+       {_z_sql("o_custkey & 65535",
+               "date_diff('day', DATE '1995-01-01', o_orderdate) & 65535")} AS zvalue
+FROM orders
+WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL
+ORDER BY zvalue, o_orderkey
+LIMIT 100
+"""
+
+
+# --- bucketed co-located join ----------------------------------------------
+
+_BUCKETED_PREV: dict[str, tuple[str, ...]] = {}
+
+
+def io_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bucketed-table join: both fact tables are written bucketed (and
+    sorted) on the join key, so the sort-merge join reads co-located
+    buckets with NO exchange on either side (audited by
+    tests/test_io_plans.py). At 100 TB this is the layout that
+    amortizes the orders⋈lineitem shuffle across every query that
+    joins on the key. The pre-write ``repartition(8, key)`` aligns
+    task hashing with bucket hashing so each bucket is one file. The
+    MERGE hint pins the join strategy — at fixture scale the tables
+    would otherwise broadcast, and the point is the exchange-free SMJ
+    shape.
+
+    Catalog hygiene: table names are unique per invocation, and the
+    PREVIOUS invocation's tables are dropped here (they can't be
+    dropped on return — the result DataFrame reads them lazily), so
+    repeated registry sweeps don't accumulate catalog entries."""
+    key = re.sub(r"\W+", "_", sf_dir.strip("/"))
+    for stale in _BUCKETED_PREV.pop(key, ()):
+        spark.sql(f"DROP TABLE IF EXISTS {stale}")
+    uniq = f"{key}_{os.getpid()}_{next(_TMP_SEQ)}"
+    t_orders, t_li = f"b_orders_{uniq}", f"b_lineitem_{uniq}"
+    _BUCKETED_PREV[key] = (t_orders, t_li)
+    base = _tmp("bucketed", sf_dir)
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderpriority"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_quantity", "l_extendedprice"
+    )
+    for df, name, col in ((orders, t_orders, "o_orderkey"), (li, t_li, "l_orderkey")):
+        (
+            df.repartition(8, F.col(col))
+            .write.mode("overwrite")
+            .option("path", os.path.join(base, name))
+            .bucketBy(8, col)
+            .sortBy(col)
+            .saveAsTable(name)
+        )
+    j = spark.table(t_orders).hint("merge").join(
+        spark.table(t_li), F.col("o_orderkey") == F.col("l_orderkey")
+    )
+    return j.groupBy("o_orderpriority").agg(
+        F.count("*").alias("n_items"),
+        F.sum(cents(F.col("l_quantity"))).alias("qty_cents"),
+        F.sum(cents(F.col("l_extendedprice"), 1)).alias("price_units"),
+    )
+
+
+_BUCKETED_SQL = """
+SELECT o_orderpriority,
+       COUNT(*) AS n_items,
+       CAST(SUM(TRY_CAST(ROUND(l_quantity * 100) AS BIGINT)) AS BIGINT) AS qty_cents,
+       CAST(SUM(TRY_CAST(ROUND(l_extendedprice) AS BIGINT)) AS BIGINT) AS price_units
+FROM orders
+JOIN lineitem ON o_orderkey = l_orderkey
+GROUP BY o_orderpriority
+"""
+
+
+# ---------------------------------------------------------------------------
+# Schema evolution (mergeSchema over heterogeneous batches)
+# ---------------------------------------------------------------------------
+
+_EVO_CUTOFF = "1996-01-01"
+
+
+#   * ``io_schema_evolution`` — parquet ``mergeSchema`` read over
+#     batches written with DIFFERENT schemas (a column added later):
+#     the evolution path every long-lived table hits. Old rows surface
+#     NULL for the new column; the oracle reproduces the same split
+#     from the original table.
+def io_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A long-lived table whose writer later ADDED a column: early
+    batches carry (orderkey, price), later batches also carry the
+    priority. ``mergeSchema`` unifies the footers at read time; old
+    rows surface NULL for the new column and flow through a COALESCE
+    bucket. Parquet stores schema per file, so evolution is free at
+    write time and one footer-merge at planning time — no rewrite of
+    historical data (the property that matters when 'historical' is
+    90 of the 100 TB).
+
+    Pinned rules (round-10 layer 2): a row with no valid batch date
+    belongs to no batch (business-date validity window, both sides),
+    and NULL priority coalesces to 'LEGACY' wherever it occurs —
+    after mergeSchema the legacy-NULL and new-NULL are one physical
+    column, so the oracle applies the same coalesce."""
+    orders = load_table(spark, sf_dir, "orders").where(
+        tpch_date_valid("o_orderdate")
+    )
+    base = _tmp("schema_evo", sf_dir)
+    old = orders.where(F.col("o_orderdate") < _EVO_CUTOFF).select(
+        "o_orderkey", "o_totalprice"
+    )
+    new = orders.where(F.col("o_orderdate") >= _EVO_CUTOFF).select(
+        "o_orderkey", "o_totalprice", "o_orderpriority"
+    )
+    old.write.mode("overwrite").parquet(f"{base}/batch=old")
+    new.write.mode("overwrite").parquet(f"{base}/batch=new")
+    merged = spark.read.option("mergeSchema", "true").parquet(base)
+    return merged.groupBy(
+        F.coalesce("o_orderpriority", F.lit("LEGACY")).alias("priority")
+    ).agg(
+        F.count("*").alias("n_orders"),
+        F.sum(cents(F.col("o_totalprice"))).alias("revenue_cents"),
+    )
+
+
+_SCHEMA_EVO_SQL = f"""
+SELECT CASE WHEN o_orderdate < DATE '{_EVO_CUTOFF}' THEN 'LEGACY'
+            ELSE COALESCE(o_orderpriority, 'LEGACY') END AS priority,
+       COUNT(*) AS n_orders,
+       CAST(SUM(TRY_CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+         AS revenue_cents
+FROM orders
+WHERE {tpch_date_valid_sql('o_orderdate')}
+GROUP BY 1
+"""
+
+
+# ---------------------------------------------------------------------------
+# ORC round-trip
+# ---------------------------------------------------------------------------
+
+
+#   * ``io_orc_roundtrip`` — ORC source/sink round-trip (Spark's other
+#     first-class columnar format): write a decorated orders slice to
+#     ORC, read it back, aggregate. The oracle aggregates the ORIGINAL
+#     parquet, so a hash match proves the ORC write+read is lossless
+#     (DuckDB cannot read ORC — it never has to).
+def io_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Orders → ORC (zlib) → read back → aggregate per priority. The
+    aggregate runs on the READ-BACK copy; the oracle reads the
+    original parquet — a match proves losslessness through the format
+    boundary, including dates and doubles."""
+    orders = load_table(spark, sf_dir, "orders")
+    out = _tmp("orc", sf_dir)
+    orders.write.mode("overwrite").option("compression", "zlib").orc(out)
+    back = spark.read.orc(out)
+    return back.groupBy("o_orderpriority").agg(
+        F.count("*").alias("n_orders"),
+        F.sum(cents(F.col("o_totalprice"))).alias("revenue_cents"),
+        F.min(F.date_format("o_orderdate", "yyyy-MM-dd")).alias("first_date"),
+        F.max(F.date_format("o_orderdate", "yyyy-MM-dd")).alias("last_date"),
+    )
+
+
+_ORC_SQL = """
+SELECT o_orderpriority,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(TRY_CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+         AS revenue_cents,
+       strftime(MIN(o_orderdate), '%Y-%m-%d') AS first_date,
+       strftime(MAX(o_orderdate), '%Y-%m-%d') AS last_date
+FROM orders
+GROUP BY 1
+"""
+
+
+# ---------------------------------------------------------------------------
+# Small-file compaction
+# ---------------------------------------------------------------------------
+
+_FRAGMENT_FILES = 64
+
+
+_TARGET_FILES = 4
+
+
+#: Below this many rows a parquet file is fixed overhead, not payload,
+#: and codec-size comparisons are undefined (NULL) rather than true.
+_MIN_MEANINGFUL_ROWS = 512
+
+
+#   * ``io_small_file_compaction`` — the small-files problem and its
+#     fix as one checked operator: a fragmented write (many tiny files)
+#     is compacted by an explicit repartition to the target file count,
+#     and the query proves (a) the data survived bit-exactly (oracle
+#     aggregate) and (b) the file count actually dropped (boolean
+#     column, like the HLL error-envelope pattern). At 100 TB
+#     compaction is routine table maintenance — a NameNode/listing cost
+#     problem long before it is a scan cost problem.
+def io_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Write lineitem fragmented into 64 tiny files (the shape a
+    too-parallel or per-trigger streaming writer produces), compact to
+    4 via an explicit repartition, and verify BOTH that the compacted
+    copy holds exactly the original data (oracle aggregate) and that
+    the file count dropped (booleans — file counts are filesystem
+    facts the oracle cannot see). ``repartition(n)`` is the compactor
+    because it round-robins rows evenly — ``coalesce(n)`` merges
+    unevenly and can leave the skew it was meant to fix."""
+    import os
+
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linenumber", "l_returnflag",
+        cents(F.col("l_extendedprice")).alias("price_cents"),
+    )
+    frag = _tmp("frag", sf_dir)
+    li.repartition(_FRAGMENT_FILES).write.mode("overwrite").parquet(frag)
+    compacted = _tmp("compact", sf_dir)
+    (
+        spark.read.parquet(frag)
+        .repartition(_TARGET_FILES)
+        .write.mode("overwrite")
+        .parquet(compacted)
+    )
+
+    def n_files(path: str) -> int:
+        return sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
+
+    nf_frag, nf_comp = n_files(frag), n_files(compacted)
+    back = spark.read.parquet(compacted)
+    # Three-state fact (round-6 ADVICE): when the fragment step itself
+    # produced <= _TARGET_FILES files (degenerate input — Spark skips
+    # empty write partitions) there was nothing to compact, so the
+    # claim "compaction reduced the file count" is UNDEFINED, not
+    # vacuously true: emit NULL. Above that threshold the boolean is
+    # the real measured comparison, so a compactor regression turns
+    # the driver row red instead of being absorbed by a hardcoded
+    # TRUE. The oracle mirrors the regime switch through the row
+    # count: nf_frag = min(64, n_rows) for a single-input-partition
+    # fixture, so nf_frag <= 4 iff n_rows <= 4.
+    files_reduced = None if nf_frag <= _TARGET_FILES else nf_comp < nf_frag
+    return back.groupBy("l_returnflag").agg(
+        F.count("*").alias("n_rows"),
+        F.sum("price_cents").alias("price_cents"),
+        F.countDistinct("l_orderkey").alias("n_orders"),
+    ).select(
+        "*",
+        F.lit(files_reduced).cast("boolean").alias("files_reduced"),
+        F.lit(nf_comp <= _TARGET_FILES).alias("at_target_file_count"),
+    )
+
+
+_COMPACTION_SQL = """
+SELECT l_returnflag,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(TRY_CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+         AS price_cents,
+       CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
+       CASE WHEN (SELECT COUNT(*) FROM lineitem) <= 4 THEN NULL
+            ELSE TRUE END AS files_reduced,
+       TRUE AS at_target_file_count
+FROM lineitem
+GROUP BY 1
+"""
+
+
+# ---------------------------------------------------------------------------
+# Snapshot diff (CDC reconciliation shape)
+# ---------------------------------------------------------------------------
+
+_SNAP_A_TO = "1997-01-01"
+
+
+_SNAP_B_FROM = "1993-01-01"
+
+
+_SNAP_B_TO = "1998-01-01"
+
+
+#   * ``io_snapshot_diff`` — diff two table snapshots by primary key
+#     (added / removed / changed / unchanged, with row counts and value
+#     sums per class) via one full-outer join on the key — the
+#     mergeable audit primitive behind CDC reconciliation and
+#     replication checks. Snapshots are derived deterministically from
+#     the fixture so the oracle reproduces them exactly.
+def io_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Key-level diff between two deterministic snapshots of orders:
+    snapshot A holds orders before 1997 at original prices; snapshot B
+    holds 1993–1997 orders (older ones purged) plus 1997 arrivals,
+    with every 7th order's price bumped 5 dollars (simulated updates).
+    One full-outer join on the key classifies every row as added /
+    removed / changed / unchanged; the output is the per-class count
+    and value sum — the reconciliation report a CDC pipeline emits.
+    At 100 TB both sides shuffle once on the key and the report is
+    four rows."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderdate",
+        cents(F.col("o_totalprice")).alias("price_cents"),
+    )
+    snap_a = orders.where(
+        F.col("o_orderdate") < F.lit(_SNAP_A_TO).cast("date")
+    ).select("o_orderkey", F.col("price_cents").alias("a_cents"))
+    snap_b = (
+        orders.where(
+            (F.col("o_orderdate") >= F.lit(_SNAP_B_FROM).cast("date"))
+            & (F.col("o_orderdate") < F.lit(_SNAP_B_TO).cast("date"))
+        )
+        .select(
+            "o_orderkey",
+            F.when(F.col("o_orderkey") % 7 == 0,
+                   F.col("price_cents") + F.lit(500))
+            .otherwise(F.col("price_cents"))
+            .alias("b_cents"),
+        )
+    )
+    diff = snap_a.join(snap_b, "o_orderkey", "full_outer").select(
+        F.when(F.col("a_cents").isNull(), F.lit("added"))
+        .when(F.col("b_cents").isNull(), F.lit("removed"))
+        .when(F.col("a_cents") != F.col("b_cents"), F.lit("changed"))
+        .otherwise(F.lit("unchanged"))
+        .alias("change_class"),
+        F.coalesce("a_cents", F.lit(0)).alias("a_cents"),
+        F.coalesce("b_cents", F.lit(0)).alias("b_cents"),
+    )
+    return diff.groupBy("change_class").agg(
+        F.count("*").alias("n_keys"),
+        F.sum("a_cents").alias("a_total_cents"),
+        F.sum("b_cents").alias("b_total_cents"),
+    )
+
+
+_SNAPSHOT_DIFF_SQL = f"""
+WITH o AS (
+  SELECT o_orderkey, o_orderdate,
+         TRY_CAST(ROUND(o_totalprice * 100) AS BIGINT) AS price_cents
+  FROM orders
+), a AS (
+  SELECT o_orderkey, price_cents AS a_cents FROM o
+  WHERE o_orderdate < DATE '{_SNAP_A_TO}'
+), b AS (
+  SELECT o_orderkey,
+         CASE WHEN o_orderkey % 7 = 0 THEN price_cents + 500
+              ELSE price_cents END AS b_cents
+  FROM o
+  WHERE o_orderdate >= DATE '{_SNAP_B_FROM}'
+    AND o_orderdate < DATE '{_SNAP_B_TO}'
+)
+SELECT CASE WHEN a_cents IS NULL THEN 'added'
+            WHEN b_cents IS NULL THEN 'removed'
+            WHEN a_cents <> b_cents THEN 'changed'
+            ELSE 'unchanged' END AS change_class,
+       CAST(COUNT(*) AS BIGINT) AS n_keys,
+       CAST(SUM(COALESCE(a_cents, 0)) AS BIGINT) AS a_total_cents,
+       CAST(SUM(COALESCE(b_cents, 0)) AS BIGINT) AS b_total_cents
+FROM a FULL OUTER JOIN b USING (o_orderkey)
+GROUP BY 1
+"""
+
+
+def io_codec_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Parquet codec choice as a checked operator: the same orders
+    slice is written under zstd and snappy, read back, and aggregated
+    per codec — the aggregate must be identical (codecs are lossless)
+    and zstd must actually produce the smaller files (boolean column,
+    the io_small_file_compaction evidence pattern; zstd measured ~3x
+    smaller on this data). At 100 TB the codec is a first-order knob:
+    zstd trades CPU for ~30-60% less I/O and storage, snappy the
+    reverse — the right answer depends on whether scans are CPU- or
+    I/O-bound, so the operator keeps both paths exercised."""
+    import os
+
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderpriority", "o_totalprice"
+    )
+    sizes = {}
+    paths = {}
+    frames = []
+    for codec in ("snappy", "zstd"):
+        path = _tmp(f"codec_{codec}", sf_dir)
+        paths[codec] = path
+        orders.write.mode("overwrite").option("compression", codec).parquet(
+            path
+        )
+        sizes[codec] = sum(
+            os.path.getsize(os.path.join(path, f))
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        )
+        frames.append(
+            spark.read.parquet(path)
+            .groupBy("o_orderpriority")
+            .agg(
+                F.count("*").alias("n_orders"),
+                F.sum(cents(F.col("o_totalprice"))).alias("revenue_cents"),
+            )
+            .withColumn("codec", F.lit(codec))
+        )
+    # Three-state fact (round-6 ADVICE): below a few hundred rows the
+    # file is mostly fixed-size footer/header overhead and "zstd packs
+    # tighter" is UNDEFINED — emit NULL rather than a vacuous TRUE. At
+    # and above the threshold the column is the real byte comparison,
+    # so a codec regression (zstd NOT smaller) turns the driver row
+    # red. The row count comes from the written files' parquet footers
+    # (driver-side metadata, no extra Spark scan) so the oracle can
+    # mirror the regime switch with COUNT(*) — measured: 512 rows of
+    # this 3-column slice is ~10+ KiB under snappy, far past overhead
+    # dominance, and zstd is ~3x smaller at every driver scale.
+    import pyarrow.parquet as papq
+
+    total_rows = sum(
+        papq.read_metadata(os.path.join(paths["snappy"], f)).num_rows
+        for f in os.listdir(paths["snappy"])
+        if f.endswith(".parquet")
+    )
+    zstd_smaller = (
+        None
+        if total_rows < _MIN_MEANINGFUL_ROWS
+        else sizes["zstd"] < sizes["snappy"]
+    )
+    snappy_smaller = (
+        None
+        if total_rows < _MIN_MEANINGFUL_ROWS
+        else sizes["snappy"] < sizes["zstd"]
+    )
+    return (
+        frames[0].unionByName(frames[1])
+        .select(
+            "codec",
+            "o_orderpriority",
+            F.col("n_orders").cast("bigint").alias("n_orders"),
+            F.col("revenue_cents").cast("bigint").alias("revenue_cents"),
+            F.when(F.col("codec") == "zstd",
+                   F.lit(zstd_smaller).cast("boolean"))
+            .otherwise(F.lit(snappy_smaller).cast("boolean"))
+            .alias("smaller_file"),
+        )
+        .orderBy("codec", "o_orderpriority")
+    )
+
+
+_CODEC_SQL = """
+SELECT c.codec,
+       o_orderpriority,
+       COUNT(*) AS n_orders,
+       CAST(SUM(TRY_CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+         AS revenue_cents,
+       CASE WHEN (SELECT COUNT(*) FROM orders) < 512 THEN NULL
+            ELSE c.codec = 'zstd' END AS smaller_file
+FROM orders CROSS JOIN (VALUES ('snappy'), ('zstd')) AS c(codec)
+GROUP BY c.codec, o_orderpriority
+ORDER BY c.codec, o_orderpriority
+"""
+
+
+# ---------------------------------------------------------------------------
+# Corrupt-record quarantine (PERMISSIVE ingestion)
+# ---------------------------------------------------------------------------
+
+_CORRUPT_EVERY = 13
+
+
+_QUAR_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("lang", T.StringType()),
+        T.StructField("n_chars", T.LongType()),
+        T.StructField("_corrupt_record", T.StringType()),
+    ]
+)
+
+
+#   * ``io_corrupt_record_quarantine`` — ingestion with a dead-letter
+#     path: a JSON-lines batch with deterministically corrupted records
+#     is read in PERMISSIVE mode with ``columnNameOfCorruptRecord``;
+#     good rows aggregate per lang, corrupt rows are counted into a
+#     quarantine row. The oracle reproduces the corruption rule from
+#     the original table — a match proves no record was lost OR
+#     misclassified.
+def io_corrupt_record_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ingest a JSON-lines batch where every 13th record is broken
+    (truncated JSON), in PERMISSIVE mode with a corrupt-record column:
+    good rows aggregate per lang; broken rows land in a quarantine
+    bucket instead of failing the job — the dead-letter pattern every
+    large-scale ingest needs. The corruption is injected
+    deterministically by doc_id, so the oracle can reproduce the
+    expected classification exactly from the clean table."""
+    docs = load_table(spark, sf_dir, "documents")
+    lines = docs.select(
+        F.when(
+            F.col("doc_id") % _CORRUPT_EVERY == 0,
+            F.concat(F.lit('{"doc_id": '), F.col("doc_id"), F.lit(', "lang": truncated')),
+        )
+        .otherwise(
+            F.to_json(F.struct("doc_id", "lang", "n_chars"))
+        )
+        .alias("value")
+    )
+    out = _tmp("quarantine", sf_dir)
+    lines.write.mode("overwrite").text(out)
+    back = (
+        spark.read.schema(_QUAR_SCHEMA)
+        .options(mode="PERMISSIVE", columnNameOfCorruptRecord="_corrupt_record")
+        .json(out)
+    )
+    return back.groupBy(
+        F.when(F.col("_corrupt_record").isNotNull(), F.lit("__quarantine__"))
+        .otherwise(F.col("lang"))
+        .alias("bucket")
+    ).agg(
+        F.count("*").alias("n_records"),
+        F.sum(F.coalesce("n_chars", F.lit(0))).alias("n_chars"),
+    )
+
+
+_QUARANTINE_SQL = f"""
+SELECT CASE WHEN doc_id % {_CORRUPT_EVERY} = 0 THEN '__quarantine__'
+            ELSE lang END AS bucket,
+       CAST(COUNT(*) AS BIGINT) AS n_records,
+       CAST(SUM(CASE WHEN doc_id % {_CORRUPT_EVERY} = 0 THEN 0
+                     ELSE n_chars END) AS BIGINT) AS n_chars
+FROM documents
+GROUP BY 1
+"""
+
+
+# ---------------------------------------------------------------------------
+# Binary-file manifest audit
+# ---------------------------------------------------------------------------
+
+_MANIFEST_FILES = 4
+
+
+#   * ``io_binary_manifest`` — a file-level integrity manifest of a
+#     written dataset via Spark's ``binaryFile`` source: per-file
+#     length and md5 over raw bytes, plus a read-back aggregate. File
+#     bytes are writer-dependent, so the oracle checks the
+#     data-content aggregate exactly and the manifest invariants as
+#     booleans (the same split contract as the compaction operator).
+def io_binary_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Write orders as {n} parquet files, then audit the dataset at
+    BOTH levels: (a) the file level through the ``binaryFile`` source
+    — per-file byte length and md5 over raw content, the manifest a
+    replication checker ships; (b) the data level through a read-back
+    aggregate the oracle reproduces exactly from the original table.
+    File bytes are writer-dependent, so the file-level facts fold
+    into booleans (count matches, every file hashed and non-empty)
+    rather than values the oracle cannot know — the established
+    contract for filesystem facts."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderpriority",
+        cents(F.col("o_totalprice")).alias("pc"),
+    )
+    out = _tmp("manifest", sf_dir)
+    orders.repartition(_MANIFEST_FILES).write.mode("overwrite").parquet(out)
+    manifest = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.parquet")
+        .load(out)
+        .select(
+            F.col("path"),
+            F.col("length"),
+            F.md5(F.col("content")).alias("file_md5"),
+        )
+    )
+    mrow = manifest.agg(
+        F.count("*").alias("n_files"),
+        F.min("length").alias("min_len"),
+        F.count(F.when(F.length("file_md5") == 32, 1)).alias("n_hashed"),
+    ).collect()[0]  # bounded: one row about <= n files
+    # Exact file-count claim (round-6 ADVICE tightened this from the
+    # former "1 <= n_files <= requested" tolerance): a round-robin
+    # repartition(k) of n rows from this fixture's single-input-
+    # partition layout lands EXACTLY min(k, n) non-empty files, plus
+    # at most ONE zero-row schema-only file (Spark always materializes
+    # write partition 0 to preserve the schema). Per-file row counts
+    # come from the written parquet footers — driver-side metadata, no
+    # extra Spark scan — so the boolean is a measured fact at every
+    # scale instead of a wide tolerance.
+    import os as _os
+
+    import pyarrow.parquet as _papq
+
+    file_rows = [
+        _papq.read_metadata(_os.path.join(out, f)).num_rows
+        for f in _os.listdir(out)
+        if f.endswith(".parquet")
+    ]
+    total_rows = sum(file_rows)
+    n_nonempty = sum(1 for r in file_rows if r > 0)
+    n_empty = len(file_rows) - n_nonempty
+    back = spark.read.parquet(out)
+    return back.groupBy("o_orderpriority").agg(
+        F.count("*").alias("n_orders"),
+        F.sum("pc").alias("revenue_cents"),
+        F.lit(
+            bool(
+                n_nonempty == min(_MANIFEST_FILES, total_rows)
+                and n_empty <= 1
+                and mrow.n_hashed == mrow.n_files
+                and (mrow.min_len or 0) > 0
+            )
+        ).alias("manifest_ok"),
+    )
+
+
+_MANIFEST_SQL = """
+SELECT o_orderpriority,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(TRY_CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+         AS revenue_cents,
+       TRUE AS manifest_ok
+FROM orders
+GROUP BY 1
+"""
+
+
+# ---------------------------------------------------------------------------
+# Dynamic partition overwrite
+# ---------------------------------------------------------------------------
+# The second write carries ONLY o_orderstatus = 'O' rows, re-priced
+# deterministically; dynamic mode must replace exactly that partition.
+
+_DPO_SQL = """
+SELECT o_orderstatus AS status,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(cents) AS BIGINT) AS total_cents
+FROM {src}
+GROUP BY o_orderstatus
+ORDER BY status
+"""
+
+
+_DPO_ORACLE = """
+WITH base AS (
+  -- IS DISTINCT FROM: a NULL status is a real partition (Spark
+  -- writes it as the Hive default partition and reads NULL back);
+  -- plain <> would silently drop it from the expected state
+  SELECT o_orderstatus,
+         TRY_CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+  FROM orders WHERE o_orderstatus IS DISTINCT FROM 'O'
+), regen AS (
+  SELECT o_orderstatus,
+         TRY_CAST(round(o_totalprice * 100) AS BIGINT) * 2 AS cents
+  FROM orders
+  WHERE o_orderstatus = 'O' AND o_orderkey % 3 = 0
+), unioned AS (
+  SELECT * FROM base UNION ALL SELECT * FROM regen
+)
+SELECT o_orderstatus AS status,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(cents) AS BIGINT) AS total_cents
+FROM unioned
+GROUP BY o_orderstatus
+ORDER BY status
+"""
+
+
+#   * ``io_dynamic_partition_overwrite`` — Spark's
+#     ``partitionOverwriteMode=dynamic``: a second INSERT OVERWRITE
+#     carrying only one partition's (regenerated) rows must replace
+#     exactly that partition and leave the others untouched. The
+#     read-back aggregate proves it; the oracle composes the expected
+#     final state from the original table (untouched partitions UNION
+#     the regenerated one).
+def io_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dynamic partition overwrite end-to-end: full partitioned write
+    of orders by status, then an INSERT OVERWRITE carrying ONLY a
+    regenerated 'O' partition (every third order, price doubled)
+    under ``partitionOverwriteMode=dynamic`` — which must replace
+    that single partition and leave 'F'/'P' untouched (static mode
+    would wipe them). The read-back aggregate is the proof; the
+    oracle composes the expected final state relationally. At scale
+    this IS the idempotent daily-partition reload primitive."""
+    out = _tmp("dpo", sf_dir)
+    orders = load_table(spark, sf_dir, "orders").selectExpr(
+        "o_orderkey",
+        "o_orderstatus",
+        "TRY_CAST(round(o_totalprice * 100) AS BIGINT) AS cents",
+    )
+    orders.write.partitionBy("o_orderstatus").mode("overwrite").parquet(out)
+    regen = orders.where("o_orderstatus = 'O' AND o_orderkey % 3 = 0").selectExpr(
+        "o_orderkey", "o_orderstatus", "cents * 2 AS cents"
+    )
+    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try:
+        regen.write.partitionBy("o_orderstatus").mode("overwrite").parquet(out)
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # explicit schema: an all-empty source writes no partition dirs,
+    # and schema inference on an empty path would throw — the empty
+    # table must aggregate to zero rows, not crash
+    spark.read.schema(
+        "o_orderkey BIGINT, cents BIGINT, o_orderstatus STRING"
+    ).parquet(out).createOrReplaceTempView("r29_dpo_readback")
+    return spark.sql(_DPO_SQL.format(src="r29_dpo_readback"))
+
+
+# ---------------------------------------------------------------------------
+# Parquet footer audit
+# ---------------------------------------------------------------------------
+
+_AUDIT_TABLES = (
+    ("orders", "o_orderkey"),
+    ("lineitem", "l_orderkey"),
+    ("documents", "doc_id"),
+)
+
+
+_AUDIT_SCHEMA = StructType(
+    [
+        StructField("tbl", StringType()),
+        StructField("n_files", LongType()),
+        StructField("n_row_groups", LongType()),
+        StructField("num_rows", LongType()),
+        StructField("min_key", LongType()),
+        StructField("max_key", LongType()),
+        StructField("null_count", LongType()),
+    ]
+)
+
+
+def _footer_stats(batches):
+    """mapInPandas worker: per (tbl, path) row, read ONLY the parquet
+    footer and fold row-group stats for the declared key column."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    for pdf in batches:
+        out = []
+        for tbl, path, key in zip(pdf["tbl"], pdf["path"], pdf["key"]):
+            paths = (
+                [
+                    os.path.join(path, f)
+                    for f in sorted(os.listdir(path))
+                    if f.endswith(".parquet")
+                ]
+                if os.path.isdir(path)
+                else [path]
+            )
+            n_rg = rows = nulls = 0
+            mn = mx = None
+            for p in paths:
+                md = pq.ParquetFile(p).metadata
+                idx = md.schema.names.index(key)
+                for g in range(md.num_row_groups):
+                    rg = md.row_group(g)
+                    st = rg.column(idx).statistics
+                    n_rg += 1
+                    rows += rg.num_rows
+                    if st is None:  # empty row group writes no stats
+                        continue
+                    nulls += st.null_count
+                    mn = st.min if mn is None else min(mn, st.min)
+                    mx = st.max if mx is None else max(mx, st.max)
+            out.append((tbl, len(paths), n_rg, rows, mn, mx, nulls))
+        yield pd.DataFrame(
+            out, columns=[f.name for f in _AUDIT_SCHEMA.fields]
+        )
+
+
+#   * ``io_parquet_footer_audit`` — proves parquet footer statistics
+#     (row counts, min/max, null counts) equal the data: the Spark
+#     side reads ONLY footers (pyarrow metadata, zero data IO),
+#     distributed one task per file; the DuckDB oracle computes the
+#     same numbers by scanning the data. Parity = footer integrity.
+def io_parquet_footer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Footer-integrity audit: for each table, fold the parquet
+    row-group statistics (row counts, key min/max, null counts) from
+    the file FOOTERS only — the Spark job never touches a data page,
+    one task per file via mapInPandas over the file manifest, which
+    is how a 100 TB lake audits a million files in seconds. The
+    DuckDB oracle computes identical numbers by actually scanning the
+    data, so a green row PROVES the footers tell the truth — the
+    property every min/max-pruning optimizer silently bets on. The
+    comparison columns are exactly the footer fields a scan planner
+    uses for pruning decisions."""
+    rows = [
+        (tbl, os.path.join(sf_dir, f"{tbl}.parquet"), key)
+        for tbl, key in _AUDIT_TABLES
+    ]
+    manifest = spark.createDataFrame(
+        rows, "tbl string, path string, key string"
+    ).repartition(len(rows))
+    return (
+        manifest.mapInPandas(_footer_stats, schema=_AUDIT_SCHEMA)
+        .orderBy("tbl")
+    )
+
+
+def _audit_duck() -> str:
+    parts = []
+    for tbl, key in _AUDIT_TABLES:
+        parts.append(f"""SELECT '{tbl}' AS tbl,
+       CAST(1 AS BIGINT) AS n_files,
+       CAST(1 AS BIGINT) AS n_row_groups,
+       CAST(COUNT(*) AS BIGINT) AS num_rows,
+       CAST(MIN({key}) AS BIGINT) AS min_key,
+       CAST(MAX({key}) AS BIGINT) AS max_key,
+       CAST(COUNT(*) - COUNT({key}) AS BIGINT) AS null_count
+FROM {tbl}""")
+    return "\nUNION ALL ".join(parts) + "\nORDER BY tbl"
+
+
+QUERIES = {
+    "io_csv_roundtrip": io_csv_roundtrip,
+    "io_json_roundtrip": io_json_roundtrip,
+    "io_xml_roundtrip": io_xml_roundtrip,
+    "io_partitioned_scan": io_partitioned_scan,
+    "layout_zorder_orders": layout_zorder_orders,
+    "io_bucketed_join": io_bucketed_join,
+    "io_schema_evolution": io_schema_evolution,
+    "io_orc_roundtrip": io_orc_roundtrip,
+    "io_small_file_compaction": io_small_file_compaction,
+    "io_snapshot_diff": io_snapshot_diff,
+    "io_codec_tradeoff": io_codec_tradeoff,
+    "io_corrupt_record_quarantine": io_corrupt_record_quarantine,
+    "io_binary_manifest": io_binary_manifest,
+    "io_dynamic_partition_overwrite": io_dynamic_partition_overwrite,
+    "io_parquet_footer_audit": io_parquet_footer_audit,
+}
+
+ORACLE = {
+    "io_csv_roundtrip": _CSV_SQL,
+    "io_json_roundtrip": _JSON_SQL,
+    "io_xml_roundtrip": _XML_SQL,
+    "io_partitioned_scan": _PART_SQL,
+    "layout_zorder_orders": _ZORDER_SQL,
+    "io_bucketed_join": _BUCKETED_SQL,
+    "io_schema_evolution": _SCHEMA_EVO_SQL,
+    "io_orc_roundtrip": _ORC_SQL,
+    "io_small_file_compaction": _COMPACTION_SQL,
+    "io_snapshot_diff": _SNAPSHOT_DIFF_SQL,
+    "io_codec_tradeoff": _CODEC_SQL,
+    "io_corrupt_record_quarantine": _QUARANTINE_SQL,
+    "io_binary_manifest": _MANIFEST_SQL,
+    "io_dynamic_partition_overwrite": _DPO_ORACLE,
+    "io_parquet_footer_audit": _audit_duck(),
+}

@@ -1,24 +1,6 @@
-"""Core relational operator coverage (SURVEY.md §2.9 'absent' categories).
-
-TPC-H-flavoured queries over the fixture star schema exercising scans,
-filters, projections, every join family (inner/outer/semi/anti,
-broadcast + shuffle, range/non-equi, as-of), aggregation (multi-agg,
-distinct, rollup/cube/grouping sets), window functions (ranking,
-running frames, lag/lead, ntile), sorts/limits/top-k-per-group, set
-ops, and date/string/JSON scalar functions.
-
-Scale notes (100 TB posture):
-  * dimension joins (region/nation/supplier/part) are explicitly
-    broadcast — no shuffle of the fact table on those keys;
-  * fact-fact joins (orders⋈lineitem) shuffle on the join key and are
-    AQE-managed (skew split + partition coalescing);
-  * aggregates use the integer-cents pattern from functions.numeric so
-    results are order-independent → reproducible at any parallelism;
-  * no driver collects: every query returns a lazy DataFrame.
-
-Reference parity: the reference's only distributed query is the
-group-by average (SURVEY §2.5 A1, src/pipeline_pyspark.py:352-355);
-everything else here covers the §2.9 required-but-absent surface.
+"""Relational operator shapes outside the larger families: dates, JSON,
+maps and arrays, pivots, subqueries, set operations, sorts, strings
+and slowly-changing dimensions.
 """
 
 from __future__ import annotations
@@ -26,591 +8,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import cents, money_avg, money_sum
+from ..functions.numeric import cents, money_sum
 from ..sources.readers import load_table
-from . import contract
-
-
-def _fmt_day(col):
-    return F.date_format(col, "yyyy-MM-dd")
-
-
-# ---------------------------------------------------------------------------
-# Q1 — pricing summary (scan + filter + hash aggregate, TPC-H Q1 shape)
-# ---------------------------------------------------------------------------
-
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    charge = disc_price * (F.lit(1.0) + F.col("l_tax"))
-    return (
-        li.where(F.col("l_shipdate") <= F.to_timestamp(F.lit("2000-12-01")))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            money_sum(F.col("l_quantity")).alias("sum_qty"),
-            money_sum(F.col("l_extendedprice")).alias("sum_base_price"),
-            money_sum(disc_price).alias("sum_disc_price"),
-            money_sum(charge).alias("sum_charge"),
-            money_avg(F.col("l_quantity")).alias("avg_qty"),
-            money_avg(F.col("l_extendedprice")).alias("avg_price"),
-            money_avg(F.col("l_discount"), scale=10000).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-_Q1_SQL = """
-SELECT
-  l_returnflag,
-  l_linestatus,
-  CAST(SUM(TRY_CAST(ROUND(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_qty,
-  CAST(SUM(TRY_CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_base_price,
-  CAST(SUM(TRY_CAST(ROUND(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_disc_price,
-  CAST(SUM(TRY_CAST(ROUND(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS sum_charge,
-  CAST(SUM(TRY_CAST(ROUND(l_quantity * 100) AS BIGINT)) AS DOUBLE) / (COUNT(l_quantity) * 100.0) AS avg_qty,
-  CAST(SUM(TRY_CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / (COUNT(l_extendedprice) * 100.0) AS avg_price,
-  CAST(SUM(TRY_CAST(ROUND(l_discount * 10000) AS BIGINT)) AS DOUBLE) / (COUNT(l_discount) * 10000.0) AS avg_disc,
-  COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '2000-12-01'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q3 — shipping priority (3-way join + agg + global top-k)
-# ---------------------------------------------------------------------------
-
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load_table(spark, sf_dir, "customer").where(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.to_timestamp(F.lit("1998-01-01"))
-    )
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.to_timestamp(F.lit("1998-01-01"))
-    )
-    revenue = F.sum(cents(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))) / 100.0
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        # customer filter is selective (1/5 of a dimension): broadcast it
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(revenue.alias("revenue"))
-        .select(
-            "l_orderkey",
-            _fmt_day("o_orderdate").alias("o_orderdate"),
-            "o_orderpriority",
-            "revenue",
-        )
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-_Q3_SQL = """
-SELECT
-  l_orderkey,
-  strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-  o_orderpriority,
-  CAST(SUM(TRY_CAST(ROUND(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-01-01'
-  AND l_shipdate > TIMESTAMP '1998-01-01'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey ASC
-LIMIT 10
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q5 — regional revenue (5-way star join, broadcast dims + shuffled facts)
-# ---------------------------------------------------------------------------
-
-def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    nation = load_table(spark, sf_dir, "nation")
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.to_timestamp(F.lit("1996-01-01")))
-        & (F.col("o_orderdate") < F.to_timestamp(F.lit("1998-01-01")))
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    sup = load_table(spark, sf_dir, "supplier")
-    revenue = F.sum(cents(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))) / 100.0
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        # local-supplier condition: supplier nation must equal customer nation
-        .join(
-            F.broadcast(sup),
-            (li.l_suppkey == sup.s_suppkey) & (cust.c_nationkey == sup.s_nationkey),
-        )
-        .join(F.broadcast(nation), sup.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("n_name")
-        .agg(revenue.alias("revenue"))
-    )
-
-
-_Q5_SQL = """
-SELECT
-  n_name,
-  CAST(SUM(TRY_CAST(ROUND(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS revenue
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation   ON s_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate <  TIMESTAMP '1998-01-01'
-GROUP BY n_name
-"""
-
-
-# ---------------------------------------------------------------------------
-# Join family: left outer with agg, semi, anti
-# ---------------------------------------------------------------------------
-
-def join_left_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey", "c_name", "c_mktsegment")
-        .agg(
-            F.count("o_orderkey").alias("n_orders"),
-            F.coalesce(money_sum(F.col("o_totalprice")), F.lit(0.0)).alias("total_spend"),
-        )
-    )
-
-
-_JOIN_LEFT_SQL = """
-SELECT
-  c_custkey, c_name, c_mktsegment,
-  COUNT(o_orderkey) AS n_orders,
-  COALESCE(CAST(SUM(TRY_CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100.0, 0.0) AS total_spend
-FROM customer
-LEFT JOIN orders ON c_custkey = o_custkey
-GROUP BY c_custkey, c_name, c_mktsegment
-"""
-
-
-def join_semi_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load_table(spark, sf_dir, "customer")
-    urgent = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    return cust.join(urgent, cust.c_custkey == urgent.o_custkey, "left_semi").select(
-        "c_custkey", "c_name", "c_acctbal"
-    )
-
-
-_JOIN_SEMI_SQL = """
-SELECT c_custkey, c_name, c_acctbal
-FROM customer
-WHERE EXISTS (
-  SELECT 1 FROM orders
-  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT'
+from .contract import (
+    money_rounded,
+    money_rounded_sql,
+    qty_scaled,
+    qty_scaled_sql,
+    tpch_date_valid,
+    tpch_date_valid_sql,
 )
-"""
-
-
-def join_anti_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # "no urgent order" rather than "no order at all": the fixture has
-    # an order for every customer, which would make the anti-join
-    # vacuously empty and the oracle check meaningless.
-    cust = load_table(spark, sf_dir, "customer")
-    urgent = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    return cust.join(urgent, cust.c_custkey == urgent.o_custkey, "left_anti").select(
-        "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
-    )
-
-
-_JOIN_ANTI_SQL = """
-SELECT c_custkey, c_name, c_mktsegment, c_acctbal
-FROM customer
-WHERE NOT EXISTS (
-  SELECT 1 FROM orders
-  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT'
-)
-"""
-
-
-# ---------------------------------------------------------------------------
-# Range (non-equi) join: histogram of event values against a bucket dim
-# ---------------------------------------------------------------------------
-
-_BUCKETS = [(float(lo), float(lo + 50)) for lo in range(0, 350, 50)]
-
-
-def join_range_value_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
-    buckets = spark.createDataFrame(_BUCKETS, "lo double, hi double")
-    # tiny bucket dim broadcast -> non-equi condition runs as
-    # BroadcastNestedLoopJoin: each event row tests 7 ranges, no shuffle
-    return (
-        events.join(
-            F.broadcast(buckets),
-            (events.value >= buckets.lo) & (events.value < buckets.hi),
-        )
-        .groupBy("lo", "hi")
-        .agg(
-            F.count("*").alias("n_events"),
-            money_sum(F.col("value")).alias("value_sum"),
-        )
-    )
-
-
-_JOIN_RANGE_SQL = """
-SELECT
-  lo, hi,
-  COUNT(*) AS n_events,
-  CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS value_sum
-FROM events
-JOIN (VALUES (0.0, 50.0), (50.0, 100.0), (100.0, 150.0), (150.0, 200.0),
-             (200.0, 250.0), (250.0, 300.0), (300.0, 350.0)) AS b(lo, hi)
-  ON value >= lo AND value < hi
-GROUP BY lo, hi
-"""
-
-
-# ---------------------------------------------------------------------------
-# As-of join: for each purchase, the most recent preceding view (same user)
-# ---------------------------------------------------------------------------
-
-def join_asof_purchase_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalable as-of join via the tagged-union + ordered-window trick.
-
-    Rather than a per-key merge (driver-side) or a crossJoin, union the
-    two sides with a kind tag and take a running max of the view
-    timestamps — one shuffle on user_id, linear work, no N×M blowup.
-    Semantics: last view with v.ts <= p.ts (views sort before purchases
-    on timestamp ties).
-    """
-    ev = load_table(spark, sf_dir, "events").where(
-        F.col("event_type").isin("view", "purchase")
-    )
-    tagged = ev.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.when(F.col("event_type") == "view", F.lit(0)).otherwise(F.lit(1)).alias("kind"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "kind", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    last_view = F.max(F.when(F.col("kind") == 0, F.col("ts"))).over(w)
-    out = (
-        tagged.withColumn("last_view_ts", last_view)
-        .where(F.col("kind") == 1)
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.unix_micros(F.col("ts")).alias("purchase_ts_us"),
-            F.unix_micros(F.col("last_view_ts")).alias("last_view_ts_us"),
-            (F.unix_micros(F.col("ts")) - F.unix_micros(F.col("last_view_ts"))).alias("gap_us"),
-        )
-    )
-    return out
-
-
-_JOIN_ASOF_SQL = """
-WITH t AS (
-  SELECT event_id, user_id, ts,
-         CASE WHEN event_type = 'view' THEN 0 ELSE 1 END AS kind
-  FROM events
-  WHERE event_type IN ('view', 'purchase')
-), m AS (
-  SELECT *,
-         MAX(CASE WHEN kind = 0 THEN ts END) OVER (
-           PARTITION BY user_id
-           ORDER BY ts, kind, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-         ) AS last_view_ts
-  FROM t
-)
-SELECT
-  event_id AS purchase_id,
-  user_id,
-  epoch_us(ts) AS purchase_ts_us,
-  epoch_us(last_view_ts) AS last_view_ts_us,
-  epoch_us(ts) - epoch_us(last_view_ts) AS gap_us
-FROM m
-WHERE kind = 1
-"""
-
-
-# ---------------------------------------------------------------------------
-# Aggregation variants: distinct, rollup, cube, grouping sets
-# ---------------------------------------------------------------------------
-
-def agg_distinct_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.groupBy("o_orderstatus").agg(
-        F.count("*").alias("n_orders"),
-        F.countDistinct("o_custkey").alias("n_customers"),
-        F.countDistinct("o_orderpriority").alias("n_priorities"),
-        money_avg(F.col("o_totalprice")).alias("avg_price"),
-    )
-
-
-_AGG_DISTINCT_SQL = """
-SELECT
-  o_orderstatus,
-  COUNT(*) AS n_orders,
-  COUNT(DISTINCT o_custkey) AS n_customers,
-  COUNT(DISTINCT o_orderpriority) AS n_priorities,
-  CAST(SUM(TRY_CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / (COUNT(o_totalprice) * 100.0) AS avg_price
-FROM orders
-GROUP BY o_orderstatus
-"""
-
-
-def agg_rollup_nation_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rollup totals. Bounded cents ingest (round-10 layer 2): on a
-    castable absurd balance the unbounded cents sum exceeds INT64 in
-    the grand-total row, where Spark's SUM(BIGINT) silently wraps but
-    DuckDB's promotes to HUGEINT — the bound keeps the sum exact in
-    both engines."""
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    return (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .rollup("n_name", "c_mktsegment")
-        .agg(
-            F.count("*").alias("n_customers"),
-            (F.sum(contract.money_rounded("c_acctbal")) / 100.0).alias(
-                "acctbal_sum"
-            ),
-        )
-    )
-
-
-# HAVING COUNT(*) > 0 mirrors Spark's grouping-sets-on-empty-input
-# semantics: standard SQL (and DuckDB) emit the () grand-total row
-# even over zero input rows, Spark emits nothing; on non-empty input
-# every rollup/cube row aggregates >= 1 row, so the guard is inert.
-_AGG_ROLLUP_SQL = f"""
-SELECT
-  n_name, c_mktsegment,
-  COUNT(*) AS n_customers,
-  CAST(SUM({contract.money_rounded_sql('c_acctbal')}) AS DOUBLE) / 100.0 AS acctbal_sum
-FROM customer
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY ROLLUP (n_name, c_mktsegment)
-HAVING COUNT(*) > 0
-"""
-
-
-def agg_cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        F.count("*").alias("n_items"),
-        money_sum(F.col("l_quantity")).alias("qty_sum"),
-    )
-
-
-_AGG_CUBE_SQL = """
-SELECT
-  l_returnflag, l_linestatus,
-  COUNT(*) AS n_items,
-  CAST(SUM(TRY_CAST(ROUND(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS qty_sum
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)
-HAVING COUNT(*) > 0
-"""
-
-
-def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("__gs_orders")
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority,
-               COUNT(*) AS n_orders,
-               CAST(SUM(TRY_CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS price_sum
-        FROM __gs_orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        """
-    )
-
-
-_AGG_GROUPING_SETS_SQL = """
-SELECT o_orderstatus, o_orderpriority,
-       COUNT(*) AS n_orders,
-       CAST(SUM(TRY_CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS price_sum
-FROM orders
-GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-HAVING COUNT(*) > 0
-"""
-
-
-# ---------------------------------------------------------------------------
-# Window functions
-# ---------------------------------------------------------------------------
-
-def window_topk_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        orders.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rk")
-    )
-
-
-_WINDOW_TOPK_SQL = """
-SELECT o_custkey, o_orderkey, o_totalprice, rk
-FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-         ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk
-  FROM orders
-)
-WHERE rk <= 3
-"""
-
-
-def window_running_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-customer running spend. Bounded cents + business-date
-    validity (round-10 layer 2): a NULL order date has no position in
-    the customer's timeline (engine NULL ordering differs), and
-    unbounded cents let a castable absurd value wrap Spark's running
-    SUM where DuckDB widens."""
-    orders = load_table(spark, sf_dir, "orders").where(
-        contract.tpch_date_valid("o_orderdate")
-    )
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        _fmt_day("o_orderdate").alias("o_orderdate"),
-        (
-            F.sum(contract.money_rounded("o_totalprice")).over(w) / 100.0
-        ).alias("running_spend"),
-    )
-
-
-_WINDOW_RUNNING_SQL = f"""
-SELECT
-  o_custkey, o_orderkey,
-  strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-  CAST(SUM({contract.money_rounded_sql('o_totalprice')}) OVER (
-    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-  ) AS DOUBLE) / 100.0 AS running_spend
-FROM orders
-WHERE {contract.tpch_date_valid_sql('o_orderdate')}
-"""
-
-
-def window_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    prev = F.lag("o_orderdate").over(w)
-    nxt = F.lead("o_orderdate").over(w)
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.datediff(F.col("o_orderdate"), prev).alias("days_since_prev"),
-        F.datediff(nxt, F.col("o_orderdate")).alias("days_until_next"),
-    )
-
-
-_WINDOW_GAPS_SQL = """
-SELECT
-  o_custkey, o_orderkey,
-  date_diff('day',
-            LAG(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-            o_orderdate) AS days_since_prev,
-  date_diff('day',
-            o_orderdate,
-            LEAD(o_orderdate) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)) AS days_until_next
-FROM orders
-"""
-
-
-def window_ntile_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-level money domain on the ordering column (round-10 layer
-    2): NULL/NaN balances place differently in the two engines'
-    window sort — a corrupt balance has no quartile."""
-    cust = load_table(spark, sf_dir, "customer").where(
-        contract.money_domain("c_acctbal")
-    )
-    w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
-    return (
-        cust.withColumn("quartile", F.ntile(4).over(w).cast("bigint"))
-        .groupBy("c_mktsegment", "quartile")
-        .agg(
-            F.count("*").alias("n_customers"),
-            F.min("c_acctbal").alias("min_bal"),
-            F.max("c_acctbal").alias("max_bal"),
-        )
-    )
-
-
-_WINDOW_NTILE_SQL = f"""
-SELECT c_mktsegment, quartile,
-       COUNT(*) AS n_customers,
-       MIN(c_acctbal) AS min_bal,
-       MAX(c_acctbal) AS max_bal
-FROM (
-  SELECT c_mktsegment, c_acctbal,
-         NTILE(4) OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey) AS quartile
-  FROM customer
-  WHERE {contract.money_domain_sql('c_acctbal')}
-)
-GROUP BY c_mktsegment, quartile
-"""
-
-
-def window_rank_dense_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    per_part = li.groupBy("l_partkey").agg(
-        (F.sum(cents(F.col("l_quantity"))) / 100.0).alias("total_qty")
-    )
-    w = Window.orderBy(F.desc("total_qty"), F.asc("l_partkey"))
-    return (
-        per_part.select(
-            "l_partkey",
-            "total_qty",
-            F.rank().over(w).cast("bigint").alias("qty_rank"),
-            F.dense_rank().over(w).cast("bigint").alias("qty_dense_rank"),
-        )
-        .where(F.col("qty_rank") <= 25)
-    )
-
-
-_WINDOW_RANK_SQL = """
-SELECT l_partkey, total_qty, qty_rank, qty_dense_rank
-FROM (
-  SELECT l_partkey, total_qty,
-         RANK() OVER (ORDER BY total_qty DESC, l_partkey ASC) AS qty_rank,
-         DENSE_RANK() OVER (ORDER BY total_qty DESC, l_partkey ASC) AS qty_dense_rank
-  FROM (
-    SELECT l_partkey,
-           CAST(SUM(TRY_CAST(ROUND(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS total_qty
-    FROM lineitem GROUP BY l_partkey
-  )
-)
-WHERE qty_rank <= 25
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -803,54 +210,423 @@ LIMIT 20
 """
 
 
+# ---------------------------------------------------------------------------
+# Pivot: order-status counts per market segment
+# ---------------------------------------------------------------------------
+
+def pivot_status_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    piv = (
+        orders.join(cust, orders.o_custkey == cust.c_custkey)
+        .groupBy("c_mktsegment")
+        .pivot("o_orderstatus", ["F", "O", "P"])
+        .count()
+    )
+    return piv.select(
+        "c_mktsegment",
+        *[F.coalesce(F.col(s), F.lit(0)).alias(f"n_{s}") for s in ("F", "O", "P")],
+    )
+
+
+_PIVOT_SQL = """
+SELECT c_mktsegment,
+       COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_F,
+       COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_O,
+       COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS n_P
+FROM orders JOIN customer ON o_custkey = c_custkey
+GROUP BY c_mktsegment
+"""
+
+
+# ---------------------------------------------------------------------------
+# Subqueries: scalar (uncorrelated) + IN
+# ---------------------------------------------------------------------------
+
+def subquery_big_building_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders.createOrReplaceTempView("__sq_orders")
+    cust.createOrReplaceTempView("__sq_customer")
+    # threshold derives from an exact MAX (not a float-order-dependent
+    # AVG) so the filter boundary is identical in both engines
+    return spark.sql(
+        """
+        SELECT o_orderkey, o_custkey, o_totalprice
+        FROM __sq_orders
+        WHERE o_totalprice > (SELECT MAX(o_totalprice) * 0.5 FROM __sq_orders)
+          AND o_custkey IN (
+              SELECT c_custkey FROM __sq_customer WHERE c_mktsegment = 'BUILDING'
+          )
+        """
+    )
+
+
+_SUBQUERY_SQL = """
+SELECT o_orderkey, o_custkey, o_totalprice
+FROM orders
+WHERE o_totalprice > (SELECT MAX(o_totalprice) * 0.5 FROM orders)
+  AND o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
+"""
+
+
+# ---------------------------------------------------------------------------
+# Schema-aligned union of heterogeneous entities
+# ---------------------------------------------------------------------------
+
+def union_account_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cust = load_table(spark, sf_dir, "customer").select(
+        F.lit("customer").alias("kind"),
+        F.col("c_custkey").alias("entity_id"),
+        F.col("c_acctbal").alias("acctbal"),
+        F.col("c_nationkey").alias("nationkey"),
+    )
+    sup = load_table(spark, sf_dir, "supplier").select(
+        F.lit("supplier").alias("kind"),
+        F.col("s_suppkey").alias("entity_id"),
+        F.col("s_acctbal").alias("acctbal"),
+        F.col("s_nationkey").alias("nationkey"),
+    )
+    return cust.unionByName(sup)
+
+
+_UNION_SQL = """
+SELECT 'customer' AS kind, c_custkey AS entity_id, c_acctbal AS acctbal, c_nationkey AS nationkey
+FROM customer
+UNION ALL
+SELECT 'supplier', s_suppkey, s_acctbal, s_nationkey FROM supplier
+"""
+
+
+# ---------------------------------------------------------------------------
+# Map functions: build, explode
+# ---------------------------------------------------------------------------
+
+def map_order_attributes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Build + explode an attribute map. Pinned NULL rule (round-10
+    layer 2): a NULL attribute VALUE is still an attribute — built
+    with ``create_map`` (holds NULL values) rather than str_to_map
+    over a concat, which NULL-propagates and silently drops BOTH map
+    entries for any order with one NULL field."""
+    orders = load_table(spark, sf_dir, "orders")
+    m = F.create_map(
+        F.lit("status"), F.col("o_orderstatus"),
+        F.lit("prio"), F.col("o_orderpriority"),
+    )
+    return orders.select(
+        "o_orderkey", F.explode(m).alias("attr_key", "attr_value")
+    )
+
+
+_MAP_SQL = """
+SELECT o_orderkey, 'status' AS attr_key, o_orderstatus AS attr_value FROM orders
+UNION ALL
+SELECT o_orderkey, 'prio', o_orderpriority FROM orders
+"""
+
+
+# ---------------------------------------------------------------------------
+# Calendar densification: daily event counts with zero-filled gaps
+# ---------------------------------------------------------------------------
+
+# Moments (variance/stddev/correlation) are computed from exact integer
+# co-moments (scaled round + BIGINT sums, final double formula) instead
+# of Spark's streaming aggregators — the built-ins are float-order-
+# dependent and can't hash-match an oracle across partitionings; the
+# co-moment form is bit-reproducible at any parallelism.
+def date_densified_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events = load_table(spark, sf_dir, "events")
+    days = spark.sql(
+        """
+        SELECT explode(sequence(DATE '2024-01-01', DATE '2024-01-30',
+                                INTERVAL 1 DAY)) AS day
+        """
+    ).select(F.date_format("day", "yyyy-MM-dd").alias("day"))
+    per_day = events.groupBy(
+        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day")
+    ).agg(F.count("*").alias("n_events"))
+    return (
+        days.join(per_day, "day", "left")
+        .select("day", F.coalesce(F.col("n_events"), F.lit(0)).alias("n_events"))
+    )
+
+
+_DENSIFY_SQL = """
+WITH days AS (
+  SELECT strftime(d, '%Y-%m-%d') AS day
+  FROM (SELECT unnest(generate_series(DATE '2024-01-01', DATE '2024-01-30',
+                                      INTERVAL 1 DAY)) AS d)
+),
+per_day AS (
+  SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, COUNT(*) AS n_events
+  FROM events GROUP BY 1
+)
+SELECT days.day, COALESCE(per_day.n_events, 0) AS n_events
+FROM days LEFT JOIN per_day ON days.day = per_day.day
+"""
+
+
+# ---------------------------------------------------------------------------
+# UNPIVOT (wide -> long reshape), the inverse of the pivot operator
+# ---------------------------------------------------------------------------
+
+def unpivot_customer_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Wide->long reshape via the ``stack`` generator (Spark's
+    UNPIVOT): one row per (customer, metric). Map-only — the
+    generator multiplies rows without any shuffle."""
+    cust = load_table(spark, sf_dir, "customer")
+    return cust.select(
+        "c_custkey",
+        F.expr(
+            "stack(2, 'acctbal', c_acctbal, 'nationkey', CAST(c_nationkey AS DOUBLE))"
+        ).alias("metric", "val"),
+    )
+
+
+_UNPIVOT_SQL = """
+SELECT c_custkey, 'acctbal' AS metric, c_acctbal AS val FROM customer
+UNION ALL
+SELECT c_custkey, 'nationkey' AS metric, CAST(c_nationkey AS DOUBLE) AS val FROM customer
+"""
+
+
+# ---------------------------------------------------------------------------
+# LATERAL correlated subquery: top-2 orders per customer
+# ---------------------------------------------------------------------------
+
+
+def lateral_top2_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL LATERAL form of per-group top-k. Catalyst decorrelates the
+    correlated LIMIT subquery into row_number + filter + broadcast
+    join — but (observed on Spark 4.1) it keeps the subquery's ORDER
+    BY as a GLOBAL range-sort exchange before the window's hash
+    exchange, one exchange more than the hand-written window form
+    (``window_topk_orders_per_customer``, which also gets the
+    WindowGroupLimit pushdown). So: the LATERAL surface is supported
+    and correct, and at 100 TB the window spelling is the one to
+    reach for — this plan difference is the documented reason.
+    Customers with no orders are absent (inner lateral)."""
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("__lat_customer")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("__lat_orders")
+    return spark.sql(
+        """
+        SELECT c.c_custkey, t.o_orderkey, t.total_units
+        FROM __lat_customer c
+        JOIN LATERAL (
+          SELECT o_orderkey,
+                 TRY_CAST(ROUND(o_totalprice) AS BIGINT) AS total_units
+          FROM __lat_orders o
+          WHERE o.o_custkey = c.c_custkey
+          ORDER BY o_totalprice DESC, o_orderkey
+          LIMIT 2
+        ) t
+        """
+    )
+
+
+_LATERAL_SQL = """
+SELECT c.c_custkey, t.o_orderkey, t.total_units
+FROM customer c,
+LATERAL (
+  SELECT o_orderkey,
+         TRY_CAST(ROUND(o_totalprice) AS BIGINT) AS total_units
+  FROM orders o
+  WHERE o.o_custkey = c.c_custkey
+  ORDER BY o_totalprice DESC, o_orderkey
+  LIMIT 2
+) t
+"""
+
+
+# ---------------------------------------------------------------------------
+# VARIANT: open-schema semi-structured pipeline
+# ---------------------------------------------------------------------------
+
+
+def json_variant_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """VARIANT round-trip: build a nested JSON document from typed
+    columns, parse it into Spark 4's VARIANT type, and extract typed
+    values back out with ``variant_get`` path expressions. VARIANT is
+    the open-schema answer for event payloads at scale — binary-encoded
+    (no re-parse per access), shreddable, and schema-on-read — and a
+    hash match against an oracle over the ORIGINAL columns proves the
+    build→parse→extract loop is lossless. The aggregation groups on an
+    extracted field, so extraction feeds a real plan, not a projection
+    demo."""
+    ev = load_table(spark, sf_dir, "events")
+    doc = F.to_json(
+        F.struct(
+            F.col("user_id").alias("u"),
+            F.struct(
+                F.col("event_type").alias("t"), F.col("value").alias("v")
+            ).alias("m"),
+        )
+    )
+    v = F.parse_json(doc)
+    extracted = ev.select(
+        F.variant_get(v, "$.m.t", "string").alias("etype"),
+        F.variant_get(v, "$.u", "bigint").alias("uid"),
+        F.variant_get(v, "$.m.v", "double").alias("val"),
+    )
+    return extracted.groupBy("etype").agg(
+        F.count("*").alias("n_events"),
+        F.countDistinct("uid").alias("n_users"),
+        F.sum(cents(F.col("val"))).alias("value_cents"),
+    )
+
+
+_VARIANT_SQL = """
+SELECT event_type AS etype,
+       COUNT(*) AS n_events,
+       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
+       CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
+FROM events
+GROUP BY event_type
+"""
+
+
+# ---------------------------------------------------------------------------
+# Array higher-order functions: per-order quantity profile
+# ---------------------------------------------------------------------------
+
+
+def array_hof_quantity_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The array HOF suite (aggregate / filter / exists / element_at)
+    over a per-order quantity array. Quantities become integer cents
+    BEFORE collection so the lambda-fold sum is associative-exact at
+    any parallelism; the array is sorted so the column is deterministic
+    too. All lambdas run as JVM codegen (no Python) — the point of
+    HOFs over a UDF.
+
+    Pinned NULL/contract rule (round-10 layer 2): quantities are
+    contract-bounded ([1, 50]) and a NULL/corrupt quantity is not an
+    item — Spark's collect_list silently drops NULLs while the
+    oracle's COUNT(*)/BOOL_OR count the row, so the exclusion happens
+    explicitly BEFORE grouping, identically on both sides."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", qty_scaled("l_quantity").alias("qc")
+    ).where(F.col("qc").isNotNull())
+    arr = li.groupBy("l_orderkey").agg(
+        F.sort_array(F.collect_list("qc")).alias("q")
+    )
+    return arr.select(
+        "l_orderkey",
+        F.size("q").alias("n_items"),
+        F.aggregate("q", F.lit(0).cast("long"), lambda acc, x: acc + x).alias(
+            "qty_cents"
+        ),
+        F.size(F.filter("q", lambda x: x > 2500)).alias("n_big"),
+        F.element_at("q", 1).alias("q_min_cents"),
+        F.element_at("q", -1).alias("q_max_cents"),
+        F.exists("q", lambda x: x % 100 != 0).alias("has_fractional"),
+    )
+
+
+_ARRAY_HOF_SQL = f"""
+SELECT l_orderkey,
+       COUNT(*) AS n_items,
+       CAST(SUM(qc) AS BIGINT) AS qty_cents,
+       CAST(COUNT(CASE WHEN qc > 2500 THEN 1 END) AS INTEGER) AS n_big,
+       MIN(qc) AS q_min_cents,
+       MAX(qc) AS q_max_cents,
+       BOOL_OR(qc % 100 <> 0) AS has_fractional
+FROM (
+  SELECT l_orderkey, {qty_scaled_sql('l_quantity')} AS qc
+  FROM lineitem
+)
+WHERE qc IS NOT NULL
+GROUP BY l_orderkey
+"""
+
+
+# ---------------------------------------------------------------------------
+# SCD2: validity intervals from an event log
+# ---------------------------------------------------------------------------
+
+
+#   * SCD2 interval construction (validity ranges from an event log),
+def scd2_customer_order_history(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Slowly-changing-dimension type 2 construction: each order is a
+    change event to the customer's cumulative spend; lead() closes the
+    validity interval, the open row gets the sentinel end date. This is
+    the standard merge-free SCD2 build — one window per customer
+    partition, no self-join.
+
+    Hostile-ingest rules (round-10 layer 2): a change event needs a
+    valid business date (NULL dates order differently per engine,
+    re-linking every validity interval) and cents are money-domain
+    bounded (a castable absurd value wraps Spark's running SUM where
+    DuckDB widens)."""
+    orders = load_table(spark, sf_dir, "orders").where(
+        tpch_date_valid("o_orderdate")
+    )
+    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    return orders.select(
+        F.col("o_custkey").alias("custkey"),
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("valid_from"),
+        F.lead(F.date_format("o_orderdate", "yyyy-MM-dd"), 1, "9999-12-31")
+        .over(w)
+        .alias("valid_to"),
+        F.row_number().over(w).alias("n_orders_to_date"),
+        F.sum(money_rounded("o_totalprice"))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .alias("cum_spend_cents"),
+    )
+
+
+_SCD2_SQL = f"""
+SELECT o_custkey AS custkey,
+       strftime(o_orderdate, '%Y-%m-%d') AS valid_from,
+       COALESCE(
+         LEAD(strftime(o_orderdate, '%Y-%m-%d'))
+           OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
+         '9999-12-31') AS valid_to,
+       CAST(ROW_NUMBER()
+         OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+         AS INTEGER) AS n_orders_to_date,
+       CAST(SUM({money_rounded_sql('o_totalprice')})
+         OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         AS BIGINT) AS cum_spend_cents
+FROM orders
+WHERE {tpch_date_valid_sql('o_orderdate')}
+"""
+
+
 QUERIES = {
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_shipping_priority": q3_shipping_priority,
-    "q5_region_revenue": q5_region_revenue,
-    "join_left_order_counts": join_left_order_counts,
-    "join_semi_active_customers": join_semi_active_customers,
-    "join_anti_dormant_customers": join_anti_dormant_customers,
-    "join_range_value_buckets": join_range_value_buckets,
-    "join_asof_purchase_last_view": join_asof_purchase_last_view,
-    "agg_distinct_by_status": agg_distinct_by_status,
-    "agg_rollup_nation_segment": agg_rollup_nation_segment,
-    "agg_cube_flag_status": agg_cube_flag_status,
-    "agg_grouping_sets": agg_grouping_sets,
-    "window_topk_orders_per_customer": window_topk_orders_per_customer,
-    "window_running_spend": window_running_spend,
-    "window_order_gaps": window_order_gaps,
-    "window_ntile_acctbal": window_ntile_acctbal,
-    "window_rank_dense_rank": window_rank_dense_rank,
     "setops_buyer_segments": setops_buyer_segments,
     "date_daily_event_stats": date_daily_event_stats,
     "date_parts_of_orders": date_parts_of_orders,
     "json_event_props": json_event_props,
     "string_part_catalog": string_part_catalog,
     "sort_global_top_orders": sort_global_top_orders,
+    "date_densified_daily_events": date_densified_daily_events,
+    "map_order_attributes": map_order_attributes,
+    "pivot_status_by_segment": pivot_status_by_segment,
+    "subquery_big_building_orders": subquery_big_building_orders,
+    "union_account_entities": union_account_entities,
+    "unpivot_customer_metrics": unpivot_customer_metrics,
+    "lateral_top2_orders_per_customer": lateral_top2_orders_per_customer,
+    "json_variant_nested": json_variant_nested,
+    "array_hof_quantity_profile": array_hof_quantity_profile,
+    "scd2_customer_order_history": scd2_customer_order_history,
 }
 
 ORACLE = {
-    "q1_pricing_summary": _Q1_SQL,
-    "q3_shipping_priority": _Q3_SQL,
-    "q5_region_revenue": _Q5_SQL,
-    "join_left_order_counts": _JOIN_LEFT_SQL,
-    "join_semi_active_customers": _JOIN_SEMI_SQL,
-    "join_anti_dormant_customers": _JOIN_ANTI_SQL,
-    "join_range_value_buckets": _JOIN_RANGE_SQL,
-    "join_asof_purchase_last_view": _JOIN_ASOF_SQL,
-    "agg_distinct_by_status": _AGG_DISTINCT_SQL,
-    "agg_rollup_nation_segment": _AGG_ROLLUP_SQL,
-    "agg_cube_flag_status": _AGG_CUBE_SQL,
-    "agg_grouping_sets": _AGG_GROUPING_SETS_SQL,
-    "window_topk_orders_per_customer": _WINDOW_TOPK_SQL,
-    "window_running_spend": _WINDOW_RUNNING_SQL,
-    "window_order_gaps": _WINDOW_GAPS_SQL,
-    "window_ntile_acctbal": _WINDOW_NTILE_SQL,
-    "window_rank_dense_rank": _WINDOW_RANK_SQL,
     "setops_buyer_segments": _SETOPS_SQL,
     "date_daily_event_stats": _DATE_DAILY_SQL,
     "date_parts_of_orders": _DATE_PARTS_SQL,
     "json_event_props": _JSON_PROPS_SQL,
     "string_part_catalog": _STRING_PART_SQL,
     "sort_global_top_orders": _SORT_TOP_SQL,
+    "date_densified_daily_events": _DENSIFY_SQL,
+    "map_order_attributes": _MAP_SQL,
+    "pivot_status_by_segment": _PIVOT_SQL,
+    "subquery_big_building_orders": _SUBQUERY_SQL,
+    "union_account_entities": _UNION_SQL,
+    "unpivot_customer_metrics": _UNPIVOT_SQL,
+    "lateral_top2_orders_per_customer": _LATERAL_SQL,
+    "json_variant_nested": _VARIANT_SQL,
+    "array_hof_quantity_profile": _ARRAY_HOF_SQL,
+    "scd2_customer_order_history": _SCD2_SQL,
 }

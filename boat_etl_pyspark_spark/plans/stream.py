@@ -1,0 +1,1299 @@
+"""Oracle-checked streaming queries. Each one runs a Structured
+Streaming job (watermark, event-time window or state over a
+file-source stream, availableNow trigger, memory sink) and returns the
+final table; the DuckDB oracle computes the batch-equivalent answer.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import os
+import time
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..functions.numeric import cents
+from ..sources.readers import load_table
+from ..streaming.events import (
+    read_events_stream,
+    run_stream_to_memory,
+    scratch_dir,
+    stream_dir_multi,
+)
+from .contract import EV_TIME_HI_US, EV_TIME_LO_US, ts_valid, ts_valid_sql
+
+
+_GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap
+
+
+def stream_tumbling_6h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # explicit, not incidental: an event without event-time cannot be
+    # watermarked or windowed (Spark's window agg would silently drop
+    # it) — filtered symmetrically with the oracle.
+    ev = read_events_stream(spark, sf_dir).where(
+        F.col("ev_time").isNotNull()
+    )
+    win = (
+        ev.withWatermark("ev_time", "1 hour")
+        .groupBy(F.window("ev_time", "6 hours").alias("w"), "event_type")
+        .agg(
+            F.count("*").alias("n_events"),
+            (F.sum(cents(F.col("value"))) / 100.0).alias("value_sum"),
+        )
+        .select(
+            F.unix_micros(F.col("w.start")).alias("ws_us"),
+            F.unix_micros(F.col("w.end")).alias("we_us"),
+            "event_type",
+            "n_events",
+            "value_sum",
+        )
+    )
+    return run_stream_to_memory(win, "complete")
+
+
+_TUMBLING_SQL = """
+SELECT
+  (epoch_us(ts) // 21600000000) * 21600000000 AS ws_us,
+  ((epoch_us(ts) // 21600000000) + 1) * 21600000000 AS we_us,
+  event_type,
+  COUNT(*) AS n_events,
+  CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS value_sum
+FROM events
+WHERE ts IS NOT NULL
+GROUP BY 1, 2, 3
+"""
+
+
+def stream_sliding_6h_3h(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = read_events_stream(spark, sf_dir)
+    win = (
+        ev.withWatermark("ev_time", "1 hour")
+        .groupBy(F.window("ev_time", "6 hours", "3 hours").alias("w"))
+        .agg(
+            F.count("*").alias("n_events"),
+            # exact distinct aggregation is not allowed on streams;
+            # value sum keeps the query deterministic instead
+            (F.sum(cents(F.col("value"))) / 100.0).alias("value_sum"),
+        )
+        .select(
+            F.unix_micros(F.col("w.start")).alias("ws_us"),
+            F.unix_micros(F.col("w.end")).alias("we_us"),
+            "n_events",
+            "value_sum",
+        )
+    )
+    return run_stream_to_memory(win, "complete")
+
+
+# each event lands in the two overlapping 6h windows whose start is
+# aligned to a 3h slide boundary
+_SLIDING_SQL = """
+WITH hit AS (
+  SELECT e.*, ((epoch_us(ts) // 10800000000) - k) * 10800000000 AS ws_us
+  FROM events e, range(0, 2) r(k)
+  WHERE epoch_us(ts) >= ((epoch_us(ts) // 10800000000) - k) * 10800000000
+    AND epoch_us(ts) <  ((epoch_us(ts) // 10800000000) - k) * 10800000000 + 21600000000
+)
+SELECT ws_us, ws_us + 21600000000 AS we_us,
+       COUNT(*) AS n_events,
+       CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS value_sum
+FROM hit
+GROUP BY ws_us
+"""
+
+
+def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Event-time validity window (contract.ts_valid, symmetric with the
+    # oracle): drops no-event-time rows (Spark's session_window would
+    # silently drop them) AND out-of-domain times — the stream
+    # watermark initializes at epoch 0, so a pre-1970 event time is
+    # late-by-construction in its first micro-batch (round-8 probe,
+    # bisected commit b285e49) while a batch oracle keeps the row.
+    ev = read_events_stream(spark, sf_dir).where(ts_valid("ev_time"))
+    win = (
+        ev.withWatermark("ev_time", "1 hour")
+        .groupBy(F.session_window("ev_time", "30 minutes").alias("w"), "user_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            (F.sum(cents(F.col("value"))) / 100.0).alias("value_sum"),
+        )
+        .select(
+            "user_id",
+            F.unix_micros(F.col("w.start")).alias("session_start_us"),
+            F.unix_micros(F.col("w.end")).alias("session_end_us"),
+            "n_events",
+            "value_sum",
+        )
+    )
+    return run_stream_to_memory(win, "complete")
+
+
+_SESSION_SQL = f"""
+WITH e AS (SELECT user_id, epoch_us(ts) AS tu, value FROM events
+           WHERE {ts_valid_sql('ts')}),
+m AS (
+  SELECT *, CASE WHEN tu - LAG(tu) OVER (PARTITION BY user_id ORDER BY tu)
+                      >= {_GAP_US} THEN 1 ELSE 0 END AS new_s
+  FROM e
+),
+s AS (
+  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY tu
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+  FROM m
+)
+SELECT user_id,
+       MIN(tu) AS session_start_us,
+       MAX(tu) + {_GAP_US} AS session_end_us,
+       COUNT(*) AS n_events,
+       CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS value_sum
+FROM s
+GROUP BY user_id, sid
+"""
+
+
+def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Custom stateful operator (applyInPandasWithState). The memory
+    sink accumulates one update row per touched user per micro-batch;
+    the final running totals are the per-user maxima, which must equal
+    a plain batch aggregation."""
+    from ..streaming.events import stateful_user_totals
+
+    ev = read_events_stream(spark, sf_dir)
+    updates = run_stream_to_memory(stateful_user_totals(ev), "update")
+    return updates.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max("value_sum").alias("value_sum"),
+    )
+
+
+_STATEFUL_SQL = """
+SELECT user_id,
+       COUNT(*) AS n_events,
+       CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS value_sum
+FROM events
+GROUP BY user_id
+"""
+
+
+def stream_dedup_user_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming deduplication: first-seen (user_id, event_type) pairs
+    via dropDuplicates state. Only the key columns are emitted, so the
+    result is deterministic regardless of arrival order and equals
+    batch DISTINCT."""
+    ev = read_events_stream(spark, sf_dir)
+    deduped = ev.select("user_id", "event_type").dropDuplicates(
+        ["user_id", "event_type"]
+    )
+    return run_stream_to_memory(deduped, "append")
+
+
+_STREAM_DEDUP_SQL = """
+SELECT DISTINCT user_id, event_type FROM events
+"""
+
+
+def stream_static_value_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-static join: the event stream joined against a static
+    bucket dimension (broadcast on every micro-batch), then an
+    event-time-independent aggregation in complete mode."""
+    ev = read_events_stream(spark, sf_dir)
+    # static side must come from the stream's isolated session
+    buckets = ev.sparkSession.createDataFrame(
+        [(float(lo), float(lo + 70)) for lo in range(0, 350, 70)],
+        "lo double, hi double",
+    )
+    joined = ev.join(
+        F.broadcast(buckets),
+        (ev.value >= buckets.lo) & (ev.value < buckets.hi),
+    )
+    agg = joined.groupBy("lo", "hi").agg(
+        F.count("*").alias("n_events"),
+        (F.sum(cents(F.col("value"))) / 100.0).alias("value_sum"),
+    )
+    return run_stream_to_memory(agg, "complete")
+
+
+_STREAM_STATIC_SQL = """
+SELECT lo, hi,
+       COUNT(*) AS n_events,
+       CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS value_sum
+FROM events
+JOIN (VALUES (0.0, 70.0), (70.0, 140.0), (140.0, 210.0),
+             (210.0, 280.0), (280.0, 350.0)) AS b(lo, hi)
+  ON value >= lo AND value < hi
+GROUP BY lo, hi
+"""
+
+
+# Each query executes a genuine Structured Streaming job (watermark +
+# event-time window over a file-source stream, availableNow trigger,
+# memory sink) and returns the final table; the DuckDB oracle computes
+# the batch-equivalent answer with epoch bucketing / gap sessionization.
+def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermarked stream-stream inner join: each purchase joined to
+    the same user's views from the preceding hour. Both sides carry
+    watermarks so the join state is bounded (views older than the
+    interval + watermark are evicted) — the canonical attribution
+    shape on unbounded streams."""
+    ev = read_events_stream(spark, sf_dir)
+    views = (
+        ev.where(F.col("event_type") == "view")
+        .select(
+            F.col("event_id").alias("view_id"),
+            F.col("user_id").alias("v_user"),
+            F.col("ev_time").alias("v_time"),
+        )
+        .withWatermark("v_time", "30 minutes")
+    )
+    purchases = (
+        # second leg of the stream-stream join: same isolated session
+        read_events_stream(ev.sparkSession, sf_dir, reuse_session=True)
+        .where(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ev_time").alias("p_time"),
+        )
+        .withWatermark("p_time", "30 minutes")
+    )
+    joined = purchases.join(
+        views,
+        (F.col("p_user") == F.col("v_user"))
+        & (F.col("v_time") <= F.col("p_time"))
+        & (F.col("v_time") >= F.col("p_time") - F.expr("INTERVAL 1 HOUR")),
+    ).select(
+        "purchase_id",
+        "view_id",
+        F.col("p_user").alias("user_id"),
+        F.unix_micros("p_time").alias("purchase_ts_us"),
+        F.unix_micros("v_time").alias("view_ts_us"),
+    )
+    return run_stream_to_memory(joined, "append")
+
+
+_STREAM_STREAM_SQL = """
+SELECT p.event_id AS purchase_id,
+       v.event_id AS view_id,
+       p.user_id,
+       epoch_us(p.ts) AS purchase_ts_us,
+       epoch_us(v.ts) AS view_ts_us
+FROM events p
+JOIN events v
+  ON p.event_type = 'purchase' AND v.event_type = 'view'
+ AND p.user_id = v.user_id
+ AND v.ts <= p.ts
+ AND v.ts >= p.ts - INTERVAL 1 HOUR
+"""
+
+
+def stream_kafka_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kafka-source plumbing check as a real streaming job: events ->
+    Kafka wire records (JSON value, keyed partition, offset) ->
+    consumer parse -> per-(partition, event_type) totals. The oracle
+    recomputes from the raw events, so a MATCH proves the serialize/
+    parse round-trip is lossless (doubles included) and the partition/
+    offset assignment is deterministic."""
+    from ..sources.kafka_shim import parse_event_records, read_kafka_shaped_stream
+
+    ev = parse_event_records(read_kafka_shaped_stream(spark, sf_dir))
+    agg = ev.groupBy(
+        F.col("partition").cast("bigint").alias("partition"), "event_type"
+    ).agg(
+        F.count("*").alias("n_events"),
+        (F.sum(cents(F.col("value"))) / 100.0).alias("value_sum"),
+        F.max("offset").alias("max_offset"),
+    )
+    return run_stream_to_memory(agg, "complete")
+
+
+_KAFKA_ROUNDTRIP_SQL = """
+SELECT user_id % 4 AS partition,
+       event_type,
+       COUNT(*) AS n_events,
+       CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS value_sum,
+       MAX(event_id) AS max_offset
+FROM events
+GROUP BY 1, 2
+"""
+
+
+def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermark-BOUNDED streaming dedup (dropDuplicatesWithinWatermark):
+    unlike plain dropDuplicates, whose key state grows forever, a key's
+    state is evicted once the watermark passes it — the only dedup that
+    survives an unbounded stream. The backlog is replayed as three
+    event-time-ordered micro-batches so the watermark genuinely
+    advances across batches; the delay is set beyond the fixture's span
+    so no key is evicted mid-replay and the result equals batch
+    DISTINCT (production sizes the delay to its dedup horizon)."""
+    ev = read_events_stream(
+        spark,
+        sf_dir,
+        dir_override=stream_dir_multi(sf_dir, 3),
+        max_files_per_trigger=1,
+    ).where(ts_valid("ev_time"))  # event-time validity window; see
+    #   stream_session_windows (pre-epoch rows are watermark-late)
+    # the dedup horizon must cover the event-time VALIDITY WINDOW's
+    # full span (contract: [2000-01-01, 2100-01-01), ~36525 days), not
+    # just the dense corpus span: any in-domain row may advance the
+    # watermark, and a key evicted mid-replay re-emits — breaking the
+    # equals-batch-DISTINCT contract the oracle checks
+    deduped = (
+        ev.withWatermark("ev_time", "36600 days")
+        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+        .select("user_id", "event_type")
+    )
+    return run_stream_to_memory(deduped, "append")
+
+
+_STREAM_DEDUP_WM_SQL = f"""
+SELECT DISTINCT user_id, event_type FROM events
+WHERE {ts_valid_sql('ts')}
+"""
+
+
+def stream_foreachbatch_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """foreachBatch sink: each micro-batch writes its partial per-type
+    aggregate (mergeable integer-cents partials) into the accumulator
+    partition ``batch_id=<N>`` with DYNAMIC partition overwrite; the
+    final answer re-aggregates the partials. Keying the write by
+    ``batch_id`` is what makes it idempotent under micro-batch retry:
+    a replayed batch overwrites ITS OWN partition instead of appending
+    a duplicate partial (blind append would double-count on retry).
+    This is the exactly-once merge-sink pattern for feeding a warehouse
+    table from a stream, and the replay runs as three real
+    micro-batches."""
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+
+    ev = read_events_stream(
+        spark,
+        sf_dir,
+        dir_override=stream_dir_multi(sf_dir, 3),
+        max_files_per_trigger=1,
+    )
+    session = ev.sparkSession
+    acc = os.path.join(
+        scratch_dir(),
+        f"spark_graft_febatch_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
+        f"_{os.getpid()}",
+    )
+    shutil.rmtree(acc, ignore_errors=True)
+    ckpt = acc + "_ck"
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        (
+            batch_df.groupBy("event_type")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum(cents(F.col("value"))).alias("value_cents"),
+            )
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(acc)
+        )
+
+    q = (
+        ev.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(300)
+    finally:
+        if q.isActive:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
+    # Cold-start/empty stream: zero micro-batches fired, so the
+    # accumulator dir was never created — the merged table is empty.
+    acc_schema = "event_type string, n_events bigint, value_cents bigint, batch_id int"
+    if os.path.isdir(acc):
+        # Explicit schema: an all-empty replay leaves the accumulator
+        # with no data files, where inference would fail.
+        partials = session.read.schema(acc_schema).parquet(acc)
+    else:
+        partials = session.createDataFrame([], acc_schema)
+    return partials.groupBy("event_type").agg(
+        F.sum("n_events").alias("n_events"),
+        F.sum("value_cents").alias("value_cents"),
+    )
+
+
+_FOREACHBATCH_SQL = """
+SELECT event_type,
+       COUNT(*) AS n_events,
+       CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
+FROM events
+GROUP BY event_type
+"""
+
+
+def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Checkpoint recovery across a REAL query restart — the
+    production streaming property none of the other replay harnesses
+    exercise: two files arrive, the query runs to completion
+    (availableNow) and STOPS; a third file lands; a NEW query object
+    resumes from the SAME checkpointLocation. The checkpoint must
+    restore both the source offsets (run 2 reads only the new file)
+    and the window state (totals for windows spanning old data stay
+    correct even though their rows are never re-read). Update-mode
+    emissions land via foreachBatch with dynamic partition overwrite
+    keyed by (window, event_type), so each re-emission REPLACES that
+    window's row — idempotent under retry and under the restart. The
+    oracle is the plain batch tumbling aggregate: it can only match
+    if state genuinely survived the restart (losing it would leave
+    run-2-updated windows holding file-3-only counts)."""
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+
+    src3 = stream_dir_multi(sf_dir, 3)
+    files = sorted(
+        f for f in os.listdir(src3) if f.endswith(".parquet")
+    )
+    import glob
+
+    key = (
+        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}_{os.getpid()}"
+    )
+    # one dir triple per (sf_dir, pid); stale triples from DEAD pids
+    # would otherwise accumulate in /tmp across CI/bench processes.
+    # Only reap triples whose embedded owner pid no longer exists —
+    # an unconditional sweep deletes a concurrently-running process's
+    # arrival dir mid-replay (reproduced round 9: pytest + a driver
+    # replay on one host corrupt each other; VERDICT r09 item 1).
+    for stale in glob.glob(
+        os.path.join(scratch_dir(), "spark_graft_ckr_*")
+    ):
+        tail = stale.rsplit("_", 1)[-1]
+        if not tail.isdigit():
+            continue
+        owner = int(tail)
+        if owner == os.getpid():
+            continue  # own triple is re-created below via the key
+        try:
+            os.kill(owner, 0)  # signal 0: existence probe only
+        except ProcessLookupError:
+            shutil.rmtree(stale, ignore_errors=True)
+        except PermissionError:
+            pass  # alive under another uid — leave it
+    # the OWN key's triple is always rebuilt from scratch
+    for own in glob.glob(
+        os.path.join(scratch_dir(), f"spark_graft_ckr_*_{key}")
+    ):
+        shutil.rmtree(own, ignore_errors=True)
+    arrival = os.path.join(scratch_dir(), f"spark_graft_ckr_a_{key}")
+    ckpt = os.path.join(scratch_dir(), f"spark_graft_ckr_c_{key}")
+    acc = os.path.join(scratch_dir(), f"spark_graft_ckr_s_{key}")
+    os.makedirs(arrival)
+
+    def run_once() -> None:
+        # event-time validity window (see stream_session_windows)
+        ev = read_events_stream(spark, sf_dir, dir_override=arrival,
+                                max_files_per_trigger=1).where(
+            ts_valid("ev_time")
+        )
+        win = (
+            ev.withWatermark("ev_time", "1 hour")
+            .groupBy(F.window("ev_time", "6 hours").alias("w"), "event_type")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum(cents(F.col("value"))).alias("value_cents"),
+            )
+            .select(
+                F.unix_micros(F.col("w.start")).alias("ws_us"),
+                "event_type", "n_events", "value_cents",
+            )
+        )
+
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            (
+                batch_df.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("ws_us", "event_type")
+                .parquet(acc)
+            )
+
+        q = (
+            win.writeStream.outputMode("update")
+            .foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination(300)
+        finally:
+            if q.isActive:
+                q.stop()
+
+    # copy2 preserves the strictly-increasing mtimes stream_dir_multi
+    # engineers — FileStreamSource orders pending files by ms-granular
+    # modification time, so a plain copy would leave micro-batch order
+    # (and hence the watermark walk) to timestamp luck
+    for f in files[:2]:
+        shutil.copy2(os.path.join(src3, f), os.path.join(arrival, f))
+    run_once()
+    shutil.copy2(os.path.join(src3, files[2]),
+                 os.path.join(arrival, files[2]))
+    run_once()
+
+    acc_schema = (
+        "n_events bigint, value_cents bigint, ws_us bigint,"
+        " event_type string"
+    )
+    # plain batch read — no live stream left, any session will do
+    out = spark.read.schema(acc_schema).parquet(acc)
+    return out.select(
+        "ws_us",
+        (F.col("ws_us") + 6 * 3600 * 1_000_000).alias("we_us"),
+        "event_type",
+        F.col("n_events").cast("bigint").alias("n_events"),
+        F.col("value_cents").cast("bigint").alias("value_cents"),
+    )
+
+
+_CKPT_RESTART_SQL = f"""
+SELECT
+  (epoch_us(ts) // 21600000000) * 21600000000 AS ws_us,
+  ((epoch_us(ts) // 21600000000) + 1) * 21600000000 AS we_us,
+  event_type,
+  COUNT(*) AS n_events,
+  CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
+FROM events
+WHERE {ts_valid_sql('ts')}
+GROUP BY 1, 2, 3
+"""
+
+
+# ---------------------------------------------------------------------------
+# Append-mode streaming windows (watermark-closed only)
+# ---------------------------------------------------------------------------
+
+_APPEND_WINDOW = "6 hours"
+
+
+_APPEND_DELAY_H = 2
+
+
+#   * ``stream_append_mode_windows`` — append-mode tumbling windows
+#     under a watermark: only windows CLOSED by the final watermark
+#     emit. The held-back tail is exactly SQL-expressible, so append
+#     semantics get a driver-grade oracle row (the in-repo streaming
+#     tests check the strictness property; this checks the numbers).
+def stream_append_mode_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling windows in APPEND output mode: a window emits only
+    once the watermark (max event time - 2h) passes its end, so the
+    in-flight tail is held back — the contract that lets a downstream
+    consumer treat every emitted row as FINAL (exactly-once window
+    handoff). The 3-file event-time-ordered replay advances the
+    watermark between micro-batches; the oracle recomputes the same
+    rule in SQL: windows with end <= max(ts) - 2h."""
+    ev = read_events_stream(
+        spark,
+        sf_dir,
+        dir_override=stream_dir_multi(sf_dir, 3),
+        max_files_per_trigger=1,
+        # narrower state width for the 3-batch replay; see
+        # stream_chained_agg's note + SCALE.md floor analysis
+        state_partitions=4,
+    ).where(ts_valid("ev_time"))  # event-time validity window: the
+    #   stream watermark initializes at epoch 0, so pre-1970 rows are
+    #   late-by-construction (round-8 probe, commit b285e49); bound
+    #   symmetrically with the oracle per contract.ts_valid
+    agg = (
+        ev.withWatermark("ev_time", f"{_APPEND_DELAY_H} hours")
+        .groupBy(
+            F.window("ev_time", _APPEND_WINDOW).alias("w"), "event_type"
+        )
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum(cents(F.col("value"))).alias("value_cents"),
+        )
+        .select(
+            F.unix_micros(F.col("w.start")).alias("ws_us"),
+            F.unix_micros(F.col("w.end")).alias("we_us"),
+            "event_type",
+            "n_events",
+            "value_cents",
+        )
+    )
+    return run_stream_to_memory(agg, output_mode="append")
+
+
+_APPEND_DELAY_US = _APPEND_DELAY_H * 3600 * 1_000_000
+
+
+_WIN_US = 6 * 3600 * 1_000_000
+
+
+_APPEND_SQL = f"""
+WITH ev AS (
+  SELECT * FROM events WHERE {ts_valid_sql('ts')}
+), wm AS (
+  SELECT MAX(epoch_us(ts)) - {_APPEND_DELAY_US} AS wm_us FROM ev
+), win AS (
+  SELECT (epoch_us(ts) // {_WIN_US}) * {_WIN_US} AS ws_us,
+         event_type,
+         COUNT(*) AS n_events,
+         CAST(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
+  FROM ev
+  GROUP BY 1, 2
+)
+SELECT ws_us, ws_us + {_WIN_US} AS we_us, event_type, n_events, value_cents
+FROM win, wm
+WHERE ws_us + {_WIN_US} <= wm.wm_us
+"""
+
+
+# ---------------------------------------------------------------------------
+# Chained stateful streaming aggregations (Spark 4 multi-stateful)
+# ---------------------------------------------------------------------------
+
+_CHAIN_DELAY_H = 2
+
+
+_CHAIN_WIN = "6 hours"
+
+
+_CHAIN_DELAY_US = _CHAIN_DELAY_H * 3600 * 1_000_000
+
+
+_CHAIN_WIN_US = 6 * 3600 * 1_000_000
+
+
+#   * ``stream_chained_agg`` — TWO stateful aggregations chained in one
+#     streaming query (Spark 4 multi-stateful support): per-(window,
+#     user) counts feeding a per-window distinct-user rollup, append
+#     mode, watermark-closed emission — checked numerically.
+def stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two stateful aggregations CHAINED inside one streaming query
+    (Spark 4 lifts the single-stateful-operator limit): per-(window,
+    user) event counts roll up into per-window active-user stats
+    without leaving the stream. The second agg groups on the first's
+    window column, so state remains event-time bounded and the
+    watermark flows through both operators; append mode emits each
+    window once, closed. The oracle reproduces both levels plus the
+    watermark-closed rule in SQL."""
+    ev = read_events_stream(
+        spark,
+        sf_dir,
+        dir_override=stream_dir_multi(sf_dir, 3),
+        max_files_per_trigger=1,
+        # TWO stateful operators pay state-store maintenance per
+        # partition per micro-batch; measured width sweep at sf0.1
+        # (16/8/4/2 -> 4.4/3.3/2.6/2.3s) shows the term. 4 covers the
+        # fixture's state cardinality; the remaining ~2.3s is 3-batch
+        # replay planning+commit, inherent to the shape (SCALE.md).
+        state_partitions=4,
+    ).where(ts_valid("ev_time"))  # event-time validity window: the
+    #   stream watermark initializes at epoch 0, so pre-1970 rows are
+    #   late-by-construction (round-8 probe, commit b285e49); bound
+    #   symmetrically with the oracle per contract.ts_valid
+    per_user = (
+        ev.withWatermark("ev_time", f"{_CHAIN_DELAY_H} hours")
+        .groupBy(F.window("ev_time", _CHAIN_WIN).alias("w"), "user_id")
+        .agg(F.count("*").alias("n_events"))
+    )
+    rollup = per_user.groupBy("w").agg(
+        F.count("*").alias("n_users"),
+        F.sum("n_events").alias("n_events"),
+        F.max("n_events").alias("max_user_events"),
+    )
+    out = rollup.select(
+        F.unix_micros(F.col("w.start")).alias("ws_us"),
+        "n_users",
+        "n_events",
+        "max_user_events",
+    )
+    return run_stream_to_memory(out, output_mode="append")
+
+
+_CHAINED_SQL = f"""
+WITH ev AS (
+  SELECT * FROM events WHERE {ts_valid_sql('ts')}
+), wm AS (
+  SELECT MAX(epoch_us(ts)) - {_CHAIN_DELAY_US} AS wm_us FROM ev
+), per_user AS (
+  SELECT (epoch_us(ts) // {_CHAIN_WIN_US}) * {_CHAIN_WIN_US} AS ws_us,
+         user_id,
+         COUNT(*) AS n_events
+  FROM ev
+  GROUP BY 1, 2
+)
+SELECT ws_us,
+       COUNT(*) AS n_users,
+       CAST(SUM(n_events) AS BIGINT) AS n_events,
+       MAX(n_events) AS max_user_events
+FROM per_user, wm
+WHERE ws_us + {_CHAIN_WIN_US} <= wm.wm_us
+GROUP BY ws_us
+"""
+
+
+# ---------------------------------------------------------------------------
+# Stream-stream LEFT OUTER join
+# ---------------------------------------------------------------------------
+
+_SSLO_WM_MIN = 30
+
+
+_SSLO_JOIN_INTERVAL_SEC = 3600  # the join's "views from the preceding hour"
+
+
+# Null-row cut: a left row's state is evicted (and its NULL emitted)
+# only once the watermark passes p_time + the join interval — Spark
+# holds the row for the full interval even though the condition
+# (v_time <= p_time) means no later view could match. The safety cut
+# therefore subtracts watermark + interval + a 1-minute margin from
+# the global max (margin validated empirically: 2 unmatched purchases
+# inside the final hour never emitted at sf0.01 with an interval-free
+# cut). Derived from the same constant the join condition uses, so the
+# two can't drift apart.
+_SSLO_MARGIN_US = (_SSLO_JOIN_INTERVAL_SEC + 60) * 1_000_000
+
+
+#   * ``stream_stream_left_outer`` — watermarked stream-stream LEFT
+#     OUTER join: purchases with their preceding-hour views, or NULLs
+#     once the watermark proves no view can arrive. Needs multi-batch
+#     replay (null rows emit only when a LATER batch's watermark closes
+#     the join window); both engines filter to purchases a safety
+#     margin older than the final watermark so the emission boundary is
+#     not load-bearing.
+def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Purchases LEFT OUTER JOIN same-user views from the preceding
+    hour, on a 3-file replay so the watermark genuinely advances
+    across micro-batches (an unmatched purchase's NULL row can only
+    emit once a later watermark proves its join window closed). Both
+    the stream result and the oracle keep purchases at least one
+    minute older than the final watermark, so the exact emission
+    boundary (inclusive vs exclusive) is not load-bearing."""
+    ev = read_events_stream(
+        spark, sf_dir,
+        dir_override=stream_dir_multi(sf_dir, 3),
+        max_files_per_trigger=1,
+        state_partitions=4,
+    )
+    views = (
+        # event-time validity window (contract.ts_valid): pre-epoch
+        # rows are watermark-late by construction (commit b285e49)
+        ev.where(ts_valid("ev_time"))
+        .where(F.col("event_type") == "view")
+        .select(
+            F.col("event_id").alias("view_id"),
+            F.col("user_id").alias("v_user"),
+            F.col("ev_time").alias("v_time"),
+        )
+        .withWatermark("v_time", f"{_SSLO_WM_MIN} minutes")
+    )
+    purchases = (
+        read_events_stream(
+            ev.sparkSession, sf_dir,
+            dir_override=stream_dir_multi(sf_dir, 3),
+            max_files_per_trigger=1,
+            reuse_session=True,
+        )
+        .where(ts_valid("ev_time"))
+        .where(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ev_time").alias("p_time"),
+        )
+        .withWatermark("p_time", f"{_SSLO_WM_MIN} minutes")
+    )
+    joined = purchases.join(
+        views,
+        (F.col("p_user") == F.col("v_user"))
+        & (F.col("v_time") <= F.col("p_time"))
+        & (
+            F.col("v_time")
+            >= F.col("p_time")
+            - F.expr(f"INTERVAL {_SSLO_JOIN_INTERVAL_SEC} SECONDS")
+        ),
+        "left_outer",
+    ).select(
+        "purchase_id",
+        F.col("p_user").alias("user_id"),
+        F.unix_micros("p_time").alias("purchase_ts_us"),
+        "view_id",
+        F.unix_micros("v_time").alias("view_ts_us"),
+    )
+    result = run_stream_to_memory(joined, "append")
+    # Cut both engines at (final watermark - margin): bounded scalar
+    # from the batch copy of the same fixture. An empty/cold-start
+    # source has no max timestamp — nothing can have emitted, so any
+    # cutoff works; 0 keeps the filter well-typed.
+    mx = (
+        load_table(spark, sf_dir, "events")
+        .where(ts_valid("CAST(ts AS TIMESTAMP)"))
+        .agg(
+            F.max(
+                F.when(F.col("event_type") == "purchase",
+                       F.unix_micros("ts"))
+            ).alias("mp"),
+            F.max(
+                F.when(F.col("event_type") == "view", F.unix_micros("ts"))
+            ).alias("mv"),
+        )
+        .collect()[0]
+    )
+    # global watermark = MIN over both sides' own maxima (each
+    # withWatermark node only sees its type's rows); None if a side
+    # never advanced — then nothing can have emitted
+    max_ts = (
+        None
+        if mx["mp"] is None or mx["mv"] is None
+        else min(mx["mp"], mx["mv"])
+    )
+    wm_us = (max_ts or 0) - _SSLO_WM_MIN * 60 * 1_000_000
+    return result.where(F.col("purchase_ts_us") <= F.lit(wm_us - _SSLO_MARGIN_US))
+
+
+_SSLO_SQL = f"""
+WITH ev AS (
+  SELECT * FROM events WHERE {ts_valid_sql('ts')}
+), mx AS (
+  SELECT MAX(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS mp,
+         MAX(CASE WHEN event_type = 'view' THEN epoch_us(ts) END) AS mv
+  FROM ev
+), wm AS (
+  -- global watermark = MIN of the two sides' maxima (NULL if either
+  -- side is empty: that stream never advanced, nothing emitted)
+  SELECT CASE WHEN mp IS NULL OR mv IS NULL THEN NULL
+              ELSE LEAST(mp, mv) END - {_SSLO_WM_MIN * 60 * 1_000_000}
+           AS wm_us
+  FROM mx
+)
+SELECT p.event_id AS purchase_id,
+       p.user_id,
+       epoch_us(p.ts) AS purchase_ts_us,
+       v.event_id AS view_id,
+       epoch_us(v.ts) AS view_ts_us
+FROM ev p
+LEFT JOIN ev v
+  ON v.event_type = 'view'
+ AND p.user_id = v.user_id
+ AND v.ts <= p.ts
+ AND v.ts >= p.ts - INTERVAL {_SSLO_JOIN_INTERVAL_SEC} SECONDS
+CROSS JOIN wm
+WHERE p.event_type = 'purchase'
+  AND epoch_us(p.ts) <= wm.wm_us - {_SSLO_MARGIN_US}
+"""
+
+
+# ---------------------------------------------------------------------------
+# Stream-stream FULL OUTER join (completes the inner / left / full matrix)
+# ---------------------------------------------------------------------------
+# Same user-keyed preceding-hour interval as the LEFT OUTER op; full
+# outer additionally emits a NULL-purchase row for every view no
+# purchase ever picked up. Eviction symmetry: a view's state can
+# match purchases with p_time in [v_time, v_time + interval], so its
+# null row emits once the watermark passes v_time + interval — the
+# cut applied per side on its own timestamp (purchase rows cut on
+# purchase_ts, view-only rows on view_ts). The view-side eviction
+# boundary is NOT the naive wm - interval: measured, a view at
+# wm - 4120s never emitted its null row at sf0.01 while the boundary
+# sat at wm - 3904s at sf0.1 — the state flush runs against a
+# watermark that can lag the final one by batch-commit mechanics.
+# The cut therefore dominates every lag a single trailing
+# micro-batch can introduce: 2*interval + watermark_delay + a
+# 1-minute margin (covers eviction needing wm > t + interval
+# evaluated under a watermark itself lagging by up to
+# interval + delay). Derived from the same declared constants as
+# the join condition so plan and oracle cannot drift; parity holds
+# at sf0.001/0.01/0.1 with >2x slack over the worst observed
+# non-emission.
+
+
+_SSFO_CUT_US = (
+    2 * _SSLO_JOIN_INTERVAL_SEC + _SSLO_WM_MIN * 60 + 60
+) * 1_000_000
+
+
+def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Purchases FULL OUTER JOIN same-user views from the preceding
+    hour on a 3-file replay: unmatched purchases emit a NULL-view
+    row, unmatched views a NULL-purchase row, each only after a
+    later micro-batch's watermark proves its join window closed.
+    State on both sides is bounded by watermark + the 1h interval;
+    the emission cut keeps rows at least one minute clear of the
+    final watermark so the exact eviction boundary is not
+    load-bearing (same margin the LEFT OUTER op validated)."""
+    ev = read_events_stream(
+        spark, sf_dir,
+        dir_override=stream_dir_multi(sf_dir, 3),
+        max_files_per_trigger=1,
+        state_partitions=4,
+    )
+    views = (
+        # event-time validity window (contract.ts_valid): pre-epoch
+        # rows are watermark-late by construction (commit b285e49)
+        ev.where(ts_valid("ev_time"))
+        .where(F.col("event_type") == "view")
+        .select(
+            F.col("event_id").alias("view_id"),
+            F.col("user_id").alias("v_user"),
+            F.col("ev_time").alias("v_time"),
+        )
+        .withWatermark("v_time", f"{_SSLO_WM_MIN} minutes")
+    )
+    purchases = (
+        read_events_stream(
+            ev.sparkSession, sf_dir,
+            dir_override=stream_dir_multi(sf_dir, 3),
+            max_files_per_trigger=1,
+            reuse_session=True,
+        )
+        .where(ts_valid("ev_time"))
+        .where(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ev_time").alias("p_time"),
+        )
+        .withWatermark("p_time", f"{_SSLO_WM_MIN} minutes")
+    )
+    joined = purchases.join(
+        views,
+        (F.col("p_user") == F.col("v_user"))
+        & (F.col("v_time") <= F.col("p_time"))
+        & (
+            F.col("v_time")
+            >= F.col("p_time")
+            - F.expr(f"INTERVAL {_SSLO_JOIN_INTERVAL_SEC} SECONDS")
+        ),
+        "full_outer",
+    ).select(
+        "purchase_id",
+        F.coalesce(F.col("p_user"), F.col("v_user")).alias("user_id"),
+        F.unix_micros("p_time").alias("purchase_ts_us"),
+        "view_id",
+        F.unix_micros("v_time").alias("view_ts_us"),
+    )
+    result = run_stream_to_memory(joined, "append")
+    mx = (
+        load_table(spark, sf_dir, "events")
+        .where(ts_valid("CAST(ts AS TIMESTAMP)"))
+        .agg(
+            F.max(
+                F.when(F.col("event_type") == "purchase",
+                       F.unix_micros("ts"))
+            ).alias("mp"),
+            F.max(
+                F.when(F.col("event_type") == "view", F.unix_micros("ts"))
+            ).alias("mv"),
+        )
+        .collect()[0]
+    )
+    # global watermark = MIN over both sides' own maxima (each
+    # withWatermark node only sees its type's rows); None if a side
+    # never advanced — then nothing can have emitted
+    max_ts = (
+        None
+        if mx["mp"] is None or mx["mv"] is None
+        else min(mx["mp"], mx["mv"])
+    )
+    wm_us = (max_ts or 0) - _SSLO_WM_MIN * 60 * 1_000_000
+    cut = wm_us - _SSFO_CUT_US
+    return result.where(
+        F.when(F.col("purchase_ts_us").isNotNull(),
+               F.col("purchase_ts_us") <= F.lit(cut))
+        .otherwise(F.col("view_ts_us") <= F.lit(cut))
+    )
+
+
+_SSFO_SQL = f"""
+WITH ev AS (
+  SELECT * FROM events WHERE {ts_valid_sql('ts')}
+), mx AS (
+  SELECT MAX(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS mp,
+         MAX(CASE WHEN event_type = 'view' THEN epoch_us(ts) END) AS mv
+  FROM ev
+), wm AS (
+  -- global watermark = MIN of the two sides' maxima (see _SSLO_SQL)
+  SELECT CASE WHEN mp IS NULL OR mv IS NULL THEN NULL
+              ELSE LEAST(mp, mv) END - {_SSLO_WM_MIN * 60 * 1_000_000}
+         - {_SSFO_CUT_US} AS cut_us
+  FROM mx
+), p AS (
+  SELECT event_id, user_id, ts FROM ev WHERE event_type = 'purchase'
+), v AS (
+  SELECT event_id, user_id, ts FROM ev WHERE event_type = 'view'
+), matched AS (
+  SELECT p.event_id AS purchase_id,
+         p.user_id,
+         epoch_us(p.ts) AS purchase_ts_us,
+         v.event_id AS view_id,
+         epoch_us(v.ts) AS view_ts_us
+  FROM p
+  LEFT JOIN v
+    ON p.user_id = v.user_id
+   AND v.ts <= p.ts
+   AND v.ts >= p.ts - INTERVAL {_SSLO_JOIN_INTERVAL_SEC} SECONDS
+  CROSS JOIN wm
+  WHERE epoch_us(p.ts) <= wm.cut_us
+), view_only AS (
+  SELECT CAST(NULL AS BIGINT) AS purchase_id,
+         v.user_id,
+         CAST(NULL AS BIGINT) AS purchase_ts_us,
+         v.event_id AS view_id,
+         epoch_us(v.ts) AS view_ts_us
+  FROM v CROSS JOIN wm
+  WHERE epoch_us(v.ts) <= wm.cut_us
+    AND NOT EXISTS (
+      SELECT 1 FROM p
+      WHERE p.user_id = v.user_id
+        AND v.ts <= p.ts
+        AND v.ts >= p.ts - INTERVAL {_SSLO_JOIN_INTERVAL_SEC} SECONDS
+    )
+)
+SELECT * FROM matched
+UNION ALL
+SELECT * FROM view_only
+"""
+
+
+_DELAY_US = 3_600_000_000  # 1h watermark
+
+
+def _late_split_dir(sf_dir: str) -> str:
+    """4-file replay with a deliberately late last file: rows sorted
+    by (microsecond ts, event_id); file0 = [0, 20%), file1 =
+    [30%, 40%), file2 = [40%, n) (carries the max event time), file3
+    = the late [20%, 30%) slice, delivered LAST via strictly
+    increasing mtimes (see module docstring for why the late slice
+    sits two batches behind its event-time region). The sort key
+    truncates to microseconds so the slice boundaries match the SQL
+    row_number over the engines' microsecond timestamps exactly.
+    Cache keyed on the source fixture's mtime (same contract as
+    ``stream_dir_multi``)."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    src = os.path.join(sf_dir, "events.parquet")
+    src_mtime = os.stat(src).st_mtime_ns
+    key = hashlib.md5(f"{sf_dir}:late4v2:{src_mtime}".encode()).hexdigest()[:12]
+    d = os.path.join(scratch_dir(), f"spark_graft_streamL_{key}")
+    if os.path.isdir(d):
+        return d
+    stage = f"{d}.build.{os.getpid()}"
+    os.makedirs(stage, exist_ok=True)
+    table = pq.read_table(src)
+    # event-time validity window at the ingest boundary (contract):
+    # the audit's slice arithmetic recomputes file membership by
+    # row_number, so the replay files and the audit's `ordered` CTE
+    # must count exactly the same rows
+    us = table.column("ts").cast(pa.timestamp("us")).cast(pa.int64())
+    table = table.filter(
+        pc.and_(
+            pc.greater_equal(us, EV_TIME_LO_US),
+            pc.less(us, EV_TIME_HI_US),
+        )
+    )
+    sort_us = table.column("ts").cast(pa.timestamp("us"))
+    table = table.append_column("__sort_us", sort_us)
+    table = table.take(
+        pc.sort_indices(
+            table,
+            sort_keys=[("__sort_us", "ascending"), ("event_id", "ascending")],
+        )
+    ).drop_columns(["__sort_us"])
+    n = table.num_rows
+    i1, i2, i3 = (2 * n) // 10, (3 * n) // 10, (4 * n) // 10
+    slices = [
+        table.slice(0, i1),  # on-time head [0, 20%)
+        table.slice(i2, i3 - i2),  # on-time [30%, 40%)
+        table.slice(i3, n - i3),  # on-time tail (has the max ts)
+        table.slice(i1, i2 - i1),  # the late [20%, 30%), delivered last
+    ]
+    base = time.time()
+    for i, part in enumerate(slices):
+        path = os.path.join(stage, f"events_{i}.parquet")
+        pq.write_table(part, path)
+        os.utime(path, (base + i, base + i))
+    try:
+        os.rename(stage, d)
+    except OSError:
+        shutil.rmtree(stage, ignore_errors=True)  # another builder won
+    return d
+
+
+# Shared audit arithmetic: slice membership by row_number over
+# (ts, event_id), watermark from the on-time files, drop rule =
+# window end <= watermark. The oracle additionally derives the
+# emitted aggregate from the same rule; the Spark plan reads emitted
+# numbers from the actual memory sink instead.
+_AUDIT_CORE = f"""
+ordered AS (
+  SELECT ({{epoch_us}}) AS u,
+         TRY_CAST(ROUND(value * 100) AS BIGINT) AS c,
+         ROW_NUMBER() OVER (ORDER BY ts, event_id) AS rn,
+         COUNT(*) OVER () AS n
+  FROM {{events}}
+  WHERE {ts_valid_sql('ts')}
+), marks AS (
+  SELECT u, c, rn, n, (2 * n) {{idiv}} 10 AS i1, (3 * n) {{idiv}} 10 AS i2
+  FROM ordered
+), wm AS (
+  SELECT MAX(CASE WHEN rn <= i1 OR rn > i2 THEN u END) - {_DELAY_US}
+           AS wm_us
+  FROM marks
+), aud AS (
+  SELECT CAST(MIN(n) AS BIGINT) AS n_total,
+         CAST(MIN(i2) - MIN(i1) AS BIGINT) AS n_late,
+         CAST(SUM(CASE WHEN rn > i1 AND rn <= i2
+                  AND ((u {{idiv}} {_WIN_US}) + 1) * {_WIN_US} <= w.wm_us
+                  THEN 1 ELSE 0 END) AS BIGINT) AS n_late_dropped
+  FROM marks CROSS JOIN wm w
+)
+SELECT a.n_total, a.n_late, a.n_late_dropped,
+       CAST(a.n_late - a.n_late_dropped AS BIGINT) AS n_late_parked,
+       s.n_windows_emitted, s.n_events_emitted, s.value_emitted_cents
+FROM aud a CROSS JOIN {{sink}} s
+"""
+
+
+_SINK_SPARK = """(
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_windows_emitted,
+         CAST(COALESCE(SUM(n_events), 0) AS BIGINT) AS n_events_emitted,
+         CAST(COALESCE(SUM(value_cents), 0) AS BIGINT)
+           AS value_emitted_cents
+  FROM {table})"""
+
+
+_SINK_DUCK = f"""(
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_windows_emitted,
+         CAST(COALESCE(SUM(ne), 0) AS BIGINT) AS n_events_emitted,
+         CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS value_emitted_cents
+  FROM (
+    SELECT (u // {_WIN_US}) AS wk, COUNT(*) AS ne, SUM(c) AS vc
+    FROM marks CROSS JOIN wm
+    WHERE (rn <= i1 OR rn > i2)
+      AND ((u // {_WIN_US}) + 1) * {_WIN_US} <= wm_us
+    GROUP BY 1
+  ))"""
+
+
+# ``stream_late_data_audit`` proves Structured Streaming's late-data
+# contract with numbers instead of prose. The events fixture is split
+# into a deliberately disordered 4-file replay — on-time [0,20%) and
+# [30,40%) slices, the on-time [40,100%) tail (which carries the
+# corpus max event time), then the LATE [20,30%) slice delivered last.
+# With a 1-hour watermark over 6-hour tumbling windows in APPEND mode:
+#
+#   * late rows whose window closed (window end <= the watermark in
+#     force when they arrive) are DROPPED by the stateful operator;
+#   * emitted rows therefore aggregate EXACTLY the on-time files'
+#     contribution to windows at or below the final watermark.
+#
+# Why FOUR files: Spark updates the operator-visible watermark with a
+# micro-batch of lag (measured here: a 3-file replay filtered the late
+# batch against the watermark derived from file 1 alone, absorbing
+# every late row). Placing TWO on-time batches — and ~70% of the event
+# -time span — between the late slice's event-time region and its
+# arrival makes every late window closed under ANY lag interpretation:
+# even the most conservative in-force watermark (max of the [30,40%)
+# file minus 1h) clears the late region's window ends by days. The
+# audit is therefore deterministic, not a bet on scheduler timing.
+#
+# The Spark side takes the emitted numbers from the real memory sink
+# and the audit counts from a static replay of the slice arithmetic;
+# the DuckDB oracle derives ALL numbers (including 'emitted') from the
+# declared drop rule in batch SQL — a hash match means Spark's runtime
+# drop semantics equal the documented rule, row for row and cent for
+# cent.
+def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Run the disordered replay through a real watermarked append
+    stream and reconcile: emitted windows/events/cents from the
+    memory sink vs the slice/drop arithmetic from a static scan (see
+    module docstring). State is bounded by the watermark (the open
+    tail only), the late file costs one micro-batch, and the audit
+    itself is one static scan — the shape of a production
+    late-arrival monitor."""
+    d = _late_split_dir(sf_dir)
+    ev = read_events_stream(
+        spark,
+        sf_dir,
+        dir_override=d,
+        max_files_per_trigger=1,
+        state_partitions=4,
+    ).where(ts_valid("ev_time"))
+    win = (
+        ev.withWatermark("ev_time", "1 hour")
+        .groupBy(F.window("ev_time", "6 hours").alias("w"))
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum(cents(F.col("value"))).alias("value_cents"),
+        )
+    )
+    sink = run_stream_to_memory(win, "append")
+    s2 = sink.sparkSession
+    sink.createOrReplaceTempView("sl2_audit_sink")
+    load_table(s2, sf_dir, "events").createOrReplaceTempView(
+        "sl2_audit_events"
+    )
+    return s2.sql(
+        "WITH "
+        + _AUDIT_CORE.format(
+            events="sl2_audit_events",
+            epoch_us="unix_micros(ts)",
+            idiv="DIV",
+            sink=_SINK_SPARK.format(table="sl2_audit_sink"),
+        )
+    )
+
+
+_LATE_DUCK = "WITH " + _AUDIT_CORE.format(
+    events="events", epoch_us="epoch_us(ts)", idiv="//", sink=_SINK_DUCK
+)
+
+
+QUERIES = {
+    "stream_stream_attribution": stream_stream_attribution,
+    "stream_dedup_within_watermark": stream_dedup_within_watermark,
+    "stream_foreachbatch_totals": stream_foreachbatch_totals,
+    "stream_kafka_roundtrip": stream_kafka_roundtrip,
+    "stream_dedup_user_event_types": stream_dedup_user_event_types,
+    "stream_static_value_buckets": stream_static_value_buckets,
+    "stream_tumbling_6h": stream_tumbling_6h,
+    "stream_sliding_6h_3h": stream_sliding_6h_3h,
+    "stream_session_windows": stream_session_windows,
+    "stream_stateful_user_totals": stream_stateful_user_totals,
+    "stream_checkpoint_restart": stream_checkpoint_restart,
+    "stream_append_mode_windows": stream_append_mode_windows,
+    "stream_chained_agg": stream_chained_agg,
+    "stream_stream_left_outer": stream_stream_left_outer,
+    "stream_stream_full_outer": stream_stream_full_outer,
+    "stream_late_data_audit": stream_late_data_audit,
+}
+
+ORACLE = {
+    "stream_stream_attribution": _STREAM_STREAM_SQL,
+    "stream_dedup_within_watermark": _STREAM_DEDUP_WM_SQL,
+    "stream_foreachbatch_totals": _FOREACHBATCH_SQL,
+    "stream_kafka_roundtrip": _KAFKA_ROUNDTRIP_SQL,
+    "stream_dedup_user_event_types": _STREAM_DEDUP_SQL,
+    "stream_static_value_buckets": _STREAM_STATIC_SQL,
+    "stream_tumbling_6h": _TUMBLING_SQL,
+    "stream_sliding_6h_3h": _SLIDING_SQL,
+    "stream_session_windows": _SESSION_SQL,
+    "stream_stateful_user_totals": _STATEFUL_SQL,
+    "stream_checkpoint_restart": _CKPT_RESTART_SQL,
+    "stream_append_mode_windows": _APPEND_SQL,
+    "stream_chained_agg": _CHAINED_SQL,
+    "stream_stream_left_outer": _SSLO_SQL,
+    "stream_stream_full_outer": _SSFO_SQL,
+    "stream_late_data_audit": _LATE_DUCK,
+}

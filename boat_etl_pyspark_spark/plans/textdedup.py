@@ -1,8 +1,11 @@
-"""Text analysis + deduplication operators over the ``documents`` table.
+"""Deduplication operators over the ``documents`` table, and the
+session-shared cache (``_SHARED`` / ``_cached``) and shingle relations
+that the text, curation, similarity, graph and ML families reuse.
 
 These are the LLM-training-pipeline operators the reference lacks
 (SURVEY.md §2.9): exact dedup, MinHash-LSH near-dup, n-gram Jaccard
-near-dup, SimHash, token/quality stats, language ID, fingerprints.
+near-dup, SimHash, embedding-cosine near-dup, clustering and
+calibration.
 
 Scale design (100 TB posture):
   * all per-document work is pure column expressions over arrays
@@ -32,13 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import track_persist
 from ..sources.readers import load_table
-
-
-def _docs_view(spark: SparkSession, sf_dir: str, name: str = "__docs") -> str:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(name)
-    return name
+from . import track_persist
 
 
 # Session-scoped cache for expensive shared intermediates: shingle
@@ -119,12 +117,14 @@ _SPARK_SHINGLES = """
   FROM (SELECT doc_id, lang, source, split(text, ' ') AS t FROM {docs})
 """
 
+
 _DUCK_SHINGLES = """
   SELECT doc_id, lang, source,
          list_distinct(list_transform(range(1, greatest(len(t) - 2, 1) + 1),
                        i -> concat_ws(' ', t[i], t[i + 1], t[i + 2]))) AS s
   FROM (SELECT doc_id, lang, source, string_split(text, ' ') AS t FROM documents)
 """
+
 
 # ---------------------------------------------------------------------------
 # Exact dedup: group on content hash (hash-groupBy — never shuffle bodies)
@@ -160,8 +160,13 @@ GROUP BY md5(text)
 # salted md5s and still oracle-reproducible (hex->int parses
 # identically in Spark's conv() and DuckDB's 0x-cast).
 _MH_A = [7, 13, 31, 61, 127, 251, 509, 1021, 2039, 4093, 8191, 16381]
+
+
 _MH_B = [3, 17, 29, 47, 71, 97, 113, 131, 149, 167, 181, 199]
+
+
 _MH_P = 2147483647
+
 
 _MINHASH_BANDS_SPARK = f"""
 WITH hashed AS (
@@ -187,6 +192,7 @@ FROM (
   FROM sig
 )
 """
+
 
 _MINHASH_DUCK = f"""
 WITH sh AS ({{shingles}}),
@@ -279,6 +285,7 @@ SELECT doc_id,
                                element_at(t, i + 3), element_at(t, i + 4))))) AS gram
 FROM (SELECT doc_id, split(text, ' ') AS t FROM {docs})
 """
+
 
 _NGRAM_DUCK = """
 WITH sh AS ({shingles}),
@@ -377,6 +384,7 @@ SELECT doc_id,
 FROM b
 """
 
+
 _SIMHASH_DUCK = """
 WITH tok AS (
   SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t FROM documents
@@ -400,169 +408,6 @@ GROUP BY doc_id
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_wide_view(spark, sf_dir, "__docs_sh")
     return spark.sql(_SIMHASH_SPARK.format(docs=docs))
-
-
-# ---------------------------------------------------------------------------
-# Token statistics (whitespace tokens + BPE-ish regex word count)
-# ---------------------------------------------------------------------------
-
-_TOKEN_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
-
-_TOKSTATS_SPARK = f"""
-SELECT doc_id, lang, source,
-       CAST(size(t) AS BIGINT) AS n_tokens,
-       CAST(size(array_distinct(t)) AS BIGINT) AS n_unique,
-       CAST(size(regexp_extract_all(text, '{_TOKEN_RE}', 0)) AS BIGINT) AS n_bpeish,
-       CAST(aggregate(t, 0L, (acc, x) -> acc + length(x)) AS BIGINT) AS token_chars,
-       CAST(aggregate(t, 0L, (acc, x) -> acc + length(x)) AS DOUBLE) / greatest(size(t), 1) AS avg_token_len
-FROM (SELECT doc_id, lang, source, text, split(text, ' ') AS t FROM {{docs}}
-      WHERE text IS NOT NULL)
-"""
-
-_TOKSTATS_DUCK = f"""
-SELECT doc_id, lang, source,
-       len(t) AS n_tokens,
-       len(list_distinct(t)) AS n_unique,
-       len(regexp_extract_all(text, '{_TOKEN_RE}')) AS n_bpeish,
-       CAST(list_sum(list_transform(t, x -> length(x))) AS BIGINT) AS token_chars,
-       CAST(list_sum(list_transform(t, x -> length(x))) AS DOUBLE) / greatest(len(t), 1) AS avg_token_len
-FROM (SELECT doc_id, lang, source, text, string_split(text, ' ') AS t FROM documents
-      WHERE text IS NOT NULL)
-"""
-
-
-def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_view(spark, sf_dir, "__docs_ts")
-    return spark.sql(_TOKSTATS_SPARK.format(docs=docs))
-
-
-# ---------------------------------------------------------------------------
-# Quality scoring: length / stopword / uniqueness signals
-# ---------------------------------------------------------------------------
-
-_STOPWORDS = "('the', 'a', 'of', 'and', 'is', 'to', 'in')"
-
-_QUALITY_SPARK = f"""
-SELECT doc_id,
-       CAST(size(t) AS BIGINT) AS n_tokens,
-       CAST(size(array_distinct(t)) AS DOUBLE) / greatest(size(t), 1) AS unique_ratio,
-       CAST(size(filter(t, x -> x IN {_STOPWORDS})) AS DOUBLE) / greatest(size(t), 1) AS stop_ratio,
-       0.4 * least(CAST(size(t) AS DOUBLE) / 100.0, 1.0)
-         + 0.3 * (1.0 - CAST(size(filter(t, x -> x IN {_STOPWORDS})) AS DOUBLE) / greatest(size(t), 1))
-         + 0.3 * (CAST(size(array_distinct(t)) AS DOUBLE) / greatest(size(t), 1)) AS quality
-FROM (SELECT doc_id, split(text, ' ') AS t FROM {{docs}} WHERE text IS NOT NULL)
-"""
-
-_QUALITY_DUCK = f"""
-SELECT doc_id,
-       len(t) AS n_tokens,
-       CAST(len(list_distinct(t)) AS DOUBLE) / greatest(len(t), 1) AS unique_ratio,
-       CAST(len(list_filter(t, x -> x IN {_STOPWORDS})) AS DOUBLE) / greatest(len(t), 1) AS stop_ratio,
-       0.4 * least(CAST(len(t) AS DOUBLE) / 100.0, 1.0)
-         + 0.3 * (1.0 - CAST(len(list_filter(t, x -> x IN {_STOPWORDS})) AS DOUBLE) / greatest(len(t), 1))
-         + 0.3 * (CAST(len(list_distinct(t)) AS DOUBLE) / greatest(len(t), 1)) AS quality
-FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents WHERE text IS NOT NULL)
-"""
-
-
-def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_view(spark, sf_dir, "__docs_q")
-    return spark.sql(_QUALITY_SPARK.format(docs=docs))
-
-
-# ---------------------------------------------------------------------------
-# Language ID: marker-stopword + CJK-codepoint heuristic, then a
-# confusion matrix against the labeled lang column
-# ---------------------------------------------------------------------------
-
-_LANGID_CASE = """
-  CASE WHEN n_cjk > 0 THEN 'zh'
-       WHEN greatest(c_en, c_de, c_fr, c_es) = 0 THEN 'und'
-       WHEN c_en >= greatest(c_de, c_fr, c_es) THEN 'en'
-       WHEN c_de >= greatest(c_fr, c_es) THEN 'de'
-       WHEN c_fr >= c_es THEN 'fr'
-       ELSE 'es' END
-"""
-
-_LANGID_SPARK = f"""
-WITH f AS (
-  SELECT doc_id, lang,
-         CAST(size(filter(t, x -> x IN ('the', 'a', 'of', 'and', 'is'))) AS BIGINT) AS c_en,
-         CAST(size(filter(t, x -> x IN ('der', 'die', 'das', 'und', 'ist'))) AS BIGINT) AS c_de,
-         CAST(size(filter(t, x -> x IN ('le', 'la', 'les', 'et', 'est'))) AS BIGINT) AS c_fr,
-         CAST(size(filter(t, x -> x IN ('el', 'los', 'las', 'y', 'es'))) AS BIGINT) AS c_es,
-         CAST(size(regexp_extract_all(text, '[\\\\x{{{{4e00}}}}-\\\\x{{{{9fff}}}}]', 0)) AS BIGINT) AS n_cjk
-  FROM (SELECT doc_id, lang, text, split(text, ' ') AS t FROM {{docs}}
-  WHERE text IS NOT NULL)
-)
-SELECT lang, {_LANGID_CASE} AS pred_lang, COUNT(*) AS n_docs
-FROM f
-GROUP BY lang, {_LANGID_CASE}
-"""
-
-_LANGID_DUCK = f"""
-WITH f AS (
-  SELECT doc_id, lang,
-         len(list_filter(t, x -> x IN ('the', 'a', 'of', 'and', 'is'))) AS c_en,
-         len(list_filter(t, x -> x IN ('der', 'die', 'das', 'und', 'ist'))) AS c_de,
-         len(list_filter(t, x -> x IN ('le', 'la', 'les', 'et', 'est'))) AS c_fr,
-         len(list_filter(t, x -> x IN ('el', 'los', 'las', 'y', 'es'))) AS c_es,
-         len(regexp_extract_all(text, '[\\x{{4e00}}-\\x{{9fff}}]')) AS n_cjk
-  FROM (SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM documents
-  WHERE text IS NOT NULL)
-)
-SELECT lang, {_LANGID_CASE} AS pred_lang, COUNT(*) AS n_docs
-FROM f
-GROUP BY lang, {_LANGID_CASE}
-"""
-
-
-def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_view(spark, sf_dir, "__docs_li")
-    return spark.sql(_LANGID_SPARK.format(docs=docs))
-
-
-# ---------------------------------------------------------------------------
-# Document fingerprints: content md5, k-min shingle sketch, rolling hash
-# ---------------------------------------------------------------------------
-
-_FP_SPARK = """
-WITH sh AS ({shingles})
-SELECT d.doc_id,
-       md5(trim(regexp_replace(lower(d.text), ' +', ' '))) AS fp_md5,
-       md5(concat_ws(',', slice(array_sort(transform(sh.s, x -> md5(x))), 1, 3))) AS fp_kmin,
-       aggregate(split(d.text, ''), CAST(0 AS BIGINT),
-                 (acc, c) -> (acc * 31 + ascii(c)) % 1000000007) AS fp_roll
-FROM {docs} d JOIN sh ON sh.doc_id = d.doc_id
-WHERE d.text IS NOT NULL
-"""
-
-_FP_DUCK = """
-WITH sh AS ({shingles})
-SELECT d.doc_id,
-       md5(trim(regexp_replace(lower(d.text), ' +', ' ', 'g'))) AS fp_md5,
-       md5(concat_ws(',',
-           list_sort(list_transform(sh.s, x -> md5(x)))[1],
-           list_sort(list_transform(sh.s, x -> md5(x)))[2],
-           list_sort(list_transform(sh.s, x -> md5(x)))[3])) AS fp_kmin,
-       list_reduce(list_prepend(CAST(0 AS BIGINT),
-                   -- greatest(.., 0): splitting an EMPTY string yields
-                   -- [''] in both engines, but ord('') is -1 in DuckDB
-                   -- vs ascii('') = 0 in Spark (degenerate-text net)
-                   list_transform(string_split(d.text, ''),
-                                  c -> CAST(greatest(ord(c), 0) AS BIGINT))),
-                   (acc, c) -> (acc * 31 + c) % 1000000007) AS fp_roll
-FROM documents d JOIN sh ON sh.doc_id = d.doc_id
-WHERE d.text IS NOT NULL
-"""
-
-
-def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_view(spark, sf_dir, "__docs_fp")
-    _shingle_sets(spark, sf_dir).createOrReplaceTempView("__fp_sh")
-    return spark.sql(
-        _FP_SPARK.format(shingles="SELECT * FROM __fp_sh", docs=docs)
-    )
 
 
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -766,121 +611,6 @@ FROM labels JOIN clusters ON labels.cluster_id = clusters.cluster_id
 """
 
 
-def text_stopword_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword filtering as a map-only column expression: tokens
-    dropped against a broadcast-literal stoplist, text reassembled."""
-    docs = _docs_view(spark, sf_dir, "__docs_sw")
-    return spark.sql(
-        f"""
-        SELECT doc_id,
-               CAST(size(t) - size(kept) AS BIGINT) AS n_removed,
-               concat_ws(' ', kept) AS clean_text
-        FROM (
-          SELECT doc_id, t, filter(t, x -> x NOT IN {_STOPWORDS}) AS kept
-          FROM (SELECT doc_id, split(text, ' ') AS t FROM {docs}
-                WHERE text IS NOT NULL)
-        )
-        """
-    )
-
-
-_STOPWORD_SQL = f"""
-SELECT doc_id,
-       len(t) - len(kept) AS n_removed,
-       array_to_string(kept, ' ') AS clean_text
-FROM (
-  SELECT doc_id, t, list_filter(t, x -> x NOT IN {_STOPWORDS}) AS kept
-  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents
-        WHERE text IS NOT NULL)
-)
-"""
-
-
-def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TF-IDF with exact integer term/document frequencies and a
-    smoothed idf; top-3 terms per document. One shuffle for the
-    per-(doc, term) counts, a broadcast for the term df table."""
-    docs = _docs_view(spark, sf_dir, "__docs_tfidf")
-    return spark.sql(
-        f"""
-        WITH tok AS (
-          SELECT doc_id, explode(split(text, ' ')) AS tok FROM {docs}
-        ),
-        tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tok GROUP BY doc_id, tok),
-        -- df derives from tf (one row per (doc, term)), not from tok:
-        -- a second pass over the raw token stream would re-tokenize
-        -- every document (CTEs are not materialized)
-        df AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok),
-        n AS (SELECT COUNT(*) AS n_docs FROM {docs}),
-        scored AS (
-          SELECT tf.doc_id, tf.tok AS term, tf.tf, df.df,
-                 tf.tf * ln((n.n_docs + 1.0) / (df.df + 1.0)) AS score
-          FROM tf JOIN df ON tf.tok = df.tok CROSS JOIN n
-        )
-        SELECT doc_id, term, tf, df, round(score, 6) AS score
-        FROM (
-          SELECT *, row_number() OVER (
-            PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rk
-          FROM scored
-        )
-        WHERE rk <= 3
-        """
-    )
-
-
-_TFIDF_SQL = """
-WITH tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-),
-tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tok GROUP BY doc_id, tok),
-df AS (SELECT tok, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY tok),
-n AS (SELECT COUNT(*) AS n_docs FROM documents),
-scored AS (
-  SELECT tf.doc_id, tf.tok AS term, tf.tf, df.df,
-         tf.tf * ln((n.n_docs + 1.0) / (df.df + 1.0)) AS score
-  FROM tf JOIN df ON tf.tok = df.tok CROSS JOIN n
-)
-SELECT doc_id, term, tf, df, round(score, 6) AS score
-FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rk
-  FROM scored
-)
-WHERE rk <= 3
-"""
-
-
-_KEYWORDS = "('spark', 'hash', 'vector', 'stream')"
-
-
-def text_keyword_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyword span extraction: (doc, keyword, token position) rows —
-    the built-in posexplode+filter form (the UDTF equivalence test in
-    tests/test_udtf.py drives the same semantics through a Python
-    UDTF, which stays off the contract hot path by design)."""
-    docs = _docs_view(spark, sf_dir, "__docs_ks")
-    return spark.sql(
-        f"""
-        SELECT doc_id, tok AS keyword, CAST(pos AS BIGINT) AS position
-        FROM {docs}
-        LATERAL VIEW posexplode(split(text, ' ')) e AS pos, tok
-        WHERE tok IN {_KEYWORDS}
-        """
-    )
-
-
-_KEYWORD_SPANS_SQL = f"""
-SELECT doc_id, tok AS keyword, CAST(pos - 1 AS BIGINT) AS position
-FROM (
-  SELECT doc_id,
-         unnest(string_split(text, ' ')) AS tok,
-         generate_subscripts(string_split(text, ' '), 1) AS pos
-  FROM documents
-)
-WHERE tok IN {_KEYWORDS}
-"""
-
-
 # ---------------------------------------------------------------------------
 # Embedding-cosine near-dup: hashed bag-of-words embedding + centered
 # sign-LSH candidate generation + exact sparse-dot verification.
@@ -927,6 +657,7 @@ WHERE tok != ''
 GROUP BY 1, 2
 """
 
+
 # Plane scores via explode-then-aggregate: the (doc, dim) x 64-plane
 # expansion stays in whole-stage codegen and the 64x-amplified rows
 # are 3 BIGINTs wide. The map-side alternative (per-doc score ARRAYS
@@ -953,6 +684,7 @@ SELECT doc_id, j DIV 8 AS band,
 FROM bits GROUP BY 1, 2
 """
 
+
 # Verification computes the sparse dot per candidate pair (one row
 # per pair, no explode/re-aggregation shuffle) via map_zip_with: the
 # key-union merge is built once per pair in O(|a|+|b|), where the old
@@ -970,6 +702,7 @@ _EMBCOS_DOT = (
     "aggregate(map_values(map_zip_with(ma, mb, (k, p, q) -> p * q)), 0L, "
     "(acc, v) -> acc + coalesce(v, 0L))"
 )
+
 
 _EMBCOS_DUCK = """
 WITH dims AS (
@@ -1072,103 +805,207 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def curate_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The last stage of the dedup pipeline: elect ONE survivor per
-    near-dup cluster by QUALITY (longest document, doc_id tiebreak)
-    instead of the arbitrary min-id keeper, and emit the drop
-    decision per clustered doc. One broadcastable join of cluster
-    labels (|clustered docs|, tiny vs corpus) against the doc-stats
-    projection, one max(struct) fold per cluster — the pattern that
-    turns pairwise near-dup detection into an actual curated corpus."""
-    labels = dedup_clusters(spark, sf_dir).select("doc_id", "cluster_id")
-    stats = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    joined = labels.join(stats, "doc_id")
-    reps = joined.groupBy("cluster_id").agg(
-        F.max(F.struct("n_chars", "doc_id")).alias("m")
-    )
+# ---------------------------------------------------------------------------
+# Edit distance over near-dup pairs (string-similarity verification)
+# ---------------------------------------------------------------------------
+
+def dedup_pair_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
+    docs = load_table(spark, sf_dir, "documents")
+    prefix = F.substring(F.col("text"), 1, 60)
+    a = docs.select(F.col("doc_id").alias("doc_a"), prefix.alias("pa"))
+    b = docs.select(F.col("doc_id").alias("doc_b"), prefix.alias("pb"))
     return (
-        joined.join(F.broadcast(reps), "cluster_id")
+        pairs.join(a, "doc_a")
+        .join(b, "doc_b")
         .select(
-            "doc_id",
-            "cluster_id",
-            F.col("m.doc_id").alias("rep_doc_id"),
-            (F.col("doc_id") != F.col("m.doc_id")).alias("drop"),
+            "doc_a",
+            "doc_b",
+            F.levenshtein(F.col("pa"), F.col("pb")).cast("bigint").alias("prefix_edit_distance"),
         )
     )
 
 
-_CLUSTER_REPS_SQL = """
-WITH RECURSIVE pairs AS (
+_EDIT_DIST_SQL = """
+WITH pairs AS (
   {minhash_pairs}
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(node, r) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.src, reach.r
-  FROM edges e JOIN reach ON e.dst = reach.node
-),
-labels AS (
-  SELECT node AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY node
-),
-joined AS (
-  SELECT l.doc_id, l.cluster_id, d.n_chars
-  FROM labels l JOIN documents d ON l.doc_id = d.doc_id
-),
-reps AS (
-  SELECT cluster_id, doc_id AS rep_doc_id
-  FROM (
-    SELECT cluster_id, doc_id,
-           ROW_NUMBER() OVER (PARTITION BY cluster_id
-                              ORDER BY n_chars DESC, doc_id DESC) AS rn
-    FROM joined
-  ) WHERE rn = 1
 )
-SELECT j.doc_id, j.cluster_id, r.rep_doc_id, j.doc_id <> r.rep_doc_id AS drop
-FROM joined j JOIN reps r ON j.cluster_id = r.cluster_id
+SELECT doc_a, doc_b,
+       levenshtein(substring(a.text, 1, 60), substring(b.text, 1, 60)) AS prefix_edit_distance
+FROM pairs
+JOIN documents a ON a.doc_id = doc_a
+JOIN documents b ON b.doc_id = doc_b
+"""
+
+
+def _edit_dist_oracle() -> str:
+
+    return _EDIT_DIST_SQL.format(
+        minhash_pairs=_MINHASH_DUCK.format(shingles=_DUCK_SHINGLES)
+    )
+
+
+# ---------------------------------------------------------------------------
+# MinHash estimator calibration
+# ---------------------------------------------------------------------------
+
+# Signature construction: identical constants and algebra to
+# textdedup._MINHASH_BANDS_SPARK (k=12 affine permutations over
+# GF(2^31-1) of one md5 per shingle) — restated over the persisted
+# shingle view so the signatures themselves can persist and feed both
+# the band join and the per-pair agreement count.
+_SIG_SPARK = f"""
+SELECT doc_id, s,
+       transform(sequence(0, 11),
+                 i -> array_min(transform(h0,
+                      h -> (element_at(array({", ".join(map(str, _MH_A))}), CAST(i AS INT) + 1) * h
+                            + element_at(array({", ".join(map(str, _MH_B))}), CAST(i AS INT) + 1)) % {_MH_P}))) AS mh
+FROM (
+  SELECT doc_id, s,
+         transform(s, x -> CAST(conv(substring(md5(x), 1, 15), 16, 10) AS BIGINT) % {_MH_P}) AS h0
+  FROM {{sh}}
+)
+"""
+
+
+_CALIB_SPARK = """
+WITH bands AS (
+  SELECT doc_id, b.band_idx, b.band_key
+  FROM (
+    SELECT doc_id,
+           explode(transform(sequence(0, 3),
+               j -> struct(j AS band_idx,
+                           md5(concat_ws(',', transform(slice(mh, j * 3 + 1, 3),
+                                                        v -> CAST(v AS STRING)))) AS band_key))) AS b
+    FROM {sig})
+), cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band_idx = b.band_idx AND a.band_key = b.band_key
+   AND a.doc_id < b.doc_id
+), pairs AS (
+  SELECT size(filter(sequence(1, 12),
+              i -> element_at(sa.mh, CAST(i AS INT))
+                   = element_at(sb.mh, CAST(i AS INT)))) AS sig_matches,
+         CAST(size(array_intersect(sa.s, sb.s)) AS BIGINT) * 1000000
+           DIV (size(sa.s) + size(sb.s)
+                - size(array_intersect(sa.s, sb.s))) AS exact_ppm
+  FROM cand c
+  JOIN {sig} sa ON sa.doc_id = c.doc_a
+  JOIN {sig} sb ON sb.doc_id = c.doc_b
+)
+SELECT CAST(sig_matches AS BIGINT) AS sig_matches,
+       CAST(sig_matches * 1000000 DIV 12 AS BIGINT) AS est_jaccard_ppm,
+       CAST(COUNT(*) AS BIGINT) AS n_pairs,
+       CAST(SUM(exact_ppm) DIV COUNT(*) AS BIGINT) AS mean_exact_ppm,
+       CAST(MIN(exact_ppm) AS BIGINT) AS min_exact_ppm,
+       CAST(MAX(exact_ppm) AS BIGINT) AS max_exact_ppm,
+       CAST(sig_matches * 1000000 DIV 12
+            - SUM(exact_ppm) DIV COUNT(*) AS BIGINT) AS bias_ppm
+FROM pairs
+GROUP BY sig_matches
+ORDER BY sig_matches
+"""
+
+
+#   * ``dedup_minhash_calibration`` — measure the MinHash estimator
+#     against ground truth ON the live pipeline: for every LSH
+#     candidate pair, compare the 12-hash signature agreement (the
+#     estimate, in twelfths) with the EXACT shingle Jaccard, bucketed
+#     by signature match count: pair counts, mean/min/max exact ppm,
+#     and the estimator bias per bucket. This is the measurement that
+#     justifies (or indicts) the b=4 x r=3 banding choice before
+#     running it over 100 TB — approximations in the corpus pipeline
+#     ship with their error measured, not assumed.
+def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Estimator-vs-truth calibration of the MinHash signatures over
+    the LSH candidate pairs: signature agreement (0-12 of 12) against
+    exact shingle Jaccard, aggregated per agreement bucket with the
+    bucket's estimator bias. Shingle sets and signatures persist once
+    (the shared-cache pattern of ``dedup_minhash_lsh``); candidates
+    come from the same banded join — only hashes shuffle, never text.
+    All ratios are exact integer ppm."""
+    def build():
+        sh = _shingle_sets(spark, sf_dir)
+        sh.select("doc_id", "s").createOrReplaceTempView("__calib_sh")
+        sig = track_persist(spark.sql(_SIG_SPARK.format(sh="__calib_sh")))
+        sig.createOrReplaceTempView("__calib_sig")
+        return spark.sql(_CALIB_SPARK.format(sig="__calib_sig"))
+
+    return _cached(spark, sf_dir, "minhash_calibration", build)
+
+
+_CALIB_DUCK = f"""
+WITH sh AS ({_DUCK_SHINGLES}),
+hashed AS (
+  SELECT doc_id, s,
+         list_transform(s, x -> CAST(concat('0x', substring(md5(x), 1, 15)) AS BIGINT) % {_MH_P}) AS h0
+  FROM sh
+),
+sig AS (
+  SELECT doc_id, s,
+         list_transform(range(0, 12),
+                        i -> list_min(list_transform(h0,
+                             h -> (([{", ".join(map(str, _MH_A))}])[i + 1] * h
+                                   + ([{", ".join(map(str, _MH_B))}])[i + 1]) % {_MH_P}))) AS mh
+  FROM hashed
+),
+bands AS (
+  SELECT doc_id, j AS band_idx,
+         md5(concat_ws(',', CAST(mh[j * 3 + 1] AS VARCHAR), CAST(mh[j * 3 + 2] AS VARCHAR),
+                            CAST(mh[j * 3 + 3] AS VARCHAR))) AS band_key
+  FROM sig, range(0, 4) r(j)
+),
+cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+),
+pairs AS (
+  SELECT len(list_filter(range(1, 13), i -> sa.mh[i] = sb.mh[i])) AS sig_matches,
+         CAST(len(list_intersect(sa.s, sb.s)) AS BIGINT) * 1000000
+           // (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))) AS exact_ppm
+  FROM cand c
+  JOIN sig sa ON sa.doc_id = c.doc_a
+  JOIN sig sb ON sb.doc_id = c.doc_b
+)
+SELECT CAST(sig_matches AS BIGINT) AS sig_matches,
+       CAST(sig_matches * 1000000 // 12 AS BIGINT) AS est_jaccard_ppm,
+       CAST(COUNT(*) AS BIGINT) AS n_pairs,
+       CAST(SUM(exact_ppm) // COUNT(*) AS BIGINT) AS mean_exact_ppm,
+       CAST(MIN(exact_ppm) AS BIGINT) AS min_exact_ppm,
+       CAST(MAX(exact_ppm) AS BIGINT) AS max_exact_ppm,
+       CAST(sig_matches * 1000000 // 12
+            - SUM(exact_ppm) // COUNT(*) AS BIGINT) AS bias_ppm
+FROM pairs
+GROUP BY sig_matches
+ORDER BY sig_matches
 """
 
 
 QUERIES = {
+    "dedup_pair_edit_distance": dedup_pair_edit_distance,
     "dedup_exact": dedup_exact,
     "dedup_embedding_cosine": dedup_embedding_cosine,
-    "curate_cluster_representatives": curate_cluster_representatives,
     "dedup_incremental": dedup_incremental,
     "dedup_clusters": dedup_clusters,
-    "text_stopword_removal": text_stopword_removal,
-    "text_tfidf_top_terms": text_tfidf_top_terms,
-    "text_keyword_spans": text_keyword_spans,
     "dedup_minhash_lsh": dedup_minhash_lsh,
     "dedup_ngram_jaccard": dedup_ngram_jaccard,
     "dedup_simhash": dedup_simhash,
-    "text_token_stats": text_token_stats,
-    "text_quality_score": text_quality_score,
-    "text_language_id": text_language_id,
-    "text_fingerprints": text_fingerprints,
+    "dedup_minhash_calibration": dedup_minhash_calibration,
 }
 
 ORACLE = {
+    "dedup_pair_edit_distance": _edit_dist_oracle(),
     "dedup_exact": _DEDUP_EXACT_SQL,
     "dedup_embedding_cosine": _EMBCOS_DUCK,
     "dedup_incremental": _DEDUP_INCR_SQL,
     "dedup_clusters": _DEDUP_CLUSTERS_SQL.format(
         minhash_pairs=_MINHASH_DUCK.format(shingles=_DUCK_SHINGLES)
     ),
-    "curate_cluster_representatives": _CLUSTER_REPS_SQL.format(
-        minhash_pairs=_MINHASH_DUCK.format(shingles=_DUCK_SHINGLES)
-    ),
-    "text_stopword_removal": _STOPWORD_SQL,
-    "text_tfidf_top_terms": _TFIDF_SQL,
-    "text_keyword_spans": _KEYWORD_SPANS_SQL,
     "dedup_minhash_lsh": _MINHASH_DUCK.format(shingles=_DUCK_SHINGLES),
     "dedup_ngram_jaccard": _NGRAM_DUCK.format(shingles=_DUCK_SHINGLES),
     "dedup_simhash": _SIMHASH_DUCK,
-    "text_token_stats": _TOKSTATS_DUCK,
-    "text_quality_score": _QUALITY_DUCK,
-    "text_language_id": _LANGID_DUCK,
-    "text_fingerprints": _FP_DUCK.format(shingles=_DUCK_SHINGLES),
+    "dedup_minhash_calibration": _CALIB_DUCK,
 }

@@ -145,23 +145,20 @@ def isolated_session(spark: SparkSession, confs: dict[str, str] | None = None) -
 
 
 def get_spark(app_name: str = "boat-etl-pyspark-spark",
-              cpus: int | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
-    """Create (or fetch) a local session sized from the environment.
+              cpus: int | None = None) -> SparkSession:
+    """Create (or fetch) a local session sized from the environment,
+    tuned by ``tune()`` (which also ships the package to the Python
+    workers).
 
     ``SPARK_GRAFT_CPUS`` (default 32) controls local parallelism, per
-    the driver contract. Shuffle partitions default to the CPU count —
-    at cluster scale this is owned by AQE + explicit repartitioning,
-    not a magic global.
+    the driver contract. The shuffle width is ``tune()``'s pinned
+    ``spark.sql.shuffle.partitions``.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 8)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # 8g capped the 183-query x 3-rep bench sweep at its own heap
         # (JVM RSS measured 8.9 GB = the limit): GC churn and persist
         # spills slowed unrelated queries mid-sweep. The container has
@@ -190,6 +187,4 @@ def get_spark(app_name: str = "boat-etl-pyspark-spark",
             ),
         )
     )
-    for k, v in _RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return tune(builder.getOrCreate())

@@ -203,18 +203,9 @@ def read_events_stream(
     from ..session import isolated_session
 
     if not reuse_session:
+        # The default HDFS-backed state store: RocksDB was measured and
+        # not adopted (OPTIMIZATION_r11.md).
         confs = {"spark.sql.shuffle.partitions": str(state_partitions)}
-        # State-store provider is a per-deployment choice (guide §5):
-        # RocksDB keeps state off-heap with changelog-style deltas,
-        # the default HDFS-backed store snapshots per batch. Local
-        # default = whichever measured faster on this harness
-        # (SPARK_GRAFT_STATE_STORE=rocksdb|hdfs to override; see
-        # OPTIMIZATION_r11.md for the measured comparison).
-        if os.environ.get("SPARK_GRAFT_STATE_STORE", "hdfs").lower() == "rocksdb":
-            confs["spark.sql.streaming.stateStore.providerClass"] = (
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-            )
         spark = isolated_session(spark, confs)
     src_dir = dir_override or _stream_dir_for(sf_dir)
     probe = sorted(

@@ -14,7 +14,7 @@ SF_CORRECTNESS = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 def spark():
     from boat_etl_pyspark_spark.session import get_spark
 
-    s = get_spark("boat-etl-pyspark-spark-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("boat-etl-pyspark-spark-tests", cpus=8)
     yield s
     s.stop()
 

@@ -97,45 +97,70 @@ def test_no_row_at_a_time_python_udfs():
     )
 
 
-# Every sanctioned driver-side .collect() site, by file: all are
-# bounded scalars or tiny (<= 1024-row) relations, each commented at
-# the call site. A NEW collect anywhere — or an extra one in these
-# files — fails this test and forces the boundedness review.
+# Every sanctioned driver-side .collect() site, by file and enclosing
+# function: all are bounded scalars or tiny (<= 1024-row) relations,
+# each commented at the call site. A NEW collect anywhere — or an extra
+# one in these functions — fails this test and forces the boundedness
+# review; keying by function keeps two budgets from pooling when
+# modules merge.
 _COLLECT_ALLOWLIST = {
-    "plans/relational8.py": 1,       # 1024-word bloom bitmap pull
-    "plans/relational11.py": 2,      # stream max-timestamp scalars
-    "plans/relational19.py": 2,      # histogram lo/hi/total + <=1024 buckets
-    "plans/relational24.py": 1,      # one-row file-manifest summary
-    "plans/relational25.py": 2,      # quantile lo/hi/total + <=1024 buckets
-    "plans/textcuration.py": 1,      # bounded query-vector pull (_MM_NQ)
-    "plans/relational36.py": 2,      # MMR cands (16) + pair matrix (240)
-    "plans/relational7.py": 1,       # nation-graph edges (<= 25^2 rows)
-    "plans/relational15.py": 1,      # gram upper triangle (136 rows)
-    "plans/relational17.py": 1,      # nation-graph edges (<= 25^2 rows)
-    "plans/relational37.py": 2,      # nation-graph edges + nation dim
-    "plans/relational44.py": 1,      # event-type transitions (<= |alphabet|^2)
-    "plans/relational43.py": 2,      # gbdt/learning-curve histograms (<= 64 bins)
-    "plans/relational41.py": 1,      # theil contingency cells (enum alphabet^2)
-    "operators/skew.py": 1,          # diagnostics-only sampler
-    "pipeline/boat.py": 2,           # min-year scalar + validation row
-    "plans/relational50.py": 1,      # Fisher 2x2 counts (one 4-int row)
+    "plans/join.py::join_bloom_prefilter": 1,      # 1024-word bloom bitmap pull
+    "plans/stream.py::stream_stream_left_outer": 1,  # stream max-timestamp scalar
+    "plans/stream.py::stream_stream_full_outer": 1,  # stream max-timestamp scalar
+    "plans/agg.py::agg_weighted_median_twopass": 2,  # histogram lo/hi/total + <=1024 buckets
+    "plans/io.py::io_binary_manifest": 1,          # one-row file-manifest summary
+    "plans/agg.py::agg_pareto_abc": 2,             # quantile lo/hi/total + <=1024 buckets
+    "plans/sim.py::sim_blocked_matmul_topk": 1,    # bounded query-vector pull (_MM_NQ)
+    "plans/sim.py::sim_mmr_diverse_topk": 2,       # MMR cands (16) + pair matrix (240)
+    "plans/graph.py::graph_pagerank_nations": 1,   # nation-graph edges (<= 25^2 rows)
+    "plans/ml.py::embed_pca_power": 1,             # gram upper triangle (136 rows)
+    "plans/graph.py::graph_bfs_reachability": 1,   # nation-graph edges (<= 25^2 rows)
+    "plans/graph.py::graph_connected_components": 2,  # nation-graph edges + nation dim
+    "plans/events.py::events_markov_stationary": 1,  # event-type transitions (<= |alphabet|^2)
+    "plans/ml.py::ml_gbdt_boosted_stumps": 1,      # gbdt histogram (<= 64 bins)
+    "plans/ml.py::ml_learning_curve": 1,           # learning-curve histogram (<= 64 bins)
+    "plans/agg.py::agg_theils_u": 1,               # theil contingency cells (enum alphabet^2)
+    "operators/skew.py::skew_profile": 1,          # diagnostics-only sampler
+    "pipeline/boat.py::transform": 1,              # min-year scalar
+    "pipeline/boat.py::assert_valid": 1,           # validation row
+    "plans/agg.py::agg_fisher_exact": 1,           # Fisher 2x2 counts (one 4-int row)
 }
 
 
-def test_collect_sites_are_allowlisted():
-    import subprocess
+def _collect_sites(pkg: str) -> dict[str, int]:
+    """``file::enclosing function`` -> number of ``.collect(...)`` calls
+    (``<module>`` for calls outside any function)."""
+    import ast
 
+    found: dict[str, int] = {}
+
+    def visit(node, rel, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, rel, child.name)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "collect"
+            ):
+                key = f"{rel}::{fn}"
+                found[key] = found.get(key, 0) + 1
+            visit(child, rel, fn)
+
+    for root, _dirs, files in os.walk(pkg):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path, encoding="utf-8") as fh:
+                    tree = ast.parse(fh.read())
+                visit(tree, os.path.relpath(path, pkg), "<module>")
+    return found
+
+
+def test_collect_sites_are_allowlisted():
     pkg = os.path.join(os.path.dirname(_COV), "boat_etl_pyspark_spark")
-    out = subprocess.run(
-        ["grep", "-rc", r"\.collect()", pkg, "--include=*.py"],
-        capture_output=True, text=True,
-    )
-    found = {}
-    for line in out.stdout.splitlines():
-        path, n = line.rsplit(":", 1)
-        if int(n):
-            rel = os.path.relpath(path, pkg)
-            found[rel] = int(n)
+    found = _collect_sites(pkg)
     assert found == _COLLECT_ALLOWLIST, (
         f"collect sites drifted: {found} vs allowlist {_COLLECT_ALLOWLIST}"
     )
@@ -432,9 +457,9 @@ def test_ingest_contract_fragments_are_symmetric():
     in templates that can't interpolate it)."""
     from boat_etl_pyspark_spark.plans import (
         contract,
-        relational11,
-        relational17,
-        textstats2,
+        stream,
+        text,
+        window,
     )
 
     osql = M.oracle_sql()
@@ -448,7 +473,7 @@ def test_ingest_contract_fragments_are_symmetric():
         assert contract.VALUE_DOMAIN_SQL in osql[name], name
     value_level = "value BETWEEN -1.0e12 AND 1.0e12"
     assert value_level in osql["interp_linear_fill"]
-    for tpl in (relational17._ROLLREG_SPARK, relational17._ROLLREG_DUCK):
+    for tpl in (window._ROLLREG_SPARK, window._ROLLREG_DUCK):
         assert value_level in tpl
 
     # class A' — TPC-H money floor sites (round-9 probe layer 1 + the
@@ -485,10 +510,10 @@ def test_ingest_contract_fragments_are_symmetric():
                 "contract.money_cents_sql/money_bounded_sql instead"
             )
     # the DataFrame twins are the same fragment via F.expr
-    from boat_etl_pyspark_spark.plans import relational41, relational43
+    from boat_etl_pyspark_spark.plans import agg, ml
 
-    assert relational41.money_cents is contract.money_cents
-    assert relational43.money_cents is contract.money_cents
+    assert agg.money_cents is contract.money_cents
+    assert ml.money_cents is contract.money_cents
 
     # class B — embedding dims
     assert contract.EMB_DIMS == 64
@@ -524,12 +549,12 @@ def test_ingest_contract_fragments_are_symmetric():
         assert contract.TEXT_VALID_DUCK in osql[name], name
     assert contract.TEXT_MAX_TOKEN == 512
     bound = f"BETWEEN 2 AND {contract.TEXT_MAX_TOKEN}"
-    assert bound in textstats2._BPE_SPARK
-    assert bound in textstats2._BPE_DUCK
-    assert f"range(1, {contract.TEXT_MAX_TOKEN})" in textstats2._BPE_DUCK
+    assert bound in text._BPE_SPARK
+    assert bound in text._BPE_DUCK
+    assert f"range(1, {contract.TEXT_MAX_TOKEN})" in text._BPE_DUCK
 
     # stream-stream cut proxy: both plans and both oracles derive the
     # watermark from the MIN of the two sides' per-type maxima
-    for sql in (relational11._SSLO_SQL, relational11._SSFO_SQL):
+    for sql in (stream._SSLO_SQL, stream._SSFO_SQL):
         assert "LEAST(mp, mv)" in sql
         assert "mp IS NULL OR mv IS NULL" in sql

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from boat_etl_pyspark_spark.plans import curation
+from boat_etl_pyspark_spark.plans import curate
 from boat_etl_pyspark_spark.sources.readers import load_table
 from tests.conftest import SF_CORRECTNESS
 
@@ -18,7 +18,7 @@ def test_packing_conserves_tokens_and_docs(spark):
         F.count("*").alias("n_docs"),
         F.sum(F.size(F.split("text", " "))).alias("n_tokens"),
     ).first()
-    packed = curation.curate_pack_sequences(spark, SF_CORRECTNESS)
+    packed = curate.curate_pack_sequences(spark, SF_CORRECTNESS)
     got = packed.select(
         F.sum("n_docs").alias("n_docs"), F.sum("n_tokens").alias("n_tokens")
     ).first()
@@ -29,7 +29,7 @@ def test_packing_conserves_tokens_and_docs(spark):
 def test_upsert_actions_partition_the_keyspace(spark):
     docs = load_table(spark, SF_CORRECTNESS, "documents")
     n = docs.count()
-    res = curation.curate_corpus_upsert(spark, SF_CORRECTNESS)
+    res = curate.curate_corpus_upsert(spark, SF_CORRECTNESS)
     # every key exactly once
     assert res.count() == res.select("doc_id").distinct().count() == n
     by_action = {r.action: r.c for r in res.groupBy("action").agg(F.count("*").alias("c")).collect()}
@@ -46,14 +46,14 @@ def test_split_is_stable_under_corpus_growth(spark):
     growing corpus (rand()-based splits fail it)."""
     full = {
         r.doc_id: r.split
-        for r in curation.curate_train_split(spark, SF_CORRECTNESS).collect()
+        for r in curate.curate_train_split(spark, SF_CORRECTNESS).collect()
     }
     docs = load_table(spark, SF_CORRECTNESS, "documents")
     docs.where("doc_id % 3 = 0").createOrReplaceTempView("__docs_subset")
     subset = {
         r.doc_id: r.split
         for r in spark.sql(
-            curation._SPLIT_SPARK.format(docs="__docs_subset")
+            curate._SPLIT_SPARK.format(docs="__docs_subset")
         ).collect()
     }
     assert subset == {k: v for k, v in full.items() if k % 3 == 0}

@@ -45,11 +45,12 @@ def test_identical_results_across_parallelism(spark, name):
     q = m._QUERIES[name]
 
     def run(partitions: int):
+        before = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
         try:
             rows = q(spark, SF_SMOKE).collect()
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+            spark.conf.set("spark.sql.shuffle.partitions", before)
         return sorted(map(tuple, rows))
 
     assert run(3) == run(29), f"{name} is partitioning-dependent"
@@ -105,11 +106,12 @@ def test_round4_identical_results_across_parallelism(spark, name):
 
     def run(partitions: int):
         release_caches(spark)
+        before = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
         try:
             rows = q(spark, SF_SMOKE).collect()
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+            spark.conf.set("spark.sql.shuffle.partitions", before)
         return sorted(map(tuple, rows))
 
     try:

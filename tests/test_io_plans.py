@@ -10,11 +10,11 @@ import io
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from boat_etl_pyspark_spark.plans.io_plans import (
+from boat_etl_pyspark_spark.plans.io import (
     io_csv_roundtrip,
     io_partitioned_scan,
 )
-from boat_etl_pyspark_spark.plans.sessionize import _GAP_US, events_sessionize
+from boat_etl_pyspark_spark.plans.events import _GAP_US, events_sessionize
 from boat_etl_pyspark_spark.sources.readers import load_table
 from tests.conftest import SF_SMOKE
 
@@ -49,7 +49,7 @@ def test_csv_roundtrip_is_content_sensitive(spark):
 
 
 def test_bucketed_join_has_no_exchange(spark):
-    from boat_etl_pyspark_spark.plans.io_plans import io_bucketed_join
+    from boat_etl_pyspark_spark.plans.io import io_bucketed_join
 
     df = io_bucketed_join(spark, SF_SMOKE)
     plan = plan_of(df)
@@ -68,7 +68,7 @@ def test_bucketed_join_has_no_exchange(spark):
 def test_zorder_files_do_not_overlap(spark, tmp_path):
     """Range-partitioning by the Morton key yields files whose z-ranges
     are disjoint — the property min/max statistics pruning needs."""
-    from boat_etl_pyspark_spark.plans.io_plans import _zvalue
+    from boat_etl_pyspark_spark.plans.io import _zvalue
 
     orders = load_table(spark, SF_SMOKE, "orders")
     z = orders.select(

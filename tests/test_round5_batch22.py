@@ -69,7 +69,7 @@ def _trade_edges(tables) -> pd.DataFrame:
 
 
 def test_connected_components_matches_union_find(run, tables):
-    from boat_etl_pyspark_spark.plans.relational37 import _CC_TOPK
+    from boat_etl_pyspark_spark.plans.graph import _CC_TOPK
 
     got = run("graph_connected_components")
     nat = tables["nation"][["n_nationkey", "n_regionkey"]]
@@ -105,7 +105,7 @@ def test_connected_components_matches_union_find(run, tables):
 
 
 def test_cms_matches_hashlib_and_never_undercounts(run, tables):
-    from boat_etl_pyspark_spark.plans.relational37 import (
+    from boat_etl_pyspark_spark.plans.agg import (
         _CMS_D,
         _CMS_TOPN,
         _CMS_W,
@@ -141,7 +141,7 @@ def test_cms_matches_hashlib_and_never_undercounts(run, tables):
 
 
 def test_tail_cvar_matches_sorted_scan(run, tables):
-    from boat_etl_pyspark_spark.plans.relational37 import _TAIL_PCT
+    from boat_etl_pyspark_spark.plans.agg import _TAIL_PCT
 
     got = run("agg_tail_cvar")
     o = tables["orders"].copy()
@@ -178,7 +178,7 @@ def test_tail_cvar_matches_sorted_scan(run, tables):
 
 
 def test_null_safe_join_keeps_the_null_bucket(run, tables):
-    from boat_etl_pyspark_spark.plans.relational37 import _NS_SMALL
+    from boat_etl_pyspark_spark.plans.join import _NS_SMALL
 
     got = run("join_null_safe")
     p = tables["part"].copy()

@@ -51,7 +51,7 @@ def _tdiv(a: int, b: int) -> int:
 
 
 def test_logreg_matches_pure_python_gd(run, tables):
-    from boat_etl_pyspark_spark.plans.relational38 import (
+    from boat_etl_pyspark_spark.plans.ml import (
         _LR_ITERS,
         _LR_MILLI,
         _LR_STOPS,
@@ -99,7 +99,7 @@ def test_logreg_matches_pure_python_gd(run, tables):
 
 
 def test_periodogram_matches_pure_python_dft(run, tables):
-    from boat_etl_pyspark_spark.plans.relational38 import _DAY_US, _PG_KMAX
+    from boat_etl_pyspark_spark.plans.ts import _DAY_US, _PG_KMAX
 
     got = run("ts_periodogram")
     us = tables["events"]["ts"].astype("datetime64[us]").astype("int64")

@@ -59,7 +59,7 @@ def _phash(text: str) -> list[int]:
 
 
 def test_phash_pairs_match_per_doc_python_hash(run, tables):
-    from boat_etl_pyspark_spark.plans.multimodal_plans import _PH_MAXHAM
+    from boat_etl_pyspark_spark.plans.multimodal import _PH_MAXHAM
 
     got = run("multimodal_phash_pairs")
     keys = {
@@ -81,7 +81,7 @@ def test_phash_pairs_match_per_doc_python_hash(run, tables):
 
 
 def test_referential_integrity_matches_set_membership(run, tables):
-    from boat_etl_pyspark_spark.plans.relational39 import _RI_FKS
+    from boat_etl_pyspark_spark.plans.validate import _RI_FKS
 
     got = run("validate_referential_integrity")
     want = []

@@ -45,7 +45,7 @@ def run(spark):
 
 
 def test_anova_f_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational41 import _ANOVA_SEGS
+    from boat_etl_pyspark_spark.plans.agg import _ANOVA_SEGS
 
     cust = tables["customer"]
     v = (cust.c_acctbal * 100).map(math.floor).astype(int)

@@ -70,7 +70,7 @@ def test_copurchase_matches_python(run, tables):
 
 
 def test_footer_audit_matches_data_scan(run, tables):
-    from boat_etl_pyspark_spark.plans.relational42 import _AUDIT_TABLES
+    from boat_etl_pyspark_spark.plans.io import _AUDIT_TABLES
 
     got = run("io_parquet_footer_audit").set_index("tbl")
     for tbl, key in _AUDIT_TABLES:
@@ -84,7 +84,7 @@ def test_footer_audit_matches_data_scan(run, tables):
 
 
 def test_domain_caps_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational42 import _DOMAIN_CAP
+    from boat_etl_pyspark_spark.plans.curate import _DOMAIN_CAP
 
     docs = tables["documents"]
     by_source = defaultdict(list)

@@ -49,7 +49,7 @@ def _toks(text: str) -> list[str]:
 
 
 def test_mattr_matches_bruteforce_windows(run, tables):
-    from boat_etl_pyspark_spark.plans.textstats3 import _MATTR_W as W
+    from boat_etl_pyspark_spark.plans.text import _MATTR_W as W
 
     want = {}
     for r in tables["documents"].itertuples():

@@ -45,7 +45,7 @@ def run(spark):
 
 
 def test_gbdt_boosted_stumps_match_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational43 import _BINS, _ROUNDS
+    from boat_etl_pyspark_spark.plans.ml import _BINS, _ROUNDS
 
     orders = tables["orders"]
     d = (
@@ -96,7 +96,7 @@ def test_gbdt_boosted_stumps_match_python(run, tables):
 
 
 def test_learning_curve_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational43 import _BINS, _LC_FRACS
+    from boat_etl_pyspark_spark.plans.ml import _BINS, _LC_FRACS
 
     orders = tables["orders"]
     g = (orders.o_orderkey % 5).astype(int)

@@ -59,7 +59,7 @@ def _cos(a, b):
 
 
 def test_ivf_recall_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.similarity2 import _RECALL_K
+    from boat_etl_pyspark_spark.plans.sim import _RECALL_K
 
     emb = {
         int(r.vec_id): [float(x) for x in r.embedding]

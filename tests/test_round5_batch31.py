@@ -45,7 +45,7 @@ def run(spark):
 
 
 def test_language_temperature_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational44 import _TEMP_ALPHA
+    from boat_etl_pyspark_spark.plans.curate import _TEMP_ALPHA
 
     counts = Counter(tables["documents"].lang)
     nt = sum(counts.values())
@@ -68,7 +68,7 @@ def test_language_temperature_matches_python(run, tables):
 
 
 def test_markov_stationary_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational44 import (
+    from boat_etl_pyspark_spark.plans.events import (
         _PI_ITERS,
         _PI_SCALE,
     )
@@ -103,7 +103,7 @@ def test_markov_stationary_matches_python(run, tables):
 
 
 def test_sprt_matches_python_and_does_not_early_stop(run, tables):
-    from boat_etl_pyspark_spark.plans.relational44 import (
+    from boat_etl_pyspark_spark.plans.events import (
         _SPRT_B,
         _SPRT_L0,
         _SPRT_L1,

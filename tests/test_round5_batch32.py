@@ -45,7 +45,7 @@ def run(spark):
 
 
 def test_power_analysis_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational45 import (
+    from boat_etl_pyspark_spark.plans.ml import (
         _PA_LIFT_MICRO,
         _PA_ZSUM2_MICRO,
     )
@@ -72,7 +72,7 @@ def test_power_analysis_matches_python(run, tables):
 
 
 def test_mixture_epochs_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational45 import (
+    from boat_etl_pyspark_spark.plans.curate import (
         _ME_ALPHA,
         _ME_BUDGET_X,
     )

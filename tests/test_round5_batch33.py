@@ -59,7 +59,7 @@ def test_srm_check_matches_python(run, tables):
 
 
 def test_permutation_test_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational46 import _PERM_K
+    from boat_etl_pyspark_spark.plans.agg import _PERM_K
 
     ev = tables["events"]
     uid = ev.user_id.astype(int).tolist()

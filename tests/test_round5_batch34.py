@@ -87,7 +87,7 @@ def test_cuped_matches_python(run, tables):
 
 
 def test_quality_threshold_sweep_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational47 import _SWEEP_BINS
+    from boat_etl_pyspark_spark.plans.curate import _SWEEP_BINS
 
     toks = {
         int(r.doc_id): [w for w in str(r.text).split(" ") if w]

@@ -44,7 +44,7 @@ def run(spark):
 
 
 def test_kcore_peeling_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational48 import _KCORE_ROUNDS
+    from boat_etl_pyspark_spark.plans.graph import _KCORE_ROUNDS
 
     li = tables["lineitem"]
     orders = defaultdict(set)

@@ -44,7 +44,7 @@ def run(spark):
 
 
 def test_fold_dup_leakage_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational49 import (
+    from boat_etl_pyspark_spark.plans.validate import (
         _FOLDS,
         _SIG_TOKENS,
     )

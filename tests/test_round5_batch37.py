@@ -46,7 +46,7 @@ def run(spark):
 
 
 def test_pmi_collocations_match_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational50 import (
+    from boat_etl_pyspark_spark.plans.text import (
         _PMI_MIN_COUNT,
         _PMI_TOP,
     )
@@ -232,7 +232,7 @@ def test_pinball_matches_python(run, tables):
 
 
 def test_hodges_lehmann_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational50 import _HL_CAP
+    from boat_etl_pyspark_spark.plans.agg import _HL_CAP
 
     cust = tables["customer"]
     by_seg = defaultdict(list)

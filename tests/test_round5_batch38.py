@@ -46,7 +46,7 @@ def run(spark):
 
 
 def test_tokenizer_fertility_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.textdedup import _TOKEN_RE
+    from boat_etl_pyspark_spark.plans.text import _TOKEN_RE
 
     tok = re.compile(_TOKEN_RE)
     agg = defaultdict(lambda: [0, 0, 0, 0])  # docs, words, bpe, chars
@@ -67,7 +67,7 @@ def test_tokenizer_fertility_matches_python(run, tables):
 
 
 def test_hill_tail_index_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational51 import _HILL_K
+    from boat_etl_pyspark_spark.plans.agg import _HILL_K
 
     docs = tables["documents"]
     rows = sorted(

@@ -129,7 +129,7 @@ def test_brier_decomposition_matches_python(run, tables):
 
 
 def test_source_overlap_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational52 import _OVL_SHINGLE
+    from boat_etl_pyspark_spark.plans.curate import _OVL_SHINGLE
 
     by_src = defaultdict(set)
     for src, text in zip(tables["documents"]["source"], tables["documents"]["text"]):
@@ -150,7 +150,7 @@ def test_source_overlap_matches_python(run, tables):
 
 
 def test_kendall_tau_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational52 import _TAU_CAP
+    from boat_etl_pyspark_spark.plans.agg import _TAU_CAP
 
     orders = tables["orders"]
     per_c = defaultdict(lambda: [0, 0])
@@ -214,7 +214,7 @@ def test_table_checksum_matches_python(run, tables):
 
 
 def test_keyness_llr_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational52 import _KEY_MIN_A, _KEY_TOP
+    from boat_etl_pyspark_spark.plans.text import _KEY_MIN_A, _KEY_TOP
 
     tokc = Counter()
     for src, text in zip(tables["documents"]["source"], tables["documents"]["text"]):

@@ -50,7 +50,7 @@ def _daily_revenue(tables):
 
 
 def test_bollinger_bands_match_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational53 import _BOLL_WIN
+    from boat_etl_pyspark_spark.plans.window import _BOLL_WIN
 
     daily = _daily_revenue(tables)
     days = sorted(daily)
@@ -141,7 +141,7 @@ def test_burstiness_matches_python(run, tables):
 
 
 def test_ljung_box_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational53 import _LB_LAGS
+    from boat_etl_pyspark_spark.plans.agg import _LB_LAGS
 
     ev = tables["events"].copy()
     ev["t_us"] = ev["ts"].astype("datetime64[us]").astype("int64")

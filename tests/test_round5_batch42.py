@@ -50,7 +50,7 @@ def _quant(vec, dims=None):
 
 
 def test_hard_negative_mining_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational55 import _HNM_ANCHORS
+    from boat_etl_pyspark_spark.plans.ml import _HNM_ANCHORS
 
     emb = tables["embeddings"]
     vecs = {
@@ -153,7 +153,7 @@ def test_dau_mau_matches_python(run, tables):
 
 
 def test_isotropy_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational55 import _ISO_DIMS
+    from boat_etl_pyspark_spark.plans.ml import _ISO_DIMS
 
     qs = [_quant(r.embedding, _ISO_DIMS) for r in tables["embeddings"].itertuples()]
     n = len(qs)

@@ -44,7 +44,7 @@ def run(spark):
 
 
 def test_rsi_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational56 import _RSI_W
+    from boat_etl_pyspark_spark.plans.window import _RSI_W
 
     daily = defaultdict(int)
     for d, tp in zip(tables["orders"]["o_orderdate"], tables["orders"]["o_totalprice"]):

@@ -43,7 +43,7 @@ def run(spark):
 
 
 def test_hurst_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational57 import _HURST_MS
+    from boat_etl_pyspark_spark.plans.ts import _HURST_MS
 
     daily = Counter(
         str(pd.Timestamp(d).date()) for d in tables["orders"]["o_orderdate"]

@@ -43,7 +43,7 @@ def run(spark):
 
 
 def test_hash_collision_budget_matches_python(run, tables):
-    from boat_etl_pyspark_spark.plans.relational58 import _HCB_SHINGLE
+    from boat_etl_pyspark_spark.plans.validate import _HCB_SHINGLE
 
     grams = set()
     for text in tables["documents"]["text"]:

@@ -538,7 +538,7 @@ def test_mg_candidate_stage_is_superset_under_any_partitioning():
     interleaved vs single-partition layouts."""
     import pandas as pd
 
-    from boat_etl_pyspark_spark.plans.relational32 import (
+    from boat_etl_pyspark_spark.plans.agg import (
         _HH_M,
         _mg_summaries,
     )

@@ -1,6 +1,6 @@
 """Round-7 hardening regressions (round-6 ADVICE.md items).
 
-1. The Fisher tie epsilon (relational50._FISHER_TIE_EPS = 1e-9) rests
+1. The Fisher tie epsilon (agg._FISHER_TIE_EPS = 1e-9) rests
    on a one-sided assumption: for marginals in the regime the query
    runs at (hundreds), EXACT pmf ties drift by only a few ulps of
    accumulated ln() error (<< 1e-9) while genuinely-distinct lnpmf
@@ -106,35 +106,30 @@ _COARSE_GRID = 7
 
 
 def _grid_cases():
-    from boat_etl_pyspark_spark.plans import (
-        relational24,
-        relational30,
-        relational34,
-        relational55,
-    )
+    from boat_etl_pyspark_spark.plans import agg, ml
 
     return [
         (
             "ml_roc_auc",
-            relational30._AUC_CORE,
+            ml._AUC_CORE,
             {"big": "DECIMAL(38,0)", "idiv": "DIV"},
             {"big": "HUGEINT", "idiv": "//"},
         ),
         (
             "ml_pr_auc",
-            relational34._AP_CORE,
+            ml._AP_CORE,
             {"big": "DECIMAL(38,0)", "idiv": "DIV"},
             {"big": "HUGEINT", "idiv": "//"},
         ),
         (
             "ml_threshold_youden",
-            relational55._YOUDEN_CORE,
+            ml._YOUDEN_CORE,
             {"idiv": "DIV"},
             {"idiv": "//"},
         ),
         (
             "agg_mann_whitney_u",
-            relational24._MW_CORE,
+            agg._MW_CORE,
             {"big": "DECIMAL(38,0)", "idiv": "DIV"},
             {"big": "HUGEINT", "idiv": "//"},
         ),
@@ -169,10 +164,10 @@ def test_score_grid_knob_is_engine_symmetric(spark, oracle, idx):
 def _modularity_guard_case() -> str:
     """The shipped CASE expression, extracted from the template so the
     test exercises the exact SQL that runs in production."""
-    from boat_etl_pyspark_spark.plans import relational50
+    from boat_etl_pyspark_spark.plans import graph
 
     m = re.search(
-        r"CASE WHEN contrib_num.*?END", relational50._MODULARITY_CORE, re.S
+        r"CASE WHEN contrib_num.*?END", graph._MODULARITY_CORE, re.S
     )
     assert m, "modularity guard CASE not found"
     return m.group(0)

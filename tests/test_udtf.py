@@ -1,6 +1,6 @@
 """UDTF surface check: a Python UDTF (PySpark 4 `udtf` API) driving the
 same keyword-span semantics as the built-in posexplode query
-(`plans/textdedup.text_keyword_spans`).
+(`plans/text.text_keyword_spans`).
 
 The contract query stays on the posexplode form — whole-stage codegen,
 no Python workers — and this test pins that the UDTF route (the
@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from boat_etl_pyspark_spark.plans import textdedup
+from boat_etl_pyspark_spark.plans.text import _docs_view, text_keyword_spans
 from tests.conftest import SF_SMOKE
 
 
@@ -38,13 +38,13 @@ def test_udtf_matches_builtin_keyword_spans(spark):
                     yield tok, pos
 
     spark.udtf.register("keyword_spans_udtf", KeywordSpans)
-    docs = textdedup._docs_view(spark, SF_SMOKE, "__docs_udtf")
+    docs = _docs_view(spark, SF_SMOKE, "__docs_udtf")
     via_udtf = spark.sql(
         f"SELECT d.doc_id, s.keyword, s.position "
         f"FROM {docs} d, LATERAL keyword_spans_udtf(d.text) s"
     ).toPandas()
 
-    builtin = textdedup.text_keyword_spans(spark, SF_SMOKE).toPandas()
+    builtin = text_keyword_spans(spark, SF_SMOKE).toPandas()
 
     assert len(builtin) > 0, "fixture should contain at least one keyword hit"
     pd.testing.assert_frame_equal(_canon(via_udtf), _canon(builtin), check_dtype=False)

@@ -22,7 +22,7 @@ replaces the hand list with a content-addressed bank:
   item 1), so an edit auto-promotes the query with no manual step.
 
 The hash ALSO covers every module-level string constant the plan
-callable references (``fn.__code__.co_names`` ∩ its module globals of
+callable loads as a global (``_global_names`` ∩ its module globals of
 type ``str``) — round-7 verdict item 5: most plans are
 ``spark.sql(_X_SPARK.format(...))`` where ``_X_SPARK`` is a
 module-level template, so a Spark-side-only template edit changes
@@ -85,6 +85,20 @@ def _entry_module():
     return entry_mod
 
 
+def _global_names(code) -> set[str]:
+    """Names the code object loads as globals. ``co_names`` also holds
+    attribute and imported names (``contract.money_domain`` puts
+    ``money_domain`` there); matched against module globals, those
+    change the hash whenever a same-named global appears in the
+    module, e.g. when code moves into a module that imports it."""
+    import dis
+
+    return {
+        i.argval for i in dis.get_instructions(code)
+        if i.opname in ("LOAD_GLOBAL", "LOAD_NAME")
+    }
+
+
 def referenced_templates(fn) -> list[str]:
     """``name=value`` for every module-level string constant the plan
     callable references, sorted by name. These are the ``_X_SPARK`` /
@@ -96,7 +110,7 @@ def referenced_templates(fn) -> list[str]:
     if code is None:
         return []
     out = []
-    for name in sorted(set(code.co_names)):
+    for name in sorted(_global_names(code)):
         val = mod_globals.get(name)
         if isinstance(val, str):
             out.append(f"{name}={val}")
@@ -106,7 +120,7 @@ def referenced_templates(fn) -> list[str]:
 def _function_local_imports(fn) -> dict:
     """name -> object for import statements INSIDE the plan callable's
     body (the repo's lazy-import idiom for streaming helpers). These
-    bind locals, not globals, so ``co_names`` + ``__globals__`` alone
+    bind locals, not globals, so loaded globals + ``__globals__`` alone
     cannot resolve them. Parsed with ``ast`` (round-8 ADVICE): the old
     line regex missed parenthesized / multi-line ``from X import (a,
     b)`` forms and plain ``import x`` statements, silently exempting
@@ -173,7 +187,7 @@ def referenced_functions(fn) -> list[str]:
     if code is None:
         return []
     candidates = dict(_function_local_imports(fn))
-    for name in set(code.co_names):
+    for name in _global_names(code):
         if name in mod_globals:
             candidates[name] = mod_globals[name]
     out = []

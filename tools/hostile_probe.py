@@ -65,7 +65,7 @@ def main() -> int:
     qs = m.queries()
     osql = m.oracle_sql()
     names = args or consumers(osql, qs)
-    spark = get_spark("hostile-probe", cpus=8, shuffle_partitions=8)
+    spark = get_spark("hostile-probe", cpus=8)
 
     def duck():
         con = duckdb.connect()

@@ -99,7 +99,7 @@ def main() -> int:
     sys.path.insert(0, os.path.dirname(OUT.rsplit("/tests", 1)[0] + "/"))
     from boat_etl_pyspark_spark.session import get_spark
 
-    spark = get_spark("plan-budgets", cpus=8, shuffle_partitions=8)
+    spark = get_spark("plan-budgets", cpus=8)
     try:
         budgets = collect(spark)
     finally:
