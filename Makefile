@@ -5,8 +5,10 @@ SF1   ?= /root/testdata/sf0.1
 
 .PHONY: test verify-scale bench
 
+# The Tier-1 command (ROADMAP.md): every test, no early stop, under the
+# suite's wall-time budget.
 test:
-	$(PY) -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # One-command scale-parity harness (round-4 verdict item 2): replay the
 # full DuckDB-oracle correctness gate — every queries() entry — at

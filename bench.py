@@ -1,12 +1,21 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract).
+"""Benchmark harness (driver contract) and per-query profiler.
 
 Runs every contract query at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line::
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``,
+``$SPARK_GRAFT_BENCH_REPS`` times (default 3), and prints ONE JSON
+line::
 
     {"metric": "total_sec_all_queries", "value": N, "unit": "sec",
      "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1}
+
+Usage::
+
+    python bench.py                        # the whole registry
+    python bench.py q3_shipping_priority [more ...] [--explain DIR]
+
+Query names restrict the sweep; ``--explain DIR`` writes each swept
+query's formatted plan (as built in the last rep) to ``DIR/<name>.txt``.
 
 Execution is forced with the noop sink (full computation, no driver
 collect) except for streaming queries, whose memory-sink table is
@@ -15,17 +24,22 @@ numbers measure the plans, not the JIT. A query that raises is counted
 in ``n_failed`` (its traceback tail goes to bench_full.json's
 ``failed``) and the sweep goes on; the line also states the ``cpus``,
 ``default_parallelism`` and effective ``shuffle_partitions`` it ran
-with.
+with. Per query and rep, bench_full.json also splits the total into
+build seconds (the query callable: Python plan construction plus any
+jobs it runs eagerly) and the Spark job count, and gives the cold rep-1
+total (``cold_value``) next to the min-of-N ``value``.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
 import sys
 import time
 import traceback
+from dataclasses import dataclass, field
 
 
 # stream_stream_left_outer replays 3 files through availableNow so the
@@ -37,25 +51,21 @@ import traceback
 _SSLO_REPLAY_FLOOR_SEC = 3.9
 
 
-def _cpu_fingerprint() -> float:
-    """Single-thread CPU speed probe (seconds for a fixed pure-python
-    loop). Recorded into bench_full.json so cross-round comparisons
-    can tell host drift from code regressions: round 3's 91s->103s
-    'regression' reproduced byte-identically on round-2 code — the
-    host, not the repo, had slowed."""
-    t0 = time.perf_counter()
-    s = 0
-    for i in range(2_000_000):
-        s += i * i
-    return round(time.perf_counter() - t0, 4)
-
-
 def _fingerprint_worker(_arg: int) -> float:
     t0 = time.perf_counter()
     s = 0
     for i in range(2_000_000):
         s += i * i
     return time.perf_counter() - t0
+
+
+def _cpu_fingerprint() -> float:
+    """Single-thread CPU speed probe (seconds for a fixed pure-python
+    loop). Recorded into bench_full.json so cross-round comparisons
+    can tell host drift from code regressions: round 3's 91s->103s
+    'regression' reproduced byte-identically on round-2 code — the
+    host, not the repo, had slowed."""
+    return round(_fingerprint_worker(0), 4)
 
 
 def _cpu_fingerprint_mc() -> float:
@@ -99,9 +109,11 @@ def host_scale_disagreement(
     return ratio, fired
 
 
-def _rss_mb() -> dict:
-    """Driver-python and JVM resident-set sizes in MB (local mode: the
-    executor lives inside the driver JVM, so this is the whole app)."""
+def _rss_mb(jvm_pid: int) -> dict:
+    """Driver-python max RSS and the resident set of JVM ``jvm_pid``,
+    in MB (local mode: the executor lives inside the driver JVM, so
+    this is the whole app). Only the session's own JVM is read, so a
+    concurrent test or benchmark JVM on the host is not counted."""
     out = {}
     try:
         import resource
@@ -112,29 +124,99 @@ def _rss_mb() -> dict:
     except Exception:
         pass
     try:
-        jvm = 0
-        for pid in os.listdir("/proc"):
-            if not pid.isdigit():
-                continue
-            try:
-                with open(f"/proc/{pid}/comm") as f:
-                    if f.read().strip() != "java":
-                        continue
-                with open(f"/proc/{pid}/status") as f:
-                    for line in f:
-                        if line.startswith("VmRSS:"):
-                            jvm += int(line.split()[1])
-                            break
-            except OSError:
-                continue
-        if jvm:
-            out["jvm_rss_mb"] = round(jvm / 1024, 1)
-    except Exception:
+        with open(f"/proc/{jvm_pid}/status") as f:
+            for line in f:
+                if line.startswith("VmRSS:"):
+                    out["jvm_rss_mb"] = round(int(line.split()[1]) / 1024, 1)
+                    break
+    except OSError:
         pass
     return out
 
 
+@dataclass
+class Sweep:
+    """Per-query, per-rep records of one ``measure`` call. ``total``,
+    ``build``, ``exec`` and ``jobs`` map a query name to one entry per
+    rep it passed; ``cold`` holds the rep-1 total of each query that
+    passed rep 1."""
+
+    total: dict[str, list[float]]
+    build: dict[str, list[float]]
+    exec: dict[str, list[float]]
+    jobs: dict[str, list[int]]
+    cold: dict[str, float] = field(default_factory=dict)
+    # name -> tail of the first traceback
+    failed: dict[str, str] = field(default_factory=dict)
+    rss_per_rep: list[dict] = field(default_factory=list)
+
+
+def _explain(df, path: str) -> None:
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    with open(path, "w") as f:
+        f.write(plan)
+
+
+def measure(spark, queries, names, sf_dir, reps, explain_dir=None) -> Sweep:
+    """Run each of ``names`` ``reps`` times, one sorted sweep per rep.
+
+    One ``perf_counter`` span times the build (the query callable)
+    plus the noop write; the build and exec parts are timed inside it.
+    The Spark job count is ``nextJobId`` read before and after, outside
+    the timed span, so it includes jobs the callable runs eagerly
+    (shared-cache fills, driver-side fixpoints). A query that raises is
+    counted in ``failed`` and retried every rep, never dropped from the
+    sweep. With ``explain_dir``, the last rep's plan of each query is
+    written to ``explain_dir/<name>.txt``."""
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    jvm_pid = sc._gateway.proc.pid
+    sweep = Sweep(
+        total={name: [] for name in names},
+        build={name: [] for name in names},
+        exec={name: [] for name in names},
+        jobs={name: [] for name in names},
+    )
+    for rep in range(reps):
+        for name in sorted(names):
+            jobs0 = dag.nextJobId()
+            t0 = time.perf_counter()
+            try:
+                df = queries[name](spark, sf_dir)
+                t1 = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                t2 = time.perf_counter()
+            except Exception:
+                sweep.failed.setdefault(name, traceback.format_exc()[-800:])
+                continue
+            sweep.jobs[name].append(dag.nextJobId() - jobs0)
+            sweep.total[name].append(t2 - t0)
+            sweep.build[name].append(t1 - t0)
+            sweep.exec[name].append(t2 - t1)
+            if rep == 0:
+                sweep.cold[name] = t2 - t0
+            if explain_dir and rep == reps - 1:
+                _explain(df, os.path.join(explain_dir, f"{name}.txt"))
+        sweep.rss_per_rep.append(_rss_mb(jvm_pid))
+    return sweep
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(
+        description="Time contract queries; print one JSON line."
+    )
+    ap.add_argument(
+        "names", nargs="*", help="queries to sweep (default: every query)"
+    )
+    ap.add_argument(
+        "--explain",
+        metavar="DIR",
+        help="write each query's formatted plan to DIR/<name>.txt",
+    )
+    args = ap.parse_args()
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf_match = re.search(r"sf([0-9.]+)", sf_dir)
@@ -145,9 +227,16 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
 
+    queries = entrymod.queries()
+    unknown = sorted(set(args.names) - set(queries))
+    if unknown:
+        ap.error(f"unknown queries: {' '.join(unknown)}")
+    names = sorted(set(args.names) or queries)
+    if args.explain:
+        os.makedirs(args.explain, exist_ok=True)
+
     spark = get_spark("boat-etl-bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    queries = entrymod.queries()
 
     # warm-up: JVM, parquet footers, codegen
     queries["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode(
@@ -167,24 +256,10 @@ def main() -> None:
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     fp_start = _cpu_fingerprint()
     fp_mc_start = _cpu_fingerprint_mc()
-    runs: dict[str, list[float]] = {name: [] for name in queries}
-    # name -> tail of the first traceback; a failing query is counted
-    # and retried every rep, never dropped from the sweep
-    failed: dict[str, str] = {}
-    rss_per_rep = []
-    for _ in range(reps):
-        for name in sorted(queries):
-            t0 = time.perf_counter()
-            try:
-                df = queries[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-            except Exception:
-                failed.setdefault(name, traceback.format_exc()[-800:])
-                continue
-            runs[name].append(time.perf_counter() - t0)
-        rss_per_rep.append(_rss_mb())
+    sweep = measure(spark, queries, names, sf_dir, reps, args.explain)
     fp_end = _cpu_fingerprint()
     fp_mc_end = _cpu_fingerprint_mc()
+    runs, failed = sweep.total, sweep.failed
 
     # hand back executor storage memory pinned by the dedup-family
     # shared caches and per-query persisted intermediates
@@ -287,7 +362,13 @@ def main() -> None:
                     name: [round(t, 3) for t in ts]
                     for name, ts in sorted(runs.items())
                 },
-                "rss_per_rep_mb": rss_per_rep,
+                "build_reps_detail": {
+                    name: [round(t, 3) for t in ts]
+                    for name, ts in sorted(sweep.build.items())
+                },
+                "jobs_reps_detail": dict(sorted(sweep.jobs.items())),
+                "cold_value": round(sum(sweep.cold.values()), 3),
+                "rss_per_rep_mb": sweep.rss_per_rep,
                 "cpu_fingerprint_sec": {"start": fp_start, "end": fp_end},
                 "cpu_fingerprint_mc_sec": {
                     "start": fp_mc_start,

@@ -9,6 +9,7 @@ public Spark configuration.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -144,6 +145,32 @@ def isolated_session(spark: SparkSession, confs: dict[str, str] | None = None) -
     return s
 
 
+def driver_memory_for(meminfo: str) -> str:
+    """Default driver heap for a host whose ``/proc/meminfo`` text is
+    ``meminfo``: half of ``MemAvailable`` in whole GiB, clamped to
+    [1g, 32g].
+
+    A fixed 32g is twice a 16 GB host's memory, so the heap could
+    outgrow the host before the collector ever ran. 8g capped a
+    183-query x 3-rep bench sweep at its own heap (GC churn and persist
+    spills slowed unrelated queries), so a large host keeps 32g of
+    storage memory for the session caches. Half leaves the other half
+    to the JVM's off-heap use, the Python workers and the OS."""
+    m = re.search(r"^MemAvailable:\s+(\d+)\s+kB", meminfo, re.MULTILINE)
+    if m is None:
+        return "32g"
+    half_gib = int(m.group(1)) // (2 * 1024 * 1024)
+    return f"{min(max(half_gib, 1), 32)}g"
+
+
+def _host_driver_memory() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return driver_memory_for(f.read())
+    except OSError:
+        return "32g"
+
+
 def get_spark(app_name: str = "boat-etl-pyspark-spark",
               cpus: int | None = None) -> SparkSession:
     """Create (or fetch) a local session sized from the environment,
@@ -152,18 +179,19 @@ def get_spark(app_name: str = "boat-etl-pyspark-spark",
 
     ``SPARK_GRAFT_CPUS`` (default 32) controls local parallelism, per
     the driver contract. The shuffle width is ``tune()``'s pinned
-    ``spark.sql.shuffle.partitions``.
+    ``spark.sql.shuffle.partitions``. The driver heap is
+    ``SPARK_GRAFT_DRIVER_MEM`` when set, else sized from the host by
+    ``driver_memory_for``.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        # 8g capped the 183-query x 3-rep bench sweep at its own heap
-        # (JVM RSS measured 8.9 GB = the limit): GC churn and persist
-        # spills slowed unrelated queries mid-sweep. The container has
-        # 128 GiB; 32g leaves storage memory for the session caches.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_memory(),
+        )
         # ~550 codegen'd stages exhaust the default 240m JIT code
         # cache; once full, HotSpot stops compiling and later queries
         # run partially interpreted (observed: identical plans 3x

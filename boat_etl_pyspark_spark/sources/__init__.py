@@ -1,1 +1,1 @@
-from .readers import TABLES, load_table, load_tables  # noqa: F401
+from .readers import load_table  # noqa: F401

@@ -13,15 +13,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-# Dimension tables small enough to broadcast at any realistic scale
-# (region/nation are bounded by geography; supplier scales slowly).
-BROADCASTABLE = {"region", "nation", "supplier", "part"}
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a DataFrame.
@@ -47,9 +38,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load several fixture tables; defaults to all of them."""
-    use = names or TABLES
-    return {n: load_table(spark, sf_dir, n) for n in use}

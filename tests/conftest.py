@@ -1,9 +1,11 @@
 from __future__ import annotations
 
 import glob
+import math
 import os
 
 import duckdb
+import pandas as pd
 import pytest
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -34,3 +36,38 @@ def oracle():
         return con
 
     return connect
+
+
+def rnd(v: float) -> int:
+    """Engine ROUND(): half away from zero (Spark HALF_UP on a double,
+    DuckDB round)."""
+    return int(math.copysign(math.floor(abs(v) + 0.5), v))
+
+
+@pytest.fixture(scope="module")
+def tables():
+    """Every sf0.001 fixture table as a pandas frame, for the
+    pure-Python cross-checks."""
+    out = {}
+    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
+        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
+    return out
+
+
+@pytest.fixture(scope="module")
+def run(spark):
+    """Run one registry query at sf0.001 to pandas, then release the
+    session caches it built."""
+    import __spark_entry__ as m
+
+    qs = m.queries()
+
+    def _run(name: str) -> pd.DataFrame:
+        from boat_etl_pyspark_spark.plans import release_caches
+
+        try:
+            return qs[name](spark, SF_SMOKE).toPandas()
+        finally:
+            release_caches(spark)
+
+    return _run

@@ -7,12 +7,17 @@ between a calm single-thread probe and the aggregate scale, and the
 1.22x disagreement sailed under the old 1.25 alarm. These tests pin
 the fixes: a multi-core probe exists and measures something real, the
 alarm threshold is 1.15, and a synthetic round-7-sized event FIRES it.
+The per-query measure loop and the RSS reader are pinned here too.
 """
 
 from __future__ import annotations
 
 import importlib.util
 import os
+import subprocess
+import sys
+
+import pytest
 
 _BENCH = os.path.join(os.path.dirname(os.path.dirname(__file__)), "bench.py")
 
@@ -20,6 +25,7 @@ _BENCH = os.path.join(os.path.dirname(os.path.dirname(__file__)), "bench.py")
 def _bench_mod():
     spec = importlib.util.spec_from_file_location("bench", _BENCH)
     mod = importlib.util.module_from_spec(spec)
+    sys.modules[spec.name] = mod  # dataclasses resolve through it
     spec.loader.exec_module(mod)
     return mod
 
@@ -68,3 +74,41 @@ def test_multicore_probe_measures_parallel_throughput():
             if mc < st * n * 0.5:
                 break
         assert mc < st * n * 0.5, (mc, st, n)
+
+
+def test_rss_reader_reads_only_the_given_pid():
+    bench = _bench_mod()
+    with subprocess.Popen(
+        [sys.executable, "-c", "import time; print(flush=True); time.sleep(60)"],
+        stdout=subprocess.PIPE,
+    ) as child:
+        try:
+            child.stdout.readline()  # started up: its RSS no longer grows
+            with open(f"/proc/{child.pid}/status") as f:
+                kb = next(
+                    int(line.split()[1])
+                    for line in f
+                    if line.startswith("VmRSS:")
+                )
+            assert bench._rss_mb(child.pid)["jvm_rss_mb"] == round(kb / 1024, 1)
+        finally:
+            child.kill()
+
+
+def test_measure_splits_build_exec_and_counts_jobs(spark):
+    bench = _bench_mod()
+
+    def query(spark, sf_dir):
+        spark.sparkContext.parallelize([1]).count()  # one job while built
+        return spark.range(1)  # one job when written
+
+    sweep = bench.measure(spark, {"stub": query}, ["stub"], "unused", 2)
+    assert sweep.jobs == {"stub": [2, 2]}
+    assert sweep.failed == {}
+    assert sweep.cold == {"stub": sweep.total["stub"][0]}
+    for build, exec_, total in zip(
+        sweep.build["stub"], sweep.exec["stub"], sweep.total["stub"]
+    ):
+        assert 0 < build <= total
+        assert build + exec_ == pytest.approx(total)
+    assert len(sweep.rss_per_rep) == 2

@@ -1,53 +1,20 @@
-"""Third-implementation cross-checks for the round-5 batch-22
-operators (`plans/relational37.py`): each result is recomputed in
-pure Python from the parquet fixtures, independent of both the Spark
-plan and the DuckDB oracle, with exact ``==`` comparisons (union-find
-vs label-propagation vs recursive CTE for components; hashlib md5 vs
-both engines' md5 for the Count-Min sketch).
+"""Third-implementation cross-checks for the round-5 batch-22 operators
+(`plans/agg.py`, `plans/graph.py`, `plans/join.py`): each result is
+recomputed in pure Python from the parquet fixtures, independent of
+both the Spark plan and the DuckDB oracle, with exact ``==``
+comparisons (union-find vs label-propagation vs recursive CTE for
+components; hashlib md5 vs both engines' md5 for the Count-Min
+sketch).
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
 from collections import Counter, defaultdict
 
 import pandas as pd
-import pytest
 
-from tests.conftest import SF_SMOKE
-
-
-def rnd(v: float) -> int:
-    return int(math.copysign(math.floor(abs(v) + 0.5), v))
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
+from tests.conftest import rnd
 
 
 def _trade_edges(tables) -> pd.DataFrame:

@@ -1,5 +1,5 @@
 """Third-implementation cross-checks for the round-5 batch-23
-operators (`plans/relational38.py`): the batch-GD logistic trainer
+operators (`plans/ml.py`, `plans/ts.py`): the batch-GD logistic trainer
 and the Fourier periodogram recomputed in pure Python from the
 parquet fixtures with exact ``==`` comparisons (per-row floors +
 arbitrary-precision int sums replicate the fixed-point contracts).
@@ -9,39 +9,6 @@ from __future__ import annotations
 
 import math
 from collections import Counter
-
-import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def _tdiv(a: int, b: int) -> int:

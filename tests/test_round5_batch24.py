@@ -1,47 +1,14 @@
-"""Third-implementation cross-checks for the round-5 batch-24
-operators (`plans/multimodal_plans.py::multimodal_phash_pairs`,
-`plans/relational39.py`): perceptual-hash bits recomputed from raw
-UTF-8 bytes in pure Python, FK orphans via set membership, DiD via a
-direct 2x2 cell scan — exact ``==`` comparisons throughout.
+"""Third-implementation cross-checks for the round-5 batch-24 operators
+(`plans/multimodal.py::multimodal_phash_pairs`, `plans/events.py`,
+`plans/validate.py`): perceptual-hash bits recomputed from raw UTF-8
+bytes in pure Python, FK orphans via set membership, DiD via a direct
+2x2 cell scan — exact ``==`` comparisons throughout.
 """
 
 from __future__ import annotations
 
 import math
 from itertools import combinations
-
-import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def _phash(text: str) -> list[int]:

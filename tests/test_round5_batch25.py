@@ -1,5 +1,5 @@
 """Third-implementation cross-checks for the round-5 batch-25 ML
-operators (`plans/relational40.py`): NDCG, Cohen's kappa, the
+operators (`plans/ml.py`): NDCG, Cohen's kappa, the
 decision stump and the Naive Bayes confusion matrix recomputed in
 pure Python over the raw parquet — exact ``==`` comparisons on the
 same integer micro-units, so a formula error shared by the Spark
@@ -9,39 +9,6 @@ from __future__ import annotations
 
 import math
 from collections import Counter, defaultdict
-
-import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_ndcg_matches_python(run, tables):

@@ -1,5 +1,5 @@
 """Third-implementation cross-checks for the round-5 batch-26
-statistics (`plans/relational41.py`): ANOVA F, Jarque-Bera,
+statistics (`plans/agg.py`): ANOVA F, Jarque-Bera,
 Durbin-Watson and Theil's U recomputed in pure Python over the raw
 parquet with the SAME fixed-shape float expressions and integer
 micro-floors — exact ``==`` comparisons, so a shared formula error
@@ -11,37 +11,6 @@ import math
 from collections import Counter, defaultdict
 
 import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_anova_f_matches_python(run, tables):

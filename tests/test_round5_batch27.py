@@ -1,47 +1,14 @@
-"""Third-implementation cross-checks for the round-5 batch-27
-operators (`plans/relational42.py`): co-purchase Jaccard from raw
-itertools pairs, footer audit vs a pandas DATA scan (so the test
-triangulates footer == Spark == data), and domain caps via hashlib
-md5 — exact ``==`` comparisons."""
+"""Third-implementation cross-checks for the round-5 batch-27 operators
+(`plans/curate.py`, `plans/graph.py`, `plans/io.py`): co-purchase
+Jaccard from raw itertools pairs, footer audit vs a pandas DATA scan
+(so the test triangulates footer == Spark == data), and domain caps
+via hashlib md5 — exact ``==`` comparisons."""
 
 from __future__ import annotations
 
 import hashlib
 from collections import Counter, defaultdict
 from itertools import combinations
-
-import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_copurchase_matches_python(run, tables):

@@ -1,47 +1,15 @@
 """Third-implementation cross-checks for the round-5 batch-28 text
-operators (`plans/textstats3.py`). The MATTR check is the important
-one: it recomputes the metric by BRUTE FORCE (materializing every
-sliding window as a Python set) and must equal the plan's closed-form
-first-occurrence-interval answer exactly — proving the O(n) rewrite
-against the O(n*w) definition, not against itself."""
+operators (`plans/curate.py`, `plans/text.py`). The MATTR check is
+the important one: it recomputes the metric by BRUTE FORCE
+(materializing every sliding window as a Python set) and must equal
+the plan's closed-form first-occurrence-interval answer exactly —
+proving the O(n) rewrite against the O(n*w) definition, not against
+itself."""
 
 from __future__ import annotations
 
 import hashlib
 from collections import Counter
-
-import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def _toks(text: str) -> list[str]:

@@ -1,9 +1,9 @@
 """Third-implementation cross-checks for the round-5 batch-29 ML
-operators (`plans/relational43.py`): boosted stumps and the learning
-curve replayed in pure Python over the raw parquet (same histogram,
-same float split scores, same floor-division leaves), Pythagorean
-means from per-term integer floors — exact ``==`` plus the
-AM >= GM >= HM structural bound."""
+operators (`plans/agg.py`, `plans/ml.py`): boosted stumps and the
+learning curve replayed in pure Python over the raw parquet (same
+histogram, same float split scores, same floor-division leaves),
+Pythagorean means from per-term integer floors — exact ``==`` plus
+the AM >= GM >= HM structural bound."""
 
 from __future__ import annotations
 
@@ -11,37 +11,6 @@ import math
 from collections import defaultdict
 
 import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_gbdt_boosted_stumps_match_python(run, tables):

@@ -1,5 +1,5 @@
 """Third-implementation cross-checks for the round-5 batch-30
-operators (`plans/similarity2.py`, `plans/streaming_plans2.py`):
+operators (`plans/sim.py`, `plans/stream.py`):
 IVF recall recomputed with pure-Python cosine ranking over the raw
 embeddings, and the late-data audit's arithmetic recomputed from the
 slice definitions — exact ``==`` comparisons, plus the structural
@@ -8,40 +8,8 @@ guarantees the streaming run must honor."""
 from __future__ import annotations
 
 import math
-from collections import defaultdict
 
 import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def _cos(a, b):

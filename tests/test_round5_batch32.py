@@ -1,5 +1,5 @@
-"""Third-implementation cross-checks for the round-5 batch-32
-operators (`plans/relational45.py`): the power analysis and mixture
+"""Third-implementation cross-checks for the round-5 batch-32 operators
+(`plans/curate.py`, `plans/ml.py`): the power analysis and mixture
 epochs recomputed in pure Python with the same literals and integer
 floors — exact ``==``, plus structural bounds (the budget allocation
 must sum to ~the declared budget; epochs > 1 exactly for
@@ -11,37 +11,6 @@ import math
 from collections import Counter
 
 import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_power_analysis_matches_python(run, tables):

@@ -1,8 +1,9 @@
-"""Third-implementation cross-checks for the round-5 batch-33
-operators (`plans/relational46.py`): SRM, the deterministic
-permutation test and degree assortativity recomputed in pure Python
-(hashlib permutations, itertools pairs) — exact ``==``, plus the
-structural guarantee that the fixture's hash split raises no SRM."""
+"""Third-implementation cross-checks for the round-5 batch-33 operators
+(`plans/agg.py`, `plans/events.py`, `plans/graph.py`): SRM, the
+deterministic permutation test and degree assortativity recomputed in
+pure Python (hashlib permutations, itertools pairs) — exact ``==``,
+plus the structural guarantee that the fixture's hash split raises no
+SRM."""
 
 from __future__ import annotations
 
@@ -10,39 +11,6 @@ import hashlib
 import math
 from collections import Counter, defaultdict
 from itertools import combinations
-
-import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_srm_check_matches_python(run, tables):

@@ -1,8 +1,8 @@
-"""Third-implementation cross-checks for the round-5 batch-34
-operators (`plans/relational47.py`): CUPED and the threshold sweep
+"""Third-implementation cross-checks for the round-5 batch-34 operators
+(`plans/curate.py`, `plans/events.py`): CUPED and the threshold sweep
 replayed in pure Python with the same integer contracts — exact
-``==``, plus structure (sweep cumulative fractions must be
-monotone and end at 100%)."""
+``==``, plus structure (sweep cumulative fractions must be monotone
+and end at 100%)."""
 
 from __future__ import annotations
 
@@ -10,37 +10,6 @@ import math
 from collections import Counter, defaultdict
 
 import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_cuped_matches_python(run, tables):

@@ -1,7 +1,7 @@
-"""Third-implementation cross-checks for the round-5 batch-35
-operators (`plans/relational48.py`): k-core peeling replayed with
-Python sets, lead-lag correlations and McNemar from raw counts —
-exact ``==`` comparisons."""
+"""Third-implementation cross-checks for the round-5 batch-35 operators
+(`plans/agg.py`, `plans/graph.py`, `plans/ts.py`): k-core peeling
+replayed with Python sets, lead-lag correlations and McNemar from raw
+counts — exact ``==`` comparisons."""
 
 from __future__ import annotations
 
@@ -10,37 +10,6 @@ from collections import Counter, defaultdict
 from itertools import combinations
 
 import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_kcore_peeling_matches_python(run, tables):

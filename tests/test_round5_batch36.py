@@ -1,6 +1,6 @@
-"""Third-implementation cross-checks for the round-5 batch-36
-operators (`plans/relational49.py`): fold leakage, Chapman and Chao1
-recomputed in pure Python — exact ``==``, plus the structural
+"""Third-implementation cross-checks for the round-5 batch-36 operators
+(`plans/agg.py`, `plans/validate.py`): fold leakage, Chapman and
+Chao1 recomputed in pure Python — exact ``==``, plus the structural
 guarantees (signature-keyed folds never leak; Chapman brackets the
 true count on this overlap structure)."""
 
@@ -8,39 +8,6 @@ from __future__ import annotations
 
 import hashlib
 from collections import Counter, defaultdict
-
-import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_fold_dup_leakage_matches_python(run, tables):

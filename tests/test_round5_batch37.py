@@ -1,48 +1,16 @@
-"""Third-implementation cross-checks for the round-5 batch-37
-operators (`plans/relational50.py`): PMI collocations, modularity,
-Fisher exact, Chebyshev-BH, pinball loss and Hodges-Lehmann
-recomputed in pure Python — exact ``==`` on every integer column,
-plus the structural guarantees (BH step-up monotone; HL lies inside
-the sample range; Fisher census includes the observed table)."""
+"""Third-implementation cross-checks for the round-5 batch-37 operators
+(`plans/agg.py`, `plans/graph.py`, `plans/ml.py`, `plans/text.py`):
+PMI collocations, modularity, Fisher exact, Chebyshev-BH, pinball
+loss and Hodges-Lehmann recomputed in pure Python — exact ``==`` on
+every integer column, plus the structural guarantees (BH step-up
+monotone; HL lies inside the sample range; Fisher census includes the
+observed table)."""
 
 from __future__ import annotations
 
 import hashlib
 import math
 from collections import Counter, defaultdict
-
-import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_pmi_collocations_match_python(run, tables):

@@ -1,8 +1,9 @@
-"""Third-implementation cross-checks for the round-5 batch-38
-operators (`plans/relational51.py`): tokenizer fertility, Hill tail
-index, key profiling, permutation importance, the effect-size panel
-and the exponential-fit KS distance recomputed in pure Python —
-exact ``==`` on every integer column."""
+"""Third-implementation cross-checks for the round-5 batch-38 operators
+(`plans/agg.py`, `plans/ml.py`, `plans/text.py`, `plans/ts.py`,
+`plans/validate.py`): tokenizer fertility, Hill tail index, key
+profiling, permutation importance, the effect-size panel and the
+exponential-fit KS distance recomputed in pure Python — exact ``==``
+on every integer column."""
 
 from __future__ import annotations
 
@@ -12,37 +13,6 @@ import re
 from collections import Counter, defaultdict
 
 import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_tokenizer_fertility_matches_python(run, tables):

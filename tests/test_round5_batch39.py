@@ -1,10 +1,11 @@
-"""Third-implementation cross-checks for the round-5 batch-39
-operators (`plans/relational52.py`): Qini, Brier decomposition,
+"""Third-implementation cross-checks for the round-5 batch-39 operators
+(`plans/agg.py`, `plans/curate.py`, `plans/events.py`, `plans/ml.py`,
+`plans/text.py`, `plans/validate.py`): Qini, Brier decomposition,
 source overlap, Kendall tau-b, table checksum and LLR keyness
 recomputed in pure Python — exact ``==`` on every integer column,
 plus structural guarantees (checksum invariant under row order;
-overlap matrix symmetric in its construction; Qini cumulative
-counts monotone)."""
+overlap matrix symmetric in its construction; Qini cumulative counts
+monotone)."""
 
 from __future__ import annotations
 
@@ -13,37 +14,6 @@ import math
 from collections import Counter, defaultdict
 
 import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_uplift_qini_matches_python(run, tables):

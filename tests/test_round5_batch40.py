@@ -1,7 +1,8 @@
-"""Third-implementation cross-checks for the round-5 batch-40
-operators (`plans/relational53.py`): Bollinger bands, diversity
-indices, burstiness, Ljung-Box, forecast baselines and reciprocity
-recomputed in pure Python — exact ``==`` on every integer column."""
+"""Third-implementation cross-checks for the round-5 batch-40 operators
+(`plans/agg.py`, `plans/events.py`, `plans/graph.py`, `plans/ml.py`,
+`plans/window.py`): Bollinger bands, diversity indices, burstiness,
+Ljung-Box, forecast baselines and reciprocity recomputed in pure
+Python — exact ``==`` on every integer column."""
 
 from __future__ import annotations
 
@@ -9,37 +10,6 @@ import math
 from collections import Counter, defaultdict
 
 import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def _daily_revenue(tables):

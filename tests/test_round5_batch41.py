@@ -1,7 +1,7 @@
-"""Third-implementation cross-checks for the round-5 batch-41
-operators (`plans/relational54.py`): Markov entropy rate, Gumbel
-block maxima and Nelson-Aalen hazard recomputed in pure Python —
-exact ``==`` on every integer column, plus the structural
+"""Third-implementation cross-checks for the round-5 batch-41 operators
+(`plans/agg.py`, `plans/events.py`, `plans/ts.py`): Markov entropy
+rate, Gumbel block maxima and Nelson-Aalen hazard recomputed in pure
+Python — exact ``==`` on every integer column, plus the structural
 guarantees (entropy rate ≤ marginal entropy; cumulative hazard
 non-decreasing; NA risk sets identical to the KM op's)."""
 
@@ -11,37 +11,6 @@ import math
 from collections import Counter, defaultdict
 
 import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_markov_entropy_rate_matches_python(run, tables):

@@ -1,47 +1,16 @@
-"""Third-implementation cross-checks for the round-5 batch-42
-operators (`plans/relational55.py`): hard-negative mining, price
-indices, DAU/MAU stickiness, embedding isotropy and the Youden
-threshold recomputed in pure Python — exact ``==`` on every integer
-column."""
+"""Third-implementation cross-checks for the round-5 batch-42 operators
+(`plans/agg.py`, `plans/events.py`, `plans/ml.py`): hard-negative
+mining, price indices, DAU/MAU stickiness, embedding isotropy and the
+Youden threshold recomputed in pure Python — exact ``==`` on every
+integer column."""
 
 from __future__ import annotations
 
 import hashlib
 import math
-from collections import Counter, defaultdict
+from collections import defaultdict
 
 import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def _quant(vec, dims=None):

@@ -1,8 +1,8 @@
-"""Third-implementation cross-checks for the round-5 batch-43
-operators (`plans/relational56.py`): RSI, ECE and the EWMA control
-chart recomputed in pure Python — exact ``==`` on every integer
-column, plus structural guarantees (RSI bounded in [0, 100k]; the
-EWMA obeys its own recursion within integer-shift error)."""
+"""Third-implementation cross-checks for the round-5 batch-43 operators
+(`plans/ml.py`, `plans/ts.py`, `plans/window.py`): RSI, ECE and the
+EWMA control chart recomputed in pure Python — exact ``==`` on every
+integer column, plus structural guarantees (RSI bounded in [0, 100k];
+the EWMA obeys its own recursion within integer-shift error)."""
 
 from __future__ import annotations
 
@@ -10,37 +10,6 @@ import math
 from collections import Counter, defaultdict
 
 import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_rsi_matches_python(run, tables):

@@ -1,7 +1,7 @@
-"""Third-implementation cross-checks for the round-5 batch-44
-operators (`plans/relational57.py`): Hurst R/S, adversarial drift
-AUC and the ulcer index recomputed in pure Python — exact ``==`` on
-every integer column."""
+"""Third-implementation cross-checks for the round-5 batch-44 operators
+(`plans/ts.py`, `plans/validate.py`, `plans/window.py`): Hurst R/S,
+adversarial drift AUC and the ulcer index recomputed in pure Python —
+exact ``==`` on every integer column."""
 
 from __future__ import annotations
 
@@ -9,37 +9,6 @@ import math
 from collections import Counter, defaultdict
 
 import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_hurst_matches_python(run, tables):

@@ -1,5 +1,5 @@
-"""Third-implementation cross-checks for the round-5 batch-45
-operators (`plans/relational58.py`): the hash-collision budget and
+"""Third-implementation cross-checks for the round-5 batch-45 operators
+(`plans/ml.py`, `plans/validate.py`): the hash-collision budget and
 class-balance audit recomputed in pure Python — exact ``==``."""
 
 from __future__ import annotations
@@ -7,39 +7,6 @@ from __future__ import annotations
 import hashlib
 import math
 from collections import Counter
-
-import pandas as pd
-import pytest
-
-from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
 
 
 def test_hash_collision_budget_matches_python(run, tables):

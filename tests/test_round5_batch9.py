@@ -1,9 +1,10 @@
-"""Third-implementation cross-checks for the round-5 batch-9
-operators (`plans/relational27.py`): each statistic is recomputed in
-pure Python from the parquet fixtures, independent of both the Spark
-plan and the DuckDB oracle, with exact ``==`` comparisons on the
-scaled-integer contracts (per-term floors + arbitrary-precision int
-sums match the DECIMAL(38,0)/HUGEINT accumulators exactly).
+"""Third-implementation cross-checks for the round-5 batch-9 operators
+(`plans/agg.py`, `plans/ml.py`, `plans/text.py`): each statistic is
+recomputed in pure Python from the parquet fixtures, independent of
+both the Spark plan and the DuckDB oracle, with exact ``==``
+comparisons on the scaled-integer contracts (per-term floors +
+arbitrary-precision int sums match the DECIMAL(38,0)/HUGEINT
+accumulators exactly).
 """
 
 from __future__ import annotations
@@ -13,41 +14,8 @@ import math
 from collections import Counter, defaultdict
 
 import pandas as pd
-import pytest
 
-from tests.conftest import SF_SMOKE
-
-
-def rnd(v: float) -> int:
-    return int(math.copysign(math.floor(abs(v) + 0.5), v))
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
+from tests.conftest import SF_SMOKE, rnd
 
 
 def test_ks_matches_naive_ecdf_scan(run, tables):
@@ -200,7 +168,7 @@ def test_bigram_perplexity_matches_naive_lm(run, tables):
         assert got[source] == (len(bgs), nll, nll // len(bgs)), source
 
 
-# --- batch 10 (plans/relational28.py) ---
+# --- batch 10 (plans/agg.py, plans/ts.py) ---
 
 
 def test_kruskal_wallis_matches_naive_ranks(run, tables):
@@ -314,7 +282,7 @@ def test_levene_matches_naive_deviations(run, tables):
     assert abs(row.levene_f_milli - math.floor(f * 1000)) <= 1
 
 
-# --- batch 11: SemDeDup (plans/mlprep.py) ---
+# --- batch 11: SemDeDup (plans/curate.py) ---
 
 
 def test_semdedup_matches_naive_cluster_prune(run, tables):
@@ -362,7 +330,7 @@ def test_semdedup_matches_naive_cluster_prune(run, tables):
     assert sum(r for _, r, _ in got.values()) > 0
 
 
-# --- batch 13 (plans/relational29.py) ---
+# --- batch 13 (plans/io.py, plans/text.py) ---
 
 
 def test_substring_dedup_matches_naive_interval_merge(run, tables):
@@ -425,7 +393,7 @@ def test_dynamic_partition_overwrite_leaves_others_untouched(run, tables):
     assert got == exp
 
 
-# --- batch 14 (plans/relational30.py) ---
+# --- batch 14 (plans/ml.py) ---
 
 
 def test_roc_auc_matches_naive_pair_count(run, tables):
@@ -478,7 +446,7 @@ def test_confusion_thresholds_match_naive(run, tables):
         ), thr
 
 
-# --- batch 15 (plans/relational31.py) ---
+# --- batch 15 (plans/join.py) ---
 
 
 def test_cogrouped_asof_equals_relational_form(spark):
@@ -508,7 +476,7 @@ def test_cogrouped_asof_equals_relational_form(spark):
     assert cog == rel and len(cog) > 0
 
 
-# --- batch 16 (plans/relational32.py) ---
+# --- batch 16 (plans/agg.py, plans/ml.py, plans/window.py) ---
 
 
 def test_heavy_hitters_matches_naive_counter(run, tables):
@@ -624,7 +592,7 @@ def test_hampel_matches_naive_rolling_median(run, tables):
     } == expected
 
 
-# --- batch 17 (plans/relational33.py) ---
+# --- batch 17 (plans/agg.py, plans/curate.py, plans/ml.py) ---
 
 
 def test_token_budget_fill_matches_naive_cumsum(run, tables):
@@ -695,7 +663,7 @@ def test_basket_overlap_matches_naive_sets(run, tables):
         assert r.jaccard_ppm == inter * 1_000_000 // len(a | b)
 
 
-# --- batch 18 (plans/relational34.py) ---
+# --- batch 18 (plans/agg.py, plans/events.py, plans/ml.py) ---
 
 
 def test_pr_auc_matches_naive_step_curve(run, tables):
@@ -775,7 +743,7 @@ def test_trimmed_winsorized_matches_naive_sort(run, tables):
     )
 
 
-# --- batch 19 (plans/relational35.py) ---
+# --- batch 19 (plans/ml.py, plans/textdedup.py) ---
 
 
 def test_minhash_calibration_matches_naive_python(run, tables):
@@ -862,7 +830,7 @@ def test_lift_gains_matches_naive_sort(run, tables):
     assert got.cum_lift_milli.iloc[0] > 1000
 
 
-# --- batch 20 (plans/relational36.py) ---
+# --- batch 20 (plans/sim.py, plans/ts.py) ---
 
 
 def _fold_dot(a, b):

@@ -45,7 +45,8 @@ def _part_table(n: int, r1: int, c1: int, k_obs: int) -> pa.Table:
 # (n, r1, c1, k_obs): symmetric marginals r1 == c1 and complementary
 # marginals r1 + c1 == n — both produce EXACT hypergeometric pmf ties,
 # the regime where a raw double compare could flip n_more_extreme
-# between JVM Math.log and libm (ADVICE.md, relational50.py tie guard).
+# between JVM Math.log and libm (ADVICE.md, the plans/agg.py
+# agg_fisher_exact tie guard).
 _TIE_TABLES = [
     (20, 10, 10, 5),
     (20, 8, 8, 3),
@@ -92,7 +93,7 @@ def test_fisher_exact_symmetric_marginals_parity(
 
 def test_fisher_tie_eps_separates_ties_from_gaps_at_large_marginals():
     """Round-7 verdict item 8 (round-6 ADVICE residual): the 1e-9 tie
-    epsilon's adequacy was ASSERTED in the relational50.py comment
+    epsilon's adequacy was ASSERTED in the plans/agg.py comment
     ("~4 orders above accumulated float error, ~3 orders below the
     smallest genuinely-distinct gap") but never tested for very large
     marginals. Pin both sides of the band with exact integer

@@ -18,43 +18,8 @@ import math
 import re
 
 import pandas as pd
-import pytest
 
-from tests.conftest import SF_SMOKE
-
-
-def rnd(v: float) -> int:
-    """Engine ROUND(): half away from zero (Spark HALF_UP on a double,
-    DuckDB round)."""
-    return int(math.copysign(math.floor(abs(v) + 0.5), v))
-
-
-@pytest.fixture(scope="module")
-def tables():
-    import glob
-    import os
-
-    out = {}
-    for p in glob.glob(os.path.join(SF_SMOKE, "*.parquet")):
-        out[os.path.basename(p).replace(".parquet", "")] = pd.read_parquet(p)
-    return out
-
-
-@pytest.fixture(scope="module")
-def run(spark):
-    import __spark_entry__ as m
-
-    qs = m.queries()
-
-    def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
-
-        try:
-            return qs[name](spark, SF_SMOKE).toPandas()
-        finally:
-            release_caches(spark)
-
-    return _run
+from tests.conftest import SF_SMOKE, rnd
 
 
 def test_ewma_matches_naive_recursion(run, tables):
