@@ -12,6 +12,8 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
+from tests.conftest import needs_boat_reference
+
 SRC = "/root/testdata/sf0.001"
 
 
@@ -30,7 +32,7 @@ def all_query_names():
     return sorted(m.queries())
 
 
-@pytest.mark.parametrize("name", all_query_names())
+@pytest.mark.parametrize("name", needs_boat_reference(all_query_names()))
 def test_query_survives_empty_tables(spark, empty_sf_dir, name):
     import __spark_entry__ as m
 

@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_CORRECTNESS
+from tests.conftest import SF_CORRECTNESS, needs_boat_reference
 
 ALL_QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
@@ -74,7 +74,7 @@ def frames_equal(spark_pd: pd.DataFrame, oracle_pd: pd.DataFrame) -> list[str]:
     return problems
 
 
-@pytest.mark.parametrize("name", sorted(ALL_QUERIES))
+@pytest.mark.parametrize("name", needs_boat_reference(sorted(ALL_QUERIES)))
 def test_query_matches_oracle(name, spark, oracle):
     sdf = ALL_QUERIES[name](spark, SF_CORRECTNESS)
     spark_pd = sdf.toPandas()

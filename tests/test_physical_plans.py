@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 
 import pytest
 
@@ -96,21 +97,29 @@ def test_rolling_range_window_single_shuffle(spark, queries):
     assert plan.count("Exchange") == 1  # one hash partition by user_id
 
 
-def test_boat_pipeline_single_python_stage(spark):
+def test_boat_pipeline_single_python_stage(spark, tmp_path):
     """The boat pipeline's only Python is the parity line-cleanup UDF;
-    the transform section must stay JVM-side column expressions."""
+    the transform section must stay JVM-side column expressions. The
+    plan shape does not depend on the data, so it is checked on a
+    seeded boat-format CSV, and on the reference input where present."""
     from boat_etl_pyspark_spark.pipeline.boat import (
         clean_lines,
         parse_csv,
         read_raw_lines,
         transform,
     )
+    from boat_etl_pyspark_spark.plans import boat_plan
+    from perfbench import boatgen
 
-    df = transform(
-        parse_csv(clean_lines(read_raw_lines(spark, "/root/reference/data/boat_data.csv")))
-    )
-    plan = plan_of(df, "simple")
-    assert plan.count("ArrowEvalPython") == 1
+    generated = str(tmp_path / "boat_data.csv")
+    boatgen.write_csv(generated, seed=7, rows=200)
+    inputs = [generated]
+    if os.path.exists(boat_plan._INPUT):
+        inputs.append(boat_plan._INPUT)
+    for path in inputs:
+        df = transform(parse_csv(clean_lines(read_raw_lines(spark, path))))
+        plan = plan_of(df, "simple")
+        assert plan.count("ArrowEvalPython") == 1, f"{path}:\n{plan}"
 
 
 def test_curation_filter_and_split_are_map_only(spark, queries):

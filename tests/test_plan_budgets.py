@@ -27,7 +27,7 @@ import sys
 
 import pytest
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, needs_boat_reference
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -50,7 +50,7 @@ def test_every_nonstreaming_query_is_budgeted():
     assert not extra, f"budgets for unknown queries: {sorted(extra)}"
 
 
-@pytest.mark.parametrize("name", sorted(BUDGETS))
+@pytest.mark.parametrize("name", needs_boat_reference(sorted(BUDGETS)))
 def test_plan_matches_budget(spark, name):
     import __spark_entry__ as entry
     from boat_etl_pyspark_spark.plans import release_caches

@@ -16,7 +16,7 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, needs_boat_reference
 from tests.test_oracle_parity import frames_equal
 
 SKIP_SLICE = ()  # all tables sliced
@@ -37,7 +37,7 @@ def all_query_names():
     return sorted(m.queries())
 
 
-@pytest.mark.parametrize("name", all_query_names())
+@pytest.mark.parametrize("name", needs_boat_reference(all_query_names()))
 def test_single_row_parity(spark, oracle, single_row_dir, name):
     import __spark_entry__ as m
     from boat_etl_pyspark_spark.plans import release_caches
