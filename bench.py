@@ -137,14 +137,15 @@ def _rss_mb(jvm_pid: int) -> dict:
 @dataclass
 class Sweep:
     """Per-query, per-rep records of one ``measure`` call. ``total``,
-    ``build``, ``exec`` and ``jobs`` map a query name to one entry per
-    rep it passed; ``cold`` holds the rep-1 total of each query that
-    passed rep 1."""
+    ``build``, ``exec``, ``jobs`` and ``stages`` map a query name to one
+    entry per rep it passed; ``cold`` holds the rep-1 total of each
+    query that passed rep 1."""
 
     total: dict[str, list[float]]
     build: dict[str, list[float]]
     exec: dict[str, list[float]]
     jobs: dict[str, list[int]]
+    stages: dict[str, list[int]]
     cold: dict[str, float] = field(default_factory=dict)
     # name -> tail of the first traceback
     failed: dict[str, str] = field(default_factory=dict)
@@ -164,12 +165,13 @@ def measure(spark, queries, names, sf_dir, reps, explain_dir=None) -> Sweep:
 
     One ``perf_counter`` span times the build (the query callable)
     plus the noop write; the build and exec parts are timed inside it.
-    The Spark job count is ``nextJobId`` read before and after, outside
-    the timed span, so it includes jobs the callable runs eagerly
-    (shared-cache fills, driver-side fixpoints). A query that raises is
-    counted in ``failed`` and retried every rep, never dropped from the
-    sweep. With ``explain_dir``, the last rep's plan of each query is
-    written to ``explain_dir/<name>.txt``."""
+    The Spark job and stage counts are ``nextJobId`` and ``nextStageId``
+    read before and after, outside the timed span, so they include jobs
+    the callable runs eagerly (shared-cache fills, driver-side
+    fixpoints). A query that raises is counted in ``failed`` and retried
+    every rep, never dropped from the sweep. With ``explain_dir``, the
+    last rep's plan of each query is written to
+    ``explain_dir/<name>.txt``."""
     sc = spark.sparkContext
     dag = sc._jsc.sc().dagScheduler()
     jvm_pid = sc._gateway.proc.pid
@@ -178,10 +180,11 @@ def measure(spark, queries, names, sf_dir, reps, explain_dir=None) -> Sweep:
         build={name: [] for name in names},
         exec={name: [] for name in names},
         jobs={name: [] for name in names},
+        stages={name: [] for name in names},
     )
     for rep in range(reps):
         for name in sorted(names):
-            jobs0 = dag.nextJobId()
+            jobs0, stages0 = dag.nextJobId(), dag.nextStageId()
             t0 = time.perf_counter()
             try:
                 df = queries[name](spark, sf_dir)
@@ -192,6 +195,7 @@ def measure(spark, queries, names, sf_dir, reps, explain_dir=None) -> Sweep:
                 sweep.failed.setdefault(name, traceback.format_exc()[-800:])
                 continue
             sweep.jobs[name].append(dag.nextJobId() - jobs0)
+            sweep.stages[name].append(dag.nextStageId() - stages0)
             sweep.total[name].append(t2 - t0)
             sweep.build[name].append(t1 - t0)
             sweep.exec[name].append(t2 - t1)
@@ -367,6 +371,7 @@ def main() -> None:
                     for name, ts in sorted(sweep.build.items())
                 },
                 "jobs_reps_detail": dict(sorted(sweep.jobs.items())),
+                "stages_reps_detail": dict(sorted(sweep.stages.items())),
                 "cold_value": round(sum(sweep.cold.values()), 3),
                 "rss_per_rep_mb": sweep.rss_per_rep,
                 "cpu_fingerprint_sec": {"start": fp_start, "end": fp_end},

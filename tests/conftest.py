@@ -45,6 +45,10 @@ def oracle():
 
     def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
         con = duckdb.connect()
+        # DuckDB's default limit is 80% of RAM; next to the Spark JVM
+        # that lets one oracle query (graph_reciprocity at sf0.1) grow
+        # pytest until the kernel kills it.
+        con.execute("SET memory_limit='2GB'")
         for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
             name = os.path.basename(p).replace(".parquet", "")
             con.execute(

@@ -99,11 +99,13 @@ def test_measure_splits_build_exec_and_counts_jobs(spark):
     bench = _bench_mod()
 
     def query(spark, sf_dir):
-        spark.sparkContext.parallelize([1]).count()  # one job while built
-        return spark.range(1)  # one job when written
+        # one two-stage job (a shuffle) while built
+        spark.sparkContext.parallelize([(1, 1)]).reduceByKey(max).count()
+        return spark.range(1)  # one one-stage job when written
 
     sweep = bench.measure(spark, {"stub": query}, ["stub"], "unused", 2)
     assert sweep.jobs == {"stub": [2, 2]}
+    assert sweep.stages == {"stub": [3, 3]}
     assert sweep.failed == {}
     assert sweep.cold == {"stub": sweep.total["stub"][0]}
     for build, exec_, total in zip(

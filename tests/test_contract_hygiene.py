@@ -3,6 +3,7 @@ the per-query oracle tests can't see."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -127,11 +128,10 @@ _COLLECT_ALLOWLIST = {
 }
 
 
-def _collect_sites(pkg: str) -> dict[str, int]:
-    """``file::enclosing function`` -> number of ``.collect(...)`` calls
-    (``<module>`` for calls outside any function)."""
-    import ast
-
+def _call_sites(pkg: str, matches) -> dict[str, int]:
+    """``file::enclosing function`` -> number of calls whose ``func``
+    node satisfies ``matches`` (``<module>`` for calls outside any
+    function)."""
     found: dict[str, int] = {}
 
     def visit(node, rel, fn):
@@ -139,11 +139,7 @@ def _collect_sites(pkg: str) -> dict[str, int]:
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 visit(child, rel, child.name)
                 continue
-            if (
-                isinstance(child, ast.Call)
-                and isinstance(child.func, ast.Attribute)
-                and child.func.attr == "collect"
-            ):
+            if isinstance(child, ast.Call) and matches(child.func):
                 key = f"{rel}::{fn}"
                 found[key] = found.get(key, 0) + 1
             visit(child, rel, fn)
@@ -158,11 +154,47 @@ def _collect_sites(pkg: str) -> dict[str, int]:
     return found
 
 
+_PKG = os.path.join(os.path.dirname(_COV), "boat_etl_pyspark_spark")
+
+
 def test_collect_sites_are_allowlisted():
-    pkg = os.path.join(os.path.dirname(_COV), "boat_etl_pyspark_spark")
-    found = _collect_sites(pkg)
+    found = _call_sites(
+        _PKG, lambda f: isinstance(f, ast.Attribute) and f.attr == "collect"
+    )
     assert found == _COLLECT_ALLOWLIST, (
         f"collect sites drifted: {found} vs allowlist {_COLLECT_ALLOWLIST}"
+    )
+
+
+# Every schema-inferring ``<session>.read.parquet(...)`` call outside
+# ``sources/readers.py``, which memoizes the inferred schema per file
+# version. Each of these reads back a path its own query has just
+# written, so the memo has nothing to reuse; a new direct read of a
+# fixture table would re-infer its footer on every call, and fails here.
+_PARQUET_READ_ALLOWLIST = {
+    "plans/io.py::io_small_file_compaction": 2,  # fragments + compacted output
+    "plans/io.py::io_codec_tradeoff": 1,         # each codec's output
+    "plans/io.py::io_binary_manifest": 1,        # the written manifest
+}
+
+
+def test_parquet_reads_go_through_load_table():
+    def matches(f):
+        return (
+            isinstance(f, ast.Attribute)
+            and f.attr == "parquet"
+            and isinstance(f.value, ast.Attribute)
+            and f.value.attr == "read"
+        )
+
+    found = {
+        site: n
+        for site, n in _call_sites(_PKG, matches).items()
+        if not site.startswith("sources/readers.py::")
+    }
+    assert found == _PARQUET_READ_ALLOWLIST, (
+        f"parquet read sites drifted: {found} vs allowlist "
+        f"{_PARQUET_READ_ALLOWLIST}"
     )
 
 

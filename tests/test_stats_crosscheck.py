@@ -454,11 +454,12 @@ def test_asof_nearest_matches_naive(run, tables):
         for i, row in g.iterrows():
             if row["kind"] != 1:
                 continue
+            before, after = g.loc[: i - 1], g.loc[i + 1 :]
             prev_views = [
-                int(u) for u in g.loc[: i - 1][g["kind"] == 0]["us"].dropna()
+                int(u) for u in before[before["kind"] == 0]["us"].dropna()
             ] if i > 0 else []
             next_views = [
-                int(u) for u in g.loc[i + 1 :][g["kind"] == 0]["us"].dropna()
+                int(u) for u in after[after["kind"] == 0]["us"].dropna()
             ]
             back = int(row["us"]) - max(prev_views) if prev_views else None
             fwd = min(next_views) - int(row["us"]) if next_views else None
