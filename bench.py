@@ -26,8 +26,10 @@ in ``n_failed`` (its traceback tail goes to bench_full.json's
 ``default_parallelism`` and effective ``shuffle_partitions`` it ran
 with. Per query and rep, bench_full.json also splits the total into
 build seconds (the query callable: Python plan construction plus any
-jobs it runs eagerly) and the Spark job count, and gives the cold rep-1
-total (``cold_value``) next to the min-of-N ``value``.
+jobs it runs eagerly), the Spark job and stage counts and the
+session-shared relations it built (``shared_builds_reps_detail``: 1 on
+a build, 0 on a hit), and gives the cold rep-1 total (``cold_value``)
+next to the min-of-N ``value``.
 """
 
 from __future__ import annotations
@@ -137,15 +139,16 @@ def _rss_mb(jvm_pid: int) -> dict:
 @dataclass
 class Sweep:
     """Per-query, per-rep records of one ``measure`` call. ``total``,
-    ``build``, ``exec``, ``jobs`` and ``stages`` map a query name to one
-    entry per rep it passed; ``cold`` holds the rep-1 total of each
-    query that passed rep 1."""
+    ``build``, ``exec``, ``jobs``, ``stages`` and ``shared_builds`` map
+    a query name to one entry per rep it passed; ``cold`` holds the
+    rep-1 total of each query that passed rep 1."""
 
     total: dict[str, list[float]]
     build: dict[str, list[float]]
     exec: dict[str, list[float]]
     jobs: dict[str, list[int]]
     stages: dict[str, list[int]]
+    shared_builds: dict[str, list[int]]
     cold: dict[str, float] = field(default_factory=dict)
     # name -> tail of the first traceback
     failed: dict[str, str] = field(default_factory=dict)
@@ -168,10 +171,13 @@ def measure(spark, queries, names, sf_dir, reps, explain_dir=None) -> Sweep:
     The Spark job and stage counts are ``nextJobId`` and ``nextStageId``
     read before and after, outside the timed span, so they include jobs
     the callable runs eagerly (shared-cache fills, driver-side
-    fixpoints). A query that raises is counted in ``failed`` and retried
-    every rep, never dropped from the sweep. With ``explain_dir``, the
-    last rep's plan of each query is written to
+    fixpoints); so are the session-shared relations it built (growth of
+    ``cache._SHARED``: 0 on a hit). A query that raises is counted in
+    ``failed`` and retried every rep, never dropped from the sweep. With
+    ``explain_dir``, the last rep's plan of each query is written to
     ``explain_dir/<name>.txt``."""
+    from boat_etl_pyspark_spark import cache
+
     sc = spark.sparkContext
     dag = sc._jsc.sc().dagScheduler()
     jvm_pid = sc._gateway.proc.pid
@@ -181,10 +187,12 @@ def measure(spark, queries, names, sf_dir, reps, explain_dir=None) -> Sweep:
         exec={name: [] for name in names},
         jobs={name: [] for name in names},
         stages={name: [] for name in names},
+        shared_builds={name: [] for name in names},
     )
     for rep in range(reps):
         for name in sorted(names):
             jobs0, stages0 = dag.nextJobId(), dag.nextStageId()
+            shared0 = len(cache._SHARED)
             t0 = time.perf_counter()
             try:
                 df = queries[name](spark, sf_dir)
@@ -196,6 +204,7 @@ def measure(spark, queries, names, sf_dir, reps, explain_dir=None) -> Sweep:
                 continue
             sweep.jobs[name].append(dag.nextJobId() - jobs0)
             sweep.stages[name].append(dag.nextStageId() - stages0)
+            sweep.shared_builds[name].append(len(cache._SHARED) - shared0)
             sweep.total[name].append(t2 - t0)
             sweep.build[name].append(t1 - t0)
             sweep.exec[name].append(t2 - t1)
@@ -267,7 +276,7 @@ def main() -> None:
 
     # hand back executor storage memory pinned by the dedup-family
     # shared caches and per-query persisted intermediates
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     released = release_caches(spark)
 
@@ -372,6 +381,9 @@ def main() -> None:
                 },
                 "jobs_reps_detail": dict(sorted(sweep.jobs.items())),
                 "stages_reps_detail": dict(sorted(sweep.stages.items())),
+                "shared_builds_reps_detail": dict(
+                    sorted(sweep.shared_builds.items())
+                ),
                 "cold_value": round(sum(sweep.cold.values()), 3),
                 "rss_per_rep_mb": sweep.rss_per_rep,
                 "cpu_fingerprint_sec": {"start": fp_start, "end": fp_end},

@@ -9,27 +9,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Persisted (partition, local-offset)-numbered intermediates taken by
-# ``global_rank``: the rank math reads the numbered relation TWICE
-# (offset aggregate + join), and without a persist those are two
-# independent executions of a SAMPLED range shuffle whose boundaries
-# are not guaranteed to agree — measured divergence (silently corrupt
-# ranks) with an InMemoryRelation input under AQE. The persist pins
-# ONE materialization. ``plans.release_caches`` drains this list.
-_RANK_PERSISTS: list[DataFrame] = []
+from ..cache import track_persist
 
-
-def release_rank_caches() -> int:
-    """Unpersist every numbered intermediate pinned by ``global_rank``;
-    returns the number released."""
-    n = len(_RANK_PERSISTS)
-    for df in _RANK_PERSISTS:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # stopped context; dropping the reference suffices
-    _RANK_PERSISTS.clear()
-    return n
+# Kept for perfbench/client.py, which counts ``library._RANK_PERSISTS``;
+# the rank fences now sit in ``cache._EPHEMERAL``.
+_RANK_PERSISTS: tuple = ()
 
 
 def asof_join(
@@ -224,23 +208,21 @@ def global_rank(
             1,
         )
     keys = [*(partition_by or []), *order_by]
-    numbered = (
+    # CORRECTNESS FENCE: both the offset aggregate and the final join
+    # consume this relation. repartitionByRange draws SAMPLED
+    # boundaries per execution, so two executions may disagree —
+    # observed with a cached input under AQE: ranks silently corrupt
+    # (values shift between runs). Persisting pins one materialization
+    # (MEMORY_AND_DISK: eviction spills, never re-samples). Cost at
+    # scale is one narrow cached copy of the projected key columns;
+    # released by ``cache.release_caches``.
+    numbered = track_persist(
         df.repartitionByRange(partitions, *[F.col(c) for c in keys])
         .sortWithinPartitions(*keys)
         .withColumn("__mid", F.monotonically_increasing_id())
         .withColumn("__pid", F.expr("CAST(__mid DIV 8589934592 AS INT)"))
         .withColumn("__lrn", F.expr("__mid % 8589934592 + 1"))
-        # CORRECTNESS FENCE: both the offset aggregate and the final
-        # join consume this relation. repartitionByRange draws SAMPLED
-        # boundaries per execution, so two executions may disagree —
-        # observed with a cached input under AQE: ranks silently
-        # corrupt (values shift between runs). Persisting pins one
-        # materialization (MEMORY_AND_DISK: eviction spills, never
-        # re-samples). Cost at scale is one narrow cached copy of the
-        # projected key columns; released via ``release_rank_caches``.
-        .persist()
     )
-    _RANK_PERSISTS.append(numbered)
     if not partition_by:
         offsets = (
             numbered.groupBy("__pid")
@@ -362,8 +344,8 @@ def global_prefix_sum(
     ``_RANK_TARGET_ROWS_PER_PARTITION`` rows per partition. The
     sampled-range-boundary correctness fence also applies — the
     offsets aggregate and the final join must read ONE
-    materialization, so the partitioned relation is persisted and
-    registered for ``release_rank_caches``."""
+    materialization, so the partitioned relation is persisted with
+    ``cache.track_persist``."""
     if partitions is None:
         n = df.count() if rows is None else rows
         partitions = max(
@@ -371,16 +353,14 @@ def global_prefix_sum(
             -(-n // _RANK_TARGET_ROWS_PER_PARTITION),
             1,
         )
-    parted = (
+    # CORRECTNESS FENCE: see global_rank — repartitionByRange samples
+    # boundaries per execution; the offsets aggregate and the final
+    # join must agree on one materialization.
+    parted = track_persist(
         df.repartitionByRange(partitions, *[F.col(c) for c in order_by])
         .sortWithinPartitions(*order_by)
         .withColumn("__pid", F.spark_partition_id())
-        # CORRECTNESS FENCE: see global_rank — repartitionByRange
-        # samples boundaries per execution; the offsets aggregate and
-        # the final join must agree on one materialization.
-        .persist()
     )
-    _RANK_PERSISTS.append(parted)
     offsets = (
         parted.groupBy("__pid")
         .agg(F.sum(value_col).alias("__t"))

@@ -10,10 +10,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import track_persist
 from ..functions.numeric import cents, money_avg, money_sum
 from ..operators.library import global_rank
 from ..sources.readers import load_table
-from . import contract, track_persist
+from . import contract
 from .contract import (
     money_cents,
     money_cents_sql,
@@ -3286,8 +3287,6 @@ def agg_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-single-partition pattern from ts_periodogram). DW ~ 2
     means no autocorrelation; the drift alarm for 'my daily KPI
     series grew a trend my model doesn't know about'."""
-    from . import track_persist
-
     li = load_table(spark, sf_dir, "lineitem")
     daily = track_persist(
         li.groupBy(

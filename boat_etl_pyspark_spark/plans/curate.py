@@ -8,9 +8,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import track_persist
 from ..operators.library import global_prefix_sum
 from ..sources.readers import load_table
-from . import track_persist
 from .sim import _emb_view
 from .text import _docs_view
 from .textdedup import _DUCK_SHINGLES, _MINHASH_DUCK, dedup_clusters
@@ -685,8 +685,6 @@ def curate_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-key IS the cluster id, so nothing crosses cluster
     boundaries. No float ever decides a pair (dot^2 * 10^4 vs
     1600 * |a|^2 * |b|^2 in DECIMAL(38,0)/HUGEINT)."""
-    from . import track_persist
-
     emb = _emb_view(spark, sf_dir, "__mlprep_semdedup")
     assigned = track_persist(
         spark.sql(_SEMDEDUP_ASSIGN_SPARK.format(emb=emb))
@@ -1016,8 +1014,6 @@ def curate_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizes exactly once), and the 256-row log-ratio table joins
     back broadcast-size. Terms are floored to integer micro-nats
     before summing so the weight is order-independent."""
-    from . import track_persist
-
     docs = _docs_view(spark, sf_dir, "textlm_dsir_docs")
     docbucket = track_persist(
         spark.sql(_DSIR_DOCBUCKET_SPARK.format(docs=docs))
@@ -1096,8 +1092,6 @@ def curate_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of pairs. The shingle relation is persisted because the
     count and the join both consume it — as a CTE the explode+md5
     ran twice."""
-    from . import track_persist
-
     load_table(spark, sf_dir, "documents").createOrReplaceTempView(
         "r21_nov_docs"
     )
@@ -1630,8 +1624,6 @@ def curate_quality_threshold_sweep(
     the tot CTE; equality is definitional, both count every
     non-empty token once). The empty-corpus edge is unchanged:
     docscore is empty before the literal is ever evaluated."""
-    from . import track_persist
-
     docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("r47_sweep_docs")
     tok = track_persist(

@@ -9,10 +9,10 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import shared, track_persist
 from ..functions.numeric import cents
 from ..operators.library import global_prefix_sum, global_rank
 from ..sources.readers import load_table
-from . import track_persist
 
 
 # ---------------------------------------------------------------------------
@@ -538,7 +538,6 @@ def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     after that view — and the median uses the distributed rank
     primitive, so no step sorts all users in one task."""
     from ..operators.library import global_rank
-    from . import track_persist
 
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("us")
@@ -954,8 +953,6 @@ def markov_trans_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     the window per call). NULL ts/user_id hit opposite window
     NULL-ordering defaults and a NULL event_type would mint a phantom
     chain state — dropped symmetrically with both oracles."""
-    from .textdedup import _cached
-
     def build():
         ev = load_table(spark, sf_dir, "events").where(
             F.col("ts").isNotNull()
@@ -973,7 +970,7 @@ def markov_trans_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _cached(spark, sf_dir, "markov_trans", build)
+    return shared(spark, sf_dir, "markov_trans", build)
 
 
 def _pi_iter_sql(trans: str, idiv: str) -> str:

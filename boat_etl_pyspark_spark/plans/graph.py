@@ -7,10 +7,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import shared, track_persist
 from ..functions.numeric import cents
 from ..operators.library import topk_per_group
 from ..sources.readers import load_table
-from . import track_persist
 
 
 # ---------------------------------------------------------------------------
@@ -46,12 +46,9 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def trade_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached trade-edge relation (tiny: <= nations² rows, but
     the build is a full lineitem⋈orders shuffle). PageRank and BFS
-    both consume it; the shared-cache registry (same mechanism as the
-    dedup family's shingle cache, released by ``release_caches``)
+    both consume it; ``cache.shared`` (released by ``release_caches``)
     makes the second consumer pay nothing."""
-    from .textdedup import _cached
-
-    return _cached(
+    return shared(
         spark, sf_dir, "trade_edges", lambda: _trade_edges(spark, sf_dir)
     )
 
@@ -715,10 +712,8 @@ LIMIT {_COPURCHASE_TOPK}
 def copurchase_incidence(spark: SparkSession, sf_dir: str):
     """Session-cached DISTINCT (order o, part p) incidence relation —
     shared by the three co-purchase graph operators (similarity,
-    assortativity, k-core) via the dedup family's `_cached` registry,
-    so one sweep builds it once."""
-    from .textdedup import _cached
-
+    assortativity, k-core) via ``cache.shared``, so one sweep builds
+    it once."""
     def build():
         return (
             load_table(spark, sf_dir, "lineitem")
@@ -728,7 +723,7 @@ def copurchase_incidence(spark: SparkSession, sf_dir: str):
             .distinct()
         )
 
-    return _cached(spark, sf_dir, "copurchase_incidence", build)
+    return shared(spark, sf_dir, "copurchase_incidence", build)
 
 
 def copurchase_pairs(spark: SparkSession, sf_dir: str):
@@ -740,8 +735,6 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str):
     the similarity query reuse this build instead of re-running the
     self-join per invocation (guide §2.4: the single most expensive
     recomputation in the graph family)."""
-    from .textdedup import _cached
-
     def build():
         copurchase_incidence(spark, sf_dir).createOrReplaceTempView(
             "__cop_pairs_li"
@@ -755,7 +748,7 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str):
             """
         )
 
-    return _cached(spark, sf_dir, "copurchase_pairs", build)
+    return shared(spark, sf_dir, "copurchase_pairs", build)
 
 
 #   * ``graph_copurchase_similarity`` — item-item collaborative
@@ -870,8 +863,6 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree joins (and the node count) read one computation — the
     both-directions sums fold algebraically into a single pass over
     the directed edges (see ``_ASSORT_CORE``)."""
-    from . import track_persist
-
     copurchase_pairs(spark, sf_dir).createOrReplaceTempView(
         "r46_assort_pairs"
     )

@@ -9,9 +9,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import shared, track_persist
 from ..operators.library import global_rank
 from ..sources.readers import load_table
-from . import track_persist
 from .contract import (
     EMB_VALID_DUCK,
     EMB_VALID_SPARK,
@@ -1763,8 +1763,6 @@ def ml_naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inside its own timed region) instead of re-tokenizing per
     # call; its rows are a deterministic per-row explode + count, so
     # the cached copy is value-identical to the inline form.
-    from .textdedup import _cached
-
     def build():
         docs = load_table(spark, sf_dir, "documents")
         tok = docs.select(
@@ -1778,7 +1776,7 @@ def ml_naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("m")
         )
 
-    _cached(spark, sf_dir, "nb_tokc", build).createOrReplaceTempView(
+    shared(spark, sf_dir, "nb_tokc", build).createOrReplaceTempView(
         "r40_nb_tokc"
     )
     return spark.sql(_NB_CORE.format(tokc="r40_nb_tokc"))

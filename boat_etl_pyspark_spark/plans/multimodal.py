@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import track_persist
 from ..operators.multimodal import (
     attach_binary,
     binary_metadata,
@@ -20,7 +21,6 @@ from ..operators.multimodal import (
     phash_keys,
 )
 from ..sources.readers import load_table
-from . import track_persist
 
 
 def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:

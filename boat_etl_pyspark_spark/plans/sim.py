@@ -8,8 +8,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import shared, track_persist
 from ..sources.readers import load_table
-from . import track_persist
 from .contract import EMB_VALID_SPARK
 
 
@@ -131,13 +131,11 @@ def _vecs_view(spark: SparkSession, sf_dir: str) -> str:
     relation is value-identical to the inline subquery it replaces.
     First consumer pays the build inside its own timed region; keyed
     by applicationId, rebuilt from parquet every run."""
-    from .textdedup import _cached
-
     def build():
         emb = _emb_view(spark, sf_dir, "__emb_shared")
         return spark.sql(_SPARK_VECS.format(emb=emb))
 
-    _cached(spark, sf_dir, "sim_vecs", build).createOrReplaceTempView(
+    shared(spark, sf_dir, "sim_vecs", build).createOrReplaceTempView(
         "__sim_vecs_shared"
     )
     return "__sim_vecs_shared"
@@ -170,8 +168,6 @@ def _labeled_view(spark: SparkSession, sf_dir: str) -> str:
     its q/ivf arms). Same caching/value-identity argument as
     ``_vecs_view``; the assignment ROW_NUMBER is fully deterministic
     (cosine DESC, cent_id tie-break)."""
-    from .textdedup import _cached
-
     def build():
         vecs = _vecs_view(spark, sf_dir)
         cosc = (
@@ -180,7 +176,7 @@ def _labeled_view(spark: SparkSession, sf_dir: str) -> str:
         )
         return spark.sql(_IVF_LABELED_SPARK.format(vecs=vecs, cosc=cosc))
 
-    _cached(spark, sf_dir, "ivf_labeled", build).createOrReplaceTempView(
+    shared(spark, sf_dir, "ivf_labeled", build).createOrReplaceTempView(
         "__sim_labeled_shared"
     )
     return "__sim_labeled_shared"

@@ -9,9 +9,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..cache import track_persist
 from ..operators.library import global_rank
 from ..sources.readers import load_table
-from . import track_persist
 from .contract import TEXT_VALID_DUCK, text_valid
 from .textdedup import _DUCK_SHINGLES, _shingle_sets
 
@@ -993,8 +993,6 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary. Floored integer ppm keeps the sum associative; the
     per-language expansion is |vocab| x |langs| rows of three BIGINTs
     — bounded by vocabulary, not corpus size."""
-    from . import track_persist
-
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("__docs_div")
     counts = track_persist(
         spark.sql(_DIVERGENCE_COUNTS_SPARK.format(docs="__docs_div"))
@@ -1015,8 +1013,6 @@ def _surprisal_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (scored join, total-token scalar) would re-run the corpus
     explode+count."""
     from pyspark.sql import functions as F
-
-    from . import track_persist
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
@@ -1727,8 +1723,6 @@ def text_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated-hash test and the coverage join consume it (as a CTE
     the tokenize+hash explode ran twice — measured 2.6s → ~1.6s
     warm at sf0.1)."""
-    from . import track_persist
-
     load_table(spark, sf_dir, "documents").createOrReplaceTempView(
         "r29_ssd_docs"
     )

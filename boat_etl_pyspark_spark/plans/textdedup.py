@@ -1,6 +1,6 @@
 """Deduplication operators over the ``documents`` table, and the
-session-shared cache (``_SHARED`` / ``_cached``) and shingle relations
-that the text, curation, similarity, graph and ML families reuse.
+session-shared shingle and near-dup relations (``cache.shared``) that
+the text, curation, similarity, graph and ML families reuse.
 
 These are the LLM-training-pipeline operators the reference lacks
 (SURVEY.md §2.9): exact dedup, MinHash-LSH near-dup, n-gram Jaccard
@@ -35,51 +35,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import shared, track_persist
 from ..sources.readers import load_table
-from . import track_persist
 
-
-# Session-scoped cache for expensive shared intermediates: shingle
-# sets and verified near-dup pairs are needed by several operators
-# (minhash, ngram, fingerprints, clustering, edit distance). Keyed by
-# (applicationId, sf_dir) — the fixture dirs are immutable, so the
-# cached plans never go stale within a session. Memory cost: each
-# entry persists at the default MEMORY_AND_DISK level (pressure
-# spills, it never OOMs), but entries live until ``release_shared``
-# — a long-lived session that is DONE with the dedup family should
-# call it to return executor storage memory (bench.py does).
-_SHARED: dict = {}
-
-
-def _cached(spark: SparkSession, sf_dir: str, kind: str, build):
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    if key not in _SHARED:
-        df = build().persist()
-        # Materialize NOW, not at first consumption: a lazily-persisted
-        # relation referenced by SEVERAL subtrees of one DAG (broadcast
-        # builds racing the probe side) fills the cache partition-by-
-        # partition under block locks, serializing the whole query —
-        # measured 80s cold vs 8s with the same builds run eagerly for
-        # dedup_embedding_cosine at sf0.1 (OPTIMIZATION_r11.md). The
-        # count is one map-combined job over work the first consumer
-        # was about to do anyway, still inside its timed region.
-        df.count()
-        _SHARED[key] = df
-    return _SHARED[key]
-
-
-def release_shared(spark: SparkSession | None = None) -> int:
-    """Unpersist and drop cached dedup intermediates; returns the
-    number of entries released. ``spark=None`` releases everything;
-    otherwise only the given session's entries (keyed by appId)."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    keys = [k for k in _SHARED if app is None or k[0] == app]
-    for k in keys:
-        try:
-            _SHARED.pop(k).unpersist()
-        except Exception:
-            pass  # a stopped context can't unpersist; dropping the ref suffices
-    return len(keys)
+# Kept for perfbench/client.py, which reads ``textdedup._SHARED``.
+from ..cache import _SHARED  # noqa: F401
 
 
 def _docs_wide_view(spark: SparkSession, sf_dir: str, name: str) -> str:
@@ -105,7 +65,7 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = _docs_wide_view(spark, sf_dir, "__docs_shared_sh")
         return spark.sql(_SPARK_SHINGLES.format(docs=docs))
 
-    return _cached(spark, sf_dir, "shingles3", build)
+    return shared(spark, sf_dir, "shingles3", build)
 
 
 # Shared SQL fragments (valid in BOTH Spark SQL and DuckDB unless
@@ -267,7 +227,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_a", "doc_b", "jaccard")
         )
 
-    return _cached(spark, sf_dir, "minhash_pairs", build)
+    return shared(spark, sf_dir, "minhash_pairs", build)
 
 
 # ---------------------------------------------------------------------------
@@ -467,7 +427,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The result is session-cached: downstream consumers (representative
     election) and repeated sweeps reuse one propagation run — the
     result is partition-count independent, so caching is sound."""
-    return _cached(spark, sf_dir, "cluster_labels", lambda: _dedup_clusters_build(spark, sf_dir))
+    return shared(spark, sf_dir, "cluster_labels", lambda: _dedup_clusters_build(spark, sf_dir))
 
 
 def _dedup_clusters_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -758,13 +718,13 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = _docs_wide_view(spark, sf_dir, "__docs_ec")
         return spark.sql(_EMBCOS_DIMS_SPARK.format(docs=docs))
 
-    dims = _cached(spark, sf_dir, "embcos_dims", build_dims)
+    dims = shared(spark, sf_dir, "embcos_dims", build_dims)
     dims.createOrReplaceTempView("__ec_dims")
 
     def build_bands():
         return spark.sql(_EMBCOS_BANDS_SPARK.format(dims="__ec_dims"))
 
-    bands = _cached(spark, sf_dir, "embcos_bands", build_bands)
+    bands = shared(spark, sf_dir, "embcos_bands", build_bands)
     bands.createOrReplaceTempView("__ec_bands")
 
     def build_vecs():
@@ -773,7 +733,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             "SUM(c * c) AS n2 FROM __ec_dims GROUP BY doc_id"
         )
 
-    vecs = _cached(spark, sf_dir, "embcos_vecs", build_vecs)
+    vecs = shared(spark, sf_dir, "embcos_vecs", build_vecs)
 
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -933,7 +893,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig.createOrReplaceTempView("__calib_sig")
         return spark.sql(_CALIB_SPARK.format(sig="__calib_sig"))
 
-    return _cached(spark, sf_dir, "minhash_calibration", build)
+    return shared(spark, sf_dir, "minhash_calibration", build)
 
 
 _CALIB_DUCK = f"""

@@ -8,10 +8,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import track_persist
 from ..functions.numeric import cents
 from ..operators.library import global_rank
 from ..sources.readers import load_table
-from . import track_persist
 from .contract import (
     money_rounded,
     money_rounded_sql,

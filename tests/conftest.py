@@ -84,7 +84,7 @@ def run(spark):
     qs = m.queries()
 
     def _run(name: str) -> pd.DataFrame:
-        from boat_etl_pyspark_spark.plans import release_caches
+        from boat_etl_pyspark_spark.cache import release_caches
 
         try:
             return qs[name](spark, SF_SMOKE).toPandas()

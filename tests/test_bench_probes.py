@@ -7,7 +7,8 @@ between a calm single-thread probe and the aggregate scale, and the
 1.22x disagreement sailed under the old 1.25 alarm. These tests pin
 the fixes: a multi-core probe exists and measures something real, the
 alarm threshold is 1.15, and a synthetic round-7-sized event FIRES it.
-The per-query measure loop and the RSS reader are pinned here too.
+The per-query measure loop (with its shared-cache build count) and the
+RSS reader are pinned here too.
 """
 
 from __future__ import annotations
@@ -114,3 +115,18 @@ def test_measure_splits_build_exec_and_counts_jobs(spark):
         assert 0 < build <= total
         assert build + exec_ == pytest.approx(total)
     assert len(sweep.rss_per_rep) == 2
+
+
+def test_measure_counts_shared_cache_builds(spark):
+    from boat_etl_pyspark_spark import cache
+
+    bench = _bench_mod()
+
+    def query(spark, sf_dir):
+        return cache.shared(spark, sf_dir, "bench_probe", lambda: spark.range(3))
+
+    try:
+        sweep = bench.measure(spark, {"stub": query}, ["stub"], "unused", 2)
+        assert sweep.shared_builds == {"stub": [1, 0]}  # one build, one hit
+    finally:
+        cache.release_caches(spark)

@@ -166,6 +166,31 @@ def test_collect_sites_are_allowlisted():
     )
 
 
+# Every ``.persist()`` / ``.cache()`` outside ``cache.py``, which owns the
+# one cache lifecycle: a persist taken anywhere else is never released
+# by ``release_caches`` and pins executor storage for the session.
+_PERSIST_ALLOWLIST = {
+    # the edge list, unpersisted by the function itself once the
+    # loop-width copy (a track_persist) is materialized
+    "plans/textdedup.py::_dedup_clusters_build": 1,
+}
+
+
+def test_persists_go_through_cache():
+    found = {
+        site: n
+        for site, n in _call_sites(
+            _PKG,
+            lambda f: isinstance(f, ast.Attribute)
+            and f.attr in ("persist", "cache"),
+        ).items()
+        if not site.startswith("cache.py::")
+    }
+    assert found == _PERSIST_ALLOWLIST, (
+        f"persist sites drifted: {found} vs allowlist {_PERSIST_ALLOWLIST}"
+    )
+
+
 # Every schema-inferring ``<session>.read.parquet(...)`` call outside
 # ``sources/readers.py``, which memoizes the inferred schema per file
 # version. Each of these reads back a path its own query has just

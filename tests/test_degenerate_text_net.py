@@ -77,7 +77,7 @@ def test_text_query_parity_on_degenerate_text(
     spark, oracle, degenerate_text_dir, name
 ):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         spark_pd = m.queries()[name](spark, degenerate_text_dir).toPandas()

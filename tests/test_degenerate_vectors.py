@@ -86,7 +86,7 @@ def test_vector_query_parity_on_degenerate_embeddings(
     spark, oracle, degenerate_vec_dir, name
 ):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         spark_pd = m.queries()[name](spark, degenerate_vec_dir).toPandas()
@@ -140,7 +140,7 @@ _DEDUP_QUERIES = (
 @pytest.mark.parametrize("name", _DEDUP_QUERIES)
 def test_dedup_parity_on_identical_docs(spark, oracle, identical_docs_dir, name):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         spark_pd = m.queries()[name](spark, identical_docs_dir).toPandas()
@@ -220,7 +220,7 @@ def test_event_query_parity_on_tied_timestamps(
     spark, oracle, tied_events_dir, name
 ):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         spark_pd = m.queries()[name](spark, tied_events_dir).toPandas()
@@ -312,7 +312,7 @@ def null_docs_dir(tmp_path_factory):
 @pytest.mark.parametrize("name", _NULL_DOC_QUERIES)
 def test_query_parity_on_null_documents(spark, oracle, null_docs_dir, name):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         spark_pd = m.queries()[name](spark, null_docs_dir).toPandas()
@@ -380,7 +380,7 @@ def test_event_query_parity_on_extreme_timestamps(
     spark, oracle, extreme_ts_dir, name
 ):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         spark_pd = m.queries()[name](spark, extreme_ts_dir).toPandas()
@@ -446,7 +446,7 @@ def no_positives_dir(tmp_path_factory):
 @pytest.mark.parametrize("name", _NO_POSITIVES_QUERIES)
 def test_metric_parity_with_zero_positives(spark, oracle, no_positives_dir, name):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         spark_pd = m.queries()[name](spark, no_positives_dir).toPandas()

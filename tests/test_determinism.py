@@ -100,7 +100,7 @@ RANK_QUERIES = [
 @pytest.mark.parametrize("name", RANK_QUERIES)
 def test_round4_identical_results_across_parallelism(spark, name):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     q = m._QUERIES[name]
 

@@ -83,7 +83,7 @@ def test_watermarked_query_parity_on_domain_edges(
     spark, oracle, domain_edge_events_dir, name
 ):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         spark_pd = m.queries()[name](spark, domain_edge_events_dir).toPandas()

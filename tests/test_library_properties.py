@@ -136,7 +136,7 @@ def test_global_rank_cached_input_under_aqe(spark):
     corrupt ranks, nondeterministic run to run. The in-primitive
     persist pins one materialization; this pins the fix, for both the
     global and the per-group form."""
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     df = spark.range(0, 20000).select(
         (F.col("id") % 3).cast("string").alias("g"),

@@ -189,7 +189,7 @@ def null_events_dir(tmp_path_factory):
 @pytest.mark.parametrize("name", _NULL_EVENT_QUERIES)
 def test_event_query_parity_on_null_rows(spark, oracle, null_events_dir, name):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         spark_pd = m.queries()[name](spark, null_events_dir).toPandas()
@@ -270,7 +270,7 @@ def test_embedding_query_parity_on_null_rows(
     spark, oracle, null_embeddings_dir, name
 ):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         spark_pd = m.queries()[name](spark, null_embeddings_dir).toPandas()
@@ -341,7 +341,7 @@ def test_json_event_props_parity_on_hostile_props(
     spark, oracle, hostile_props_dir
 ):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         spark_pd = (
@@ -422,7 +422,7 @@ def test_event_query_parity_on_nonfinite_values(
     spark, oracle, nonfinite_events_dir, name
 ):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         spark_pd = m.queries()[name](spark, nonfinite_events_dir).toPandas()
@@ -488,7 +488,7 @@ def test_stateful_totals_parity_on_guard_band_values(
     spark, oracle, guard_band_events_dir
 ):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     name = "stream_stateful_user_totals"
     try:

@@ -156,7 +156,7 @@ def _drop_rank_caches(spark):
     """The rank correctness fence persists the numbered relation; a
     prior test may have left it cached, which would make explain()
     show InMemoryTableScan instead of the shape under audit."""
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     release_caches(spark)
 
@@ -359,7 +359,7 @@ def test_gini_rank_no_single_partition_exchange(spark, queries):
     """The Gini rank must come from the range-partitioned global_rank
     primitive — a SinglePartition exchange would serialize the
     customer table through one task."""
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         plan = plan_of(queries["agg_gini_concentration"](spark, SF_SMOKE))
@@ -566,7 +566,7 @@ def test_semdedup_persists_assignment_for_pair_join(spark, queries):
     of the within-cluster pair join and the final rollup read the
     persisted (vec_id, cid, qv, n2) relation (3 InMemoryTableScans),
     not three fresh derivations of the distance/argmin subtree."""
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         plan = plan_of(queries["curate_semdedup"](spark, SF_SMOKE), "simple")

@@ -53,7 +53,7 @@ def test_every_nonstreaming_query_is_budgeted():
 @pytest.mark.parametrize("name", needs_boat_reference(sorted(BUDGETS)))
 def test_plan_matches_budget(spark, name):
     import __spark_entry__ as entry
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
     from tools.plan_budgets import plan_metrics
 
     release_caches(spark)

@@ -22,7 +22,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as m
-from boat_etl_pyspark_spark.plans import release_caches
+from boat_etl_pyspark_spark.cache import release_caches
 from tests.conftest import SF_CORRECTNESS
 from tests.hostile_tpch import build_hostile_dir
 from tests.test_oracle_parity import frames_equal

@@ -454,7 +454,7 @@ def test_cogrouped_asof_equals_relational_form(spark):
     the tagged-union window form row-for-row (both already match the
     SQL oracle independently)."""
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     qs = m.queries()
     cog = {

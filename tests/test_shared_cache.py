@@ -27,20 +27,17 @@ def test_cache_survives_many_calls(spark):
 
 
 def test_release_caches_clears_tracked_persists(spark):
-    """release_caches must unpersist both the _SHARED dedup entries and
-    every track_persist intermediate, and leave queries re-runnable."""
-    from boat_etl_pyspark_spark.plans import (
-        _EPHEMERAL,
-        release_caches,
-        textdedup,
-    )
+    """release_caches must unpersist both the _SHARED entries and every
+    track_persist intermediate, and leave queries re-runnable."""
+    from boat_etl_pyspark_spark.cache import _EPHEMERAL, _SHARED, release_caches
+    from boat_etl_pyspark_spark.plans import textdedup
 
     sf = "/root/testdata/sf0.001"
     textdedup.dedup_minhash_lsh(spark, sf).count()  # populates _SHARED + bands
-    assert textdedup._SHARED or _EPHEMERAL
+    assert _SHARED or _EPHEMERAL
     released = release_caches(spark)
     assert released > 0
-    assert not [k for k in textdedup._SHARED if k[0] == spark.sparkContext.applicationId]
+    assert not [k for k in _SHARED if k[0] == spark.sparkContext.applicationId]
     assert not _EPHEMERAL
     # still correct after release (pure recompute caches)
     assert textdedup.dedup_minhash_lsh(spark, sf).count() >= 0
@@ -52,22 +49,19 @@ def test_release_caches_clears_rank_fence(spark):
     release_caches, and the primitive must stay correct after."""
     from pyspark.sql import functions as F
 
-    from boat_etl_pyspark_spark.operators.library import (
-        _RANK_PERSISTS,
-        global_rank,
-    )
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import _EPHEMERAL, release_caches
+    from boat_etl_pyspark_spark.operators.library import global_rank
 
     release_caches(spark)
     df = spark.range(0, 500).select(
         ((F.col("id") * 2654435761) % 997).alias("v"), "id"
     )
-    before = len(_RANK_PERSISTS)
+    before = len(_EPHEMERAL)
     ranked = global_rank(df, ["v", "id"], partitions=4)
     n = ranked.count()
     assert n == 500
-    assert len(_RANK_PERSISTS) == before + 1
+    assert len(_EPHEMERAL) == before + 1
     assert release_caches(spark) >= 1
-    assert not _RANK_PERSISTS
+    assert not _EPHEMERAL
     assert global_rank(df, ["v", "id"], partitions=4).count() == 500
     release_caches(spark)

@@ -40,7 +40,7 @@ def all_query_names():
 @pytest.mark.parametrize("name", needs_boat_reference(all_query_names()))
 def test_single_row_parity(spark, oracle, single_row_dir, name):
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     try:
         spark_pd = m.queries()[name](spark, single_row_dir).toPandas()

@@ -52,7 +52,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as m
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
     from boat_etl_pyspark_spark.session import get_spark
     from tests.hostile_tpch import HOSTILE_BUILDERS, build_hostile_dir
     from tests.test_oracle_parity import frames_equal

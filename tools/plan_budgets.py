@@ -45,7 +45,7 @@ _PY_NODES = (
 def _drop_initial_plan_blocks(plan: str) -> str:
     """Remove ``== Initial Plan ==`` blocks from an (executed) adaptive
     plan string. Session-shared caches are materialized eagerly
-    (textdedup._cached), so their stored subplans print BOTH the final
+    (cache.shared), so their stored subplans print BOTH the final
     and the initial AQE plan — counting raw matches would double every
     FileScan under a cache. Only the final (actually executed) shape
     is budgeted."""
@@ -83,7 +83,7 @@ def plan_metrics(df) -> dict:
 
 def collect(spark) -> dict[str, dict]:
     import __spark_entry__ as entry
-    from boat_etl_pyspark_spark.plans import release_caches
+    from boat_etl_pyspark_spark.cache import release_caches
 
     out = {}
     for name, fn in entry.queries().items():
