@@ -26,10 +26,12 @@ in ``n_failed`` (its traceback tail goes to bench_full.json's
 ``default_parallelism`` and effective ``shuffle_partitions`` it ran
 with. Per query and rep, bench_full.json also splits the total into
 build seconds (the query callable: Python plan construction plus any
-jobs it runs eagerly), the Spark job and stage counts and the
+jobs it runs eagerly), the Spark job and stage counts, the
 session-shared relations it built (``shared_builds_reps_detail``: 1 on
-a build, 0 on a hit), and gives the cold rep-1 total (``cold_value``)
-next to the min-of-N ``value``.
+a build, 0 on a hit) and the Catalyst analysis, optimization and
+planning milliseconds of the returned plan
+(``catalyst_ms_reps_detail``), and gives the cold rep-1 total
+(``cold_value``) next to the min-of-N ``value``.
 """
 
 from __future__ import annotations
@@ -139,9 +141,9 @@ def _rss_mb(jvm_pid: int) -> dict:
 @dataclass
 class Sweep:
     """Per-query, per-rep records of one ``measure`` call. ``total``,
-    ``build``, ``exec``, ``jobs``, ``stages`` and ``shared_builds`` map
-    a query name to one entry per rep it passed; ``cold`` holds the
-    rep-1 total of each query that passed rep 1."""
+    ``build``, ``exec``, ``jobs``, ``stages``, ``shared_builds`` and
+    ``catalyst`` map a query name to one entry per rep it passed;
+    ``cold`` holds the rep-1 total of each query that passed rep 1."""
 
     total: dict[str, list[float]]
     build: dict[str, list[float]]
@@ -149,6 +151,8 @@ class Sweep:
     jobs: dict[str, list[int]]
     stages: dict[str, list[int]]
     shared_builds: dict[str, list[int]]
+    # {phase: ms} for each of _CATALYST_PHASES the tracker recorded
+    catalyst: dict[str, list[dict[str, int]]]
     cold: dict[str, float] = field(default_factory=dict)
     # name -> tail of the first traceback
     failed: dict[str, str] = field(default_factory=dict)
@@ -163,6 +167,20 @@ def _explain(df, path: str) -> None:
         f.write(plan)
 
 
+_CATALYST_PHASES = ("analysis", "optimization", "planning")
+
+
+def _catalyst_ms(df) -> dict[str, int]:
+    """Catalyst phase times (ms) of ``df``'s own query execution. The
+    noop write optimizes and plans the query in a query execution of
+    its own, so ``df``'s plan is planned once more here to read those
+    two phases; analysis ran when the callable built ``df``."""
+    qe = df._jdf.queryExecution()
+    qe.executedPlan()
+    phases = qe.tracker().phases()
+    return {k: phases.apply(k).durationMs() for k in _CATALYST_PHASES if phases.contains(k)}
+
+
 def measure(spark, queries, names, sf_dir, reps, explain_dir=None) -> Sweep:
     """Run each of ``names`` ``reps`` times, one sorted sweep per rep.
 
@@ -172,7 +190,8 @@ def measure(spark, queries, names, sf_dir, reps, explain_dir=None) -> Sweep:
     read before and after, outside the timed span, so they include jobs
     the callable runs eagerly (shared-cache fills, driver-side
     fixpoints); so are the session-shared relations it built (growth of
-    ``cache._SHARED``: 0 on a hit). A query that raises is counted in
+    ``cache._SHARED``: 0 on a hit) and the Catalyst phase times of the
+    returned plan (``_catalyst_ms``). A query that raises is counted in
     ``failed`` and retried every rep, never dropped from the sweep. With
     ``explain_dir``, the last rep's plan of each query is written to
     ``explain_dir/<name>.txt``."""
@@ -188,6 +207,7 @@ def measure(spark, queries, names, sf_dir, reps, explain_dir=None) -> Sweep:
         jobs={name: [] for name in names},
         stages={name: [] for name in names},
         shared_builds={name: [] for name in names},
+        catalyst={name: [] for name in names},
     )
     for rep in range(reps):
         for name in sorted(names):
@@ -205,6 +225,7 @@ def measure(spark, queries, names, sf_dir, reps, explain_dir=None) -> Sweep:
             sweep.jobs[name].append(dag.nextJobId() - jobs0)
             sweep.stages[name].append(dag.nextStageId() - stages0)
             sweep.shared_builds[name].append(len(cache._SHARED) - shared0)
+            sweep.catalyst[name].append(_catalyst_ms(df))
             sweep.total[name].append(t2 - t0)
             sweep.build[name].append(t1 - t0)
             sweep.exec[name].append(t2 - t1)
@@ -384,6 +405,7 @@ def main() -> None:
                 "shared_builds_reps_detail": dict(
                     sorted(sweep.shared_builds.items())
                 ),
+                "catalyst_ms_reps_detail": dict(sorted(sweep.catalyst.items())),
                 "cold_value": round(sum(sweep.cold.values()), 3),
                 "rss_per_rep_mb": sweep.rss_per_rep,
                 "cpu_fingerprint_sec": {"start": fp_start, "end": fp_end},

@@ -78,7 +78,6 @@ FROM u GROUP BY engagement_bits
 
 def agg_width_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    from ..functions.numeric import money_sum
 
     # NaN is the one value the two engines bucket differently (DuckDB's
     # NaN compares greater than everything, so `NaN >= 350` lands it in

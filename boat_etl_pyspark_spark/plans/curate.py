@@ -217,7 +217,6 @@ GROUP BY lang, seq_id
 #     into fixed token blocks (the LLM pretraining layout).
 def curate_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",

@@ -98,7 +98,6 @@ WHERE pu.t_view IS NOT NULL
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     month = F.date_format(F.date_trunc("month", F.col("o_orderdate")), "yyyy-MM")
-    from pyspark.sql import Window
 
     w = Window.partitionBy("o_custkey")
     cohorted = orders.select(
@@ -537,8 +536,6 @@ def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-combined conditional aggregate — min view ts, min purchase ts
     after that view — and the median uses the distributed rank
     primitive, so no step sorts all users in one task."""
-    from ..operators.library import global_rank
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("us")
     )

@@ -546,8 +546,6 @@ def io_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     facts the oracle cannot see). ``repartition(n)`` is the compactor
     because it round-robins rows evenly — ``coalesce(n)`` merges
     unevenly and can leave the skew it was meant to fix."""
-    import os
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_returnflag",
         cents(F.col("l_extendedprice")).alias("price_cents"),
@@ -706,8 +704,6 @@ def io_codec_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     zstd trades CPU for ~30-60% less I/O and storage, snappy the
     reverse — the right answer depends on whether scans are CPU- or
     I/O-bound, so the operator keeps both paths exercised."""
-    import os
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )

@@ -298,8 +298,6 @@ def embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     Java double→long semantics (NaN→0, ±Inf→Long.MIN/MAX) so even
     the degenerate all-zero-gram edge matches the Spark SQL form the
     oracle mirrors."""
-    import math
-
     def _div(a: float, b: float) -> float:
         # IEEE semantics like the SQL double divide (python raises on
         # /0.0): 0/0 -> NaN, x/0 -> ±Inf — reachable only on an
@@ -1915,8 +1913,6 @@ def ml_gbdt_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation empties every later round exactly like the CROSS JOIN
     did. Oracle parity at two SFs plus the hostile/NULL/empty nets
     and the pure-Python third implementation prove the replication."""
-    import math
-
     # bounded collect: <= _BINS rows at any scale (bin is never NULL)
     hist = {
         r["bin"]: (r["n"], r["sY"])

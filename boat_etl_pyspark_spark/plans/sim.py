@@ -799,8 +799,6 @@ def sim_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtrees (6.1s), and per-step 1-row jobs pay ~0.8s scheduler
     overhead each; the collected form runs the corpus pass once plus
     one 240-row job."""
-    from pyspark.sql import functions as F
-
     # round 11: the corpus parse comes from the session-shared vector
     # relation (similarity._vecs_view) instead of re-deriving it here
 

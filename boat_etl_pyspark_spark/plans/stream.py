@@ -364,8 +364,6 @@ def stream_foreachbatch_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the exactly-once merge-sink pattern for feeding a warehouse
     table from a stream, and the replay runs as three real
     micro-batches."""
-    import hashlib
-    import os
     import shutil
     import tempfile
 
@@ -450,8 +448,6 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain batch tumbling aggregate: it can only match
     if state genuinely survived the restart (losing it would leave
     run-2-updated windows holding file-3-only counts)."""
-    import hashlib
-    import os
     import shutil
     import tempfile
 

@@ -1012,8 +1012,6 @@ def _surprisal_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus), and without the persist each of its three consumers
     (scored join, total-token scalar) would re-run the corpus
     explode+count."""
-    from pyspark.sql import functions as F
-
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",

@@ -8,9 +8,13 @@ near-dup, SimHash, embedding-cosine near-dup, clustering and
 calibration.
 
 Scale design (100 TB posture):
-  * all per-document work is pure column expressions over arrays
-    (split/transform/aggregate/zip_with) — whole-stage codegen, zero
-    shuffle, zero Python;
+  * all per-document work is column expressions — zero shuffle, zero
+    Python. Array higher-order functions (transform/aggregate/
+    zip_with) are NOT whole-stage codegen: Spark evaluates their
+    lambdas interpreted, per element. The hottest per-element kernel,
+    the MinHash signature, is therefore an explode plus one codegen'd
+    min-aggregate per doc (``_minhash_signatures``) instead of nested
+    lambdas; shingling and SimHash still run as lambdas;
   * exact dedup groups on md5(text) — shuffling a 32-byte hash, not
     document bodies;
   * MinHash-LSH shuffles only (band_idx, band_key) pairs; candidate
@@ -128,30 +132,50 @@ _MH_B = [3, 17, 29, 47, 71, 97, 113, 131, 149, 167, 181, 199]
 _MH_P = 2147483647
 
 
-_MINHASH_BANDS_SPARK = f"""
-WITH hashed AS (
-  SELECT doc_id,
-         transform(s, x -> CAST(conv(substring(md5(x), 1, 15), 16, 10) AS BIGINT) % {_MH_P}) AS h0
-  FROM {{sh}}
-),
-sig AS (
-  SELECT doc_id,
-         transform(sequence(0, 11),
-                   i -> array_min(transform(h0,
-                        h -> (element_at(array({", ".join(map(str, _MH_A))}), CAST(i AS INT) + 1) * h
-                              + element_at(array({", ".join(map(str, _MH_B))}), CAST(i AS INT) + 1)) % {_MH_P}))) AS mh
-  FROM hashed
-)
-SELECT doc_id, b.band_idx, b.band_key
-FROM (
-  SELECT doc_id,
-         explode(transform(sequence(0, 3),
-             j -> struct(j AS band_idx,
-                         md5(concat_ws(',', transform(slice(mh, j * 3 + 1, 3),
-                                                      v -> CAST(v AS STRING)))) AS band_key))) AS b
-  FROM sig
-)
-"""
+def _minhash_signatures(sh: DataFrame) -> DataFrame:
+    """(doc_id, m0..m11): the k=12 MinHash signature of each shingle
+    set ``s`` of ``sh``, one row per doc_id (the documents key), shared
+    by both MinHash queries. Built from
+    whole-stage-codegen'd operators only, with no lambda (Spark runs
+    higher-order-function lambdas interpreted): explode the set, hash
+    each shingle once, and take the 12 permuted minima in one
+    aggregate per doc. ``sh`` is hash-partitioned on doc_id
+    (``_docs_wide_view``), so the aggregate plans with no exchange.
+
+    Exactly the oracle's ``list_min(list_transform(...))``: the
+    arithmetic is integer-only (A <= 16381 and h0 < 2^31, so every
+    product stays below 2^45), ``min`` does not depend on row order or
+    partitioning, and ``explode_outer`` keeps a doc whose set is empty
+    or NULL, with NULL minima (``array_min([])``)."""
+    h0 = F.expr(f"CAST(conv(substring(md5(x), 1, 15), 16, 10) AS BIGINT) % {_MH_P}")
+    hashed = sh.select("doc_id", F.explode_outer("s").alias("x")).select(
+        "doc_id", h0.alias("h0")
+    )
+    return hashed.groupBy("doc_id").agg(
+        *[
+            F.min((F.lit(a) * F.col("h0") + F.lit(b)) % F.lit(_MH_P)).alias(f"m{i}")
+            for i, (a, b) in enumerate(zip(_MH_A, _MH_B))
+        ]
+    )
+
+
+def _minhash_bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, band_idx, band_key) for b=4 bands of r=3 rows: band j
+    keys on md5 of signature values 3j..3j+2 joined by ',' (NULL
+    minima drop out of the join, as in the oracle's concat_ws)."""
+    bands = [
+        F.struct(
+            F.lit(j).alias("band_idx"),
+            F.md5(
+                F.concat_ws(",", *[F.col(f"m{3 * j + r}").cast("string") for r in range(3)])
+            ).alias("band_key"),
+        )
+        for j in range(4)
+    ]
+    # The generator stays inline in the projection (see _NGRAM_INV_SPARK).
+    return sig.select("doc_id", F.explode(F.array(*bands)).alias("b")).select(
+        "doc_id", "b.band_idx", "b.band_key"
+    )
 
 
 _MINHASH_DUCK = f"""
@@ -196,14 +220,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-Jaccard verify.
 
     The shingle sets and band table each feed two join sides; they are
-    persisted so the (HOF-interpreted, non-codegen) signature pipeline
-    runs once, not four times — at corpus scale recomputing signatures
-    per join side is the difference between one pass and four.
+    persisted so the signature aggregate (``_minhash_signatures``) runs
+    once, not four times — at corpus scale recomputing signatures per
+    join side is the difference between one pass and four.
     """
     def build():
         sh = _shingle_sets(spark, sf_dir)
-        sh.createOrReplaceTempView("__mh_sh")
-        bands = track_persist(spark.sql(_MINHASH_BANDS_SPARK.format(sh="__mh_sh")))
+        bands = track_persist(_minhash_bands(_minhash_signatures(sh)))
         a, b = bands.alias("a"), bands.alias("b")
         cand = (
             a.join(
@@ -810,38 +833,10 @@ def _edit_dist_oracle() -> str:
 # MinHash estimator calibration
 # ---------------------------------------------------------------------------
 
-# Signature construction: identical constants and algebra to
-# textdedup._MINHASH_BANDS_SPARK (k=12 affine permutations over
-# GF(2^31-1) of one md5 per shingle) — restated over the persisted
-# shingle view so the signatures themselves can persist and feed both
-# the band join and the per-pair agreement count.
-_SIG_SPARK = f"""
-SELECT doc_id, s,
-       transform(sequence(0, 11),
-                 i -> array_min(transform(h0,
-                      h -> (element_at(array({", ".join(map(str, _MH_A))}), CAST(i AS INT) + 1) * h
-                            + element_at(array({", ".join(map(str, _MH_B))}), CAST(i AS INT) + 1)) % {_MH_P}))) AS mh
-FROM (
-  SELECT doc_id, s,
-         transform(s, x -> CAST(conv(substring(md5(x), 1, 15), 16, 10) AS BIGINT) % {_MH_P}) AS h0
-  FROM {{sh}}
-)
-"""
-
-
 _CALIB_SPARK = """
-WITH bands AS (
-  SELECT doc_id, b.band_idx, b.band_key
-  FROM (
-    SELECT doc_id,
-           explode(transform(sequence(0, 3),
-               j -> struct(j AS band_idx,
-                           md5(concat_ws(',', transform(slice(mh, j * 3 + 1, 3),
-                                                        v -> CAST(v AS STRING)))) AS band_key))) AS b
-    FROM {sig})
-), cand AS (
+WITH cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
+  FROM {bands} a JOIN {bands} b
     ON a.band_idx = b.band_idx AND a.band_key = b.band_key
    AND a.doc_id < b.doc_id
 ), pairs AS (
@@ -888,10 +883,17 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     All ratios are exact integer ppm."""
     def build():
         sh = _shingle_sets(spark, sf_dir)
-        sh.select("doc_id", "s").createOrReplaceTempView("__calib_sh")
-        sig = track_persist(spark.sql(_SIG_SPARK.format(sh="__calib_sh")))
+        # The signatures of dedup_minhash_lsh, joined back to each doc's
+        # set: they feed both the band join and the per-pair agreement
+        # count (mh) next to the exact Jaccard (s).
+        sig = track_persist(
+            _minhash_signatures(sh)
+            .join(sh.select("doc_id", "s"), "doc_id")
+            .withColumn("mh", F.array(*[f"m{i}" for i in range(len(_MH_A))]))
+        )
         sig.createOrReplaceTempView("__calib_sig")
-        return spark.sql(_CALIB_SPARK.format(sig="__calib_sig"))
+        _minhash_bands(sig).createOrReplaceTempView("__calib_bands")
+        return spark.sql(_CALIB_SPARK.format(sig="__calib_sig", bands="__calib_bands"))
 
     return shared(spark, sf_dir, "minhash_calibration", build)
 

@@ -374,8 +374,6 @@ GROUP BY 1
 # ---------------------------------------------------------------------------
 
 def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.numeric import cents
-
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     rev = cents(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
@@ -408,8 +406,6 @@ JOIN part ON l_partkey = p_partkey
 # ---------------------------------------------------------------------------
 
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.numeric import cents
-
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")

@@ -185,8 +185,6 @@ def window_analytic_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level money domain on the ordering column (round-10 layer
     2): NULL and NaN balances place differently in the two engines'
     window sort, so a corrupt balance has no rank at all."""
-    from pyspark.sql import Window
-
     cust = load_table(spark, sf_dir, "customer").where(
         money_domain("c_acctbal")
     )
@@ -223,10 +221,6 @@ WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey),
 # ---------------------------------------------------------------------------
 
 def window_rolling_24h_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions.numeric import cents
-
     events = load_table(spark, sf_dir, "events")
     day_us = 24 * 3600 * 1_000_000
     base = events.select(
@@ -271,7 +265,6 @@ def window_locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL ts meets opposite engine NULL-ordering defaults in the
     # running frame — dropped symmetrically with the oracle.
     ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    from pyspark.sql import Window
 
     masked = ev.select(
         "event_id",

@@ -130,3 +130,18 @@ def test_measure_counts_shared_cache_builds(spark):
         assert sweep.shared_builds == {"stub": [1, 0]}  # one build, one hit
     finally:
         cache.release_caches(spark)
+
+
+def test_measure_records_catalyst_phases(spark):
+    bench = _bench_mod()
+
+    def query(spark, sf_dir):
+        df = spark.range(10)
+        return df.groupBy((df.id % 3).alias("k")).count()
+
+    sweep = bench.measure(spark, {"stub": query}, ["stub"], "unused", 2)
+    assert sweep.failed == {}
+    assert len(sweep.catalyst["stub"]) == 2
+    for phases in sweep.catalyst["stub"]:
+        assert set(phases) == {"analysis", "optimization", "planning"}
+        assert all(isinstance(ms, int) and ms >= 0 for ms in phases.values())

@@ -9,6 +9,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 
 import pytest
 
@@ -587,3 +588,46 @@ def test_null_row_filters_push_to_parquet_scan(spark, queries):
     assert "IsNotNull(embedding)" in plan, plan
     plan = plan_of(queries["ml_lift_gains_table"](spark, SF_SMOKE))
     assert "IsNotNull(value)" in plan, plan
+
+
+def _kernel_section(df) -> list[str]:
+    """Lines of persisted ``df``'s cached plan from its root down to the
+    first cached relation it reads: the plan that built ``df`` itself,
+    without the nested plans of the relations below it."""
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    rel = [i for i, line in enumerate(lines) if "InMemoryRelation" in line]
+    return lines[rel[0] + 1 : rel[1]]
+
+
+@pytest.mark.parametrize(
+    "name, column",
+    [("dedup_minhash_lsh", "band_key"), ("dedup_minhash_calibration", "mh")],
+)
+def test_minhash_signature_is_one_codegen_aggregate(spark, queries, name, column):
+    """The 12-permutation MinHash signature both MinHash queries persist
+    (LSH: the band table; calibration: the signatures) is one
+    whole-stage-codegen'd HashAggregate of 12 ``min``s over the exploded
+    shingle sets, read straight off the cached, doc_id-partitioned
+    shingles with no Exchange in between — not nested higher-order-
+    function lambdas, which Spark evaluates interpreted."""
+    from boat_etl_pyspark_spark import cache
+
+    cache.release_caches(spark)
+    try:
+        queries[name](spark, SF_SMOKE)
+        (kernel,) = [df for df in cache._EPHEMERAL if column in df.columns]
+        section = _kernel_section(kernel)
+        text = "\n".join(section)
+        assert "lambdafunction" not in text, text
+        aggs = [
+            i for i, line in enumerate(section)
+            if "HashAggregate(keys=[doc_id" in line and re.search(r"\bmin\(", line)
+        ]
+        assert len(aggs) == 1, text
+        agg = section[aggs[0]]
+        assert len(re.findall(r"\bmin\(", agg)) == 12, agg
+        assert "*(" in agg, agg  # inside a whole-stage-codegen stage
+        assert "InMemoryTableScan" in section[-1], text
+        assert not any("Exchange" in line for line in section[aggs[0]:]), text
+    finally:
+        cache.release_caches(spark)
