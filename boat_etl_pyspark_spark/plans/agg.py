@@ -29,6 +29,7 @@ from .contract import (
     revenue_cents_sql,
 )
 from .ml import _SCORE_GRID_CENTS
+from . import bind_sql
 
 
 # ---------------------------------------------------------------------------
@@ -40,20 +41,21 @@ _EVENT_BITS = "CASE event_type WHEN 'view' THEN 1 WHEN 'click' THEN 2 WHEN 'purc
 
 def agg_user_engagement_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("__bm_events")
-    return spark.sql(
+    return bind_sql(
+        spark,
         f"""
         WITH u AS (
           SELECT user_id,
                  bit_or({_EVENT_BITS}) AS engagement_bits,
                  COUNT(*) AS n_events
-          FROM __bm_events GROUP BY user_id
+          FROM {{events}} GROUP BY user_id
         )
         SELECT engagement_bits,
                COUNT(*) AS n_users,
                CAST(SUM(n_events) AS BIGINT) AS total_events
         FROM u GROUP BY engagement_bits
-        """
+        """,
+        events=ev,
     )
 
 
@@ -187,15 +189,16 @@ HAVING COUNT(*) > 0
 
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("__gs_orders")
-    return spark.sql(
+    return bind_sql(
+        spark,
         """
         SELECT o_orderstatus, o_orderpriority,
                COUNT(*) AS n_orders,
                CAST(SUM(TRY_CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS price_sum
-        FROM __gs_orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        """
+        """,
+        orders=orders,
     )
 
 
@@ -935,8 +938,9 @@ def agg_histogram_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket in exact integer arithmetic. Unlike an opaque sketch, every
     step is deterministic — so the oracle hash-checks the whole
     computation, not just an error envelope."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("__orders_hq")
-    return spark.sql(_HQ_SPARK.format(orders="__orders_hq"))
+    return bind_sql(
+        spark, _HQ_SPARK, orders=load_table(spark, sf_dir, "orders")
+    )
 
 
 # DuckDB: same computation; // for integer division, strftime label.
@@ -1102,10 +1106,9 @@ def agg_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer power sums. Single map-side-combined aggregate; the
     per-group finish is pure scalar math. Slope in micro-cents per
     unit, intercept in milli-cents, R^2 in micro units."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "r15_ols_lineitem"
+    return bind_sql(
+        spark, _OLS_SPARK, lineitem=load_table(spark, sf_dir, "lineitem")
     )
-    return spark.sql(_OLS_SPARK.format(lineitem="r15_ols_lineitem"))
 
 
 # ---------------------------------------------------------------------------
@@ -1165,10 +1168,9 @@ def agg_benford_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leading-digit distribution of order totals against Benford's
     law, integer ppm. One aggregate to 9 rows, then a 9-row window —
     the fraud/anomaly screen at any scale for the cost of a count."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r15_benford_orders"
+    return bind_sql(
+        spark, _BENFORD_SPARK, orders=load_table(spark, sf_dir, "orders")
     )
-    return spark.sql(_BENFORD_SPARK.format(orders="r15_benford_orders"))
 
 
 # ---------------------------------------------------------------------------
@@ -1242,14 +1244,11 @@ def agg_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square test of independence between customer segment and
     order priority. One key-shuffle join feeds a 25-cell contingency
     aggregate; everything after operates on those 25 rows."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r16_chi_orders"
-    )
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "r16_chi_customer"
-    )
-    return spark.sql(
-        _CHI2_SPARK.format(orders="r16_chi_orders", customer="r16_chi_customer")
+    return bind_sql(
+        spark,
+        _CHI2_SPARK,
+        orders=load_table(spark, sf_dir, "orders"),
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -1434,10 +1433,9 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's t between the two hash-split arms on purchase values:
     integer cent moments in one aggregate, a 2-row pivot, then
     fixed-shape double math for t and the Satterthwaite dof."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r17_welch_events"
+    return bind_sql(
+        spark, _WELCH_SPARK, events=load_table(spark, sf_dir, "events")
     )
-    return spark.sql(_WELCH_SPARK.format(events="r17_welch_events"))
 
 
 # ---------------------------------------------------------------------------
@@ -1523,20 +1521,21 @@ def agg_weighted_median_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cents")
         .agg(F.sum("w").alias("w"))
     )
-    in_bucket.createOrReplaceTempView("r19_wm_bucket")
-    return spark.sql(
+    return bind_sql(
+        spark,
         f"""
         WITH c AS (
           SELECT cents,
                  SUM(w) OVER (ORDER BY cents
                               ROWS UNBOUNDED PRECEDING) AS cw
-          FROM r19_wm_bucket
+          FROM {{bucket}}
         )
         SELECT CAST({n_items} AS BIGINT) AS n_items,
                CAST({total} AS BIGINT) AS total_weight,
                CAST(MIN(cents) AS BIGINT) AS weighted_median_cents
         FROM c WHERE 2 * ({before} + cw) >= {total}
-        """
+        """,
+        bucket=in_bucket,
     )
 
 
@@ -1691,17 +1690,16 @@ def agg_bootstrap_ci_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
     no seed drift between engines or executions — the properties that
     make a bootstrap viable inside a distributed, retry-happy
     pipeline."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r22_boot_orders"
-    )
-    return spark.sql(
+    return bind_sql(
+        spark,
         _boot_sql(
-            orders="r22_boot_orders",
+            orders="{orders}",
             key_j="concat(CAST(o_custkey AS STRING), ':', '{j}')",
             hex2int="conv(substr(h{j}, {off}, 6), 16, 10)",
             big="DECIMAL(38,0)",
             div="DIV",
-        )
+        ),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -1784,13 +1782,12 @@ def agg_survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluation order on both engines, exp(−inf)→0 when a day wipes
     the risk set). All heavy lifting is the per-user aggregate; the
     curve math runs on a relation bounded by distinct days."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r23_km_events"
-    )
-    return spark.sql(
-        _KM_CORE.format(
-            events="r23_km_events", epoch_us="unix_micros(ts)", div="DIV"
-        )
+    return bind_sql(
+        spark,
+        _KM_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
+        div="DIV",
     )
 
 
@@ -1856,12 +1853,13 @@ def agg_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fact table contributes one map-combined aggregate; the window
     relation is bounded by value cardinality, and a pathological
     cardinality would swap in the ``global_rank`` primitive unchanged."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r24_mw_events"
-    )
-    return spark.sql(
-        _MW_CORE.format(events="r24_mw_events", big="DECIMAL(38,0)",
-                        idiv="DIV", grid=_SCORE_GRID_CENTS)
+    return bind_sql(
+        spark,
+        _MW_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        big="DECIMAL(38,0)",
+        idiv="DIV",
+        grid=_SCORE_GRID_CENTS,
     )
 
 
@@ -2077,12 +2075,13 @@ def agg_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed form; measured 1.4x SLOWER at fixture scale (persist
     fence + offset broadcast dominate a 10^5-row window), which is
     why the domain-bounded window is the default here."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "r26_sp_lineitem"
-    )
-    return spark.sql(
-        _SPEAR_CORE.format(lineitem="r26_sp_lineitem", big="DECIMAL(38,0)",
-                           idiv="DIV", grid=_SPEAR_GRID_CENTS)
+    return bind_sql(
+        spark,
+        _SPEAR_CORE,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        big="DECIMAL(38,0)",
+        idiv="DIV",
+        grid=_SPEAR_GRID_CENTS,
     )
 
 
@@ -2144,12 +2143,12 @@ def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate re-reads the table. The window's cardinality is
     bounded by the grid, not the data, and D in ppm never touches a
     float."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "r27_ks_lineitem"
-    )
-    return spark.sql(
-        _KS_CORE.format(lineitem="r27_ks_lineitem", big="DECIMAL(38,0)",
-                        idiv="DIV")
+    return bind_sql(
+        spark,
+        _KS_CORE,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        big="DECIMAL(38,0)",
+        idiv="DIV",
     )
 
 
@@ -2214,16 +2213,13 @@ def agg_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join, so the daily relation is never derived twice. Pairs
     exist only where both days are observed (NULL frames drop); the
     Pearson sums are exact DECIMAL(38,0)/HUGEINT."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r27_acf_orders"
-    )
-    return spark.sql(
-        _ACF_CORE.format(
-            orders="r27_acf_orders",
-            lags="(VALUES (1), (2), (3), (7)) AS l(lag)",
-            dayidx="datediff(CAST(o_orderdate AS DATE), DATE '1990-01-01')",
-            big="DECIMAL(38,0)",
-        )
+    return bind_sql(
+        spark,
+        _ACF_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        lags="(VALUES (1), (2), (3), (7)) AS l(lag)",
+        dayidx="datediff(CAST(o_orderdate AS DATE), DATE '1990-01-01')",
+        big="DECIMAL(38,0)",
     )
 
 
@@ -2282,12 +2278,12 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-referenced-CTE audit for the decision rule). Theil is
     additively decomposable — the production form of 'which source
     concentrates the spend' drill-downs."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r27_theil_orders"
-    )
-    return spark.sql(
-        _THEIL_CORE.format(orders="r27_theil_orders", big="DECIMAL(38,0)",
-                           idiv="DIV")
+    return bind_sql(
+        spark,
+        _THEIL_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        big="DECIMAL(38,0)",
+        idiv="DIV",
     )
 
 
@@ -2369,11 +2365,11 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     those ~150 rows, exact in DECIMAL(38,0)/HUGEINT until the final
     closed-form double, floored to milli. The quantity grid bounds
     the window relation at any fact scale."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "r28_kw_lineitem"
-    )
-    return spark.sql(
-        _KW_CORE.format(lineitem="r28_kw_lineitem", big="DECIMAL(38,0)")
+    return bind_sql(
+        spark,
+        _KW_CORE,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        big="DECIMAL(38,0)",
     )
 
 
@@ -2470,13 +2466,12 @@ def agg_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-pair r is one closed-form double, floored to micro. This
     is the feature-redundancy screen of an ML-prep pipeline at the
     cost of a single pass."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "r28_cm_lineitem"
-    )
-    return spark.sql(
-        _CM_CORE.format(
-            lineitem="r28_cm_lineitem", big="DECIMAL(38,0)", pairs=_CM_PAIRS
-        )
+    return bind_sql(
+        spark,
+        _CM_CORE,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        big="DECIMAL(38,0)",
+        pairs=_CM_PAIRS,
     )
 
 
@@ -2564,11 +2559,11 @@ def agg_levene_variance_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form double, floored to milli. Two deliberate 2-column
     scans (absolute deviations from a mean are not decomposable into
     power sums; see SCALE.md's multi-referenced-CTE audit)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "r28_lev_lineitem"
-    )
-    return spark.sql(
-        _LEV_CORE.format(lineitem="r28_lev_lineitem", big="DECIMAL(38,0)")
+    return bind_sql(
+        spark,
+        _LEV_CORE,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        big="DECIMAL(38,0)",
     )
 
 
@@ -2960,16 +2955,13 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; ``cms_est >= exact_cnt`` always — the one-sided error
     contract — and `overcount` measures the collision inflation at
     this width."""
-    load_table(spark, sf_dir, "orders").select("o_custkey").createOrReplaceTempView(
-        "r37_cms_orders"
-    )
-    return spark.sql(
-        _CMS_CORE.format(
-            orders="r37_cms_orders",
-            h=_CMS_H_SPARK.format(key="key"),
-            h_t=_CMS_H_SPARK.format(key="t.key"),
-            lat=f"LATERAL VIEW explode(sequence(0, {_CMS_D - 1})) t_j AS j",
-        )
+    return bind_sql(
+        spark,
+        _CMS_CORE,
+        orders=load_table(spark, sf_dir, "orders").select("o_custkey"),
+        h=_CMS_H_SPARK.format(key="key"),
+        h_t=_CMS_H_SPARK.format(key="t.key"),
+        lat=f"LATERAL VIEW explode(sequence(0, {_CMS_D - 1})) t_j AS j",
     )
 
 
@@ -3164,10 +3156,9 @@ def agg_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``n_other`` pins domain drift: a fixture with a sixth segment
     shows up as n_other > 0 instead of silently biasing F. Scales:
     the only full-data work is the single scan."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "r41_anova_customer"
+    return bind_sql(
+        spark, _ANOVA_CORE, customer=load_table(spark, sf_dir, "customer")
     )
-    return spark.sql(_ANOVA_CORE.format(customer="r41_anova_customer"))
 
 
 _ANOVA_DUCK = _ANOVA_CORE.format(customer="customer")
@@ -3224,10 +3215,9 @@ def agg_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the five integers. ONE map-combined scan; the test that
     tells a distribution-drift monitor 'this column stopped looking
     like it used to' for ~free."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "r41_jb_lineitem"
+    return bind_sql(
+        spark, _JB_CORE, lineitem=load_table(spark, sf_dir, "lineitem")
     )
-    return spark.sql(_JB_CORE.format(lineitem="r41_jb_lineitem"))
 
 
 _JB_DUCK = _JB_CORE.format(lineitem="lineitem")
@@ -3299,8 +3289,7 @@ def agg_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(money_cents("l_extendedprice")).alias("v")
         )
     )
-    daily.createOrReplaceTempView("r41_dw_daily")
-    return spark.sql(_DW_CORE.format(daily="r41_dw_daily"))
+    return bind_sql(spark, _DW_CORE, daily=daily)
 
 
 _DW_DUCK = (
@@ -3493,10 +3482,12 @@ def agg_geometric_harmonic_means(
     partition-order independent; only the final exp/divide is float,
     fixed-shape in both engines. One map-combined scan. AM >= GM >=
     HM is asserted by the cross-check as a structural sanity bound."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r43_means_orders"
+    return bind_sql(
+        spark,
+        _MEANS_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        idiv="DIV",
     )
-    return spark.sql(_MEANS_CORE.format(orders="r43_means_orders", idiv="DIV"))
 
 
 _MEANS_DUCK = _MEANS_CORE.format(orders="orders", idiv="//")
@@ -3585,18 +3576,13 @@ def agg_permutation_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     STATISTICS, not the rows — is what makes permutation inference
     viable at 100 TB. Per-arm means are fixed-shape doubles over
     exact integer sums, micro-floored before comparison."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r46_perm_events"
-    )
-    return spark.sql(
-        _PERM_CORE.format(
-            events="r46_perm_events",
-            hexint=_PERM_HEX_SPARK,
-            explode=(
-                f"LATERAL VIEW explode(sequence(0, {_PERM_K} - 1)) e AS p"
-            ),
-            idiv="DIV",
-        )
+    return bind_sql(
+        spark,
+        _PERM_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        hexint=_PERM_HEX_SPARK,
+        explode=f"LATERAL VIEW explode(sequence(0, {_PERM_K} - 1)) e AS p",
+        idiv="DIV",
     )
 
 
@@ -3650,15 +3636,12 @@ def agg_mcnemar_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
     better on the same data — the paired comparison an unpaired
     chi-square silently gets wrong. Continuity-corrected statistic
     in exact integer milli from one conditional-sum scan."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r48_mcnemar_docs"
-    )
-    return spark.sql(
-        _MCNEMAR_CORE.format(
-            docs="r48_mcnemar_docs",
-            wc="size(filter(split(text, ' '), x -> x != ''))",
-            idiv="DIV",
-        )
+    return bind_sql(
+        spark,
+        _MCNEMAR_CORE,
+        docs=load_table(spark, sf_dir, "documents"),
+        wc="size(filter(split(text, ' '), x -> x != ''))",
+        idiv="DIV",
     )
 
 
@@ -3710,11 +3693,11 @@ def agg_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     the estimator works, and the query proves it on real overlap
     structure). The coverage question dedup and entity-resolution
     pipelines ask of any sampled crawl. One part-keyed groupBy."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "r49_capture_li"
-    )
-    return spark.sql(
-        _CHAPMAN_CORE.format(lineitem="r49_capture_li", idiv="DIV")
+    return bind_sql(
+        spark,
+        _CHAPMAN_CORE,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        idiv="DIV",
     )
 
 
@@ -3761,19 +3744,18 @@ def agg_chao1_vocab_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     old. Unigrams saturate at this fixture's 31-word vocabulary;
     trigrams are where the unseen mass lives. One map-combined gram
     count; same scaling contract as every n-gram scoring op."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r49_chao_docs"
-    )
-    spark.sql(
+    grams = bind_sql(
+        spark,
         """
         SELECT concat_ws(' ', t[i - 1], t[i], t[i + 1]) AS gram
         FROM (SELECT filter(split(text, ' '), x -> x != '') AS t
-              FROM r49_chao_docs)
+              FROM {docs})
         LATERAL VIEW explode(sequence(1, size(t) - 2)) e AS i
         WHERE size(t) >= 3
-        """
-    ).createOrReplaceTempView("r49_chao_grams")
-    return spark.sql(_CHAO1_CORE.format(grams="r49_chao_grams", idiv="DIV"))
+        """,
+        docs=load_table(spark, sf_dir, "documents"),
+    )
+    return bind_sql(spark, _CHAO1_CORE, grams=grams, idiv="DIV")
 
 
 _CHAO1_DUCK = _CHAO1_CORE.format(
@@ -3909,11 +3891,8 @@ def agg_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     explosion and the nine lookups all derive from generated
     relations, so the part table is scanned exactly once instead of
     once per CTE re-derivation."""
-    load_table(spark, sf_dir, "part").createOrReplaceTempView(
-        "r50_fisher_part"
-    )
-    row = spark.sql(
-        _FISHER_BASE_AGG.format(part="r50_fisher_part")
+    row = bind_sql(
+        spark, _FISHER_BASE_AGG, part=load_table(spark, sf_dir, "part")
     ).collect()[0]
     # empty input: COUNT is 0 but the SUMs are NULL — normalize so the
     # literal inlining below stays well-typed (the oracle's aggregate
@@ -4038,21 +4017,12 @@ def agg_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     division per group.  One orders-sized aggregation (customer keys
     broadcast), then everything is 25 rows; the multiple-testing
     discipline every per-segment metric sweep at 100 TB needs."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r50_bh_orders"
-    )
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "r50_bh_customer"
-    )
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView(
-        "r50_bh_nation"
-    )
-    return spark.sql(
-        _BH_CORE.format(
-            orders="r50_bh_orders",
-            customer="r50_bh_customer",
-            nation="r50_bh_nation",
-        )
+    return bind_sql(
+        spark,
+        _BH_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        customer=load_table(spark, sf_dir, "customer"),
+        nation=load_table(spark, sf_dir, "nation"),
     )
 
 
@@ -4130,11 +4100,12 @@ def agg_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup verifiers), so the op costs O(segments · cap²) regardless
     of table size; the cap is the explicit knob a 100 TB run would
     raise on a larger cluster.  All arithmetic is exact integers."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "r50_hl_customer"
-    )
-    return spark.sql(
-        _HL_CORE.format(customer="r50_hl_customer", str="STRING", idiv="DIV")
+    return bind_sql(
+        spark,
+        _HL_CORE,
+        customer=load_table(spark, sf_dir, "customer"),
+        str="STRING",
+        idiv="DIV",
     )
 
 
@@ -4188,10 +4159,12 @@ def agg_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition heaps of 100 rows and merges on the driver, so the
     plan never globally sorts; at 100 TB this is the only correct
     shape for an order-statistic tail estimate."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r51_hill_docs"
+    return bind_sql(
+        spark,
+        _HILL_CORE,
+        docs=load_table(spark, sf_dir, "documents"),
+        idiv="DIV",
     )
-    return spark.sql(_HILL_CORE.format(docs="r51_hill_docs", idiv="DIV"))
 
 
 _HILL_DUCK = _HILL_CORE.format(docs="documents", idiv="//")
@@ -4295,10 +4268,12 @@ def agg_effect_size_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     `agg_chi2_independence`, so the integer sum is order-immune).
     Two aggregation passes over one scanned relation, both
     map-combined; every downstream relation is cell-count-sized."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r51_eff_orders"
+    return bind_sql(
+        spark,
+        _EFFECT_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        idiv="DIV",
     )
-    return spark.sql(_EFFECT_CORE.format(orders="r51_eff_orders", idiv="DIV"))
 
 
 _EFFECT_DUCK = _EFFECT_CORE.format(orders="orders", idiv="//")
@@ -4366,11 +4341,11 @@ def agg_kendall_tau_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed answer, Spearman `agg_spearman_rho` is the
     streaming-rank complement).  Concordant/discordant/tie counts
     are exact integers; tau-b is one fixed-shape float."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r52_tau_orders"
-    )
-    return spark.sql(
-        _TAU_CORE.format(orders="r52_tau_orders", str="STRING")
+    return bind_sql(
+        spark,
+        _TAU_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        str="STRING",
     )
 
 
@@ -4427,14 +4402,12 @@ def agg_diversity_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
     units before the integer sum, so H is order-immune.  One fact
     join pass (dimensions broadcast) into a (region, type) groupBy;
     everything after is category-count-sized."""
-    for t in ("lineitem", "part", "supplier", "nation", "region"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"r53_div_{t}")
-    return spark.sql(
-        _DIV_CORE.format(
-            lineitem="r53_div_lineitem", part="r53_div_part",
-            supplier="r53_div_supplier", nation="r53_div_nation",
-            region="r53_div_region", idiv="DIV",
-        )
+    tables = ("lineitem", "part", "supplier", "nation", "region")
+    return bind_sql(
+        spark,
+        _DIV_CORE,
+        idiv="DIV",
+        **{t: load_table(spark, sf_dir, t) for t in tables},
     )
 
 
@@ -4507,17 +4480,16 @@ def agg_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sum, so Q is summation-order-immune.  The daily relation
     is bounded by the date span; the k-lag self-join is 7× that
     bounded size."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r53_lb_events"
-    )
     lags = " UNION ALL ".join(
         f"SELECT {k} AS k" for k in range(1, _LB_LAGS + 1)
     )
-    return spark.sql(
-        _LB_CORE.format(
-            events="r53_lb_events", epoch_us="unix_micros(ts)",
-            idiv="DIV", lags=lags,
-        )
+    return bind_sql(
+        spark,
+        _LB_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
+        idiv="DIV",
+        lags=lags,
     )
 
 
@@ -4590,13 +4562,12 @@ def agg_survival_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     product limit needs an ordered ln-sum.  The per-user aggregate
     is the only heavy pass; the curve runs on a day-bounded
     relation."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r54_na_events"
-    )
-    return spark.sql(
-        _NA_CORE.format(
-            events="r54_na_events", epoch_us="unix_micros(ts)", idiv="DIV"
-        )
+    return bind_sql(
+        spark,
+        _NA_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
+        idiv="DIV",
     )
 
 
@@ -4661,16 +4632,12 @@ def agg_price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean is the single fixed-shape float.  One fact aggregation by
     (part, year), then a part-keyed self-join of the two bounded
     year slices."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "r55_pi_lineitem"
-    )
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r55_pi_orders"
-    )
-    return spark.sql(
-        _PRICEIDX_CORE.format(
-            lineitem="r55_pi_lineitem", orders="r55_pi_orders", idiv="DIV"
-        )
+    return bind_sql(
+        spark,
+        _PRICEIDX_CORE,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        orders=load_table(spark, sf_dir, "orders"),
+        idiv="DIV",
     )
 
 

@@ -11,9 +11,8 @@ from pyspark.sql import functions as F
 from ..cache import track_persist
 from ..operators.library import global_prefix_sum
 from ..sources.readers import load_table
-from .sim import _emb_view
-from .text import _docs_view
 from .textdedup import _DUCK_SHINGLES, _MINHASH_DUCK, dedup_clusters
+from . import bind_sql
 
 
 # ---------------------------------------------------------------------------
@@ -59,8 +58,8 @@ FROM (
 # strata; upsert is one co-locatable key join; contamination ships only
 # 16-byte gram hashes with a broadcast-sized eval side.
 def curate_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_view(spark, sf_dir, "__docs_split")
-    return spark.sql(_SPLIT_SPARK.format(docs=docs))
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(spark, _SPLIT_SPARK, docs=docs)
 
 
 # ---------------------------------------------------------------------------
@@ -119,8 +118,8 @@ FROM (
 #     filter: every document gets a keep/drop verdict plus the first
 #     failing rule, so downstream can audit drop rates per rule.
 def curate_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_view(spark, sf_dir, "__docs_qf")
-    return spark.sql(_FILTER_SPARK.format(docs=docs))
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(spark, _FILTER_SPARK, docs=docs)
 
 
 # ---------------------------------------------------------------------------
@@ -162,8 +161,8 @@ WHERE rk <= {_SAMPLE_K}
 #     uncorrelated with any document property) but reproducible and
 #     oracle-checkable, unlike ``TABLESAMPLE``/``rand()``.
 def curate_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_view(spark, sf_dir, "__docs_strat")
-    return spark.sql(_SAMPLE_SPARK.format(docs=docs))
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(spark, _SAMPLE_SPARK, docs=docs)
 
 
 # ---------------------------------------------------------------------------
@@ -326,8 +325,8 @@ FROM corpus c FULL OUTER JOIN updates u ON c.doc_id = u.doc_id
 #   * ``curate_corpus_upsert`` — MERGE INTO semantics (update/insert/
 #     keep) as a plain full-outer join.
 def curate_corpus_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_view(spark, sf_dir, "__docs_upsert")
-    return spark.sql(_UPSERT_SPARK.format(docs=docs))
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(spark, _UPSERT_SPARK, docs=docs)
 
 
 # ---------------------------------------------------------------------------
@@ -385,10 +384,10 @@ GROUP BY c.doc_id, e.doc_id
 #   * ``curate_contamination_check`` — train/eval 8-gram overlap
 #     (benchmark decontamination).
 def curate_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .textdedup import _docs_wide_view
+    from .textdedup import _docs_wide
 
-    docs = _docs_wide_view(spark, sf_dir, "__docs_contam")
-    return spark.sql(_CONTAM_SPARK.format(docs=docs))
+    docs = _docs_wide(spark, sf_dir)
+    return bind_sql(spark, _CONTAM_SPARK, docs=docs)
 
 
 def curate_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -684,9 +683,9 @@ def curate_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-key IS the cluster id, so nothing crosses cluster
     boundaries. No float ever decides a pair (dot^2 * 10^4 vs
     1600 * |a|^2 * |b|^2 in DECIMAL(38,0)/HUGEINT)."""
-    emb = _emb_view(spark, sf_dir, "__mlprep_semdedup")
+    emb = load_table(spark, sf_dir, "embeddings")
     assigned = track_persist(
-        spark.sql(_SEMDEDUP_ASSIGN_SPARK.format(emb=emb))
+        bind_sql(spark, _SEMDEDUP_ASSIGN_SPARK, emb=emb)
     )
     a = assigned.alias("a")
     b = assigned.alias("b")
@@ -1013,12 +1012,11 @@ def curate_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizes exactly once), and the 256-row log-ratio table joins
     back broadcast-size. Terms are floored to integer micro-nats
     before summing so the weight is order-independent."""
-    docs = _docs_view(spark, sf_dir, "textlm_dsir_docs")
+    docs = load_table(spark, sf_dir, "documents")
     docbucket = track_persist(
-        spark.sql(_DSIR_DOCBUCKET_SPARK.format(docs=docs))
+        bind_sql(spark, _DSIR_DOCBUCKET_SPARK, docs=docs)
     )
-    docbucket.createOrReplaceTempView("textlm_dsir_docbucket")
-    return spark.sql(_DSIR_SCORE_SPARK.format(docbucket="textlm_dsir_docbucket"))
+    return bind_sql(spark, _DSIR_SCORE_SPARK, docbucket=docbucket)
 
 
 # ---------------------------------------------------------------------------
@@ -1091,13 +1089,14 @@ def curate_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of pairs. The shingle relation is persisted because the
     count and the join both consume it — as a CTE the explode+md5
     ran twice."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r21_nov_docs"
+    shingles = track_persist(
+        bind_sql(
+            spark,
+            _NOV_SHINGLES_SPARK,
+            docs=load_table(spark, sf_dir, "documents"),
+        )
     )
-    track_persist(
-        spark.sql(_NOV_SHINGLES_SPARK.format(docs="r21_nov_docs"))
-    ).createOrReplaceTempView("r21_nov_shingles")
-    return spark.sql(_NOV_SPARK.format(shingles="r21_nov_shingles"))
+    return bind_sql(spark, _NOV_SPARK, shingles=shingles)
 
 
 _PIPE_CORE = """
@@ -1208,10 +1207,9 @@ def curate_corpus_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame
     """Quality gate → exact dedup → 8-gram decontamination →
     train/val split as one plan; output is the stage funnel (docs,
     tokens). See module docstring for the shuffle budget."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "c3_pipe_docs"
+    return bind_sql(
+        spark, _PIPE_SPARK, docs=load_table(spark, sf_dir, "documents")
     )
-    return spark.sql(_PIPE_SPARK.format(docs="c3_pipe_docs"))
 
 
 # ---------------------------------------------------------------------------
@@ -1321,10 +1319,12 @@ def curate_domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     via per-partition pre-filtering (rank <= N within each partition
     first) — the standard top-k-per-group optimization the operator
     library's topk_per_group documents.""".format(cap=_DOMAIN_CAP)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r42_caps_docs"
+    return bind_sql(
+        spark,
+        _CAPS_CORE,
+        docs=load_table(spark, sf_dir, "documents"),
+        str="STRING",
     )
-    return spark.sql(_CAPS_CORE.format(docs="r42_caps_docs", str="STRING"))
 
 
 _CAPS_DUCK = _CAPS_CORE.format(docs="documents", str="VARCHAR")
@@ -1370,18 +1370,15 @@ def curate_rejection_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row max; the acceptance decision never shuffles documents, so
     at 100 TB this costs exactly one pass regardless of the
     acceptance rate."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "ts3_rej_docs"
-    )
-    return spark.sql(
-        _REJ_CORE.format(
-            docs="ts3_rej_docs",
-            idiv="DIV",
-            hexint=(
-                "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 12),"
-                " 16, 10) AS BIGINT)"
-            ),
-        )
+    return bind_sql(
+        spark,
+        _REJ_CORE,
+        docs=load_table(spark, sf_dir, "documents"),
+        idiv="DIV",
+        hexint=(
+            "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 12),"
+            " 16, 10) AS BIGINT)"
+        ),
     )
 
 
@@ -1438,10 +1435,12 @@ def curate_language_temperature(
     integer arithmetic over those micros. One groupBy over the corpus
     and a 5-row window — at 100 TB the cost is the language count
     scan a mixture plan needs anyway."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r44_temp_docs"
+    return bind_sql(
+        spark,
+        _TEMP_CORE,
+        docs=load_table(spark, sf_dir, "documents"),
+        idiv="DIV",
     )
-    return spark.sql(_TEMP_CORE.format(docs="r44_temp_docs", idiv="DIV"))
 
 
 _TEMP_DUCK = _TEMP_CORE.format(docs="documents", idiv="//")
@@ -1499,15 +1498,12 @@ def curate_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Differs from `curate_mixture_weights` (doc-count mixture
     reporting) and `curate_language_temperature` (language axis,
     doc counts): this is the token-budget planning artifact."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r45_me_docs"
-    )
-    return spark.sql(
-        _EPOCHS_CORE.format(
-            docs="r45_me_docs",
-            wc="size(filter(split(text, ' '), x -> x != ''))",
-            idiv="DIV",
-        )
+    return bind_sql(
+        spark,
+        _EPOCHS_CORE,
+        docs=load_table(spark, sf_dir, "documents"),
+        wc="size(filter(split(text, ' '), x -> x != ''))",
+        idiv="DIV",
     )
 
 
@@ -1624,19 +1620,19 @@ def curate_quality_threshold_sweep(
     non-empty token once). The empty-corpus edge is unchanged:
     docscore is empty before the literal is ever evaluated."""
     docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("r47_sweep_docs")
     tok = track_persist(
-        spark.sql(
+        bind_sql(
+            spark,
             """
-            SELECT doc_id, token FROM r47_sweep_docs
+            SELECT doc_id, token FROM {docs}
             LATERAL VIEW explode(
               filter(split(text, ' '), x -> x != '')) t AS token
-            """
+            """,
+            docs=docs,
         )
     )
-    tok.createOrReplaceTempView("r47_sweep_tok")
     s = tok.count()  # bounded scalar: the corpus token total
-    return spark.sql(_SWEEP_SPARK.format(tok="r47_sweep_tok", s=s))
+    return bind_sql(spark, _SWEEP_SPARK, tok=tok, s=s)
 
 
 _SWEEP_DUCK = (
@@ -1722,32 +1718,32 @@ def curate_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 62+ sources the mask becomes an array chunk — the contract is
     documented, not silently wrong (the row-number dimension makes
     the bit assignment deterministic in both engines)."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r52_ovl_docs"
-    )
-    spark.sql(
+    docs = load_table(spark, sf_dir, "documents")
+    grams = bind_sql(
+        spark,
         f"""
         SELECT CAST(conv(substring(md5(
                  concat_ws(' ', slice(t, i, {_OVL_SHINGLE}))), 1, 12),
                  16, 10) AS BIGINT) AS gh,
                source
         FROM (SELECT source, filter(split(text, ' '), x -> x != '') AS t
-              FROM r52_ovl_docs)
+              FROM {{docs}})
         LATERAL VIEW explode(sequence(1, size(t) - {_OVL_SHINGLE} + 1))
           e AS i
         WHERE size(t) >= {_OVL_SHINGLE}
-        """
-    ).createOrReplaceTempView("r52_ovl_grams")
-    return spark.sql(
-        _OVL_CORE.format(
-            docs="r52_ovl_docs",
-            grams="r52_ovl_grams",
-            shl="shiftleft(CAST(1 AS BIGINT), CAST(s.rn AS INT) - 1)",
-            shl_s="shiftleft(CAST(1 AS BIGINT), CAST(s.rn AS INT) - 1)",
-            shl_a="shiftleft(CAST(1 AS BIGINT), CAST(p.ra AS INT) - 1)",
-            shl_b="shiftleft(CAST(1 AS BIGINT), CAST(p.rb AS INT) - 1)",
-            idiv="DIV",
-        )
+        """,
+        docs=docs,
+    )
+    return bind_sql(
+        spark,
+        _OVL_CORE,
+        docs=docs,
+        grams=grams,
+        shl="shiftleft(CAST(1 AS BIGINT), CAST(s.rn AS INT) - 1)",
+        shl_s="shiftleft(CAST(1 AS BIGINT), CAST(s.rn AS INT) - 1)",
+        shl_a="shiftleft(CAST(1 AS BIGINT), CAST(p.ra AS INT) - 1)",
+        shl_b="shiftleft(CAST(1 AS BIGINT), CAST(p.rb AS INT) - 1)",
+        idiv="DIV",
     )
 
 

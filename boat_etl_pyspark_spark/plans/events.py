@@ -13,6 +13,7 @@ from ..cache import shared, track_persist
 from ..functions.numeric import cents
 from ..operators.library import global_prefix_sum, global_rank
 from ..sources.readers import load_table
+from . import bind_sql
 
 
 # ---------------------------------------------------------------------------
@@ -382,10 +383,9 @@ def events_ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange on user_id), then the 2-row variant aggregate and a
     2-row window for the lift column. Deterministic assignment
     (user_id parity) stands in for the production bucketing hash."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r15_ab_events"
+    return bind_sql(
+        spark, _AB_SPARK, events=load_table(spark, sf_dir, "events")
     )
-    return spark.sql(_AB_SPARK.format(events="r15_ab_events"))
 
 
 # ---------------------------------------------------------------------------
@@ -458,10 +458,9 @@ def events_rate_spike_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     share the event_type exchange; variance is derived from integer
     sum / sum-of-squares inside the same frame, so the z statistic is
     a fixed-shape double expression over exact integers."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r16_spike_events"
+    return bind_sql(
+        spark, _SPIKE_SPARK, events=load_table(spark, sf_dir, "events")
     )
-    return spark.sql(_SPIKE_SPARK.format(events="r16_spike_events"))
 
 
 # ---------------------------------------------------------------------------
@@ -505,13 +504,11 @@ def events_user_journey_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic top-k (count desc, path asc) plans as
     TakeOrderedAndProject — per-partition heaps, never a global
     sort."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r20_journey_events"
-    )
-    return spark.sql(
-        _JOURNEY_CORE.format(
-            events="r20_journey_events", epoch_us="unix_micros(ts)"
-        )
+    return bind_sql(
+        spark,
+        _JOURNEY_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
     )
 
 
@@ -682,13 +679,12 @@ def events_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
     a user-keyed time-range join — work bounded by per-user activity
     in 24h windows — and both rank windows share the purchase_id
     exchange."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r23_attr_events"
-    )
-    return spark.sql(
-        _ATTR_CORE.format(
-            events="r23_attr_events", epoch_us="unix_micros(ts)", div="DIV"
-        )
+    return bind_sql(
+        spark,
+        _ATTR_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
+        div="DIV",
     )
 
 
@@ -844,12 +840,13 @@ def events_bot_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     automation. The fixture's arrivals are random, so zero flags here
     is the expected output — the profile and threshold machinery are
     what the oracle checks."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r34_bot_events"
-    )
-    return spark.sql(
-        _BOT_CORE.format(events="r34_bot_events", epoch_us="unix_micros(ts)",
-                         big="DECIMAL(38,0)", idiv="DIV")
+    return bind_sql(
+        spark,
+        _BOT_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
+        big="DECIMAL(38,0)",
+        idiv="DIV",
     )
 
 
@@ -915,15 +912,12 @@ def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     measures a marginal difference; DiD is the panel version that
     nets out time trends — the causal-measurement shape for feature
     launches. One scan, one 1-row broadcast, any scale."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r39_did_events"
-    )
-    return spark.sql(
-        _DID_CORE.format(
-            events="r39_did_events",
-            epoch_us="unix_micros(ts)",
-            idiv="DIV",
-        )
+    return bind_sql(
+        spark,
+        _DID_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
+        idiv="DIV",
     )
 
 
@@ -1146,8 +1140,7 @@ def events_sprt_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = global_prefix_sum(
         ev, order_by=["u", "event_id"], value_col="llr", out_col="cum"
     )
-    cum.createOrReplaceTempView("r44_sprt_cum")
-    return spark.sql(_SPRT_FINAL.format(cum="r44_sprt_cum"))
+    return bind_sql(spark, _SPRT_FINAL, cum=cum)
 
 
 _SPRT_DUCK = f"""
@@ -1204,10 +1197,12 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     invalidates every downstream lift number, which is why this scan
     runs BEFORE `events_ab_test_lift` in any honest readout. One
     distinct aggregate; scales as a user-keyed count."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r46_srm_events"
+    return bind_sql(
+        spark,
+        _SRM_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        idiv="DIV",
     )
-    return spark.sql(_SRM_CORE.format(events="r46_srm_events", idiv="DIV"))
 
 
 _SRM_DUCK = _SRM_CORE.format(events="events", idiv="//")
@@ -1290,15 +1285,12 @@ def events_cuped_variance_reduction(
     value proposition as a checked number (a useless covariate
     reports ~0 and the adjusted lift equals the raw one). Scales as
     any per-user rollup."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r47_cuped_events"
-    )
-    return spark.sql(
-        _CUPED_CORE.format(
-            events="r47_cuped_events",
-            epoch_us="unix_micros(ts)",
-            idiv="DIV",
-        )
+    return bind_sql(
+        spark,
+        _CUPED_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
+        idiv="DIV",
     )
 
 
@@ -1362,13 +1354,12 @@ def events_uplift_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer scaling) is the operator; a real uplift model drops its
     score column in.  One user-level aggregation, one 10-row
     window."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r52_qini_events"
-    )
-    return spark.sql(
-        _QINI_CORE.format(
-            events="r52_qini_events", str="STRING", idiv="DIV"
-        )
+    return bind_sql(
+        spark,
+        _QINI_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        str="STRING",
+        idiv="DIV",
     )
 
 
@@ -1431,13 +1422,12 @@ def events_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     power sums with one fixed-shape float each.  The interarrival
     window partitions by user; the hourly histogram is bounded by
     the observation span."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r53_burst_events"
-    )
-    return spark.sql(
-        _BURST_CORE.format(
-            events="r53_burst_events", ts_us="unix_micros(ts)", idiv="DIV"
-        )
+    return bind_sql(
+        spark,
+        _BURST_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        ts_us="unix_micros(ts)",
+        idiv="DIV",
     )
 
 
@@ -1508,10 +1498,12 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the integer sum, so both entropies and the gap are
     engine-exact.  One lag-window shuffle builds the transitions;
     everything after is states²-sized."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r54_ent_events"
+    return bind_sql(
+        spark,
+        _ENTRATE_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        idiv="DIV",
     )
-    return spark.sql(_ENTRATE_CORE.format(events="r54_ent_events", idiv="DIV"))
 
 
 _ENTRATE_DUCK = _ENTRATE_CORE.format(events="events", idiv="//")
@@ -1559,13 +1551,12 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two distinct-count aggregations over (day, user) — at 100 TB
     both swap to the documented HLL sketch contract — and a
     month-bounded join."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r55_dau_events"
-    )
-    return spark.sql(
-        _DAU_CORE.format(
-            events="r55_dau_events", epoch_us="unix_micros(ts)", idiv="DIV"
-        )
+    return bind_sql(
+        spark,
+        _DAU_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
+        idiv="DIV",
     )
 
 

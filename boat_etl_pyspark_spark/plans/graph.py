@@ -11,6 +11,7 @@ from ..cache import shared, track_persist
 from ..functions.numeric import cents
 from ..operators.library import topk_per_group
 from ..sources.readers import load_table
+from . import bind_sql
 
 
 # ---------------------------------------------------------------------------
@@ -512,8 +513,7 @@ def graph_recursive_route_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.desc("w"), F.asc("dst")],
         _TOPK,
     ).select("src", "dst", "w")
-    edges.createOrReplaceTempView("r18_routes_edges")
-    return spark.sql(_RECURSIVE_SQL.format(edges="r18_routes_edges"))
+    return bind_sql(spark, _RECURSIVE_SQL, edges=edges)
 
 
 # ---------------------------------------------------------------------------
@@ -736,16 +736,15 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str):
     self-join per invocation (guide §2.4: the single most expensive
     recomputation in the graph family)."""
     def build():
-        copurchase_incidence(spark, sf_dir).createOrReplaceTempView(
-            "__cop_pairs_li"
-        )
-        return spark.sql(
+        return bind_sql(
+            spark,
             """
             SELECT a.p AS pa, b.p AS pb, COUNT(*) AS co
-            FROM __cop_pairs_li a JOIN __cop_pairs_li b
+            FROM {li} a JOIN {li} b
               ON a.o = b.o AND a.p < b.p
             GROUP BY a.p, b.p
-            """
+            """,
+            li=copurchase_incidence(spark, sf_dir),
         )
 
     return shared(spark, sf_dir, "copurchase_pairs", build)
@@ -775,15 +774,12 @@ def graph_copurchase_similarity(
     (`copurchase_incidence`, feeding the degree counts) and the
     counted pair list (`copurchase_pairs` — the same self-join this
     query used to re-run per invocation, now carrying ``co``)."""
-    copurchase_incidence(spark, sf_dir).createOrReplaceTempView(
-        "r42_cop_li"
-    )
-    copurchase_pairs(spark, sf_dir).createOrReplaceTempView(
-        "r42_cop_pairs"
-    )
-    return spark.sql(
-        _COP_SCORE.format(li="r42_cop_li", pairs="r42_cop_pairs",
-                          idiv="DIV")
+    return bind_sql(
+        spark,
+        _COP_SCORE,
+        li=copurchase_incidence(spark, sf_dir),
+        pairs=copurchase_pairs(spark, sf_dir),
+        idiv="DIV",
     )
 
 
@@ -863,15 +859,9 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree joins (and the node count) read one computation — the
     both-directions sums fold algebraically into a single pass over
     the directed edges (see ``_ASSORT_CORE``)."""
-    copurchase_pairs(spark, sf_dir).createOrReplaceTempView(
-        "r46_assort_pairs"
-    )
-    track_persist(
-        spark.sql(_ASSORT_DEG_SQL.format(pairs="r46_assort_pairs"))
-    ).createOrReplaceTempView("r46_assort_deg")
-    return spark.sql(
-        _ASSORT_CORE.format(pairs="r46_assort_pairs", deg="r46_assort_deg")
-    )
+    pairs = copurchase_pairs(spark, sf_dir)
+    deg = track_persist(bind_sql(spark, _ASSORT_DEG_SQL, pairs=pairs))
+    return bind_sql(spark, _ASSORT_CORE, pairs=pairs, deg=deg)
 
 
 _ASSORT_DUCK = (
@@ -1101,22 +1091,13 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     PageRank, BFS, routes and this), then everything is
     nations²-sized with broadcast community/region maps."""
 
-    trade_edges_cached(spark, sf_dir).createOrReplaceTempView(
-        "r50_mod_edges"
-    )
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView(
-        "r50_mod_nation"
-    )
-    load_table(spark, sf_dir, "region").createOrReplaceTempView(
-        "r50_mod_region"
-    )
-    return spark.sql(
-        _MODULARITY_CORE.format(
-            edges="r50_mod_edges",
-            nation="r50_mod_nation",
-            region="r50_mod_region",
-            err="raise_error",
-        )
+    return bind_sql(
+        spark,
+        _MODULARITY_CORE,
+        edges=trade_edges_cached(spark, sf_dir),
+        nation=load_table(spark, sf_dir, "nation"),
+        region=load_table(spark, sf_dir, "region"),
+        err="raise_error",
     )
 
 
@@ -1173,10 +1154,9 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``trade_edges`` cache — one self-join on the reversed pair,
     self-loops excluded."""
 
-    trade_edges_cached(spark, sf_dir).createOrReplaceTempView(
-        "r53_recip_edges"
+    return bind_sql(
+        spark, _RECIP_CORE, edges=trade_edges_cached(spark, sf_dir), idiv="DIV"
     )
-    return spark.sql(_RECIP_CORE.format(edges="r53_recip_edges", idiv="DIV"))
 
 
 _RECIP_DUCK = (

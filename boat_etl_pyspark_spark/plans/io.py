@@ -23,6 +23,7 @@ from .contract import (
     tpch_date_valid,
     tpch_date_valid_sql,
 )
+from . import bind_sql
 
 
 _TMP_SEQ = itertools.count()
@@ -1025,10 +1026,10 @@ def io_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
     # explicit schema: an all-empty source writes no partition dirs,
     # and schema inference on an empty path would throw — the empty
     # table must aggregate to zero rows, not crash
-    spark.read.schema(
+    readback = spark.read.schema(
         "o_orderkey BIGINT, cents BIGINT, o_orderstatus STRING"
-    ).parquet(out).createOrReplaceTempView("r29_dpo_readback")
-    return spark.sql(_DPO_SQL.format(src="r29_dpo_readback"))
+    ).parquet(out)
+    return bind_sql(spark, _DPO_SQL, src=readback)
 
 
 # ---------------------------------------------------------------------------

@@ -19,6 +19,7 @@ from .contract import (
     tpch_date_valid_sql,
 )
 from .ts import _DAY_US
+from . import bind_sql
 
 
 # ---------------------------------------------------------------------------
@@ -840,8 +841,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     with NULLs (left-outer semantics)."""
     from ..sources.readers import load_table as _lt
 
-    _lt(spark, sf_dir, "events").createOrReplaceTempView("r18_nearest_events")
-    return spark.sql(_NEAREST_SPARK.format(events="r18_nearest_events"))
+    return bind_sql(spark, _NEAREST_SPARK, events=_lt(spark, sf_dir, "events"))
 
 
 _ASOF_COG_SCHEMA = (

@@ -21,7 +21,7 @@ from .contract import (
     money_rounded_sql,
     tpch_date_valid_sql,
 )
-from .sim import _emb_view
+from . import bind_sql
 
 
 # ---------------------------------------------------------------------------
@@ -142,8 +142,8 @@ def embed_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     distances to the assigned centroid). Truncating integer division
     (Spark ``DIV`` / DuckDB ``//`` both truncate toward zero) keeps
     the centroid update deterministic and engine-identical."""
-    emb = _emb_view(spark, sf_dir, "__emb_kmeans")
-    return spark.sql(_KMEANS_SPARK.format(emb=emb))
+    emb = load_table(spark, sf_dir, "embeddings")
+    return bind_sql(spark, _KMEANS_SPARK, emb=emb)
 
 
 # ---------------------------------------------------------------------------
@@ -397,17 +397,13 @@ def ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     precision. The segment aggregate is map-combined (5 groups); the
     global moments are windows over that tiny relation, so the
     orders x customer join runs exactly once."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("r19_te_orders")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "r19_te_customer"
-    )
-    return spark.sql(
-        _TE_CORE.format(
-            orders="r19_te_orders",
-            customer="r19_te_customer",
-            big="DECIMAL(38,0)",
-            div="DIV",
-        )
+    return bind_sql(
+        spark,
+        _TE_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        customer=load_table(spark, sf_dir, "customer"),
+        big="DECIMAL(38,0)",
+        div="DIV",
     )
 
 
@@ -476,8 +472,7 @@ def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary and no fit step; the signed sum makes collisions
     cancel in expectation (Weinberger et al.'s trick). One explode +
     one map-combined aggregate over at most 64 groups."""
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("r19_fh_part")
-    return spark.sql(_FH_SPARK.format(part="r19_fh_part"))
+    return bind_sql(spark, _FH_SPARK, part=load_table(spark, sf_dir, "part"))
 
 
 # ---------------------------------------------------------------------------
@@ -506,10 +501,9 @@ def ml_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     total / (k * n_c). A uniformly-sampled batch reweighted by these
     trains as if classes were balanced. One tiny aggregate; totals are
     windows over the label relation, so embeddings scan once."""
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "r19_cw_emb"
+    return bind_sql(
+        spark, _CW_CORE, emb=load_table(spark, sf_dir, "embeddings"), div="DIV"
     )
-    return spark.sql(_CW_CORE.format(emb="r19_cw_emb", div="DIV"))
 
 
 _CW_DUCK = _CW_CORE.format(emb="embeddings", div="//")
@@ -581,10 +575,9 @@ def embed_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexploded corpus; the 64-row global centroid joins back as a
     broadcast. Per-class drift is the standard embedding-space QA
     check before training on auto-labeled data."""
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "r21_drift_emb"
+    return bind_sql(
+        spark, _DRIFT_SPARK, emb=load_table(spark, sf_dir, "embeddings")
     )
-    return spark.sql(_DRIFT_SPARK.format(emb="r21_drift_emb"))
 
 
 # ---------------------------------------------------------------------------
@@ -654,10 +647,12 @@ def ml_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     nano-nat floors make the sums order-independent. This is the
     feature-selection primitive (rank features by MI with the label)
     of an ML-prep pipeline."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "r27_mi_lineitem"
+    return bind_sql(
+        spark,
+        _MI_CORE,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        idiv="DIV",
     )
-    return spark.sql(_MI_CORE.format(lineitem="r27_mi_lineitem", idiv="DIV"))
 
 
 _MI_DUCK = _MI_CORE.format(lineitem="lineitem", idiv="//")
@@ -710,15 +705,12 @@ def ml_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     reported as per-(segment, fold) counts, balance shares in exact
     milli units, and account-balance mass. One scan, one aggregate;
     the window runs on the 25-row aggregate output."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "r27_kfold_customer"
-    )
-    return spark.sql(
-        _KFOLD_CORE.format(
-            customer="r27_kfold_customer",
-            bucket=_KFOLD_SPARK_BUCKET,
-            idiv="DIV",
-        )
+    return bind_sql(
+        spark,
+        _KFOLD_CORE,
+        customer=load_table(spark, sf_dir, "customer"),
+        bucket=_KFOLD_SPARK_BUCKET,
+        idiv="DIV",
     )
 
 
@@ -767,12 +759,13 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded distinct-cents grid (ties handled exactly, as the
     trapezoidal ROC requires), and the statistic stays integer until
     a single ppm integer division. One fact scan."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r30_auc_events"
-    )
-    return spark.sql(
-        _AUC_CORE.format(events="r30_auc_events", big="DECIMAL(38,0)",
-                         idiv="DIV", grid=_SCORE_GRID_CENTS)
+    return bind_sql(
+        spark,
+        _AUC_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        big="DECIMAL(38,0)",
+        idiv="DIV",
+        grid=_SCORE_GRID_CENTS,
     )
 
 
@@ -823,10 +816,12 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer division, ONE conditional-aggregate scan. The
     production calibration check before trusting model scores for
     data selection."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r30_cal_events"
+    return bind_sql(
+        spark,
+        _CAL_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        idiv="DIV",
     )
-    return spark.sql(_CAL_CORE.format(events="r30_cal_events", idiv="DIV"))
 
 
 _CAL_DUCK = _CAL_CORE.format(events="events", idiv="//")
@@ -880,15 +875,12 @@ def ml_confusion_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an inline constant table cross-joined before the conditional
     aggregate, so every additional operating point is four more
     CASE-sums in the same pass, never another pass."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r30_conf_events"
-    )
-    return spark.sql(
-        _CONF_CORE.format(
-            events="r30_conf_events",
-            thresholds=_CONF_THRESHOLDS,
-            idiv="DIV",
-        )
+    return bind_sql(
+        spark,
+        _CONF_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        thresholds=_CONF_THRESHOLDS,
+        idiv="DIV",
     )
 
 
@@ -974,18 +966,15 @@ def ml_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     positive sets; candidate generation is a map-side explode over
     them; no second derivation of the join, and no row carries more
     than one purchase history."""
-    for t in ("orders", "lineitem", "part"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"r32_neg_{t}")
-    return spark.sql(
-        _NEG_CORE.format(
-            orders="r32_neg_orders",
-            lineitem="r32_neg_lineitem",
-            part="r32_neg_part",
-            bucket=_NEG_SPARK_BUCKET,
-            agg_set="collect_set(l_partkey)",
-            unnest="explode",
-            contains="array_contains",
-        )
+    tables = ("orders", "lineitem", "part")
+    return bind_sql(
+        spark,
+        _NEG_CORE,
+        bucket=_NEG_SPARK_BUCKET,
+        agg_set="collect_set(l_partkey)",
+        unnest="explode",
+        contains="array_contains",
+        **{t: load_table(spark, sf_dir, t) for t in tables},
     )
 
 
@@ -1061,10 +1050,9 @@ def ml_feature_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer in both engines. Counts carry half-integer additive
     smoothing (doubled to stay integral) so a single-class bucket in
     drifted data degrades gracefully instead of hitting ln(0)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r33_woe_orders"
+    return bind_sql(
+        spark, _WOE_CORE, orders=load_table(spark, sf_dir, "orders")
     )
-    return spark.sql(_WOE_CORE.format(orders="r33_woe_orders"))
 
 
 _WOE_DUCK = _WOE_CORE.format(orders="orders")
@@ -1115,12 +1103,13 @@ def ml_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cp * cumTP * 1e9 // cumAll is an exact integer, so the statistic
     never touches a float. One fact scan — same cost shape as
     ``ml_roc_auc`` (relational30.py)."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r34_ap_events"
-    )
-    return spark.sql(
-        _AP_CORE.format(events="r34_ap_events", big="DECIMAL(38,0)",
-                        idiv="DIV", grid=_SCORE_GRID_CENTS)
+    return bind_sql(
+        spark,
+        _AP_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        big="DECIMAL(38,0)",
+        idiv="DIV",
+        grid=_SCORE_GRID_CENTS,
     )
 
 
@@ -1491,18 +1480,12 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     and partitioning-independent — at 100 TB this is a
     groupBy(order) + window(customer) pipeline, no all-pairs
     anything."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r40_ndcg_orders"
-    )
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "r40_ndcg_lineitem"
-    )
-    return spark.sql(
-        _NDCG_CORE.format(
-            orders="r40_ndcg_orders",
-            lineitem="r40_ndcg_lineitem",
-            idiv="DIV",
-        )
+    return bind_sql(
+        spark,
+        _NDCG_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+        idiv="DIV",
     )
 
 
@@ -1568,14 +1551,11 @@ def ml_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     whenever both annotators emit both classes (true at every
     fixture scale); a degenerate annotator would make kappa
     undefined in textbooks and NULL here, visible either way."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r40_kappa_docs"
-    )
-    return spark.sql(
-        _KAPPA_CORE.format(
-            docs="r40_kappa_docs",
-            wc="size(filter(split(text, ' '), x -> x != ''))",
-        )
+    return bind_sql(
+        spark,
+        _KAPPA_CORE,
+        docs=load_table(spark, sf_dir, "documents"),
+        wc="size(filter(split(text, ' '), x -> x != ''))",
     )
 
 
@@ -1672,10 +1652,12 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     libraries (XGBoost/LightGBM histogram mode) pick splits, so the
     shape scales to any row count: the only full-data work is the
     binning scan; everything after is 64 rows."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r40_stump_orders"
+    return bind_sql(
+        spark,
+        _STUMP_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        idiv="DIV",
     )
-    return spark.sql(_STUMP_CORE.format(orders="r40_stump_orders", idiv="DIV"))
 
 
 _STUMP_DUCK = _STUMP_CORE.format(orders="orders", idiv="//")
@@ -1774,10 +1756,9 @@ def ml_naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("m")
         )
 
-    shared(spark, sf_dir, "nb_tokc", build).createOrReplaceTempView(
-        "r40_nb_tokc"
+    return bind_sql(
+        spark, _NB_CORE, tokc=shared(spark, sf_dir, "nb_tokc", build)
     )
-    return spark.sql(_NB_CORE.format(tokc="r40_nb_tokc"))
 
 
 _NB_DUCK = _NB_CORE.format(tokc="nb_tokc").replace(
@@ -2245,11 +2226,11 @@ def ml_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning query an experimentation platform runs before flipping
     any flag, and the natural companion to `events_ab_test_lift`
     (measures after) and `events_sprt_ab_test` (stops early)."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r45_pa_events"
-    )
-    return spark.sql(
-        _POWER_CORE.format(events="r45_pa_events", epoch_us="unix_micros(ts)")
+    return bind_sql(
+        spark,
+        _POWER_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
     )
 
 
@@ -2307,15 +2288,12 @@ def ml_pinball_quantile_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     deci-cents.  One window rank + one segment-joined aggregation;
     at 100 TB the quantile side is segment-count-sized and
     broadcast back onto the fact scan."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "r50_pin_customer"
-    )
-    return spark.sql(
-        _PINBALL_CORE.format(
-            customer="r50_pin_customer",
-            taus="SELECT * FROM VALUES (1), (5), (9) AS t(tau)",
-            idiv="DIV",
-        )
+    return bind_sql(
+        spark,
+        _PINBALL_CORE,
+        customer=load_table(spark, sf_dir, "customer"),
+        taus="SELECT * FROM VALUES (1), (5), (9) AS t(tau)",
+        idiv="DIV",
     )
 
 
@@ -2387,11 +2365,12 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact ppm accuracy drop.  The two global ranks are the
     documented single-partition demo shape; the production form
     partitions the rank by a salt exactly as `global_rank` does."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r51_pi_orders"
-    )
-    return spark.sql(
-        _PERMIMP_CORE.format(orders="r51_pi_orders", str="STRING", idiv="DIV")
+    return bind_sql(
+        spark,
+        _PERMIMP_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        str="STRING",
+        idiv="DIV",
     )
 
 
@@ -2471,13 +2450,12 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-bin variance and flooring leave — an honest decomposition
     rather than one forced to balance.  Two conditional-aggregate
     scans, then ten rows."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r52_brier_events"
-    )
-    return spark.sql(
-        _BRIER_CORE.format(
-            events="r52_brier_events", big="DECIMAL(38,0)", idiv="DIV"
-        )
+    return bind_sql(
+        spark,
+        _BRIER_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        big="DECIMAL(38,0)",
+        idiv="DIV",
     )
 
 
@@ -2536,10 +2514,12 @@ def ml_forecast_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     one fixed-shape float.  The daily relation is date-span-bounded,
     so the lag self-joins are bounded work after one map-combined
     groupBy."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r53_fc_orders"
+    return bind_sql(
+        spark,
+        _FCERR_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        idiv="DIV",
     )
-    return spark.sql(_FCERR_CORE.format(orders="r53_fc_orders", idiv="DIV"))
 
 
 _FCERR_DUCK = _FCERR_CORE.format(orders="orders", idiv="//")
@@ -2631,15 +2611,14 @@ def ml_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation is anchors·n rows — the capped-sample contract; at
     100 TB the candidate set comes from the IVF buckets
     (`sim_ivf_topk`) instead of the full corpus."""
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "r55_hnm_emb"
-    )
-    return spark.sql(
-        _HNM_CORE.format(
-            emb="r55_hnm_emb", quant=_HNM_QUANT_SPARK,
-            dot=_HNM_DOT_SPARK, str="STRING",
-            valid="embedding IS NOT NULL AND NOT exists(embedding, x -> x IS NULL OR isnan(x) OR abs(x) > 1e6)",
-        )
+    return bind_sql(
+        spark,
+        _HNM_CORE,
+        emb=load_table(spark, sf_dir, "embeddings"),
+        quant=_HNM_QUANT_SPARK,
+        dot=_HNM_DOT_SPARK,
+        str="STRING",
+        valid="embedding IS NOT NULL AND NOT exists(embedding, x -> x IS NULL OR isnan(x) OR abs(x) > 1e6)",
     )
 
 
@@ -2708,28 +2687,23 @@ def embed_isotropy_participation(spark: SparkSession, sf_dir: str) -> DataFrame:
     for.  Vectors quantize to int64 milli-units over the first 16
     dims; the Gram accumulates exact integers through a 256-row
     groupBy, so everything but the final ratio is exact."""
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "r55_iso_emb"
-    )
-    return spark.sql(
-        _ISO_CORE.format(
-            emb="r55_iso_emb",
-            quant=(
-                f"transform(slice(embedding, 1, {_ISO_DIMS}), "
-                "x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-            ),
-            expand=(
-                f"LATERAL VIEW explode(sequence(1, {_ISO_DIMS})) ei AS i "
-                f"LATERAL VIEW explode(sequence(1, {_ISO_DIMS})) ej AS j"
-            ),
-            expand_i=(
-                f"LATERAL VIEW explode(sequence(1, {_ISO_DIMS})) ei AS i"
-            ),
-            ix="i - 1",
-            jx="j - 1",
-            idiv="DIV",
-            valid="embedding IS NOT NULL AND NOT exists(embedding, x -> x IS NULL OR isnan(x) OR abs(x) > 1e6)",
-        )
+    return bind_sql(
+        spark,
+        _ISO_CORE,
+        emb=load_table(spark, sf_dir, "embeddings"),
+        quant=(
+            f"transform(slice(embedding, 1, {_ISO_DIMS}), "
+            "x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
+        ),
+        expand=(
+            f"LATERAL VIEW explode(sequence(1, {_ISO_DIMS})) ei AS i "
+            f"LATERAL VIEW explode(sequence(1, {_ISO_DIMS})) ej AS j"
+        ),
+        expand_i=f"LATERAL VIEW explode(sequence(1, {_ISO_DIMS})) ei AS i",
+        ix="i - 1",
+        jx="j - 1",
+        idiv="DIV",
+        valid="embedding IS NOT NULL AND NOT exists(embedding, x -> x IS NULL OR isnan(x) OR abs(x) > 1e6)",
     )
 
 
@@ -2797,12 +2771,12 @@ def ml_threshold_youden(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid evaluates every cut at once, J in exact integer micro
     units, deterministic tie-break toward the lower threshold.  The
     same one-pass sweep shape as the exact ROC AUC op."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r55_yj_events"
-    )
-    return spark.sql(
-        _YOUDEN_CORE.format(events="r55_yj_events", idiv="DIV",
-                            grid=_SCORE_GRID_CENTS)
+    return bind_sql(
+        spark,
+        _YOUDEN_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        idiv="DIV",
+        grid=_SCORE_GRID_CENTS,
     )
 
 
@@ -2855,10 +2829,12 @@ def ml_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME integer-division means as the bins op, so the two queries
     are arithmetically consistent, not merely similar).  One
     conditional-aggregate scan, then ten rows."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r56_ece_events"
+    return bind_sql(
+        spark,
+        _ECE_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        idiv="DIV",
     )
-    return spark.sql(_ECE_CORE.format(events="r56_ece_events", idiv="DIV"))
 
 
 _ECE_DUCK = _ECE_CORE.format(events="events", idiv="//")
@@ -2902,11 +2878,12 @@ def ml_class_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized balance H/ln(k) in ppm — 1e6 means perfectly
     balanced classes.  One label groupBy; everything after is
     class-count-sized."""
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "r58_bal_emb"
-    )
-    return spark.sql(
-        _BALANCE_CORE.format(emb="r58_bal_emb", idiv="DIV", fdiv="/")
+    return bind_sql(
+        spark,
+        _BALANCE_CORE,
+        emb=load_table(spark, sf_dir, "embeddings"),
+        idiv="DIV",
+        fdiv="/",
     )
 
 

@@ -18,6 +18,7 @@ from .contract import (
     tpch_date_valid,
     tpch_date_valid_sql,
 )
+from . import bind_sql
 
 
 # ---------------------------------------------------------------------------
@@ -246,19 +247,19 @@ GROUP BY c_mktsegment
 def subquery_big_building_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    orders.createOrReplaceTempView("__sq_orders")
-    cust.createOrReplaceTempView("__sq_customer")
     # threshold derives from an exact MAX (not a float-order-dependent
     # AVG) so the filter boundary is identical in both engines
-    return spark.sql(
+    return bind_sql(
+        spark,
         """
         SELECT o_orderkey, o_custkey, o_totalprice
-        FROM __sq_orders
-        WHERE o_totalprice > (SELECT MAX(o_totalprice) * 0.5 FROM __sq_orders)
+        FROM {orders}
+        WHERE o_totalprice > (SELECT MAX(o_totalprice) * 0.5 FROM {orders})
           AND o_custkey IN (
-              SELECT c_custkey FROM __sq_customer WHERE c_mktsegment = 'BUILDING'
+              SELECT c_custkey FROM {customer} WHERE c_mktsegment = 'BUILDING'
           )
-        """
+        """,
+        orders=orders, customer=cust,
     )
 
 
@@ -406,21 +407,22 @@ def lateral_top2_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFr
     and correct, and at 100 TB the window spelling is the one to
     reach for — this plan difference is the documented reason.
     Customers with no orders are absent (inner lateral)."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("__lat_customer")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("__lat_orders")
-    return spark.sql(
+    return bind_sql(
+        spark,
         """
         SELECT c.c_custkey, t.o_orderkey, t.total_units
-        FROM __lat_customer c
+        FROM {customer} c
         JOIN LATERAL (
           SELECT o_orderkey,
                  TRY_CAST(ROUND(o_totalprice) AS BIGINT) AS total_units
-          FROM __lat_orders o
+          FROM {orders} o
           WHERE o.o_custkey = c.c_custkey
           ORDER BY o_totalprice DESC, o_orderkey
           LIMIT 2
         ) t
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from ..cache import shared, track_persist
 from ..sources.readers import load_table
 from .contract import EMB_VALID_SPARK
+from . import bind_sql
 
 
 # ---------------------------------------------------------------------------
@@ -79,13 +80,9 @@ GROUP BY label
 
 
 def sim_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView("__emb_q8")
-    return spark.sql(_QUANT_SPARK.format(emb="__emb_q8"))
-
-
-def _emb_view(spark: SparkSession, sf_dir: str, name: str) -> str:
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(name)
-    return name
+    return bind_sql(
+        spark, _QUANT_SPARK, emb=load_table(spark, sf_dir, "embeddings")
+    )
 
 
 # Spark + DuckDB fragments for vectors with norms attached. A NULL
@@ -121,7 +118,7 @@ _DUCK_DOT = (
 )
 
 
-def _vecs_view(spark: SparkSession, sf_dir: str) -> str:
+def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-shared parsed-vector relation (vec_id, label, v, n2):
     every similarity query re-ran the embedding array cast + norm
     fold per invocation (and the CTE form re-ran it per REFERENCE —
@@ -132,13 +129,10 @@ def _vecs_view(spark: SparkSession, sf_dir: str) -> str:
     First consumer pays the build inside its own timed region; keyed
     by applicationId, rebuilt from parquet every run."""
     def build():
-        emb = _emb_view(spark, sf_dir, "__emb_shared")
-        return spark.sql(_SPARK_VECS.format(emb=emb))
+        emb = load_table(spark, sf_dir, "embeddings")
+        return bind_sql(spark, _SPARK_VECS, emb=emb)
 
-    shared(spark, sf_dir, "sim_vecs", build).createOrReplaceTempView(
-        "__sim_vecs_shared"
-    )
-    return "__sim_vecs_shared"
+    return shared(spark, sf_dir, "sim_vecs", build)
 
 
 _IVF_LABELED_SPARK = """
@@ -161,25 +155,22 @@ SELECT n.*, a.cluster_id FROM n JOIN assign a ON n.vec_id = a.vec_id
 """
 
 
-def _labeled_view(spark: SparkSession, sf_dir: str) -> str:
+def _labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-shared IVF cluster assignment (the n-by-centroid
     cross-join + argmax): consumed by ``sim_ivf_topk`` AND
     ``sim_ivf_recall_eval`` (which referenced it twice more through
     its q/ivf arms). Same caching/value-identity argument as
-    ``_vecs_view``; the assignment ROW_NUMBER is fully deterministic
+    ``_vecs``; the assignment ROW_NUMBER is fully deterministic
     (cosine DESC, cent_id tie-break)."""
     def build():
-        vecs = _vecs_view(spark, sf_dir)
+        vecs = _vecs(spark, sf_dir)
         cosc = (
             _SPARK_DOT.format(a="n.v", b="cent.cv")
             + " / (sqrt(n.n2) * sqrt(cent.cn2))"
         )
-        return spark.sql(_IVF_LABELED_SPARK.format(vecs=vecs, cosc=cosc))
+        return bind_sql(spark, _IVF_LABELED_SPARK, vecs=vecs, cosc=cosc)
 
-    shared(spark, sf_dir, "ivf_labeled", build).createOrReplaceTempView(
-        "__sim_labeled_shared"
-    )
-    return "__sim_labeled_shared"
+    return shared(spark, sf_dir, "ivf_labeled", build)
 
 
 # ---------------------------------------------------------------------------
@@ -227,7 +218,7 @@ WHERE rk <= 10
 # float→double-widened values, so cosines are bit-identical in both
 # engines and at any parallelism.
 def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_BRUTE_SPARK.format(vecs=_vecs_view(spark, sf_dir)))
+    return bind_sql(spark, _BRUTE_SPARK, vecs=_vecs(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -289,9 +280,7 @@ WHERE rk <= 5
 #     (Centroid selection is pluggable; here a modulo sample keeps the
 #     operator deterministic and oracle-checkable.)
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(
-        _IVF_SPARK.format(labeled=_labeled_view(spark, sf_dir))
-    )
+    return bind_sql(spark, _IVF_SPARK, labeled=_labeled(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -325,9 +314,7 @@ GROUP BY label
 
 
 def sim_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(
-        _NORMSTATS_SPARK.format(vecs=_vecs_view(spark, sf_dir))
-    )
+    return bind_sql(spark, _NORMSTATS_SPARK, vecs=_vecs(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -382,7 +369,7 @@ GROUP BY bucket
 
 
 def sim_rp_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_RP_SPARK.format(vecs=_vecs_view(spark, sf_dir)))
+    return bind_sql(spark, _RP_SPARK, vecs=_vecs(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -587,8 +574,9 @@ def sim_product_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, oracle-checkable). Output: per-(subspace, code)
     population and total integer distortion. The codebook is k×d rows
     broadcast; the corpus is touched once."""
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView("__emb_pq")
-    return spark.sql(_PQ_SPARK.format(emb="__emb_pq"))
+    return bind_sql(
+        spark, _PQ_SPARK, emb=load_table(spark, sf_dir, "embeddings")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -682,10 +670,9 @@ def sim_batch_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     as exact integer HOF folds, each cosine floored to micro units
     before the summary aggregate. At fleet scale the sample size, not
     the corpus, bounds the pairwise work."""
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "r21_div_emb"
+    return bind_sql(
+        spark, _DIV_SPARK, emb=load_table(spark, sf_dir, "embeddings")
     )
-    return spark.sql(_DIV_SPARK.format(emb="r21_div_emb"))
 
 
 # ---------------------------------------------------------------------------
@@ -800,12 +787,13 @@ def sim_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     overhead each; the collected form runs the corpus pass once plus
     one 240-row job."""
     # round 11: the corpus parse comes from the session-shared vector
-    # relation (similarity._vecs_view) instead of re-deriving it here
+    # relation (``_vecs``) instead of re-deriving it here
 
-    vecs = _vecs_view(spark, sf_dir)
     cands = track_persist(
-        spark.sql(
-            _mmr_cands_sql(f"SELECT * FROM {vecs}", _SPARK_DOT)
+        bind_sql(
+            spark,
+            _mmr_cands_sql("SELECT * FROM {vecs}", _SPARK_DOT),
+            vecs=_vecs(spark, sf_dir),
         )
     )
     # pair composes over the cands DATAFRAME (not a view of it):
@@ -987,19 +975,19 @@ def sim_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact; the output itself is pure integers.
 
     Round 11 (guide §2.4): consumes the session-shared parsed-vector
-    and IVF-assignment relations (``similarity._vecs_view`` /
-    ``_labeled_view``) instead of re-deriving both inline — the CTE
+    and IVF-assignment relations (``_vecs`` /
+    ``_labeled``) instead of re-deriving both inline — the CTE
     form recomputed the embedding parse ~5x and the n-by-centroid
     assignment twice per call (Spark inlines CTE references). Same
     per-row-deterministic expressions, so values are identical; the
     DuckDB oracle still spells out the full derivation."""
-    labeled = _labeled_view(spark, sf_dir)
-    vecs = _vecs_view(spark, sf_dir)
+    labeled = _labeled(spark, sf_dir)
+    vecs = _vecs(spark, sf_dir)
     cosq = (
         _SPARK_DOT.format(a="q.v", b="c.v") + " / (sqrt(q.n2) * sqrt(c.n2))"
     )
-    return spark.sql(
-        _RECALL_SPARK.format(labeled=labeled, vecs=vecs, cosq=cosq)
+    return bind_sql(
+        spark, _RECALL_SPARK, labeled=labeled, vecs=vecs, cosq=cosq
     )
 
 

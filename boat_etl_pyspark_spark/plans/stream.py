@@ -22,6 +22,7 @@ from ..streaming.events import (
     stream_dir_multi,
 )
 from .contract import EV_TIME_HI_US, EV_TIME_LO_US, ts_valid, ts_valid_sql
+from . import bind_sql
 
 
 _GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap
@@ -1236,18 +1237,16 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = run_stream_to_memory(win, "append")
     s2 = sink.sparkSession
-    sink.createOrReplaceTempView("sl2_audit_sink")
-    load_table(s2, sf_dir, "events").createOrReplaceTempView(
-        "sl2_audit_events"
+    template = "WITH " + _AUDIT_CORE.replace(
+        "{sink}", _SINK_SPARK.format(table="{emitted}")
     )
-    return s2.sql(
-        "WITH "
-        + _AUDIT_CORE.format(
-            events="sl2_audit_events",
-            epoch_us="unix_micros(ts)",
-            idiv="DIV",
-            sink=_SINK_SPARK.format(table="sl2_audit_sink"),
-        )
+    return bind_sql(
+        s2,
+        template,
+        events=load_table(s2, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
+        idiv="DIV",
+        emitted=sink,
     )
 
 

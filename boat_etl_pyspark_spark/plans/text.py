@@ -14,11 +14,7 @@ from ..operators.library import global_rank
 from ..sources.readers import load_table
 from .contract import TEXT_VALID_DUCK, text_valid
 from .textdedup import _DUCK_SHINGLES, _shingle_sets
-
-
-def _docs_view(spark: SparkSession, sf_dir: str, name: str) -> str:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(name)
-    return name
+from . import bind_sql
 
 
 # ---------------------------------------------------------------------------
@@ -33,10 +29,10 @@ _CHUNK, _STRIDE = 32, 24  # 32-token chunks, 8-token overlap
 # slice + explode — so it scales as a map-only stage.
 def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("__chunk_docs")
-    return spark.sql(
+    return bind_sql(
+        spark,
         f"""
-        WITH t AS (SELECT doc_id, split(text, ' ') AS toks FROM __chunk_docs),
+        WITH t AS (SELECT doc_id, split(text, ' ') AS toks FROM {{docs}}),
         c AS (
           SELECT doc_id,
                  posexplode(transform(
@@ -49,7 +45,8 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(size(split(chunk, ' ')) AS BIGINT) AS chunk_tokens
         FROM c
         WHERE chunk != ''
-        """
+        """,
+        docs=docs,
     )
 
 
@@ -104,8 +101,8 @@ FROM (SELECT doc_id, lang, source, text, string_split(text, ' ') AS t FROM docum
 
 
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_view(spark, sf_dir, "__docs_ts")
-    return spark.sql(_TOKSTATS_SPARK.format(docs=docs))
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(spark, _TOKSTATS_SPARK, docs=docs)
 
 
 # ---------------------------------------------------------------------------
@@ -140,8 +137,8 @@ FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents WHERE text IS N
 
 
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_view(spark, sf_dir, "__docs_q")
-    return spark.sql(_QUALITY_SPARK.format(docs=docs))
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(spark, _QUALITY_SPARK, docs=docs)
 
 
 # ---------------------------------------------------------------------------
@@ -194,8 +191,8 @@ GROUP BY lang, {_LANGID_CASE}
 
 
 def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_view(spark, sf_dir, "__docs_li")
-    return spark.sql(_LANGID_SPARK.format(docs=docs))
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(spark, _LANGID_SPARK, docs=docs)
 
 
 # ---------------------------------------------------------------------------
@@ -203,7 +200,7 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _FP_SPARK = """
-WITH sh AS ({shingles})
+WITH sh AS (SELECT * FROM {shingles})
 SELECT d.doc_id,
        md5(trim(regexp_replace(lower(d.text), ' +', ' '))) AS fp_md5,
        md5(concat_ws(',', slice(array_sort(transform(sh.s, x -> md5(x))), 1, 3))) AS fp_kmin,
@@ -235,28 +232,29 @@ WHERE d.text IS NOT NULL
 
 
 def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_view(spark, sf_dir, "__docs_fp")
-    _shingle_sets(spark, sf_dir).createOrReplaceTempView("__fp_sh")
-    return spark.sql(
-        _FP_SPARK.format(shingles="SELECT * FROM __fp_sh", docs=docs)
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(
+        spark, _FP_SPARK, shingles=_shingle_sets(spark, sf_dir), docs=docs
     )
 
 
 def text_stopword_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword filtering as a map-only column expression: tokens
     dropped against a broadcast-literal stoplist, text reassembled."""
-    docs = _docs_view(spark, sf_dir, "__docs_sw")
-    return spark.sql(
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(
+        spark,
         f"""
         SELECT doc_id,
                CAST(size(t) - size(kept) AS BIGINT) AS n_removed,
                concat_ws(' ', kept) AS clean_text
         FROM (
           SELECT doc_id, t, filter(t, x -> x NOT IN {_STOPWORDS}) AS kept
-          FROM (SELECT doc_id, split(text, ' ') AS t FROM {docs}
+          FROM (SELECT doc_id, split(text, ' ') AS t FROM {{docs}}
                 WHERE text IS NOT NULL)
         )
-        """
+        """,
+        docs=docs,
     )
 
 
@@ -276,18 +274,19 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF with exact integer term/document frequencies and a
     smoothed idf; top-3 terms per document. One shuffle for the
     per-(doc, term) counts, a broadcast for the term df table."""
-    docs = _docs_view(spark, sf_dir, "__docs_tfidf")
-    return spark.sql(
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(
+        spark,
         f"""
         WITH tok AS (
-          SELECT doc_id, explode(split(text, ' ')) AS tok FROM {docs}
+          SELECT doc_id, explode(split(text, ' ')) AS tok FROM {{docs}}
         ),
         tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tok GROUP BY doc_id, tok),
         -- df derives from tf (one row per (doc, term)), not from tok:
         -- a second pass over the raw token stream would re-tokenize
         -- every document (CTEs are not materialized)
         df AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY tok),
-        n AS (SELECT COUNT(*) AS n_docs FROM {docs}),
+        n AS (SELECT COUNT(*) AS n_docs FROM {{docs}}),
         scored AS (
           SELECT tf.doc_id, tf.tok AS term, tf.tf, df.df,
                  tf.tf * ln((n.n_docs + 1.0) / (df.df + 1.0)) AS score
@@ -300,7 +299,8 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM scored
         )
         WHERE rk <= 3
-        """
+        """,
+        docs=docs,
     )
 
 
@@ -334,14 +334,16 @@ def text_keyword_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the built-in posexplode+filter form (the UDTF equivalence test in
     tests/test_udtf.py drives the same semantics through a Python
     UDTF, which stays off the contract hot path by design)."""
-    docs = _docs_view(spark, sf_dir, "__docs_ks")
-    return spark.sql(
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(
+        spark,
         f"""
         SELECT doc_id, tok AS keyword, CAST(pos AS BIGINT) AS position
-        FROM {docs}
+        FROM {{docs}}
         LATERAL VIEW posexplode(split(text, ' ')) e AS pos, tok
         WHERE tok IN {_KEYWORDS}
-        """
+        """,
+        docs=docs,
     )
 
 
@@ -382,16 +384,17 @@ def text_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     index is skew-proof and bucket joins stay bounded); only candidate
     pairs compute the exact intersection. Scores are integer ppm —
     exact in both engines.""".format(cap=_DF_CAP)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("__cont_docs")
-    sets = spark.sql(
+    sets = bind_sql(
+        spark,
         """
         SELECT doc_id,
                array_distinct(transform(sequence(1, greatest(size(t) - 4, 1)),
                    i -> concat_ws(' ', element_at(t, i), element_at(t, i + 1),
                                   element_at(t, i + 2), element_at(t, i + 3),
                                   element_at(t, i + 4)))) AS s
-        FROM (SELECT doc_id, split(text, ' ') AS t FROM __cont_docs)
-        """
+        FROM (SELECT doc_id, split(text, ' ') AS t FROM {docs})
+        """,
+        docs=load_table(spark, sf_dir, "documents"),
     )
     sets = track_persist(sets)
     inv = sets.select("doc_id", F.explode("s").alias("gram"))
@@ -845,8 +848,8 @@ def text_bigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer ppm. The frequency table is itself a one-shuffle count;
     the score join ships (bigram, f) pairs — no document bodies move
     after the initial tokenize."""
-    docs = _docs_view(spark, sf_dir, "__docs_bigram")
-    return spark.sql(_BIGRAM_SPARK.format(docs=docs))
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(spark, _BIGRAM_SPARK, docs=docs)
 
 
 # ---------------------------------------------------------------------------
@@ -904,8 +907,8 @@ def text_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract.TEXT_MAX_TOKEN (512, pinned by the hygiene test) are
     corrupt ingest (minified blobs, not words) and are excluded
     symmetrically — they'd mint a linear-in-length pair stream each."""
-    docs = _docs_view(spark, sf_dir, "__docs_bpe")
-    return spark.sql(_BPE_SPARK.format(docs=docs))
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(spark, _BPE_SPARK, docs=docs)
 
 
 # ---------------------------------------------------------------------------
@@ -993,12 +996,11 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary. Floored integer ppm keeps the sum associative; the
     per-language expansion is |vocab| x |langs| rows of three BIGINTs
     — bounded by vocabulary, not corpus size."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("__docs_div")
+    docs = load_table(spark, sf_dir, "documents")
     counts = track_persist(
-        spark.sql(_DIVERGENCE_COUNTS_SPARK.format(docs="__docs_div"))
+        bind_sql(spark, _DIVERGENCE_COUNTS_SPARK, docs=docs)
     )
-    counts.createOrReplaceTempView("__docs_div_counts")
-    return spark.sql(_DIVERGENCE_SPARK.format(counts="__docs_div_counts"))
+    return bind_sql(spark, _DIVERGENCE_SPARK, counts=counts)
 
 
 # ---------------------------------------------------------------------------
@@ -1151,8 +1153,8 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row projection — zero exchanges, whole-stage codegen end to
     end; the sentence fallback (ceil(words/15)) keeps the score
     defined on unpunctuated corpora like this fixture."""
-    docs = _docs_view(spark, sf_dir, "textlm_readability_docs")
-    return spark.sql(_READABILITY_SPARK.format(docs=docs))
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(spark, _READABILITY_SPARK, docs=docs)
 
 
 # ---------------------------------------------------------------------------
@@ -1249,8 +1251,8 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite op). Spark's unordered ``collect_list`` is made
     deterministic with an (idx, block) struct sort; the oracle uses
     DuckDB's ordered-filtered ``list`` aggregate."""
-    docs = _docs_view(spark, sf_dir, "textlm_boiler_docs")
-    return spark.sql(_BOILER_SPARK.format(docs=docs))
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(spark, _BOILER_SPARK, docs=docs)
 
 
 # ---------------------------------------------------------------------------
@@ -1309,8 +1311,8 @@ def text_entropy_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus a per-source rollup. The per-term expression is written with
     p multiplied before ln so both engines evaluate the identical
     double tree."""
-    docs = _docs_view(spark, sf_dir, "textlm_entropy_docs")
-    return spark.sql(_ENTROPY_SPARK.format(docs=docs))
+    docs = load_table(spark, sf_dir, "documents")
+    return bind_sql(spark, _ENTROPY_SPARK, docs=docs)
 
 
 # ---------------------------------------------------------------------------
@@ -1512,10 +1514,9 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs one corpus pass plus windows over two ≤10-row relations —
     the sub-linear-vocabulary (Heaps) diagnostic without re-scanning
     any prefix."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r21_heaps_docs"
+    return bind_sql(
+        spark, _HEAPS_SPARK, docs=load_table(spark, sf_dir, "documents")
     )
-    return spark.sql(_HEAPS_SPARK.format(docs="r21_heaps_docs"))
 
 
 # ---------------------------------------------------------------------------
@@ -1609,10 +1610,9 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle plus its w1 rollup; scoring joins ship word pairs and
     counts, never document bodies. Sources whose text is templated
     score low; incoherent sources score high."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r27_blm_docs"
+    return bind_sql(
+        spark, _BLM_SPARK, docs=load_table(spark, sf_dir, "documents")
     )
-    return spark.sql(_BLM_SPARK.format(docs="r27_blm_docs"))
 
 
 # ---------------------------------------------------------------------------
@@ -1721,15 +1721,9 @@ def text_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated-hash test and the coverage join consume it (as a CTE
     the tokenize+hash explode ran twice — measured 2.6s → ~1.6s
     warm at sf0.1)."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r29_ssd_docs"
-    )
-    track_persist(
-        spark.sql(_SSD_SPANS_SPARK.format(docs="r29_ssd_docs"))
-    ).createOrReplaceTempView("r29_ssd_spans")
-    return spark.sql(
-        _SSD_SPARK.format(docs="r29_ssd_docs", spans="r29_ssd_spans")
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    spans = track_persist(bind_sql(spark, _SSD_SPANS_SPARK, docs=docs))
+    return bind_sql(spark, _SSD_SPARK, docs=docs, spans=spans)
 
 
 # ---------------------------------------------------------------------------
@@ -1790,19 +1784,18 @@ def text_mattr(spark: SparkSession, sf_dir: str) -> DataFrame:
     count never exceeds the token count, so the 100 TB cost equals
     any other tokenize-and-aggregate scoring op. Integer micros via
     exact integer arithmetic end to end (no floats anywhere)."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "ts3_mattr_docs"
-    )
-    spark.sql(
+    tok = bind_sql(
+        spark,
         """
         SELECT doc_id, t[i - 1] AS token, i, size(t) AS n
         FROM (SELECT doc_id, filter(split(text, ' '), x -> x != '') AS t
-              FROM ts3_mattr_docs)
+              FROM {docs})
         LATERAL VIEW explode(sequence(1, size(t))) e AS i
         WHERE size(t) > 0
-        """
-    ).createOrReplaceTempView("ts3_mattr_tok")
-    return spark.sql(_MATTR_CORE.format(tok="ts3_mattr_tok", idiv="DIV"))
+        """,
+        docs=load_table(spark, sf_dir, "documents"),
+    )
+    return bind_sql(spark, _MATTR_CORE, tok=tok, idiv="DIV")
 
 
 _MATTR_DUCK = (
@@ -1860,23 +1853,20 @@ def text_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial counts (map-side combined), not gram instances — the
     same scaling contract as the unigram repetition op, one
     n-gram-explode heavier."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "ts3_dng_docs"
-    )
-    spark.sql(
+    grams = bind_sql(
+        spark,
         f"""
         SELECT doc_id,
                concat_ws(' ', t[i - 1], t[i], t[i + 1]) AS gram
         FROM (SELECT doc_id, filter(split(text, ' '), x -> x != '') AS t
-              FROM ts3_dng_docs)
+              FROM {{docs}})
         LATERAL VIEW explode(sequence(1, size(t) - {_DNG_N} + 1)) e AS i
         WHERE size(t) >= {_DNG_N}
-        """
-    ).createOrReplaceTempView("ts3_dng_grams")
-    return spark.sql(
-        _DNG_CORE.format(
-            grams="ts3_dng_grams", strlen="length(gram)", idiv="DIV"
-        )
+        """,
+        docs=load_table(spark, sf_dir, "documents"),
+    )
+    return bind_sql(
+        spark, _DNG_CORE, grams=grams, strlen="length(gram)", idiv="DIV"
     )
 
 
@@ -1948,34 +1938,25 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two map-combined gram counts; the unigram side is vocabulary-
     sized and broadcast into the bigram join — at 100 TB the bigram
     count shuffles hashed grams only, never document bodies."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r50_pmi_docs"
+    words = load_table(spark, sf_dir, "documents").selectExpr(
+        "filter(split(text, ' '), x -> x != '') AS t"
     )
-    spark.sql(
-        """
-        SELECT filter(split(text, ' '), x -> x != '') AS t
-        FROM r50_pmi_docs
-        """
-    ).createOrReplaceTempView("r50_pmi_words")
-    spark.sql(
-        """
-        SELECT explode(t) AS tok FROM r50_pmi_words
-        """
-    ).createOrReplaceTempView("r50_pmi_uni")
-    spark.sql(
+    bigrams = bind_sql(
+        spark,
         """
         SELECT concat_ws(' ', t[i - 1], t[i]) AS gram,
                t[i - 1] AS left_tok, t[i] AS right_tok
-        FROM r50_pmi_words
+        FROM {words}
         LATERAL VIEW explode(sequence(1, size(t) - 1)) e AS i
         WHERE size(t) >= 2
-        """
-    ).createOrReplaceTempView("r50_pmi_big")
-    return spark.sql(
-        _PMI_CORE.format(
-            unigrams="r50_pmi_uni",
-            bigrams="r50_pmi_big",
-        )
+        """,
+        words=words,
+    )
+    return bind_sql(
+        spark,
+        _PMI_CORE,
+        unigrams=words.selectExpr("explode(t) AS tok"),
+        bigrams=bigrams,
     )
 
 
@@ -2035,21 +2016,20 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios are integer milli units (integer division), so the output
     is engine-exact.  One map-side projection + one 5-row groupBy —
     nothing but per-language counters shuffles at any scale."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r51_fert_docs"
-    )
-    spark.sql(
+    per_doc = bind_sql(
+        spark,
         f"""
         SELECT lang,
                size(filter(split(text, ' '), x -> x != '')) AS words,
                size(regexp_extract_all(text, '{_TOKEN_RE}', 0)) AS bpeish,
                length(text) AS chars
-        FROM r51_fert_docs
+        FROM {{docs}}
         WHERE text IS NOT NULL
-        """
-    ).createOrReplaceTempView("r51_fert_per_doc")
-    return spark.sql(
-        _FERTILITY_CORE.format(per_doc="r51_fert_per_doc", idiv="DIV")
+        """,
+        docs=load_table(spark, sf_dir, "documents"),
+    )
+    return bind_sql(
+        spark, _FERTILITY_CORE, per_doc=per_doc, idiv="DIV"
     )
 
 
@@ -2131,17 +2111,16 @@ def text_keyness_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary extractor behind corpus dataset cards.  One token
     count shuffle; source and token totals re-aggregate from the
     counted relation, never the corpus."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r52_key_docs"
-    )
-    spark.sql(
+    toks = bind_sql(
+        spark,
         """
         SELECT source, explode(filter(split(text, ' '), x -> x != ''))
           AS tok
-        FROM r52_key_docs
-        """
-    ).createOrReplaceTempView("r52_key_toks")
-    return spark.sql(_KEYNESS_CORE.format(toks="r52_key_toks"))
+        FROM {docs}
+        """,
+        docs=load_table(spark, sf_dir, "documents"),
+    )
+    return bind_sql(spark, _KEYNESS_CORE, toks=toks)
 
 
 _KEYNESS_DUCK = _KEYNESS_CORE.format(

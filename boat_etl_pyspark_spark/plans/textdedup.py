@@ -44,9 +44,10 @@ from ..sources.readers import load_table
 
 # Kept for perfbench/client.py, which reads ``textdedup._SHARED``.
 from ..cache import _SHARED  # noqa: F401
+from . import bind_sql
 
 
-def _docs_wide_view(spark: SparkSession, sf_dir: str, name: str) -> str:
+def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents repartitioned to full parallelism for expression-heavy
     per-doc pipelines. The fixture files are single-row-group parquet,
     so they scan as ONE input partition and any compute placed before
@@ -55,19 +56,17 @@ def _docs_wide_view(spark: SparkSession, sf_dir: str, name: str) -> str:
     repartition shuffles only the slim base table. At cluster scale
     the same guard covers the few-huge-files layout where splits are
     capped by row-group boundaries."""
-    docs = load_table(spark, sf_dir, "documents").repartition(
+    return load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    docs.createOrReplaceTempView(name)
-    return name
 
 
 def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted (doc_id, lang, source, s=3-gram set) — shared by every
     shingle-consuming operator in the session."""
     def build():
-        docs = _docs_wide_view(spark, sf_dir, "__docs_shared_sh")
-        return spark.sql(_SPARK_SHINGLES.format(docs=docs))
+        docs = _docs_wide(spark, sf_dir)
+        return bind_sql(spark, _SPARK_SHINGLES, docs=docs)
 
     return shared(spark, sf_dir, "shingles3", build)
 
@@ -140,7 +139,7 @@ def _minhash_signatures(sh: DataFrame) -> DataFrame:
     higher-order-function lambdas interpreted): explode the set, hash
     each shingle once, and take the 12 permuted minima in one
     aggregate per doc. ``sh`` is hash-partitioned on doc_id
-    (``_docs_wide_view``), so the aggregate plans with no exchange.
+    (``_docs_wide``), so the aggregate plans with no exchange.
 
     Exactly the oracle's ``list_min(list_transform(...))``: the
     arithmetic is integer-only (A <= 16381 and h0 < 2^31, so every
@@ -301,14 +300,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted 5-gram index (df cap 20 kills hot shingles, so no
     skewed join key) -> candidate pairs -> exact 3-gram Jaccard over
     the session-shared shingle sets."""
-    docs = _docs_wide_view(spark, sf_dir, "__docs_ng")
+    docs = _docs_wide(spark, sf_dir)
     # ONE shuffle: group the inverted index into per-gram postings,
     # keep buckets with 2..20 docs (the df cap), and emit candidate
     # pairs directly from each tiny bucket with an expression-level
     # pair comprehension. df=1 grams (the vast majority) die in the
     # aggregation; no index self-join, no second shuffle of the index.
     cand = (
-        spark.sql(_NGRAM_INV_SPARK.format(docs=docs))
+        bind_sql(spark, _NGRAM_INV_SPARK, docs=docs)
         .groupBy("gram")
         .agg(F.collect_list("doc_id").alias("ds"))
         .where((F.size("ds") >= 2) & (F.size("ds") <= 20))
@@ -389,8 +388,8 @@ GROUP BY doc_id
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_wide_view(spark, sf_dir, "__docs_sh")
-    return spark.sql(_SIMHASH_SPARK.format(docs=docs))
+    docs = _docs_wide(spark, sf_dir)
+    return bind_sql(spark, _SIMHASH_SPARK, docs=docs)
 
 
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -738,22 +737,22 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     bag-of-words document embedding, with centered sign-LSH banding as
     the candidate generator (see block comment above)."""
     def build_dims():
-        docs = _docs_wide_view(spark, sf_dir, "__docs_ec")
-        return spark.sql(_EMBCOS_DIMS_SPARK.format(docs=docs))
+        docs = _docs_wide(spark, sf_dir)
+        return bind_sql(spark, _EMBCOS_DIMS_SPARK, docs=docs)
 
     dims = shared(spark, sf_dir, "embcos_dims", build_dims)
-    dims.createOrReplaceTempView("__ec_dims")
 
     def build_bands():
-        return spark.sql(_EMBCOS_BANDS_SPARK.format(dims="__ec_dims"))
+        return bind_sql(spark, _EMBCOS_BANDS_SPARK, dims=dims)
 
     bands = shared(spark, sf_dir, "embcos_bands", build_bands)
-    bands.createOrReplaceTempView("__ec_bands")
 
     def build_vecs():
-        return spark.sql(
+        return bind_sql(
+            spark,
             "SELECT doc_id, map_from_entries(collect_list(struct(d, c))) AS m, "
-            "SUM(c * c) AS n2 FROM __ec_dims GROUP BY doc_id"
+            "SUM(c * c) AS n2 FROM {dims} GROUP BY doc_id",
+            dims=dims,
         )
 
     vecs = shared(spark, sf_dir, "embcos_vecs", build_vecs)
@@ -891,9 +890,9 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(sh.select("doc_id", "s"), "doc_id")
             .withColumn("mh", F.array(*[f"m{i}" for i in range(len(_MH_A))]))
         )
-        sig.createOrReplaceTempView("__calib_sig")
-        _minhash_bands(sig).createOrReplaceTempView("__calib_bands")
-        return spark.sql(_CALIB_SPARK.format(sig="__calib_sig", bands="__calib_bands"))
+        return bind_sql(
+            spark, _CALIB_SPARK, sig=sig, bands=_minhash_bands(sig)
+        )
 
     return shared(spark, sf_dir, "minhash_calibration", build)
 

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from ..functions.numeric import cents, money_avg, money_sum
 from ..sources.readers import load_table
 from .contract import money_bounded_sql, qty_bounded_sql, rate_bounded_sql
+from . import bind_sql
 
 
 def _fmt_day(col):
@@ -279,12 +280,13 @@ GROUP BY p_brand, p_type
 #   * q22-style anti-join with scalar-subquery threshold
 def q22_dormant_positive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
-    cust.createOrReplaceTempView("__q22_cust")
     recent = load_table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.to_timestamp(F.lit("2000-01-01"))
     )
-    threshold = spark.sql(
-        "SELECT MAX(c_acctbal) * 0.2 AS t FROM __q22_cust WHERE c_acctbal > 0"
+    threshold = bind_sql(
+        spark,
+        "SELECT MAX(c_acctbal) * 0.2 AS t FROM {cust} WHERE c_acctbal > 0",
+        cust=cust,
     )
     rich = cust.join(F.broadcast(threshold)).where(F.col("c_acctbal") > F.col("t"))
     return (

@@ -18,6 +18,7 @@ from .contract import (
     tpch_date_valid_sql,
     value_bounded,
 )
+from . import bind_sql
 
 
 # ---------------------------------------------------------------------------
@@ -447,16 +448,13 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     division. ONE fact scan; every window runs over the tiny daily
     relation. Day index anchors at 1990-01-01 (a Monday), so
     ``di % 7 + 1`` is the ISO weekday."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r28_sd_orders"
-    )
-    return spark.sql(
-        _SD_CORE.format(
-            orders="r28_sd_orders",
-            dayidx="datediff(CAST(o_orderdate AS DATE), DATE '1990-01-01')",
-            big="DECIMAL(38,0)",
-            idiv="DIV",
-        )
+    return bind_sql(
+        spark,
+        _SD_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        dayidx="datediff(CAST(o_orderdate AS DATE), DATE '1990-01-01')",
+        big="DECIMAL(38,0)",
+        idiv="DIV",
     )
 
 
@@ -510,13 +508,12 @@ def ts_circular_time_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning-independent; atan2/sqrt run once per group on the
     summed integers. Resultant near 0 = activity spread around the
     clock; near 1e6 = concentrated at one time."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r36_circ_events"
-    )
-    return spark.sql(
-        _CIRC_CORE.format(events="r36_circ_events",
-                          epoch_us="unix_micros(ts)",
-                          big="DECIMAL(38,0)")
+    return bind_sql(
+        spark,
+        _CIRC_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
+        big="DECIMAL(38,0)",
     )
 
 
@@ -572,17 +569,14 @@ def ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos/sin terms are micro-floored before exact integer sums
     (order-independent), and the power square runs in DECIMAL(38,0)
     so no precision is lost before the final micro division."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r38_pg_events"
-    )
-    return spark.sql(
-        _PG_CORE.format(
-            events="r38_pg_events",
-            epoch_us="unix_micros(ts)",
-            idiv="DIV",
-            big="DECIMAL(38,0)",
-            lat=f"LATERAL VIEW explode(sequence(1, {_PG_KMAX})) tk AS k",
-        )
+    return bind_sql(
+        spark,
+        _PG_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
+        idiv="DIV",
+        big="DECIMAL(38,0)",
+        lat=f"LATERAL VIEW explode(sequence(1, {_PG_KMAX})) tk AS k",
     )
 
 
@@ -662,15 +656,12 @@ def ts_lead_lag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact integers — the three coefficients are fixed-shape
     floats micro-floored at the end. The triage query behind 'should
     the forecasting model include the other series as a feature'."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r48_xcorr_events"
-    )
-    return spark.sql(
-        _XCORR_CORE.format(
-            events="r48_xcorr_events",
-            epoch_us="unix_micros(ts)",
-            idiv="DIV",
-        )
+    return bind_sql(
+        spark,
+        _XCORR_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
+        idiv="DIV",
     )
 
 
@@ -736,15 +727,12 @@ def ts_exponential_fit_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the observation span, and the cumsum runs over that
     bounded relation — the 'is this arrival process Poisson' check
     that decides whether a rate-spike alert threshold is valid."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r51_exp_events"
-    )
-    return spark.sql(
-        _EXPFIT_CORE.format(
-            events="r51_exp_events",
-            ts_us="unix_micros(ts)",
-            idiv="DIV",
-        )
+    return bind_sql(
+        spark,
+        _EXPFIT_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        ts_us="unix_micros(ts)",
+        idiv="DIV",
     )
 
 
@@ -813,10 +801,12 @@ def ts_extreme_value_gumbel(spark: SparkSession, sf_dir: str) -> DataFrame:
     peak is expected to reach.  Block maxima and the two power sums
     are exact integers; the fit is a handful of fixed-shape floats.
     The daily and weekly relations are date-span-bounded."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r54_ev_orders"
+    return bind_sql(
+        spark,
+        _GUMBEL_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        idiv="DIV",
     )
-    return spark.sql(_GUMBEL_CORE.format(orders="r54_ev_orders", idiv="DIV"))
 
 
 _GUMBEL_DUCK = _GUMBEL_CORE.format(orders="orders", idiv="//")
@@ -892,17 +882,14 @@ def ts_ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     asymptotic EWMA deviation σ·√(α/(2−α)) = σ/√3 from exact power
     sums; the -1/0/+1 flag compares integers against the floored
     limits."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r56_ewcc_events"
-    )
-    return spark.sql(
-        _EWMACC_CORE.format(
-            events="r56_ewcc_events",
-            epoch_us="unix_micros(ts)",
-            idiv="DIV",
-            shr="shiftright(b.x * 1000, CAST(a.i - b.i + 1 AS INT))",
-            shr_init="shiftright(b.x * 1000, CAST(a.i - 1 AS INT))",
-        )
+    return bind_sql(
+        spark,
+        _EWMACC_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
+        idiv="DIV",
+        shr="shiftright(b.x * 1000, CAST(a.i - b.i + 1 AS INT))",
+        shr_init="shiftright(b.x * 1000, CAST(a.i - 1 AS INT))",
     )
 
 
@@ -1011,12 +998,13 @@ def ts_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     DOUBLE literals, no float SUM whose order an engine could
     choose.  The daily relation is date-span-bounded; the 4× block
     expansion stays bounded with it."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r57_hurst_orders"
-    )
     ms = " UNION ALL ".join(f"SELECT {m} AS m" for m in _HURST_MS)
-    return spark.sql(
-        _HURST_CORE.format(orders="r57_hurst_orders", ms=ms, idiv="DIV")
+    return bind_sql(
+        spark,
+        _HURST_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        ms=ms,
+        idiv="DIV",
     )
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from ..functions.numeric import cents
 from ..sources.readers import load_table
 from .contract import money_rounded_sql
+from . import bind_sql
 
 
 # ---------------------------------------------------------------------------
@@ -324,10 +325,9 @@ def validate_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals are windows over the 10-row bucket relation (never a
     second fact pass). ln() is the same libm double in
     both engines — verified bit-identical earlier in this repo."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r20_psi_orders"
+    return bind_sql(
+        spark, _PSI_CORE, orders=load_table(spark, sf_dir, "orders"), div="DIV"
     )
-    return spark.sql(_PSI_CORE.format(orders="r20_psi_orders", div="DIV"))
 
 
 _PSI_DUCK = _PSI_CORE.format(orders="orders", div="//")
@@ -492,18 +492,15 @@ def validate_fold_dup_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     fix, which is exactly how production folding should key. One
     signature groupBy; only 5-token signatures shuffle, never
     bodies."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r49_leak_docs"
-    )
-    return spark.sql(
-        _LEAK_CORE.format(
-            docs="r49_leak_docs",
-            sig=(
-                f"array_join(slice(filter(split(text, ' '), x -> x != ''),"
-                f" 1, {_SIG_TOKENS}), ' ')"
-            ),
-            hexint="CAST(conv(substring(md5(sig), 1, 12), 16, 10) AS BIGINT)",
-        )
+    return bind_sql(
+        spark,
+        _LEAK_CORE,
+        docs=load_table(spark, sf_dir, "documents"),
+        sig=(
+            f"array_join(slice(filter(split(text, ' '), x -> x != ''),"
+            f" 1, {_SIG_TOKENS}), ' ')"
+        ),
+        hexint="CAST(conv(substring(md5(sig), 1, 12), 16, 10) AS BIGINT)",
     )
 
 
@@ -551,20 +548,18 @@ def validate_key_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per column group; at 100 TB the same query swaps in
     approx_count_distinct (HLL) per the documented sketch contract
     (`agg_approx_sketches`), trading exactness for a single pass."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r51_keys_orders"
+    stacked = (
+        "SELECT stack(4, "
+        "'o_orderkey', CAST(o_orderkey AS STRING), "
+        "'o_custkey', CAST(o_custkey AS STRING), "
+        "'o_orderdate', CAST(CAST(o_orderdate AS DATE) AS STRING), "
+        "'o_orderpriority', o_orderpriority) AS (col_name, v) "
+        "FROM {orders}"
     )
-    return spark.sql(
-        _KEYS_CORE.format(
-            stacked=(
-                "SELECT stack(4, "
-                "'o_orderkey', CAST(o_orderkey AS STRING), "
-                "'o_custkey', CAST(o_custkey AS STRING), "
-                "'o_orderdate', CAST(CAST(o_orderdate AS DATE) AS STRING), "
-                "'o_orderpriority', o_orderpriority) AS (col_name, v) "
-                "FROM r51_keys_orders"
-            )
-        )
+    return bind_sql(
+        spark,
+        _KEYS_CORE.format(stacked=stacked),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -630,15 +625,12 @@ def validate_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     while DuckDB's HUGEINT→BIGINT cast errors — a divergent failure
     mode for the one op whose job is cross-snapshot integrity.  One
     map-side projection + one aggregate."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r52_cks_orders"
-    )
-    return spark.sql(
-        _CKS_CORE.format(
-            orders="r52_cks_orders",
-            str="STRING",
-            hexint="CAST(conv(substring(m, 1, 12), 16, 10) AS BIGINT)",
-        )
+    return bind_sql(
+        spark,
+        _CKS_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        str="STRING",
+        hexint="CAST(conv(substring(m, 1, 12), 16, 10) AS BIGINT)",
     )
 
 
@@ -706,13 +698,12 @@ def validate_drift_adversarial(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative window over the bounded distinct-cents grid, integer
     to the final ppm division.  The PSI test (`validate_drift_psi`)
     bins first; this one is bin-free and detects any rank shift."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r57_drift_orders"
-    )
-    return spark.sql(
-        _DRIFTAUC_CORE.format(
-            orders="r57_drift_orders", big="DECIMAL(38,0)", idiv="DIV"
-        )
+    return bind_sql(
+        spark,
+        _DRIFTAUC_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        big="DECIMAL(38,0)",
+        idiv="DIV",
     )
 
 
@@ -767,27 +758,24 @@ def validate_hash_collision_budget(spark: SparkSession, sf_dir: str) -> DataFram
     that turns the documented collision contract into measured
     evidence, and the query to re-run before trusting the budget on
     a 100 TB corpus."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "r58_hcb_docs"
-    )
-    spark.sql(
+    grams = bind_sql(
+        spark,
         f"""
         SELECT concat_ws(' ', slice(t, i, {_HCB_SHINGLE})) AS gram
         FROM (SELECT filter(split(text, ' '), x -> x != '') AS t
-              FROM r58_hcb_docs)
+              FROM {{docs}})
         LATERAL VIEW explode(sequence(1, size(t) - {_HCB_SHINGLE} + 1))
           e AS i
         WHERE size(t) >= {_HCB_SHINGLE}
-        """
-    ).createOrReplaceTempView("r58_hcb_grams")
-    return spark.sql(
-        _HCB_CORE.format(
-            grams="r58_hcb_grams",
-            hexint=(
-                "CAST(conv(substring(md5(gram), 1, 12), 16, 10) AS BIGINT)"
-            ),
-            idiv="DIV",
-        )
+        """,
+        docs=load_table(spark, sf_dir, "documents"),
+    )
+    return bind_sql(
+        spark,
+        _HCB_CORE,
+        grams=grams,
+        hexint="CAST(conv(substring(md5(gram), 1, 12), 16, 10) AS BIGINT)",
+        idiv="DIV",
     )
 
 

@@ -18,6 +18,7 @@ from .contract import (
     tpch_date_valid_sql,
 )
 from .tpch import _fmt_day
+from . import bind_sql
 
 
 # ---------------------------------------------------------------------------
@@ -511,10 +512,9 @@ def window_ewma_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only way a windowed EWMA survives an order-insensitive exact
     compare. One exchange on o_custkey serves both the window and the
     final groupBy (same key: Catalyst reuses the partitioning)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r15_ewma_orders"
+    return bind_sql(
+        spark, _EWMA_SPARK, orders=load_table(spark, sf_dir, "orders")
     )
-    return spark.sql(_EWMA_SPARK.format(orders="r15_ewma_orders"))
 
 
 # ---------------------------------------------------------------------------
@@ -603,10 +603,9 @@ def window_rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribute like NULL — value-level, so hostile rows still create
     their day — keeping the x*y / sy*sx power-sum products exact
     INT64 in both engines (DuckDB throws on overflow, Spark wraps)."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r17_rollreg_events"
+    return bind_sql(
+        spark, _ROLLREG_SPARK, events=load_table(spark, sf_dir, "events")
     )
-    return spark.sql(_ROLLREG_SPARK.format(events="r17_rollreg_events"))
 
 
 # ---------------------------------------------------------------------------
@@ -651,16 +650,13 @@ def window_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEAD window and the per-user aggregate share ONE user_id
     exchange; the weighted sum accumulates in DECIMAL(38,0) —
     micros x cents products exceed int64 within a single busy day."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r19_twap_events"
-    )
-    return spark.sql(
-        _TWAP_CORE.format(
-            events="r19_twap_events",
-            epoch_us="unix_micros(ts)",
-            big="DECIMAL(38,0)",
-            div="DIV",
-        )
+    return bind_sql(
+        spark,
+        _TWAP_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
+        big="DECIMAL(38,0)",
+        div="DIV",
     )
 
 
@@ -718,15 +714,12 @@ def window_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers, so argmax ties and magnitudes are identical on
     every engine and parallelism; all windows ride one event_type
     exchange over the bounded daily rollup."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r22_cusum_events"
-    )
-    return spark.sql(
-        _CUSUM_CORE.format(
-            events="r22_cusum_events",
-            epoch_day="CAST(unix_micros(ts) DIV 86400000000 AS BIGINT)",
-            div="DIV",
-        )
+    return bind_sql(
+        spark,
+        _CUSUM_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_day="CAST(unix_micros(ts) DIV 86400000000 AS BIGINT)",
+        div="DIV",
     )
 
 
@@ -786,11 +779,11 @@ def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user reduction all share one user_id exchange; values stay
     integer cents end to end, and the global top-k is a
     TakeOrderedAndProject, never a full sort."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r26_dd_events"
-    )
-    return spark.sql(
-        _DD_CORE.format(events="r26_dd_events", epoch_us="unix_micros(ts)")
+    return bind_sql(
+        spark,
+        _DD_CORE,
+        events=load_table(spark, sf_dir, "events"),
+        epoch_us="unix_micros(ts)",
     )
 
 
@@ -869,11 +862,10 @@ def window_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     of five bigints is the sorted middle element, so Spark and DuckDB
     agree exactly. Interior points only (both lags and both leads
     present); the per-user reduction rides the same exchange."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "r32_hampel_events"
-    )
-    return spark.sql(
-        _hampel_sql(_H_SPARK_MED, "unix_micros(ts)", "r32_hampel_events")
+    return bind_sql(
+        spark,
+        _hampel_sql(_H_SPARK_MED, "unix_micros(ts)", "{events}"),
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -938,13 +930,12 @@ def window_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     date span (~2.4k rows at any TPC-H scale), so the single-
     partition ordered window is bounded state, and the heavy
     aggregation below it is one map-combined date groupBy."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r53_boll_orders"
-    )
-    return spark.sql(
-        _BOLL_CORE.format(
-            orders="r53_boll_orders", idiv="DIV", datestr="STRING"
-        )
+    return bind_sql(
+        spark,
+        _BOLL_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        idiv="DIV",
+        datestr="STRING",
     )
 
 
@@ -1007,12 +998,12 @@ def window_rsi_14(spark: SparkSession, sf_dir: str) -> DataFrame:
     neutral 50).  The daily relation is date-span-bounded, so the
     ordered windows run over bounded state after one map-combined
     date groupBy."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r56_rsi_orders"
-    )
-    return spark.sql(
-        _RSI_CORE.format(orders="r56_rsi_orders", idiv="DIV",
-                         datestr="STRING")
+    return bind_sql(
+        spark,
+        _RSI_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        idiv="DIV",
+        datestr="STRING",
     )
 
 
@@ -1060,10 +1051,12 @@ def window_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     share ((peak−x)·1e6 DIV peak); the RMS is one fixed-shape float
     over the exact integer square sum.  One running-max window over
     the date-span-bounded daily relation."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "r57_ulcer_orders"
+    return bind_sql(
+        spark,
+        _ULCER_CORE,
+        orders=load_table(spark, sf_dir, "orders"),
+        idiv="DIV",
     )
-    return spark.sql(_ULCER_CORE.format(orders="r57_ulcer_orders", idiv="DIV"))
 
 
 _ULCER_DUCK = _ULCER_CORE.format(orders="orders", idiv="//")

@@ -191,6 +191,27 @@ def test_persists_go_through_cache():
     )
 
 
+# Every temp-view registration outside ``plans/__init__.py::bind_sql``,
+# the one SQL binder. A hand-named view is session-global and unique
+# only by convention; a plan hands its relations to SQL through
+# ``bind_sql`` instead.
+_TEMP_VIEW_ALLOWLIST: dict[str, int] = {}
+
+
+def test_sql_bindings_go_through_bind_sql():
+    views = (
+        "createOrReplaceTempView", "createTempView",
+        "createGlobalTempView", "createOrReplaceGlobalTempView",
+    )
+    found = _call_sites(
+        _PKG, lambda f: isinstance(f, ast.Attribute) and f.attr in views
+    )
+    assert found.pop("plans/__init__.py::bind_sql", 0) == 1
+    assert found == _TEMP_VIEW_ALLOWLIST, (
+        f"temp-view sites drifted: {found} vs allowlist {_TEMP_VIEW_ALLOWLIST}"
+    )
+
+
 # Every schema-inferring ``<session>.read.parquet(...)`` call outside
 # ``sources/readers.py``, which memoizes the inferred schema per file
 # version. Each of these reads back a path its own query has just

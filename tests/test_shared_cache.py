@@ -44,6 +44,46 @@ def test_release_caches_clears_tracked_persists(spark):
     release_caches(spark)
 
 
+def test_bind_sql_keeps_shared_relation_cached(spark):
+    """Binding a session-shared relation into SQL leaves it cached,
+    and so does binding another relation to the placeholder it was
+    built through. PySpark's own ``spark.sql(template, **frames)``
+    drops its views after parsing, and replacing a view with a
+    different plan un-caches every persisted relation that reads it;
+    either would make later consumers recompute the relation."""
+    from boat_etl_pyspark_spark.cache import release_caches, shared
+    from boat_etl_pyspark_spark.plans import bind_sql
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return bind_sql(
+            spark, "SELECT id % 7 AS k, id FROM {src}", src=spark.range(100)
+        )
+
+    sf = "bind-sql-cache-safety"
+    rel = shared(spark, sf, "bind_probe", build)
+    cached = spark._jsparkSession.sharedState().cacheManager()
+    try:
+        out = bind_sql(
+            spark, "SELECT k, COUNT(*) AS n FROM {rel} GROUP BY k", rel=rel
+        )
+        assert out.count() == 7
+        assert cached.lookupCachedData(rel._jdf).isDefined()
+        other = bind_sql(spark, "SELECT * FROM {src}", src=spark.range(5))
+        assert other.count() == 5
+        assert cached.lookupCachedData(rel._jdf).isDefined()
+        again = shared(spark, sf, "bind_probe", build)
+        assert again is rel and len(builds) == 1
+        nxt = bind_sql(spark, "SELECT SUM(id) AS s FROM {rel}", rel=again)
+        plan = nxt._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan
+        assert nxt.collect()[0]["s"] == 4950
+    finally:
+        release_caches(spark)
+
+
 def test_release_caches_clears_rank_fence(spark):
     """The global_rank correctness-fence persists must drain through
     release_caches, and the primitive must stay correct after."""

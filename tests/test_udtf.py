@@ -12,7 +12,9 @@ from __future__ import annotations
 
 import pandas as pd
 
-from boat_etl_pyspark_spark.plans.text import _docs_view, text_keyword_spans
+from boat_etl_pyspark_spark.plans import bind_sql
+from boat_etl_pyspark_spark.plans.text import text_keyword_spans
+from boat_etl_pyspark_spark.sources.readers import load_table
 from tests.conftest import SF_SMOKE
 
 
@@ -38,10 +40,11 @@ def test_udtf_matches_builtin_keyword_spans(spark):
                     yield tok, pos
 
     spark.udtf.register("keyword_spans_udtf", KeywordSpans)
-    docs = _docs_view(spark, SF_SMOKE, "__docs_udtf")
-    via_udtf = spark.sql(
-        f"SELECT d.doc_id, s.keyword, s.position "
-        f"FROM {docs} d, LATERAL keyword_spans_udtf(d.text) s"
+    via_udtf = bind_sql(
+        spark,
+        "SELECT d.doc_id, s.keyword, s.position "
+        "FROM {docs} d, LATERAL keyword_spans_udtf(d.text) s",
+        docs=load_table(spark, SF_SMOKE, "documents"),
     ).toPandas()
 
     builtin = text_keyword_spans(spark, SF_SMOKE).toPandas()
