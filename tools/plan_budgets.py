@@ -17,7 +17,10 @@ plan change regenerates with:
     python tools/plan_budgets.py --write
 
 Streaming queries are excluded (building them runs the stream; their
-returned relation is a memory-sink scan with no plan to budget).
+returned relation is a memory-sink scan with no plan to budget). The
+boat pipeline queries are skipped where the reference CSV is missing,
+as ``tests/test_plan_budgets.py`` skips them; ``--write`` keeps their
+existing entries.
 Queries whose metrics are unstable across cache states would churn
 the file — caches are released before every build to pin one state.
 """
@@ -42,38 +45,37 @@ _PY_NODES = (
 )
 
 
-def _drop_initial_plan_blocks(plan: str) -> str:
-    """Remove ``== Initial Plan ==`` blocks from an (executed) adaptive
-    plan string. Session-shared caches are materialized eagerly
-    (cache.shared), so their stored subplans print BOTH the final
-    and the initial AQE plan — counting raw matches would double every
-    FileScan under a cache. Only the final (actually executed) shape
-    is budgeted."""
-    out = []
-    skip_indent = None
-    for line in plan.splitlines():
-        body = line.lstrip(" :+-")
-        indent = len(line) - len(body)
-        if skip_indent is not None:
-            # section content prints at indent EQUAL to its marker
-            # ("+- == Initial Plan ==" then "   HashAggregate ..."),
-            # and nothing legitimately follows the Initial section
-            # inside the same adaptive block — skip until the
-            # indentation returns to an ancestor level
-            if indent >= skip_indent:
-                continue
-            skip_indent = None
-        if body.startswith("== Initial Plan =="):
-            skip_indent = indent
+def _node_lines(plan, max_fields: int = 25):
+    """The one-line description of every node of the final physical
+    plan, as ``executedPlan().toString()`` prints it, minus every
+    ``== Initial Plan ==`` section. Session-shared caches are
+    materialized eagerly (cache.shared), so their stored subplans hold
+    BOTH the final and the initial AQE plan; only the final (actually
+    executed) shape is budgeted.
+
+    The JVM tree is walked, not the printed string: Spark prints a
+    nested adaptive plan's section markers at an indent unrelated to
+    that plan's depth, so no indent rule can tell where an Initial
+    Plan section ends. An adaptive plan contributes its current plan,
+    a query stage the plan it wraps, a cached scan its relation and
+    the relation's cached plan (inner children), and every node its
+    subqueries (inner children too)."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
             continue
-        out.append(line)
-    return "\n".join(out)
+        yield node.verboseString(max_fields)
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        for seq in (node.innerChildren(), node.children()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
 
 
 def plan_metrics(df) -> dict:
-    plan = _drop_initial_plan_blocks(
-        df._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = "\n".join(_node_lines(df._jdf.queryExecution().executedPlan()))
     return {
         "scans": len(re.findall(r"FileScan parquet", plan)),
         "python": sum(plan.count(n) for n in _PY_NODES),
@@ -81,13 +83,30 @@ def plan_metrics(df) -> dict:
     }
 
 
-def collect(spark) -> dict[str, dict]:
+def skipped_queries() -> set[str]:
+    """Queries that cannot be built here: ``boat_plan.QUERIES`` read
+    the reference boat CSV whatever sf_dir they get, so they are
+    skipped where that file is missing — the same rule as
+    ``tests/conftest.py::needs_boat_reference``."""
+    from boat_etl_pyspark_spark.plans import boat_plan
+
+    return set() if os.path.exists(boat_plan._INPUT) else set(boat_plan.QUERIES)
+
+
+def merge_budgets(measured: dict, previous: dict, skipped: set) -> dict:
+    """The budget table to write: every measured entry, plus the
+    previous entry of each query skipped on this host."""
+    kept = {n: previous[n] for n in skipped if n in previous}
+    return dict(sorted({**kept, **measured}.items()))
+
+
+def collect(spark, skip=frozenset()) -> dict[str, dict]:
     import __spark_entry__ as entry
     from boat_etl_pyspark_spark.cache import release_caches
 
     out = {}
     for name, fn in entry.queries().items():
-        if name.startswith("stream_"):
+        if name.startswith("stream_") or name in skip:
             continue
         release_caches(spark)
         out[name] = plan_metrics(fn(spark, SF))
@@ -99,12 +118,15 @@ def main() -> int:
     sys.path.insert(0, os.path.dirname(OUT.rsplit("/tests", 1)[0] + "/"))
     from boat_etl_pyspark_spark.session import get_spark
 
+    skipped = skipped_queries()
     spark = get_spark("plan-budgets", cpus=8)
     try:
-        budgets = collect(spark)
+        budgets = collect(spark, skipped)
     finally:
         spark.stop()
     if "--write" in sys.argv:
+        with open(OUT) as f:
+            budgets = merge_budgets(budgets, json.load(f), skipped)
         with open(OUT, "w") as f:
             json.dump(budgets, f, indent=1)
         print(f"wrote {len(budgets)} budgets to {OUT}")
