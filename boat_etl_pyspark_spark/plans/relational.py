@@ -259,7 +259,8 @@ def subquery_big_building_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
               SELECT c_custkey FROM {customer} WHERE c_mktsegment = 'BUILDING'
           )
         """,
-        orders=orders, customer=cust,
+        orders=orders,
+        customer=cust,
     )
 
 
