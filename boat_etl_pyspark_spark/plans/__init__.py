@@ -47,7 +47,10 @@ def bind_sql(spark, template: str, /, **args):
 
     The view is ``__bind_<placeholder>_<plan hash>``, the hash being
     the semantic hash of the relation's analyzed plan, so a name is
-    only ever re-registered with an equivalent plan. Replacing a temp
+    only ever re-registered with an equivalent plan. Views are never
+    dropped, so a relation whose plan is new at every call (a fresh
+    path, a WITH clause's CTE ids) is not bound: it would leave one
+    more view per call. Replacing a temp
     view with a different plan un-caches, by cascade, every persisted
     relation whose plan reads that view: one fixed name per
     placeholder would silently turn the session-shared caches built

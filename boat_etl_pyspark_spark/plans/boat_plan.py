@@ -24,6 +24,8 @@ integers the same way in both engines.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,6 +33,13 @@ from ..pipeline.boat import clean_lines, finalize, parse_csv, read_raw_lines, tr
 
 _INPUT = "/root/reference/data/boat_data.csv"
 _CURRENT_YEAR = 2025  # the year the golden output was produced with
+
+
+def reference_present() -> bool:
+    """Whether the reference boat CSV, which every ``QUERIES`` entry
+    reads whatever sf_dir it gets, exists on this host."""
+    return os.path.exists(_INPUT)
+
 
 # (country, n_listings, sum_price_cents) over the golden cleaned table,
 # sum_price_cents = SUM(floor(price_eur*100 + 0.5)). "None" is the

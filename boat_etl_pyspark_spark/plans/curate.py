@@ -917,22 +917,24 @@ _DSIR_TARGET_CHARS = 400
 # relation (bucket distributions, per-doc scoring join) derives from
 # it, so the corpus is tokenized exactly once. Expressing it as a CTE
 # would inline-and-recompute the bigram explode at every reference
-# (measured: 3 tokenize passes).
+# (measured: 3 tokenize passes). Nested subqueries, not WITH: a CTE
+# gets a new id at every parse, so the relation's plan hash, and with
+# it the name of the view it is bound to, would change on every call.
 _DSIR_DOCBUCKET_SPARK = f"""
-WITH w AS (
-  SELECT doc_id, n_chars >= {_DSIR_TARGET_CHARS} AS is_target,
-         filter(split(text, ' '), x -> x != '') AS t
-  FROM {{docs}}
-), bg AS (
+SELECT doc_id, is_target, bucket, COUNT(*) AS c
+FROM (
   SELECT doc_id, is_target,
          CAST(conv(substring(md5(concat(element_at(t, i), ' ',
                                         element_at(t, i + 1))), 1, 15),
                    16, 10) AS BIGINT) % {_DSIR_BUCKETS} AS bucket
-  FROM w LATERAL VIEW explode(sequence(1, size(t) - 1)) e AS i
+  FROM (
+    SELECT doc_id, n_chars >= {_DSIR_TARGET_CHARS} AS is_target,
+           filter(split(text, ' '), x -> x != '') AS t
+    FROM {{docs}}
+  ) w LATERAL VIEW explode(sequence(1, size(t) - 1)) e AS i
   WHERE size(t) >= 2
-)
-SELECT doc_id, is_target, bucket, COUNT(*) AS c
-FROM bg GROUP BY doc_id, is_target, bucket
+) bg
+GROUP BY doc_id, is_target, bucket
 """
 
 

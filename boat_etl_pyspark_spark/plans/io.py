@@ -23,7 +23,6 @@ from .contract import (
     tpch_date_valid,
     tpch_date_valid_sql,
 )
-from . import bind_sql
 
 
 _TMP_SEQ = itertools.count()
@@ -956,16 +955,6 @@ GROUP BY 1
 # The second write carries ONLY o_orderstatus = 'O' rows, re-priced
 # deterministically; dynamic mode must replace exactly that partition.
 
-_DPO_SQL = """
-SELECT o_orderstatus AS status,
-       CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(SUM(cents) AS BIGINT) AS total_cents
-FROM {src}
-GROUP BY o_orderstatus
-ORDER BY status
-"""
-
-
 _DPO_ORACLE = """
 WITH base AS (
   -- IS DISTINCT FROM: a NULL status is a real partition (Spark
@@ -1026,10 +1015,20 @@ def io_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
     # explicit schema: an all-empty source writes no partition dirs,
     # and schema inference on an empty path would throw — the empty
     # table must aggregate to zero rows, not crash
+    # aggregated in the DataFrame API, not bound into SQL: the
+    # directory is new on every call, so a bound view would be too
+    # and would outlive the files it reads
     readback = spark.read.schema(
         "o_orderkey BIGINT, cents BIGINT, o_orderstatus STRING"
     ).parquet(out)
-    return bind_sql(spark, _DPO_SQL, src=readback)
+    return (
+        readback.groupBy(F.col("o_orderstatus").alias("status"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_orders"),
+            F.sum("cents").cast("bigint").alias("total_cents"),
+        )
+        .orderBy("status")
+    )
 
 
 # ---------------------------------------------------------------------------

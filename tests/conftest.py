@@ -21,7 +21,7 @@ def needs_boat_reference(names):
     from boat_etl_pyspark_spark.plans import boat_plan
 
     skip = pytest.mark.skipif(
-        not os.path.exists(boat_plan._INPUT),
+        not boat_plan.reference_present(),
         reason=f"reference input not present: {boat_plan._INPUT}",
     )
     return [

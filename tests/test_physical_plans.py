@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import contextlib
 import io
-import os
 import re
 
 import pytest
@@ -115,7 +114,7 @@ def test_boat_pipeline_single_python_stage(spark, tmp_path):
     generated = str(tmp_path / "boat_data.csv")
     boatgen.write_csv(generated, seed=7, rows=200)
     inputs = [generated]
-    if os.path.exists(boat_plan._INPUT):
+    if boat_plan.reference_present():
         inputs.append(boat_plan._INPUT)
     for path in inputs:
         df = transform(parse_csv(clean_lines(read_raw_lines(spark, path))))

@@ -5,6 +5,10 @@ bleed would silently corrupt the gate."""
 
 from __future__ import annotations
 
+import pytest
+
+from tests.conftest import SF_SMOKE
+
 
 def test_cache_isolated_per_sf_dir(spark):
     import __spark_entry__ as m
@@ -80,6 +84,34 @@ def test_bind_sql_keeps_shared_relation_cached(spark):
         plan = nxt._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan
         assert nxt.collect()[0]["s"] == 4950
+    finally:
+        release_caches(spark)
+
+
+@pytest.mark.parametrize(
+    "name", ["io_dynamic_partition_overwrite", "curate_importance_weights"]
+)
+def test_rebuilt_query_registers_no_new_view(spark, name):
+    """``bind_sql`` names a view by its relation's plan hash and never
+    drops it, so a query that binds a relation whose plan differs on
+    every call (a fresh output directory, a WITH clause's new CTE ids)
+    would leave one more view in the catalog per call. These two did:
+    the first read back a new directory, the second bound a relation
+    built by a WITH statement."""
+    import __spark_entry__ as entry
+    from boat_etl_pyspark_spark.cache import release_caches
+
+    def views():
+        return {
+            t.name for t in spark.catalog.listTables() if t.name.startswith("__bind_")
+        }
+
+    q = entry.queries()[name]
+    try:
+        q(spark, SF_SMOKE)
+        before = views()
+        assert q(spark, SF_SMOKE).count() > 0
+        assert views() == before
     finally:
         release_caches(spark)
 

@@ -45,7 +45,7 @@ _PY_NODES = (
 )
 
 
-def _node_lines(plan, max_fields: int = 25):
+def _node_lines(plan):
     """The one-line description of every node of the final physical
     plan, as ``executedPlan().toString()`` prints it, minus every
     ``== Initial Plan ==`` section. Session-shared caches are
@@ -67,7 +67,7 @@ def _node_lines(plan, max_fields: int = 25):
         if name == "AdaptiveSparkPlanExec":
             stack.append(node.executedPlan())
             continue
-        yield node.verboseString(max_fields)
+        yield node.verboseString(25)
         if name.endswith("QueryStageExec"):
             stack.append(node.plan())
         for seq in (node.innerChildren(), node.children()):
@@ -86,11 +86,11 @@ def plan_metrics(df) -> dict:
 def skipped_queries() -> set[str]:
     """Queries that cannot be built here: ``boat_plan.QUERIES`` read
     the reference boat CSV whatever sf_dir they get, so they are
-    skipped where that file is missing — the same rule as
-    ``tests/conftest.py::needs_boat_reference``."""
+    skipped where that file is missing, as
+    ``tests/conftest.py::needs_boat_reference`` skips them."""
     from boat_etl_pyspark_spark.plans import boat_plan
 
-    return set() if os.path.exists(boat_plan._INPUT) else set(boat_plan.QUERIES)
+    return set() if boat_plan.reference_present() else set(boat_plan.QUERIES)
 
 
 def merge_budgets(measured: dict, previous: dict, skipped: set) -> dict:
@@ -100,7 +100,7 @@ def merge_budgets(measured: dict, previous: dict, skipped: set) -> dict:
     return dict(sorted({**kept, **measured}.items()))
 
 
-def collect(spark, skip=frozenset()) -> dict[str, dict]:
+def collect(spark, skip: set) -> dict[str, dict]:
     import __spark_entry__ as entry
     from boat_etl_pyspark_spark.cache import release_caches
 
